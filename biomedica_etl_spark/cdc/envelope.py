@@ -462,7 +462,8 @@ def ingest_debezium_txn(
 
     Scale: the pending set is bounded by in-flight transactions (the
     tail of the current batch), not history; the completeness check is
-    one groupBy on ``_txn_id`` over ``O(batch + pending)`` rows.
+    one window over ``_txn_id`` (``txn_split``) on ``O(batch + pending)``
+    rows.
     """
     from .merge import mor_apply_batch
 
@@ -501,11 +502,11 @@ def ingest_debezium_txn(
         if table.is_committed(batch_id) and os.path.exists(
                 os.path.join(_pending_path(batch_id), "_DONE")):
             continue
-        # persist the parsed batch: the split's consumers (completeness
-        # agg, the two semi/anti joins, the apply, the pending write) are
-        # FOUR separate actions — without the persist each re-runs the
-        # Jackson parse over the whole file (measured 4.06x the plain
-        # ingest at bench scale; ~1x with it). O(batch) rows, freed below.
+        # persist the parsed batch: the split's two outputs are filters
+        # over one window-tagged frame, consumed by separate actions (the
+        # apply, the pending write) — without the persist each re-runs
+        # the Jackson parse over the whole file. O(batch) rows, freed
+        # below.
         ev = parse_debezium(spark.read.text(os.path.join(ndjson_dir, f)),
                             with_transaction=True).persist()
         try:

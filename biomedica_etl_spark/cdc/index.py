@@ -240,7 +240,7 @@ class TokenIndex(ShardedLayerStore):
         posts = postings_of(
             table.read(spark, snapshot_id=target, columns=["text"]),
             self.n_shards).withColumn("seq", F.lit(0).cast("long"))
-        written = self._write_layer(posts, self.n_shards)
+        written = self._write_layer(posts)
         self._flip(target, {k: [{"p": p, "base": True}]
                             for k, p in written.items()}, seq=0)
         return {"refreshed": True, "cursor": target,
@@ -276,7 +276,7 @@ class TokenIndex(ShardedLayerStore):
                 .alias("shard"),
                 F.lit(seq).cast("long").alias("seq"))
         )
-        written = self._write_layer(delta, self.n_shards)
+        written = self._write_layer(delta)
         shards = self.shard_layers()
         for s, p in written.items():
             shards.setdefault(s, []).append({"p": p, "base": False})
@@ -443,7 +443,7 @@ class TokenIndex(ShardedLayerStore):
                         F.pmod(F.xxhash64("token"), F.lit(self.n_shards)))
             .withColumn("seq", F.lit(ptr["seq"]).cast("long"))
         )
-        written = self._write_layer(resolved, len(targets))
+        written = self._write_layer(resolved)
         for s in targets:
             if s in written:
                 lays[s] = [{"p": written[s], "base": True}]

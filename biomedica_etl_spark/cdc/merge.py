@@ -22,10 +22,11 @@ Physical plans (measured on local[32]; see BENCH/BASELINE.md):
 - **MOR apply (default ingest path)** is ONE wide Spark job: the raw batch
   is shuffled once on ``(bucket(conv_id), salt(turn_idx))``; because the
   aggregation keys are a superset of the partitioning keys, Catalyst
-  inserts no further exchange, and the ``partitionBy(bucket)`` write emits
-  at most ``shuffle_salts`` files per bucket straight out of the aggregate
-  (the salt spreads a zipf-hot conversation's bucket over ``k`` writer
-  tasks instead of one straggler — see lww_reduce_aligned). Raw-batch
+  inserts no further exchange. AQE sizes that uncounted exchange by bytes,
+  so the ``partitionBy(bucket)`` write emits one file per bucket for a
+  small batch and at most ``shuffle_salts`` for a large one (the salt
+  spreads a zipf-hot conversation's bucket over ``k`` writer tasks
+  instead of one straggler — see lww_reduce_aligned). Raw-batch
   metrics (offsets, lsn range, watermark) ride along via ``df.observe`` —
   computed inside the same job, zero extra passes. A second, O(delta)
   column-pruned job over the just-written layer produces the per-bucket
@@ -219,9 +220,9 @@ def _stage_writer(df: DataFrame, max_records_per_file: int,
     but ~one row group per file instead of decoding the whole file; runs
     of equal conv_id also dictionary/RLE-compress better. With a row cap,
     the files a single task splits into cover disjoint key ranges (file
-    -level pruning among them); files from different salt tasks of the
-    same bucket interleave conv_ids by design — salting trades that for
-    spreading a hot bucket's write.
+    -level pruning among them); a batch too big for one AQE-coalesced
+    task spreads a bucket's salts over tasks whose files interleave
+    conv_ids by design — salting trades that for spreading a hot write.
 
     ``sort_exprs`` overrides the local sort key (still zero-shuffle):
     ``rewrite_zorder`` passes the interleaved-bit curve expression here."""
@@ -249,7 +250,7 @@ def _reduce(changes_bucketed: DataFrame, n_buckets: int, plan: str,
         )
         return red.repartition(n_buckets, F.col(BUCKET_COL))
     if plan == "aligned":
-        return lww_reduce_aligned(changes_bucketed, BUCKET_COL, n_buckets,
+        return lww_reduce_aligned(changes_bucketed, BUCKET_COL,
                                   shuffle_salts=shuffle_salts)
     red = lww_reduce(changes_bucketed).withColumn(
         BUCKET_COL, bucket_expr("conv_id", n_buckets)
@@ -321,7 +322,7 @@ def merge_batch(
         # single wide shuffle: union(base-as-events, delta) -> aligned LWW
         # reduce -> bucket-partitioned write, no join, no re-shuffle
         everything = _base_as_changes(base, n_buckets).unionByName(bucketed)
-        merged = _to_stored(lww_reduce_aligned(everything, BUCKET_COL, n_buckets,
+        merged = _to_stored(lww_reduce_aligned(everything, BUCKET_COL,
                                                shuffle_salts=shuffle_salts))
         _stage_writer(merged, max_records_per_file).parquet(stage)
     else:
@@ -620,8 +621,7 @@ def compact(
                                      snapshot_id=snap["snapshot_id"])
     as_events = _base_as_changes(stored, table.n_buckets)
     resolved = _to_stored(
-        lww_reduce_aligned(as_events, BUCKET_COL, table.n_buckets,
-                           shuffle_salts=shuffle_salts)
+        lww_reduce_aligned(as_events, BUCKET_COL, shuffle_salts=shuffle_salts)
     )
     purge_obs: Observation | None = None
     if purge_tombstones_below is not None:
@@ -900,7 +900,7 @@ def compact_layers(
                                               snapshot_id=snap["snapshot_id"])
         as_events = _base_as_changes(layers, table.n_buckets)
         parts.append(_to_stored(
-            lww_reduce_aligned(as_events, BUCKET_COL, table.n_buckets,
+            lww_reduce_aligned(as_events, BUCKET_COL,
                                shuffle_salts=shuffle_salts)
         ))
     resolved = parts[0] if len(parts) == 1 else \
@@ -981,8 +981,7 @@ def rewrite_small_files(
     stored = table.read_stored_files(spark, buckets=buckets)
     as_events = _base_as_changes(stored, table.n_buckets)
     resolved = _to_stored(
-        lww_reduce_aligned(as_events, BUCKET_COL, table.n_buckets,
-                           shuffle_salts=shuffle_salts)
+        lww_reduce_aligned(as_events, BUCKET_COL, shuffle_salts=shuffle_salts)
     )
     stage = table.new_data_dir()
     _stage_writer(resolved, cap).parquet(stage)
@@ -1070,8 +1069,7 @@ def rewrite_zorder(
     top = (1 << bits) - 1
     as_events = _base_as_changes(stored, table.n_buckets)
     resolved = _to_stored(
-        lww_reduce_aligned(as_events, BUCKET_COL, table.n_buckets,
-                           shuffle_salts=shuffle_salts)
+        lww_reduce_aligned(as_events, BUCKET_COL, shuffle_salts=shuffle_salts)
     )
     ts_rank = F.least(
         F.lit(top).cast("long"),
@@ -1123,8 +1121,7 @@ def rebucket(
     stored = table.read_stored_files(spark)
     as_events = _base_as_changes(stored, new_n_buckets)
     resolved = _to_stored(
-        lww_reduce_aligned(as_events, BUCKET_COL, new_n_buckets,
-                           shuffle_salts=shuffle_salts)
+        lww_reduce_aligned(as_events, BUCKET_COL, shuffle_salts=shuffle_salts)
     )
     stage = table.new_data_dir()
     _stage_writer(resolved, max_records_per_file).parquet(stage)

@@ -55,18 +55,19 @@ def lww_reduce_salted(changes: DataFrame, n_salts: int = 8) -> DataFrame:
 
 
 def lww_reduce_aligned(
-    changes: DataFrame, bucket_col: str, n_buckets: int,
-    shuffle_salts: int = 4, num_partitions: int | None = None,
+    changes: DataFrame, bucket_col: str, shuffle_salts: int = 4,
 ) -> DataFrame:
     """Single-shuffle, bucket-aligned, salt-spread LWW reduce.
 
     ``changes`` must already carry ``bucket_col`` (= bucket(conv_id)). The
-    plan is ``repartition(n, bucket, salt)`` -> ``groupBy(bucket, salt,
+    plan is ``repartition(bucket, salt)`` -> ``groupBy(bucket, salt,
     key)``: because every partitioning expression is one of the grouping
     keys, Catalyst inserts NO second exchange — one wide shuffle total —
-    and the aggregate's output stays clustered by bucket, so the
-    ``partitionBy(bucket)`` write that follows emits at most
-    ``shuffle_salts`` files per bucket with no further movement.
+    and the aggregate's output stays clustered by bucket. The exchange has
+    no partition count (``REPARTITION_BY_COL``), so AQE coalesces it by
+    bytes: the ``partitionBy(bucket)`` write that follows emits one file
+    per bucket for a small batch and at most ``shuffle_salts`` for a large
+    one (AQE never coalesces a count-pinned exchange).
 
     The salt is the north rule's hot-conversation skew handling applied to
     the merge shuffle itself: ``salt = pmod(xxhash64(turn_idx), k)`` is a
@@ -77,10 +78,8 @@ def lww_reduce_aligned(
     bucket otherwise becomes a straggler that caps cluster scaling.
     """
     salt = F.pmod(F.xxhash64(F.col("turn_idx")), F.lit(shuffle_salts))
-    salted = changes.withColumn("_salt", salt)
-    shuffled = salted.repartition(
-        num_partitions or n_buckets, F.col(bucket_col), F.col("_salt")
-    )
+    shuffled = changes.withColumn("_salt", salt).repartition(
+        F.col(bucket_col), F.col("_salt"))
     agg = shuffled.groupBy(bucket_col, "_salt", *KEY_COLS).agg(
         F.max_by(F.struct(*_VALUE_COLS), F.col("lsn")).alias("_w")
     )

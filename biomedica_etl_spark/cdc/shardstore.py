@@ -17,9 +17,9 @@ mixin is that machinery, written once:
 - ``_read_layers``: schema'd parquet read of layer paths
   (``_stored_schema()`` supplies the schema — partition columns are not
   stored in the files and read back as typed nulls),
-- ``_write_layer``: one ``repartition(shard)`` exchange into a fresh
-  immutable container, files sorted by ``_sort_cols()`` so reads
-  row-group-prune; returns shard -> written relpath.
+- ``_write_layer``: one uncounted ``repartition(shard)`` exchange (AQE
+  sizes it by bytes) into a fresh immutable container, one file per
+  shard sorted by ``_sort_cols()``; returns shard -> written relpath.
 
 Subclasses keep their public API and semantics; only the storage
 mechanics live here, so a fix to the crash/GC behavior applies to every
@@ -142,17 +142,15 @@ class ShardedLayerStore:
         return spark.read.schema(self._stored_schema()).parquet(
             *[os.path.join(self.root, p) for p in sorted(paths)])
 
-    def _write_layer(self, stored: DataFrame,
-                     n_partitions: int | None = None) -> dict[int, str]:
+    def _write_layer(self, stored: DataFrame) -> dict[int, str]:
         """Write stored rows (with a ``shard`` column) into a fresh
-        immutable container dir, one subdirectory per shard, files sorted
-        by ``_sort_cols()`` so reads row-group-prune. Returns shard ->
-        relative path for the shards that produced rows."""
+        immutable container dir, one file per shard (AQE sizes the
+        uncounted exchange) sorted by ``_sort_cols()`` so reads
+        row-group-prune. Returns shard -> relpath for shards with rows."""
         cont = f"d-{uuid.uuid4().hex}"
         out = os.path.join(self.root, cont)
-        n = self.n_shards if n_partitions is None else n_partitions
         (stored
-         .repartition(max(n, 1), "shard")
+         .repartition("shard")
          .sortWithinPartitions(*self._sort_cols())
          .write.partitionBy("shard").parquet(out))
         written: dict[int, str] = {}

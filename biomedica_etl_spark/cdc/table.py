@@ -158,13 +158,24 @@ class CowTable:
         with open(path) as f:
             return json.load(f)
 
-    def _atomic_write(self, path: str, payload: str) -> None:
+    def _atomic_write(self, path: str, payload: str,
+                      exclusive: bool = False) -> None:
         tmp = path + f".tmp-{uuid.uuid4().hex}"
         with open(tmp, "w") as f:
             f.write(payload)
             f.flush()
             os.fsync(f.fileno())
-        os.rename(tmp, path)  # atomic publish: readers never see a partial file
+        if not exclusive:
+            os.rename(tmp, path)  # atomic publish: readers never see a partial file
+            return
+        try:  # exclusive create: link fails on an existing path, rename replaces it
+            os.link(tmp, path)
+        except FileExistsError:
+            raise ConcurrentCommitError(
+                f"{path} already exists — another writer committed; "
+                "refresh() and retry") from None
+        finally:
+            os.unlink(tmp)
 
     def _write_snapshot(self, snap: dict[str, Any]) -> None:
         """Publish a snapshot with optimistic-concurrency detection: the
@@ -193,16 +204,8 @@ class CowTable:
                         f"table is at {disk_current} — another writer "
                         "committed; refresh() and retry"
                     )
-            # exclusive create: even if two writers pass the hint check in
-            # the same instant, only one manifest file for this version can
-            # be created
-            path = self._snap_path(snap["snapshot_id"])
-            if os.path.exists(path):
-                raise ConcurrentCommitError(
-                    f"snapshot {snap['snapshot_id']} already exists — "
-                    "another writer committed; refresh() and retry"
-                )
-        self._atomic_write(self._snap_path(snap["snapshot_id"]), json.dumps(snap))
+        self._atomic_write(self._snap_path(snap["snapshot_id"]),
+                           json.dumps(snap), exclusive=parent_id is not None)
         self._atomic_write(self._hint_path(), str(snap["snapshot_id"]))
         # incremental cache maintenance: commit N+1 never re-reads N manifests
         self._current_cache = snap

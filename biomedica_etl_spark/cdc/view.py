@@ -209,7 +209,7 @@ class JoinView(ShardedLayerStore):
                   .withColumn("alive", F.lit(True))
                   .withColumn("seq", F.lit(0).cast("long"))
                   .withColumn("shard", self._shard_col()))
-        written = self._write_layer(stored, self.n_shards)
+        written = self._write_layer(stored)
         self._flip(ta, tb, {k: [{"p": p, "base": True}]
                             for k, p in written.items()}, seq=0)
         return {"refreshed": True, "cursor": (ta, tb),
@@ -326,7 +326,7 @@ class JoinView(ShardedLayerStore):
                 F.lit(seq).cast("long").alias("seq"))
             .withColumn("shard", self._shard_col())
         )
-        written = self._write_layer(delta, self.n_shards)
+        written = self._write_layer(delta)
         for side in (da, db):
             if side is not None:
                 side.unpersist()
@@ -361,7 +361,7 @@ class JoinView(ShardedLayerStore):
             .withColumn("seq", F.lit(ptr["seq"]).cast("long"))
             .withColumn("shard", self._shard_col())
         )
-        written = self._write_layer(resolved, len(targets))
+        written = self._write_layer(resolved)
         for s in targets:
             if s in written:
                 lays[s] = [{"p": written[s], "base": True}]

@@ -36,7 +36,7 @@ import pytest
 from biomedica_etl_spark.cdc.generator import GeneratorConfig, generate_change_log
 from biomedica_etl_spark.cdc.oracle import replay
 from biomedica_etl_spark.cdc.runner import CdcRunner
-from biomedica_etl_spark.cdc.table import CowTable
+from biomedica_etl_spark.cdc.table import ConcurrentCommitError, CowTable
 
 CFG = GeneratorConfig(n_events=1_500, batch_size=500, n_convs=30)
 
@@ -162,19 +162,52 @@ _REAL_ATOMIC_WRITE = CowTable._atomic_write
 
 
 def _counting_write(counter):
-    def wrapper(self, path, payload):
+    def wrapper(self, path, payload, **kw):
         counter["n"] += 1
-        return _REAL_ATOMIC_WRITE(self, path, payload)
+        return _REAL_ATOMIC_WRITE(self, path, payload, **kw)
     return wrapper
 
 
 def _crashing_write(counter, crash_at):
-    def wrapper(self, path, payload):
+    def wrapper(self, path, payload, **kw):
         if counter["n"] == crash_at:
             raise SimulatedCrash(f"crash before atomic write #{crash_at}: {path}")
         counter["n"] += 1
-        return _REAL_ATOMIC_WRITE(self, path, payload)
+        return _REAL_ATOMIC_WRITE(self, path, payload, **kw)
     return wrapper
+
+
+def test_racing_commits_past_the_hint_check_cannot_overwrite(tmp_path):
+    """Two handles plan snapshot 1 against parent 0 and both pass the
+    hint check; the other handle publishes while the loser is inside its
+    publish window. The manifest create is exclusive, so the loser raises
+    instead of replacing the winner's manifest (a rename would have
+    silently dropped the winner's batch)."""
+    import json
+    import os
+
+    root = str(tmp_path / "t")
+    winner = CowTable(root, n_buckets=2)
+    winner.create()
+    loser = CowTable(root, n_buckets=2)
+    won = _minimal_snap(1, 0, 7)
+
+    def interleave(self, path, payload, **kw):
+        if self is loser and os.path.basename(path) == "snap-00000001.json":
+            winner._write_snapshot(won)
+        return _REAL_ATOMIC_WRITE(self, path, payload, **kw)
+
+    with mock.patch.object(CowTable, "_atomic_write", interleave):
+        with pytest.raises(ConcurrentCommitError):
+            loser._write_snapshot(_minimal_snap(1, 0, 8))
+
+    snap_dir = os.path.join(root, "_snapshots")
+    with open(os.path.join(snap_dir, "snap-00000001.json")) as f:
+        assert f.read() == json.dumps(won)
+    assert not [f for f in os.listdir(snap_dir) if ".tmp-" in f]
+    cold = CowTable(root, n_buckets=2)
+    assert cold.current_snapshot()["snapshot_id"] == 1
+    assert cold.is_committed(7) and not cold.is_committed(8)
 
 
 def _run_to_completion(spark, log, root, kw, expected_full=None):

@@ -127,8 +127,8 @@ def _install_crash(monkeypatch, point: str):
     if point == "after_layer_write":
         orig = ShardedLayerStore._write_layer
 
-        def boom(self, stored, n_partitions=None):
-            orig(self, stored, n_partitions)
+        def boom(self, stored):
+            orig(self, stored)
             raise _Crash("crash after layer write, before flip")
 
         monkeypatch.setattr(ShardedLayerStore, "_write_layer", boom)

@@ -38,9 +38,11 @@ def _physical(df) -> str:
 def test_aligned_reduce_is_single_exchange(spark, tmp_path):
     log = _gen(tmp_path)
     changes = read_batch(spark, log, 0, 0, SchemaRegistry())
-    aligned = lww_reduce_aligned(_with_bucket(changes, 16), BUCKET_COL, 16)
+    aligned = lww_reduce_aligned(_with_bucket(changes, 16), BUCKET_COL)
     plan = _physical(aligned)
     assert plan.count("Exchange") == 1, plan
+    # no partition count pins the exchange, so AQE may coalesce it
+    assert "REPARTITION_BY_COL" in plan, plan
     # the classic groupBy-then-repartition pair costs two
     classic = lww_reduce(changes).withColumn(BUCKET_COL, F.lit(0)).repartition(
         16, F.col(BUCKET_COL)
@@ -72,8 +74,9 @@ def test_mor_aligned_matches_oracle(spark, tmp_path):
 
 
 def test_aligned_write_bounded_files_per_bucket(spark, tmp_path):
-    """The aligned write emits at most ``shuffle_salts`` files per bucket
-    straight from the reduce — no extra repartition, no file explosion."""
+    """The aligned write goes straight from the reduce — no extra
+    repartition — and AQE coalesces a small batch's exchange, so every
+    touched bucket gets exactly one file, not one per salt."""
     log = _gen(tmp_path, "insert_only")
     runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8, mode="mor")
     runner.run(max_batches=1)
@@ -82,7 +85,7 @@ def test_aligned_write_bounded_files_per_bucket(spark, tmp_path):
     for dirs in snap["delta_dirs"].values():
         for d in dirs:
             files = glob.glob(os.path.join(runner.table.root, d, "*.parquet"))
-            assert 1 <= len(files) <= 4, files
+            assert len(files) == 1, files
 
 
 def test_salted_runner_matches_oracle(spark, tmp_path):

@@ -146,6 +146,30 @@ def test_layer_counts_bounded_by_targeted_folds(spark, tmp_path):
     assert _indexed(spark, idx) == _scratch(spark, runner.table, 8)
 
 
+def test_refresh_writes_one_file_per_shard_per_layer(spark, tmp_path):
+    """Bootstrap, delta and fold layers alike: the layer write's exchange
+    is sized by AQE, and each shard lands in exactly one file."""
+    log = str(tmp_path / "log")
+    generate_change_log(log, CFG)
+    runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8,
+                       mode="mor")
+    runner.run(max_batches=1)
+    idx = TokenIndex(str(tmp_path / "idx"), n_shards=8, compact_at=2)
+    modes, folds = [], 0
+    for _ in range(3):
+        res = idx.refresh(spark, runner.table)
+        modes.append(res["mode"])
+        folds += res.get("shards_folded", 0)
+        for lays in idx.shard_layers().values():
+            for lay in lays:
+                files = [f for f in os.listdir(os.path.join(idx.root, lay["p"]))
+                         if f.endswith(".parquet")]
+                assert len(files) == 1, (lay, files)
+        runner.run(max_batches=1)
+    assert modes == ["bootstrap", "incremental", "incremental"]
+    assert folds > 0
+
+
 def test_lookup_prunes_to_term_shards(spark, built):
     runner, idx = built
     token = idx.read(spark).orderBy(F.desc("tf"), "token").limit(1) \
@@ -198,7 +222,7 @@ def test_crash_replay_converges_and_orphans_collected(spark, tmp_path):
         spark, idx.cursor(), columns=["text"])
     posts = postings_of(imgs, 16).withColumn(
         "seq", F.lit(1).cast("long"))
-    orphan = idx._write_layer(posts, 16)
+    orphan = idx._write_layer(posts)
     assert orphan  # something was written, nothing referenced
     before = _indexed(spark, idx)
     assert before == _indexed(spark, idx)  # previous version intact
