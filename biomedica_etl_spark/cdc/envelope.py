@@ -552,21 +552,27 @@ def relay_debezium(
     resync contract (the consumer re-bootstraps from
     ``to_debezium_snapshot`` and ``cursor.reset``).
 
-    Small-window coalescing (``min_window_bytes > 0``): a low-traffic
-    table tailed frequently would otherwise emit one tiny file per relay
-    cycle. A window whose rendered bytes fall below the floor is
-    DEFERRED — nothing is emitted and the cursor does NOT commit, so the
-    next relay cycle's poll serves the strictly larger superset window
-    ``(same cursor, new head]``; windows fold forward until the floor is
-    reached. This preserves every contract for free: the token record
+    Every result row has the same keys: ``token`` (the emitted window's
+    token; None when deferred), ``lines`` and ``bytes`` (the rendered
+    window) and ``deferred``.
+
+    Small-window coalescing (``min_window_bytes > 0``, effective ONLY with
+    ``flush=False``): a low-traffic table tailed frequently would
+    otherwise emit one tiny file per relay cycle. With ``flush=False`` a
+    window whose rendered bytes fall below the floor is DEFERRED —
+    nothing is emitted, the call returns, and the cursor does NOT commit,
+    so the next relay cycle's poll serves the strictly larger superset
+    window ``(same cursor, new head]``; windows fold forward until the
+    floor is reached. This preserves every contract for free: the token record
     stays gapless (each emitted file still covers exactly
     ``(previous emitted token, its token]``), exactly-once still rides
     the same poll-reserve/commit discipline, and replica state is
     byte-identical because the coalesced window's net image feed equals
     the concatenation of the small windows' net changes under LWW.
-    ``flush=True`` (the default) emits a below-floor final window anyway
-    — pass ``flush=False`` in a tailing daemon and flush on its shutdown
-    / timer so deferral cannot starve a quiet table forever.
+    ``flush=True`` (the default) emits every window, below the floor or
+    not, so ``min_window_bytes`` does nothing there: a tailing daemon
+    passes ``flush=False`` on every cycle and ``flush=True`` on its
+    shutdown / timer so deferral cannot starve a quiet table forever.
     """
     import glob as _glob
     import shutil as _shutil
@@ -588,10 +594,15 @@ def relay_debezium(
         parts = _glob.glob(os.path.join(stage, "part-*"))
         staged = parts[0] if parts else None
         size = os.path.getsize(staged) if staged else 0
+        n = 0
+        if staged:
+            with open(staged) as f:
+                n = sum(1 for _ in f)
         if min_window_bytes > 0 and size < min_window_bytes and not flush:
             # defer: no emission, no commit — the window re-serves grown
             _shutil.rmtree(stage, ignore_errors=True)
-            results.append({"token": None, "deferred_bytes": size})
+            results.append({"token": None, "lines": n, "bytes": size,
+                            "deferred": True})
             return results
         final = os.path.join(out_dir, f"window-{token:08d}.ndjson")
         if staged:
@@ -601,9 +612,9 @@ def relay_debezium(
                 f.flush()
             os.replace(os.path.join(stage, "empty"), final)
         _shutil.rmtree(stage, ignore_errors=True)
-        n = sum(1 for _ in open(final))
         cursor.commit(token)
-        results.append({"token": token, "lines": n})
+        results.append({"token": token, "lines": n, "bytes": size,
+                        "deferred": False})
     return results
 
 

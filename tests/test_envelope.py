@@ -694,7 +694,11 @@ def test_relay_coalesces_small_windows_bounded_files_identical_replica(
     files_b = [f for f in os.listdir(dir_b) if f.startswith("window-")]
     assert len(files_a) == 4          # one file per cycle without the floor
     assert len(files_b) == 1          # all four cycles folded into one
-    assert sum(1 for r in res_b if r.get("token") is None) == 4  # deferrals
+    assert sum(1 for r in res_b if r["deferred"]) == 4  # deferrals
+    assert not any(r["deferred"] for r in res_a)
+    for r in res_a + res_b:
+        assert set(r) == {"token", "lines", "bytes", "deferred"}, r
+        assert (r["token"] is None) == r["deferred"], r
 
     rep_a = ingest_debezium(spark, dir_a, str(tmp_path / "ra"), n_buckets=4)
     rep_b = ingest_debezium(spark, dir_b, str(tmp_path / "rb"), n_buckets=4)

@@ -355,37 +355,60 @@ def test_minor_fold_local_plan_shuffle_free_and_matches_shuffle_plan(
         spark, tmp_path):
     """The default ``plan='local'`` fold runs ZERO exchanges — layers are
     already laid out per bucket on disk, so re-shuffling rows that are
-    already bucket-partitioned is pure waste — and its committed state is
-    row-identical (payload + ``_lsn`` + tombstones) to the salted
-    ``plan='shuffle'`` exchange plan's on the same starting table."""
+    already bucket-partitioned is pure waste. With more eligible buckets
+    than cores it packs them into exactly ``min(len(eligible),
+    defaultParallelism)`` Arrow tasks (recorded, with the planned read
+    bytes, in the commit summary) and still writes one file under each
+    bucket's own dir. Its committed state is row-identical (payload +
+    ``_lsn`` + tombstones) to the salted ``plan='shuffle'`` exchange
+    plan's on the same starting table."""
+    import glob
+    import os
     import shutil
 
-    from biomedica_etl_spark.cdc.merge import _fold_layers_local
+    from biomedica_etl_spark.cdc.merge import _fold_layers_local, _pack_buckets
 
     log = str(tmp_path / "log")
-    generate_change_log(log, CFG)
+    generate_change_log(log, GeneratorConfig(
+        n_events=6_000, batch_size=1_000, n_convs=400,
+        delete_frac=0.1, out_of_order=True))
     root_a = str(tmp_path / "a")
-    runner = CdcRunner(spark, log, root_a, n_buckets=8, mode="mor",
+    runner = CdcRunner(spark, log, root_a, n_buckets=32, mode="mor",
                        compact_every=10**9)
-    runner.run(max_batches=4)
+    runner.run(max_batches=2)
     compact(spark, runner.table)  # establish a base under the layers
     runner.run()
     root_b = str(tmp_path / "b")
     shutil.copytree(root_a, root_b)
     table_a, table_b = runner.table, CowTable(root_b)
 
-    # plan pin: the local fold DataFrame contains no Exchange at all
+    # plan pin: packed groups, one partition each, no Exchange at all
     snap = table_a.current_snapshot()
     eligible = sorted(
         int(b) for b, ds in snap["delta_dirs"].items() if len(ds) >= 2)
-    assert eligible, "precondition: foldable buckets exist"
-    df = _fold_layers_local(spark, table_a, snap, eligible)
+    cores = spark.sparkContext.defaultParallelism
+    assert len(eligible) > cores, "precondition: more buckets than cores"
+    files = {b: table_a._delta_files_for(snap, [b]) for b in eligible}
+    nbytes = {b: sum(os.path.getsize(f) for f in files[b]) for b in eligible}
+    groups = _pack_buckets(nbytes, cores)
+    assert len(groups) == min(len(eligible), cores)
+    assert sorted(b for g in groups for b in g) == eligible
+    df = _fold_layers_local(spark, groups, files)
+    assert df.rdd.getNumPartitions() == len(groups)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan
 
     sa = compact_layers(spark, table_a, plan="local")
     sb = compact_layers(spark, table_b, plan="shuffle")
     assert sa is not None and sb is not None
+    assert sa["summary"]["fold_tasks"] == len(groups)
+    assert sb["summary"]["fold_tasks"] == 0
+    assert sa["summary"]["bytes_read"] == sb["summary"]["bytes_read"] \
+        == sum(nbytes.values())
+    for b in eligible:
+        (merged,) = sa["delta_dirs"][str(b)]
+        assert merged.endswith(f"bucket={b}"), merged
+        assert len(glob.glob(os.path.join(root_a, merged, "*.parquet"))) == 1
 
     def stored_rows(table):
         df = table.read_delta_layer_files(spark)
@@ -395,12 +418,33 @@ def test_minor_fold_local_plan_shuffle_free_and_matches_shuffle_plan(
             for r in df.collect()
         )
 
-    assert stored_rows(table_a) == stored_rows(table_b)
+    rows_a = stored_rows(table_a)
+    assert any(r[4] for r in rows_a), "precondition: tombstones folded"
+    assert rows_a == stored_rows(table_b)
     live = lambda t: sorted(  # noqa: E731
         (r["conv_id"], r["turn_idx"], r["text"])
         for r in t.read(spark).collect()
     )
     assert live(table_a) == live(table_b)
+
+
+def test_pack_buckets_largest_first_to_least_loaded():
+    """LPT bin-packing: every bucket in exactly one group, never more
+    groups than tasks or buckets, and the largest buckets spread out."""
+    from biomedica_etl_spark.cdc.merge import _pack_buckets
+
+    sizes = {b: (b * 37) % 101 + 1 for b in range(23)}
+    groups = _pack_buckets(sizes, 4)
+    assert len(groups) == 4
+    assert sorted(b for g in groups for b in g) == sorted(sizes)
+    loads = [sum(sizes[b] for b in g) for g in groups]
+    # LPT bound: no group exceeds the mean load by more than the largest item
+    assert max(loads) <= sum(loads) / 4 + max(sizes.values()), loads
+    big = sorted(sizes, key=lambda b: -sizes[b])[:4]
+    assert sorted(next(i for i, g in enumerate(groups) if b in g)
+                  for b in big) == [0, 1, 2, 3]
+    assert _pack_buckets({7: 5, 3: 9}, 8) == [[3], [7]]
+    assert _pack_buckets({}, 4) == []
 
 
 def test_compact_layers_rejects_unknown_plan(spark, tmp_path):

@@ -4,39 +4,21 @@ stay AMORTIZED as the table grows — the round-4 global-anchor defect made
 every fold re-read the grown merged layers, so per-fold read bytes grew
 linearly with ingested rows (the 128M soak's 10 s -> 56 s fold batches).
 
-The pin instruments ``_fold_layers_local`` and asserts the quadratic
-signature is absent over a 20-batch low-collapse ingest (distinct keys
-every batch, the worst case for fold re-reads): late folds must NOT read
-multiples of what early folds read once the table dwarfs a fresh append.
-Correctness rides along: the end state must equal the dict replay.
+The pin reads each fold's planned read bytes from its ``compact-layers``
+commit summary (``bytes_read``) and asserts the quadratic signature is
+absent over a 20-batch low-collapse ingest (distinct keys every batch, the
+worst case for fold re-reads): late folds must NOT read multiples of what
+early folds read once the table dwarfs a fresh append. Correctness rides
+along: the end state must equal the dict replay.
 """
 
-import os
-
-import pytest
-
-from biomedica_etl_spark.cdc import merge as M
 from biomedica_etl_spark.cdc.generator import (GeneratorConfig,
                                                generate_change_log)
 from biomedica_etl_spark.cdc.oracle import replay
 from biomedica_etl_spark.cdc.runner import CdcRunner
 
 
-@pytest.fixture()
-def fold_reads(monkeypatch):
-    reads = []
-    orig = M._fold_layers_local
-
-    def wrapped(spark, table, snap, local_b, files_by_bucket):
-        reads.append(sum(os.path.getsize(f)
-                         for fs in files_by_bucket.values() for f in fs))
-        return orig(spark, table, snap, local_b, files_by_bucket)
-
-    monkeypatch.setattr(M, "_fold_layers_local", wrapped)
-    return reads
-
-
-def test_auto_tier_fold_reads_stay_amortized(spark, tmp_path, fold_reads):
+def test_auto_tier_fold_reads_stay_amortized(spark, tmp_path):
     log = str(tmp_path / "log")
     generate_change_log(log, GeneratorConfig(
         n_events=200_000, batch_size=10_000, n_convs=40_000,
@@ -46,6 +28,9 @@ def test_auto_tier_fold_reads_stay_amortized(spark, tmp_path, fold_reads):
                   fold_tier_bytes=-1, fold_plan="local")
     r.run()
     r.drain_maintenance()
+    r.table.refresh()
+    fold_reads = [s["summary"]["bytes_read"] for s in r.table.snapshots()
+                  if s["summary"].get("commit_type") == "compact-layers"]
 
     assert len(fold_reads) >= 6, fold_reads
     # Quadratic signature: with the global anchor, each of the ~n/2 folds
