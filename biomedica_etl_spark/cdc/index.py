@@ -62,15 +62,17 @@ the DuckDB oracle can recompute the index from the replayed final state.
 
 from __future__ import annotations
 
+import glob
 import os
 from typing import Any
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .shardstore import ShardedLayerStore
-from .table import CowTable
+from .table import CowTable, fits_local
 from .xxhash import xxh64_signed
 
 # One split regex, mirrored verbatim in the oracle SQL. Java's split drops
@@ -88,6 +90,9 @@ POSTING_SCHEMA = T.StructType([
 # stored layer rows additionally carry the refresh sequence number
 _STORED_SCHEMA = T.StructType(
     POSTING_SCHEMA.fields + [T.StructField("seq", T.LongType())])
+_STORED_ARROW = pa.schema([
+    ("token", pa.string()), ("conv_id", pa.string()),
+    ("turn_idx", pa.int64()), ("tf", pa.int64()), ("seq", pa.int64())])
 
 
 def shard_of(token: str, n_shards: int) -> int:
@@ -200,12 +205,46 @@ class TokenIndex(ShardedLayerStore):
     def lookup(self, spark: SparkSession, tokens: list[str]) -> DataFrame:
         """Postings of the given terms. Shards computed DRIVER-side with
         the pure-Python xxh64 twin (microseconds, no job), so a 3-term
-        query against a 10^10-posting index plans a scan over at most 3
-        shards; within a shard the token-sorted files row-group-prune on
-        the ``token = x`` min/max stats."""
+        query against a 10^10-posting index reads at most 3 shards;
+        within a shard the token-sorted files row-group-prune on the
+        ``token`` min/max stats.
+
+        When the shards' layers total at most ``LOCAL_MAX_BYTES`` on disk
+        the lookup is answered on the driver in Arrow and returned as a
+        local relation (no Spark job): each shard's layers are read with
+        the ``token in tokens`` filter, a single base layer is served
+        as is, and a layered shard resolves by the same rule as
+        ``_resolve``. Larger shards keep the Spark plan."""
+        tokens = list(tokens)
         shards = sorted({shard_of(t, self.n_shards) for t in tokens})
-        return self.read(spark, shards=shards).filter(
-            F.col("token").isin(list(tokens)))
+        lays = {k: v for k, v in self.shard_layers().items() if k in shards}
+        files = {k: [f for lay in v for f in sorted(glob.glob(
+            os.path.join(self.root, lay["p"], "*.parquet")))]
+            for k, v in lays.items()}
+        if not fits_local([f for fs in files.values() for f in fs]):
+            return self.read(spark, shards=shards).filter(
+                F.col("token").isin(tokens))
+        from ..sources.datasource import (
+            _last_per_key,
+            _read_stored_arrow,
+            _take_capped,
+            _to_dataframe,
+        )
+
+        names = POSTING_SCHEMA.names
+        parts = []
+        for k, v in lays.items():
+            tab = _read_stored_arrow(files[k], schema=_STORED_ARROW,
+                                     filters=[("token", "in", tokens)])
+            if not (len(v) == 1 and v[0]["base"]):
+                rows = _last_per_key(tab, ["token", "conv_id", "turn_idx"],
+                                     ["seq", "tf"])
+                rows = rows[tab["tf"].take(rows).to_numpy() > 0]
+                tab = _take_capped(tab, rows)
+            parts.append(tab.select(names))
+        return _to_dataframe(
+            spark, pa.concat_tables(parts) if parts
+            else _STORED_ARROW.empty_table().select(names), POSTING_SCHEMA)
 
     # --- refresh --------------------------------------------------------
 

@@ -71,6 +71,7 @@ from .reduce import lww_reduce, lww_reduce_aligned, lww_reduce_salted
 from .schema import CHANGE_COLS, KEY_COLS, PAYLOAD_COLS, SYS_DELETED, SYS_LSN
 from .table import (
     BUCKET_COL,
+    LOCAL_MAX_BYTES,
     ConcurrentCommitError,
     CowTable,
     bucket_expr,
@@ -745,7 +746,7 @@ def compact_layers(
     spark: SparkSession, table: CowTable, shuffle_salts: int = 4,
     min_layers: int = 2, max_records_per_file: int = 0,
     buckets: list[int] | None = None, plan: str = "auto",
-    local_max_bytes: int = 256 << 20,
+    local_max_bytes: int = LOCAL_MAX_BYTES,
     tier_max_bytes: int = 0, tier_collapse_at: int = 0,
 ) -> dict[str, Any] | None:
     """MINOR compaction: fold a bucket's delta layers into ONE merged
@@ -777,17 +778,20 @@ def compact_layers(
     (``_fold_layers_local``); ``plan="shuffle"`` keeps the salted exchange
     plan for buckets whose delta outgrows a single task; ``plan="auto"``
     (default) routes each bucket by its planned delta BYTES — at most
-    ``local_max_bytes`` per task goes local, anything bigger takes the
-    exchange plan — bounding what any one fold task holds. Sizing uses
+    ``local_max_bytes`` (default ``LOCAL_MAX_BYTES``, the limit point
+    reads and term lookups route by too) per task goes local, anything
+    bigger takes the exchange plan — bounding what any one fold task
+    holds. Sizing uses
     the planned snapshot's own file inventory (``os.path.getsize`` here;
     a manifest-recorded size column on an object store), so routing costs
     no data read. NOTE these are COMPRESSED bytes: in-memory expansion is
     payload-dependent (the 256M soak's zipf-hot bucket expanded ~20x), so
     size ``local_max_bytes`` as task-memory-budget / expected expansion.
     The router is purely a memory/perf lever — correctness never depends
-    on it, because the Arrow fold kernel runs at 64-bit offsets and is
-    immune to the int32 'offset overflow' a >2 GiB text column otherwise
-    hits (``sources/datasource.py:_lww_fold``). The two plans' outputs
+    on it, because the Arrow fold kernel sorts only the keys and gathers
+    the winners batch by batch in bounded chunks, so it never hits the
+    int32 'offset overflow' a >2 GiB text column otherwise would
+    (``sources/datasource.py:_lww_fold``). The two plans' outputs
     are proven byte-identical in tests and union into one stage write
     when a fold mixes them.
 

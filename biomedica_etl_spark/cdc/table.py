@@ -51,6 +51,19 @@ from .schema import PAYLOAD_FIELDS, SYS_DELETED, SYS_LSN
 
 BUCKET_COL = "_bucket"
 
+# On-disk bytes up to which one process folds a read set in Arrow: a
+# point read or term lookup is then answered on the driver (no Spark
+# job), and a minor fold's bucket takes the packed local plan
+# (``compact_layers(local_max_bytes=...)`` defaults to this). Larger
+# read sets keep their Spark plan.
+LOCAL_MAX_BYTES = 256 << 20
+
+
+def fits_local(files: list[str]) -> bool:
+    """Whether ``files`` total at most ``LOCAL_MAX_BYTES`` on disk. Sizes
+    come from the file inventory; no data is read."""
+    return sum(os.path.getsize(f) for f in files) <= LOCAL_MAX_BYTES
+
 
 class ConcurrentCommitError(RuntimeError):
     """Another writer advanced the table between plan and publish — the
@@ -733,22 +746,41 @@ class CowTable:
         """The flagship point query: one conversation's live turns in stable
         order. Hidden-partition pruning happens driver-side from the
         manifest — only bucket(conv_id)'s files are ever listed or scanned
-        (at 100 TB with 4096 buckets that is 1/4096th of the table), and
-        the conv_id filter pushes down into that scan. The bucket is
-        computed in-process (pure-Python xxhash64, pinned bit-identical to
-        the Spark expression) so NO Spark job runs before the pruned scan.
-        The bucket count comes from the RESOLVED snapshot's spec, so point
-        lookups stay correct across partition-spec evolution (rebucket)."""
-        import pyspark.sql.functions as _F
+        (at 100 TB with 4096 buckets that is 1/4096th of the table). The
+        bucket is computed in-process (pure-Python xxhash64, pinned
+        bit-identical to the Spark expression), and its count comes from
+        the RESOLVED snapshot's spec, so point lookups stay correct across
+        partition-spec evolution (rebucket) and time travel.
 
+        A bucket of at most ``LOCAL_MAX_BYTES`` on disk is answered on the
+        driver: its files are read in Arrow with ``conv_id = x`` pushed
+        into the row-group statistics, LWW-folded by the same kernel the
+        minor folds use, and returned as a local relation, so the read
+        starts NO Spark job, whose fixed cost dwarfs the few milliseconds
+        of work at this size. A larger bucket keeps the pruned Spark scan,
+        filter and sort."""
         from .xxhash import bucket_of
 
         snap = self._resolve_snapshot(snapshot_id)
         bucket = bucket_of(conv_id, snap["n_buckets"] if snap
                            else self.n_buckets)
+        files = (self._files_for(snap, [bucket])
+                 + self._delta_files_for(snap, [bucket])) if snap else []
+        if fits_local(files):
+            from ..sources.datasource import (
+                _lww_fold,
+                _read_stored_arrow,
+                _to_dataframe,
+            )
+
+            stored = _read_stored_arrow(
+                files, filters=[("conv_id", "=", conv_id)])
+            live = _lww_fold(stored, tombstones=False).sort_by("turn_idx")
+            return _to_dataframe(spark, live, T.StructType(
+                [T.StructField(n, t, True) for n, t in PAYLOAD_FIELDS]))
         return (
             self.read(spark, buckets=[bucket], snapshot_id=snapshot_id)
-            .filter(_F.col("conv_id") == conv_id)
+            .filter(F.col("conv_id") == conv_id)
             .orderBy("turn_idx")
         )
 

@@ -53,7 +53,9 @@ import glob
 import os
 from collections.abc import Iterator
 
+import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import types as T
 from pyspark.sql.datasource import (
@@ -85,20 +87,27 @@ def _arrow_schema(with_sys: bool) -> pa.Schema:
     return pa.schema(fields)
 
 
-def _read_stored_arrow(files: list[str]) -> pa.Table:
+def _read_stored_arrow(files: list[str], filters: list | None = None,
+                       schema: pa.Schema | None = None) -> pa.Table:
     """Read stored-shape parquet files into one Arrow table, normalized to
-    the target schema (ts cast to us; old INT96 files land as ns).
+    ``schema`` (default: the table's stored shape, ts cast to us; old
+    INT96 files land as ns).
+
+    ``filters`` (pyarrow DNF, e.g. ``[("conv_id", "=", c)]``) prunes row
+    groups by their min/max statistics and then drops non-matching rows,
+    so a point read decodes only the row groups that can hold its key.
 
     Pre-evolution files may lack later-added payload columns; they are
     padded with typed nulls — mirroring how the engine's own Spark reader
     (``spark.read.schema(stored_schema())``) tolerates them — so the
     native source never breaks on a table the engine itself reads fine."""
-    target = _arrow_schema(True)
+    target = schema if schema is not None else _arrow_schema(True)
     tabs = []
     for f in files:
         pf = pq.ParquetFile(f)
         present = [n for n in target.names if n in pf.schema_arrow.names]
-        tab = pf.read(columns=present)
+        tab = (pf.read(columns=present) if filters is None
+               else pq.read_table(f, columns=present, filters=filters))
         for i, field in enumerate(target):
             if field.name not in present:
                 tab = tab.add_column(
@@ -107,105 +116,120 @@ def _read_stored_arrow(files: list[str]) -> pa.Table:
     return pa.concat_tables(tabs) if tabs else target.empty_table()
 
 
-def _large(schema: pa.Schema) -> pa.Schema:
-    """64-bit-offset variant of a schema (string -> large_string,
-    binary -> large_binary). Folding happens in this shape so a bucket
-    whose text exceeds 2 GiB in memory never overflows Arrow's int32
-    offsets — on-disk bytes say nothing about in-memory bytes (the 256M
-    soak's zipf-hot bucket compressed ~20x), so the kernel, not the byte
-    router, has to carry this guarantee."""
-    up = {pa.string(): pa.large_string(), pa.binary(): pa.large_binary()}
-    return pa.schema([
-        pa.field(f.name, up.get(f.type, f.type), f.nullable) for f in schema
-    ])
+# Largest output chunk the fold gathers in one piece: far under Arrow's
+# 2 GiB int32-offset ceiling, so no gathered chunk overflows however the
+# winners' sizes skew (a single row over the cap gets a chunk of its
+# own; it fit one int32 chunk on the way in), and the record batches a
+# fold task hands Spark stay moderately sized.
+_TAKE_CAP_BYTES = 256 << 20
 
 
-# max estimated bytes per output chunk when casting back to the int32-offset
-# schema Spark expects. 256 MB leaves 8x headroom under the 2 GiB offset
-# ceiling for row-size skew inside a slice, and keeps the RecordBatches a
-# fold task emits to Spark moderately sized.
-_CAST_CAP_BYTES = 256 << 20
+def _row_bytes(tab: pa.Table) -> np.ndarray:
+    """In-memory bytes of each row: value plus offset bytes of the
+    variable-width columns, the byte width of the others. Reads offsets
+    only, never string data."""
+    out = np.zeros(tab.num_rows, np.int64)
+    for col in tab.columns:
+        if pa.types.is_string(col.type) or pa.types.is_binary(col.type):
+            out += pc.fill_null(pc.binary_length(col), 0).to_numpy() + 4
+        else:
+            out += max(col.type.bit_width // 8, 1)
+    return out
 
 
-def _cast_capped(tab: pa.Table, target: pa.Schema,
-                 cap: int = _CAST_CAP_BYTES) -> pa.Table:
-    """Cast a (possibly large-offset, possibly single-multi-GiB-chunk)
-    table back to ``target`` as multiple chunks of ~``cap`` bytes each.
-    A wholesale ``cast`` would rebuild each column as ONE int32-offset
-    array and overflow past 2 GiB; per-slice casts keep every output
-    chunk safely under the ceiling.
+def _take_capped(tab: pa.Table, rows: np.ndarray,
+                 cap: int = _TAKE_CAP_BYTES) -> pa.Table:
+    """``tab``'s rows at the ASCENDING indices ``rows``, gathered batch by
+    batch in output chunks of at most ``cap`` bytes.
 
-    Each slice is compacted COLUMN-BY-COLUMN before the cast: ``slice``
-    is a zero-copy VIEW whose offsets stay absolute into the original
-    multi-GiB values buffer, and Arrow's offset-narrowing cast rejects
-    any array whose FINAL absolute offset exceeds int32 — so every slice
-    past the 2 GiB point of the backing buffer would fail ("input array
-    too large", the 256M soak's second crash) even though its own span
-    is tiny. ``Table.combine_chunks()`` does NOT help: it short-circuits
-    single-chunk columns and returns the same absolute-offset view;
-    only ``ChunkedArray.combine_chunks()`` (concatenate) actually copies
-    into fresh buffers starting at offset 0, which the cast then
-    accepts."""
-    if tab.num_rows == 0:
-        return target.empty_table()
-    step = max(1, int(tab.num_rows * cap / max(tab.nbytes, 1)))
-    parts = []
-    for i in range(0, tab.num_rows, step):
-        sl = tab.slice(i, step)
-        arrs = [sl.column(j).combine_chunks() for j in range(sl.num_columns)]
-        parts.append(pa.Table.from_arrays(arrs, schema=sl.schema).cast(target))
-    return pa.concat_tables(parts)
+    Arrow's own ``Table.take`` concatenates each multi-chunk column
+    before taking: a full copy of the input per call, and an 'offset
+    overflow' once a string column passes 2 GiB. Gathering from each
+    input record batch separately copies only the rows kept, and a run
+    of consecutive rows is a zero-copy slice of its batch. Peak memory is
+    the input plus the rows kept."""
+    batches = tab.to_batches()
+    starts = np.cumsum([0] + [b.num_rows for b in batches])
+    # an input under the cap cannot gather a chunk over it
+    sizes = (_row_bytes(tab)[rows] if tab.nbytes > cap
+             else np.zeros(len(rows), np.int64))
+    out = []
+    for i, batch in enumerate(batches):
+        lo, hi = np.searchsorted(rows, starts[i:i + 2])
+        local = rows[lo:hi] - starts[i]
+        cum = np.cumsum(sizes[lo:hi])
+        j = 0
+        while j < len(local):
+            k = max(j + 1, int(np.searchsorted(
+                cum, (cum[j - 1] if j else 0) + cap, side="right")))
+            part = local[j:k]
+            if part[-1] - part[0] == len(part) - 1:
+                out.append(batch.slice(int(part[0]), len(part)))
+            else:
+                out.append(batch.take(pa.array(part)))
+            j = k
+    return pa.Table.from_batches(out, schema=tab.schema)
+
+
+def _last_per_key(tab: pa.Table, keys: list[str],
+                  order: list[str]) -> np.ndarray:
+    """Ascending row indices of the row each ``keys`` value keeps: the
+    last one by ``order``. Sorts the key and order columns only, never
+    the payload. A null key compares unequal to its neighbours, so such
+    rows are each kept, never silently dropped."""
+    cols = keys + order
+    idx = pc.sort_indices(tab.select(cols),
+                          sort_keys=[(c, "ascending") for c in cols])
+    n = len(idx)
+    last = np.ones(n, dtype=bool)
+    if n > 1:
+        sk = tab.select(keys).take(idx)
+        diff = None
+        for c in keys:
+            col = sk[c].combine_chunks()
+            ne = pc.fill_null(pc.not_equal(col.slice(0, n - 1),
+                                           col.slice(1)), True)
+            diff = ne if diff is None else pc.or_(diff, ne)
+        last[:-1] = diff.to_numpy(zero_copy_only=False)
+    return np.sort(idx.to_numpy()[last])
 
 
 def _lww_fold(stored: pa.Table, tombstones: bool) -> pa.Table:
     """Vectorized per-bucket LWW resolve: newest ``_lsn`` wins per
     (conv_id, turn_idx); tombstones dropped unless requested. Bucket-local
-    — disjoint key spaces make this embarrassingly parallel.
+    — disjoint key spaces make this embarrassingly parallel. ``stored`` is
+    ``_read_stored_arrow``-shaped; output rows keep their input order.
 
-    Pure Arrow (sort + group-boundary filter in C++ kernels): the earlier
-    pandas form spent most of its time converting payload strings to
-    object dtype and back, which made minor folds cost more than the
-    shuffle they avoided. Duplicate (key, lsn) rows are exact duplicates
-    by the at-least-once delivery contract, so tie order is value-free —
-    same arbitrariness the JVM ``max_by`` reduce has.
+    Pure Arrow: the earlier pandas form spent most of its time converting
+    payload strings to object dtype and back, which made minor folds cost
+    more than the shuffle they avoided. Duplicate (key, lsn) rows are
+    exact duplicates by the at-least-once delivery contract, so tie order
+    is value-free — same arbitrariness the JVM ``max_by`` reduce has.
 
-    The fold runs on the 64-bit-offset variant of the schema: ``sort_by``
-    materializes the take as ONE chunk per column, so a bucket carrying
-    >2 GiB of text (a zipf-hot conversation — the 256M soak hit exactly
-    this) would otherwise die with Arrow's 'offset overflow while
-    concatenating arrays'. The result is cast back to Spark's int32-offset
-    shape in bounded slices (``_cast_capped``)."""
-    import pyarrow.compute as pc
-
-    if stored.num_rows:
-        tab = stored.cast(_large(stored.schema))
-        tab = tab.sort_by([("conv_id", "ascending"),
-                           ("turn_idx", "ascending"),
-                           (SYS_LSN, "ascending")])
-        n = tab.num_rows
-        conv = tab["conv_id"].combine_chunks()
-        turn = tab["turn_idx"].combine_chunks()
-        # row i wins iff it is the last row of its (conv_id, turn_idx) run
-        # (fill_null(True): keys are non-null by the quarantine gate; a
-        # pathological null key is kept, never silently dropped)
-        boundary = pc.fill_null(pc.or_(
-            pc.not_equal(conv.slice(0, n - 1), conv.slice(1)),
-            pc.not_equal(turn.slice(0, n - 1), turn.slice(1)),
-        ), True)
-        chunks = (list(boundary.chunks)
-                  if isinstance(boundary, pa.ChunkedArray) else [boundary])
-        mask = pa.chunked_array(chunks + [pa.array([True])],
-                                type=pa.bool_())
-        tab = tab.filter(mask)
-        if not tombstones:
-            live = pc.invert(pc.fill_null(tab[SYS_DELETED], False))
-            tab = tab.filter(live)
-    else:
-        tab = stored
-    if not tombstones:
-        tab = tab.drop_columns([SYS_LSN, SYS_DELETED])
+    Memory-lean for a bucket carrying >2 GiB of text (a zipf-hot
+    conversation — the 256M soak hit exactly this): only the key columns
+    are sorted, and the winners are gathered from the int32-offset input
+    in bounded chunks (``_take_capped``), so no column is ever copied or
+    concatenated whole. Peak memory is the input plus the winners."""
     target = _arrow_schema(tombstones)
-    return _cast_capped(tab.select(target.names), target)
+    rows = _last_per_key(stored, ["conv_id", "turn_idx"], [SYS_LSN])
+    if not tombstones and len(rows):
+        dead = pc.fill_null(stored[SYS_DELETED].take(pa.array(rows)), False)
+        rows = rows[~dead.to_numpy()]
+    return _take_capped(stored.select(target.names), rows)
+
+
+def _to_dataframe(spark, tab: pa.Table, schema: T.StructType):
+    """A driver-side Arrow result as a DataFrame. It is a local relation:
+    the plan is a ``LocalTableScan`` and collecting it starts no Spark
+    job. ``ts`` is cast to tz-aware UTC first: Spark reads a naive Arrow
+    timestamp as wall time in ``spark.sql.session.timeZone``, which would
+    shift every value by that zone's offset."""
+    if "ts" in tab.column_names:
+        i = tab.schema.get_field_index("ts")
+        tab = tab.set_column(i, "ts", tab.column(i).cast(
+            pa.timestamp("us", tz="UTC")))
+    return spark.createDataFrame(tab, schema)
 
 
 def _root_of(options: dict) -> str:

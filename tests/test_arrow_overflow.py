@@ -6,20 +6,20 @@ carried >2 GiB of text into a single local-fold task. `sort_by`/`take`
 on int32-offset string columns then died with Arrow's 'offset overflow
 while concatenating arrays' — and the `local_max_bytes` byte router
 could not have caught it, because it sees compressed on-disk bytes
-(the ' lorem' filler compresses ~20x). The kernel itself now upcasts to
-64-bit offsets for the fold and casts back to Spark's int32-offset shape
-in bounded slices (`_cast_capped`). No Spark session needed here: the
-kernel is pure Arrow.
+(the ' lorem' filler compresses ~20x). The kernel now sorts only the key
+columns and gathers the winners from each input record batch in bounded
+chunks (`_take_capped`), so no column is ever concatenated whole. No
+Spark session needed here: the kernel is pure Arrow.
 """
 
+import numpy as np
 import pyarrow as pa
 import pytest
 
 from biomedica_etl_spark.sources.datasource import (
     _arrow_schema,
-    _cast_capped,
-    _large,
     _lww_fold,
+    _take_capped,
 )
 
 TARGET = _arrow_schema(True)
@@ -102,27 +102,34 @@ def test_fold_drops_tombstones_at_large_offsets():
     assert out.num_rows == 7
 
 
-def test_cast_capped_slices_to_bounded_chunks():
+def test_take_capped_slices_to_bounded_chunks():
     rows = [_row(f"c{i}", i, "t" * 1000, lsn=i) for i in range(50)]
     tab = _stored(rows)
-    big = tab.cast(_large(TARGET))
-    out = _cast_capped(big, TARGET, cap=5_000)  # force many slices
+    idx = np.array([0, 3, 4, 5, 9, 20, 21, 48, 49])
+    out = _take_capped(tab, idx, cap=5_000)  # force many chunks
     assert out.schema == TARGET
-    assert out.num_rows == 50
     assert out.column("text").num_chunks > 1
-    assert out.equals(tab)
+    assert _max_chunk_bytes(out) <= 5_000
+    assert out.to_pylist() == [tab.slice(int(i), 1).to_pylist()[0]
+                               for i in idx]
 
 
-def test_cast_capped_empty():
-    out = _cast_capped(TARGET.empty_table(), TARGET)
+def test_take_capped_empty():
+    out = _take_capped(TARGET.empty_table(), np.array([], np.int64))
     assert out.schema == TARGET and out.num_rows == 0
 
 
-def test_large_schema_idempotent_and_maps_strings():
-    big = _large(TARGET)
-    assert big.field("text").type == pa.large_string()
-    assert big.field("turn_idx").type == pa.int64()
-    assert _large(big) == big
+def test_take_capped_keeps_runs_zero_copy():
+    # consecutive winners inside one input batch are a slice of it, not
+    # a copy: the fold's peak memory is the input plus the rows it copies
+    tab = pa.Table.from_pydict(
+        {k: v * 4 for k, v in _row("c", 0, "y" * 10_000, lsn=1).items()},
+        schema=TARGET)
+    pa.default_memory_pool().release_unused()
+    before = pa.total_allocated_bytes()
+    out = _take_capped(tab, np.array([1, 2, 3]))
+    assert out.num_rows == 3
+    assert pa.total_allocated_bytes() - before < 10_000
 
 
 @pytest.mark.parametrize("tombstones", [True, False])

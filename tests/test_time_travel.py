@@ -43,7 +43,7 @@ def test_unknown_snapshot_raises(spark, tmp_path):
         runner.table.read(spark, snapshot_id=9999)
 
 
-def test_read_conversation_prunes_to_one_bucket(spark, tmp_path):
+def test_read_conversation_prunes_to_one_bucket(spark, tmp_path, monkeypatch):
     """Point lookup lists only bucket(conv_id)'s files and returns the
     conversation's turns in stable order, equal to the oracle's rows."""
     from biomedica_etl_spark.cdc.oracle import replay
@@ -57,13 +57,19 @@ def test_read_conversation_prunes_to_one_bucket(spark, tmp_path):
     got = [r.asDict() for r in runner.table.read_conversation(spark, conv).collect()]
     want = [r for r in expected if r["conv_id"] == conv]
     assert got == want
-    # structural pruning: the scan's input files all come from one bucket dir
+    # structural pruning: the scan's input files all come from one bucket
+    # dir (on the Spark route; a small bucket is read on the driver, whose
+    # file set tests/test_read_router.py pins)
     from pyspark.sql import functions as F
 
+    from biomedica_etl_spark.cdc import table as table_mod
+
+    monkeypatch.setattr(table_mod, "LOCAL_MAX_BYTES", -1)
     df = runner.table.read_conversation(spark, conv)
     files = [r[0] for r in df.select(F.input_file_name()).distinct().collect()]
     buckets_touched = {f.split("_bucket=")[1].split("/")[0] for f in files if "_bucket=" in f}
     assert len(buckets_touched) <= 1
+    assert [r.asDict() for r in df.collect()] == want
 
 
 def test_rebucket_spec_evolution(spark, tmp_path):

@@ -18,6 +18,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from biomedica_etl_spark.cdc import table as table_mod
 from biomedica_etl_spark.cdc.index import TokenIndex, postings_of, shard_of
 from biomedica_etl_spark.cdc.generator import GeneratorConfig, generate_change_log
 from biomedica_etl_spark.cdc.merge import compact
@@ -170,16 +171,20 @@ def test_refresh_writes_one_file_per_shard_per_layer(spark, tmp_path):
     assert folds > 0
 
 
-def test_lookup_prunes_to_term_shards(spark, built):
+def test_lookup_prunes_to_term_shards(spark, built, monkeypatch):
     runner, idx = built
     token = idx.read(spark).orderBy(F.desc("tf"), "token").limit(1) \
         .collect()[0]["token"]
     shard = shard_of(token, 16)
-    got = idx.lookup(spark, [token])
-    # the scan plans over the term's shard dirs only
-    files = got.inputFiles()
+    # the Spark route (a shard set over LOCAL_MAX_BYTES) plans its scan
+    # over the term's shard dirs only; tests/test_read_router.py pins the
+    # same pruning on the driver-local route
+    with monkeypatch.context() as m:
+        m.setattr(table_mod, "LOCAL_MAX_BYTES", -1)
+        files = idx.lookup(spark, [token]).inputFiles()
     assert files, "lookup scanned no files"
     assert all(f"shard={shard}" in f for f in files)
+    got = idx.lookup(spark, [token])
     expect = sorted(
         (r["conv_id"], r["turn_idx"], r["tf"])
         for r in idx.read(spark).filter(F.col("token") == token).collect())
