@@ -21,6 +21,14 @@ caches rebuilt from disk, exactly what a restarted driver does), the run
 is resumed, and the final state must equal the pure-Python replay oracle
 with every batch committed exactly once and a further rerun a no-op.
 
+A process killed before the k-th atomic write leaves on disk exactly
+what a clean run had written by then, so the synchronous configs take
+every crash state from ONE clean run: the table root is copied before
+each of its atomic writes, and each copy is resumed. The pipelined
+config stages on pool threads while the driver commits, so a copy taken
+at a commit could tear a file mid-write; it crashes a real run at each
+write instead.
+
 Reference semantics: resume-by-diff against completed work
 (``src/pmc_oa/download_batch.py:246-316``), exists-skip idempotence
 (``src/pmc_oa/download.py:44-50``) — here strengthened to "ANY crash
@@ -29,6 +37,9 @@ point, not just between work items".
 
 from __future__ import annotations
 
+import os
+import shutil
+from concurrent.futures import ThreadPoolExecutor
 from unittest import mock
 
 import pytest
@@ -161,9 +172,16 @@ def test_torn_hint_heals_for_cold_readers_and_writers(tmp_path):
 _REAL_ATOMIC_WRITE = CowTable._atomic_write
 
 
-def _counting_write(counter):
+def _copying_write(copies, copy=True):
+    """Copy the table root before every atomic write: the state a kill at
+    that instant leaves. ``copies`` gets one destination per write, in
+    order; a destination stays absent when nothing was on disk yet, and
+    always with ``copy=False`` (count the writes only)."""
     def wrapper(self, path, payload, **kw):
-        counter["n"] += 1
+        dst = f"{self.root}.crash_{len(copies)}"
+        if copy and os.path.exists(self.root):
+            shutil.copytree(self.root, dst)
+        copies.append(dst)
         return _REAL_ATOMIC_WRITE(self, path, payload, **kw)
     return wrapper
 
@@ -236,23 +254,29 @@ def test_crash_before_every_atomic_write_resumes_exactly_once(
     if kw.get("merge"):
         expected = _merge_expected(expected_full)
 
-    # baseline: count the atomic writes in a clean run (deterministic —
-    # same log, same code path, synchronous maintenance)
-    counter = {"n": 0}
-    with mock.patch.object(CowTable, "_atomic_write", _counting_write(counter)):
+    # baseline: one clean run, copying the table root before each of its
+    # atomic writes (deterministic — same log, same code path, synchronous
+    # maintenance)
+    torn = bool(kw.get("pipeline_depth"))
+    copies: list[str] = []
+    with mock.patch.object(CowTable, "_atomic_write",
+                           _copying_write(copies, copy=not torn)):
         _run_to_completion(spark, log, tmp_path / "baseline", kw, expected_full)
-    total_writes = counter["n"]
+    total_writes = len(copies)
     assert total_writes >= 3, "sweep window unexpectedly empty"
 
-    for k in range(total_writes):
-        root = tmp_path / f"crash_{k}"
-        crash_counter = {"n": 0}
-        with mock.patch.object(
-                CowTable, "_atomic_write", _crashing_write(crash_counter, k)):
-            with pytest.raises(SimulatedCrash):
-                # construction itself publishes snapshot 0, so k=0/1 crash
-                # inside CdcRunner.__init__ — that is a real crash point too
-                _run_to_completion(spark, log, root, kw, expected_full)
+    def resume_and_check(k):
+        root = copies[k]
+        if torn:
+            root = tmp_path / f"crash_{k}"
+            crash_counter = {"n": 0}
+            with mock.patch.object(
+                    CowTable, "_atomic_write",
+                    _crashing_write(crash_counter, k)):
+                with pytest.raises(SimulatedCrash):
+                    # construction itself publishes snapshot 0, so k=0/1
+                    # crash inside CdcRunner.__init__ — a real crash point
+                    _run_to_completion(spark, log, root, kw, expected_full)
 
         # cold restart: fresh runner, caches rebuilt from whatever the
         # crash left on disk
@@ -277,3 +301,10 @@ def test_crash_before_every_atomic_write_resumes_exactly_once(
             assert again.delete_where(DML_PRED, batch_id=DML_BATCH_ID) is None
         if kw.get("merge"):
             assert _run_merge(spark, again, expected_full) is None
+
+    # each crash state is its own table, so the resumes run side by side
+    # on the shared session; a crashing run patches a process-wide method
+    # and goes one at a time
+    with ThreadPoolExecutor(1 if torn else 3) as pool:
+        for _ in pool.map(resume_and_check, range(total_writes)):
+            pass

@@ -22,7 +22,8 @@ from pyspark.sql import types as T
 from biomedica_etl_spark.cdc.generator import GeneratorConfig, generate_change_log
 from biomedica_etl_spark.cdc.merge import delete_where, mor_apply_batch
 from biomedica_etl_spark.cdc.oracle import replay
-from biomedica_etl_spark.cdc.runner import CdcRunner
+
+from tests.conftest import ingested_copy
 
 PRED = "turn_idx % 7 = 3 OR role = 'system'"
 
@@ -42,10 +43,9 @@ def log_dir(tmp_path_factory):
     return d
 
 
-def _build(spark, log_dir, root, mode, **kw):
-    runner = CdcRunner(spark, log_dir, root, n_buckets=8, mode=mode, **kw)
-    runner.run()
-    return runner
+def _build(spark, log_dir, root, mode):
+    """The fully ingested table in ``mode``, a private copy per test."""
+    return ingested_copy(spark, log_dir, root, n_buckets=8, mode=mode)
 
 
 @pytest.mark.parametrize("mode", ["cow", "mor"])

@@ -16,8 +16,9 @@ from pyspark.sql import functions as F
 from biomedica_etl_spark.cdc.generator import GeneratorConfig, generate_change_log
 from biomedica_etl_spark.cdc.merge import merge_into
 from biomedica_etl_spark.cdc.oracle import replay
-from biomedica_etl_spark.cdc.runner import CdcRunner
 from biomedica_etl_spark.cdc.table import bucket_expr
+
+from tests.conftest import ingested_copy
 
 
 @pytest.fixture(scope="module")
@@ -31,10 +32,9 @@ def log_dir(tmp_path_factory):
     return d
 
 
-def _build(spark, log_dir, root, mode, **kw):
-    runner = CdcRunner(spark, log_dir, root, n_buckets=8, mode=mode, **kw)
-    runner.run()
-    return runner
+def _build(spark, log_dir, root, mode):
+    """The fully ingested table in ``mode``, a private copy per test."""
+    return ingested_copy(spark, log_dir, root, n_buckets=8, mode=mode)
 
 
 def _three_clause_source(spark, runner):

@@ -305,24 +305,11 @@ def test_lookup_routes_agree(la_spark, workdir, ix):
     assert got == _expected_postings(shards, query)
 
 
-def test_routes_agree_on_an_ingested_table(la_spark, tmp_path):
+def test_routes_agree_on_an_ingested_table(la_spark, ingested_mor):
     """The same check on what the engine itself writes: a generated log
     (redeliveries, deletes, out-of-order events, three schema epochs)
     through the MOR runner with minor folds and an in-loop index."""
-    from biomedica_etl_spark.cdc.generator import (
-        GeneratorConfig,
-        generate_change_log,
-    )
-    from biomedica_etl_spark.cdc.runner import CdcRunner
-
-    log = str(tmp_path / "log")
-    generate_change_log(log, GeneratorConfig(
-        n_events=1_500, batch_size=300, n_convs=30, duplicate_frac=0.05,
-        out_of_order=True))
-    idx = TokenIndex(str(tmp_path / "idx"), n_shards=4, compact_at=3)
-    r = CdcRunner(la_spark, log, str(tmp_path / "t"), n_buckets=4,
-                  mode="mor", compact_every=3, maintain=[idx])
-    r.run()
+    r, idx = ingested_mor
     t = r.table
     mid = t.snapshots()[len(t.snapshots()) // 2]["snapshot_id"]
     convs = sorted({x["conv_id"] for x in r.final_state().collect()})[:3]

@@ -16,24 +16,15 @@ import pytest
 from pyspark.sql import functions as F
 
 from biomedica_etl_spark.cdc import table as table_mod
-from biomedica_etl_spark.cdc.generator import GeneratorConfig, generate_change_log
-from biomedica_etl_spark.cdc.index import TokenIndex, shard_of
+from biomedica_etl_spark.cdc.index import shard_of
 from biomedica_etl_spark.cdc.merge import compact_layers
-from biomedica_etl_spark.cdc.runner import CdcRunner
 from biomedica_etl_spark.cdc.xxhash import bucket_of
 from biomedica_etl_spark.sources import datasource
 
 
 @pytest.fixture(scope="module")
-def built(spark, tmp_path_factory):
-    d = tmp_path_factory.mktemp("router")
-    log = str(d / "log")
-    generate_change_log(log, GeneratorConfig(
-        n_events=2_000, batch_size=500, n_convs=40))
-    idx = TokenIndex(str(d / "idx"), n_shards=4)
-    r = CdcRunner(spark, log, str(d / "t"), n_buckets=4, mode="mor",
-                  maintain=[idx])
-    r.run()
+def built(spark, ingested_mor):
+    r, idx = ingested_mor
     conv = sorted(x["conv_id"] for x in r.final_state().collect())[0]
     token = sorted(x["token"] for x in idx.read(spark).collect())[0]
     return r.table, idx, conv, token
