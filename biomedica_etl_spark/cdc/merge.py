@@ -19,18 +19,24 @@ structural no-op.
 
 Physical plans (measured on local[32]; see BENCH/BASELINE.md):
 
-- **MOR apply (default ingest path)** is ONE wide Spark job: the raw batch
-  is shuffled once on ``(bucket(conv_id), salt(turn_idx))``; because the
-  aggregation keys are a superset of the partitioning keys, Catalyst
-  inserts no further exchange. AQE sizes that uncounted exchange by bytes,
-  so the ``partitionBy(bucket)`` write emits one file per bucket for a
-  small batch and at most ``shuffle_salts`` for a large one (the salt
-  spreads a zipf-hot conversation's bucket over ``k`` writer tasks
-  instead of one straggler — see lww_reduce_aligned). Raw-batch
-  metrics (offsets, lsn range, watermark) ride along via ``df.observe`` —
-  computed inside the same job, zero extra passes. A second, O(delta)
+- **MOR apply (default ingest path)** stages a batch by one of two
+  routes that write the same layer. A batch handed over as a
+  ``DataFrame`` is ONE wide Spark job: the raw batch is shuffled once on
+  ``(bucket(conv_id), salt(turn_idx))``; because the aggregation keys
+  are a superset of the partitioning keys, Catalyst inserts no further
+  exchange. AQE sizes that uncounted exchange by bytes, so the
+  ``partitionBy(bucket)`` write emits one file per bucket for a small
+  batch and at most ``shuffle_salts`` for a large one (the salt spreads a
+  zipf-hot conversation's bucket over ``k`` writer tasks instead of one
+  straggler — see lww_reduce_aligned). Raw-batch metrics (offsets, lsn
+  range, watermark) ride along via ``df.observe`` — computed inside the
+  same job, zero extra passes. A batch handed over as an Arrow table
+  (the runner does so for a log batch whose files fit
+  ``LOCAL_MAX_BYTES``) is staged on the driver with no Spark job: one
+  pass for the metrics and quarantine, then one key sort per bucket on a
+  thread pool (``_stage_local``). Either way a second, O(delta)
   column-pruned job over the just-written layer produces the per-bucket
-  lineage rows.
+  lineage rows, off the critical path.
 - **COW merge** runs Iceberg-MERGE-style: a *planning* job scans only
   ``(conv_id, op, lsn, ts)`` (never the text payload) to find affected
   buckets + per-bucket raw metrics, then ONE wide job does
@@ -96,6 +102,20 @@ def _valid_pred():
         & F.col("lsn").isNotNull()
     )
     return F.coalesce(pred, F.lit(False))
+
+
+def _valid_mask(changes: Any) -> Any:
+    """``_valid_pred`` over an Arrow change table, as a numpy bool mask:
+    the same conjunction, with a NULL result counted invalid."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    pred = pc.and_kleene(
+        pc.and_kleene(
+            pc.is_in(changes["op"], value_set=pa.array(["I", "U", "D"])),
+            pc.greater_equal(changes["turn_idx"], 0)),
+        pc.and_(pc.is_valid(changes["conv_id"]), pc.is_valid(changes["lsn"])))
+    return pc.fill_null(pred, False).to_numpy(zero_copy_only=False)
 
 
 def _raw_metric_aggs() -> list:
@@ -391,10 +411,130 @@ def merge_batch(
     return snap
 
 
+def _raw_metrics_local(changes: Any, valid: Any) -> dict[str, Any]:
+    """``_raw_metric_aggs`` over an Arrow change table, shaped as the
+    Spark ``Observation`` returns it: sums are None on an empty batch,
+    and the watermark is the naive local ``datetime`` PySpark collects."""
+    import numpy as np
+    import pyarrow.compute as pc
+    from pyspark.sql import types as T
+
+    n = changes.num_rows
+    is_del = pc.fill_null(pc.equal(changes["op"], "D"), False).to_numpy(
+        zero_copy_only=False)
+    ts_hi = pc.max(changes["ts"])
+
+    def count(mask: Any) -> int | None:
+        return int(np.count_nonzero(mask)) if n else None
+
+    return {
+        "offsets_applied": n,
+        "rows_upserted": count(valid & ~is_del),
+        "rows_deleted": count(valid & is_del),
+        "rows_quarantined": count(~valid),
+        "lsn_lo": pc.min(changes["lsn"]).as_py(),
+        "lsn_hi": pc.max(changes["lsn"]).as_py(),
+        "watermark": (T.TimestampType().fromInternal(ts_hi.value)
+                      if ts_hi.is_valid else None),
+    }
+
+
+def _write_parquet_parts(tab: Any, out_dir: str,
+                         max_records_per_file: int) -> None:
+    """``tab`` as zstd parquet files in ``out_dir``, at most
+    ``max_records_per_file`` rows each (0 = one file)."""
+    import uuid
+
+    import pyarrow.parquet as pq
+
+    os.makedirs(out_dir, exist_ok=True)
+    step = max_records_per_file if max_records_per_file > 0 else tab.num_rows
+    token = uuid.uuid4().hex
+    for i, lo in enumerate(range(0, tab.num_rows, max(step, 1))):
+        pq.write_table(tab.slice(lo, step), os.path.join(
+            out_dir, f"part-{i:05d}-{token}.zstd.parquet"), compression="zstd")
+
+
+def _stage_local(
+    spark: SparkSession, table: CowTable, changes: Any, batch_id: int,
+    quarantine_dir: str | None, max_records_per_file: int,
+) -> dict[str, Any]:
+    """Driver-local twin of the Spark stage, for a batch small enough to
+    hold in Arrow: the same staged record, and the same stored rows in
+    the same bucket dirs as a Spark stage writes, with no Spark job.
+
+    One pass over the batch gives the raw metrics and the validity mask;
+    invalid rows replace ``quarantine_dir/batch_id=N``. Valid rows are
+    bucketed by ``bucket_of`` (once per distinct ``conv_id``), and each
+    bucket then runs on a thread pool of ``defaultParallelism``: ONE sort
+    of its ``(conv_id, turn_idx, lsn)`` keys yields both the LWW winners
+    and their write order, and the winners are written in stored shape
+    under ``stage/_bucket=b/``."""
+    import shutil
+    from concurrent.futures import ThreadPoolExecutor
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from ..sources.datasource import (
+        _TAKE_CAP_BYTES,
+        _last_per_key,
+        _row_bytes,
+        _stored_write_schema,
+        _take_capped,
+    )
+    from .schema import target_change_arrow_schema
+    from .xxhash import bucket_of
+
+    changes = changes.select(CHANGE_COLS).cast(target_change_arrow_schema())
+    valid = _valid_mask(changes)
+    raw = _raw_metrics_local(changes, valid)
+    row_bytes = _row_bytes(changes) if changes.nbytes > _TAKE_CAP_BYTES else None
+    if raw["rows_quarantined"] and quarantine_dir is not None:
+        # replace, as the Spark stage's overwrite does: a batch re-staged
+        # after a crash must not hold its poison rows twice
+        out = os.path.join(quarantine_dir, f"batch_id={batch_id}")
+        shutil.rmtree(out, ignore_errors=True)
+        _write_parquet_parts(_take_capped(changes, np.flatnonzero(~valid),
+                                          row_bytes=row_bytes), out, 0)
+
+    rows = np.flatnonzero(valid)
+    convs = changes["conv_id"].take(pa.array(rows))
+    distinct = pc.unique(convs)
+    of_conv = np.array([bucket_of(c, table.n_buckets)
+                        for c in distinct.to_pylist()], np.int32)
+    bucket = of_conv[pc.index_in(convs, value_set=distinct).to_numpy()]
+    order = np.argsort(bucket, kind="stable")
+    cuts = np.flatnonzero(np.diff(bucket[order])) + 1
+    keys = changes.select(["conv_id", "turn_idx", "lsn"])
+    stage = table.new_data_dir()
+    schema = _stored_write_schema()
+
+    def write_bucket(part: Any) -> None:
+        mine = rows[part]  # ascending: the sort above is stable
+        winners = mine[_last_per_key(_take_capped(keys, mine),
+                                     ["conv_id", "turn_idx"], ["lsn"],
+                                     key_order=True)]
+        won = _take_capped(changes, winners, row_bytes=row_bytes)
+        stored = pa.table(
+            [won[c] for c in PAYLOAD_COLS]
+            + [won["lsn"], pc.equal(won["op"], "D")], schema=schema)
+        _write_parquet_parts(
+            stored, os.path.join(stage, f"{BUCKET_COL}={bucket[part[0]]}"),
+            max_records_per_file)
+
+    if len(rows):
+        with ThreadPoolExecutor(spark.sparkContext.defaultParallelism) as pool:
+            list(pool.map(write_bucket, np.split(order, cuts)))
+    return {"batch_id": batch_id, "stage": stage, "raw": raw,
+            "written": _written_dirs(stage)}
+
+
 def mor_stage_batch(
     spark: SparkSession,
     table: CowTable,
-    changes: DataFrame,
+    changes: Any,
     batch_id: int,
     salted: bool = False,
     n_salts: int = 8,
@@ -404,18 +544,32 @@ def mor_stage_batch(
     max_records_per_file: int = 0,
     pre_reduced: bool = False,
 ) -> dict[str, Any] | None:
-    """Spark-side half of a MOR apply: LWW-reduce the batch and write the
+    """First half of a MOR apply: LWW-reduce the batch and write the
     delta layer to an UNCOMMITTED staging dir. Returns the staging record
+    (``batch_id``, ``stage``, ``raw`` metrics, ``written`` bucket dirs)
     for ``mor_commit_staged``, or None if the batch is already committed.
 
+    ``changes`` is either a ``DataFrame``, staged by one wide Spark job
+    (the aligned reduce feeding the bucket-partitioned write, raw metrics
+    observed in flight), or a ``pyarrow.Table`` in the target change
+    schema, staged on the driver with no Spark job (``_stage_local``).
+    The runner hands a MOR log batch over as Arrow when its files fit
+    ``LOCAL_MAX_BYTES``; both routes write the same rows to the same
+    buckets and return the same record. ``salted``, ``n_salts``,
+    ``plan`` and ``shuffle_salts`` shape the Spark plan only; the
+    driver-local stage ignores them.
+
     Split from the commit so a pipelined runner can overlap batch k+1's
-    wide Spark job with batch k's commit + lineage (the writes of distinct
-    MOR batches are independent — only the snapshot chain serializes).
-    A crash after staging leaves only an unreferenced dir, exactly the
+    stage with batch k's commit + lineage (the writes of distinct MOR
+    batches are independent — only the snapshot chain serializes). A
+    crash after staging leaves only an unreferenced dir, exactly the
     pre-existing crash model.
     """
     if table.is_committed(batch_id):
         return None
+    if not isinstance(changes, DataFrame):
+        return _stage_local(spark, table, changes, batch_id, quarantine_dir,
+                            max_records_per_file)
     n_buckets = table.n_buckets
     bucketed = _with_bucket(changes, n_buckets)
 
@@ -517,7 +671,7 @@ def mor_commit_staged(
 def mor_apply_batch(
     spark: SparkSession,
     table: CowTable,
-    changes: DataFrame,
+    changes: Any,
     batch_id: int,
     salted: bool = False,
     n_salts: int = 8,
@@ -533,11 +687,11 @@ def mor_apply_batch(
     """Merge-on-read apply: write the LWW-reduced delta as a new layer.
 
     Iceberg-v2-MOR-style ingest: cost is O(delta) and the base table is
-    never read or rewritten. The aligned default is ONE wide Spark job
-    (shuffle-once reduce feeding the bucket-partitioned write) with raw
-    metrics observed in-flight, plus one tiny read-back job on the written
-    layer for per-bucket lineage. Readers resolve layers by max-_lsn
-    (table.read_raw); ``compact`` folds layers back into the base.
+    never read or rewritten. ``changes`` is a ``DataFrame`` or an Arrow
+    table, staged as ``mor_stage_batch`` describes, plus one tiny
+    read-back job on the written layer for per-bucket lineage. Readers
+    resolve layers by max-_lsn (table.read_raw); ``compact`` folds
+    layers back into the base.
     """
     staged = mor_stage_batch(spark, table, changes, batch_id, salted=salted,
                              n_salts=n_salts, plan=plan,

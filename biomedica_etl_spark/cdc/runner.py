@@ -7,11 +7,15 @@ Each iteration:
 1. ``pending_batches`` (checkpoint anti-join) picks the next uncommitted
    micro-batch;
 2. the batch is read with **partition pruning** — only its
-   ``schema_id=K/batch_id=N`` directory is listed/scanned;
+   ``schema_id=K/batch_id=N`` directory is listed/scanned — as a Spark
+   DataFrame, or, for a MOR batch whose files fit ``LOCAL_MAX_BYTES``,
+   into an Arrow table on the driver;
 3. the epoch's physical schema is aligned to the target schema
    (schema evolution, metadata-only);
 4. merge_batch LWW-reduces, COW-merges the affected buckets, commits one
-   snapshot, and appends per-partition lineage.
+   snapshot, and appends per-partition lineage (MOR: mor_stage_batch
+   writes a delta layer — with no Spark job for an Arrow batch — and
+   mor_commit_staged commits it).
 
 Crash anywhere before the snapshot rename leaves only an unreferenced
 staging dir; restart re-derives pending work from the checkpoint and
@@ -40,9 +44,10 @@ from .schema import (
     CHANGE_COLS,
     SchemaRegistry,
     align_to_target,
+    target_change_arrow_schema,
     target_change_schema,
 )
-from .table import ConcurrentCommitError, CowTable
+from .table import ConcurrentCommitError, CowTable, fits_local
 
 
 class _TrackedPool:
@@ -315,6 +320,29 @@ class CdcRunner:
         self.lineage_dir = os.path.join(table_root, "_lineage")
         self.quarantine_dir = os.path.join(table_root, "_quarantine")
 
+    def _changes(self, batch_id: int, schema_id: int) -> Any:
+        """One log batch's changes. A MOR batch whose files fit
+        ``LOCAL_MAX_BYTES`` is read on the driver into an Arrow table in
+        the target change schema (missing ``tool`` padded with nulls,
+        ``turn_idx`` widened, ``ts`` tagged UTC), which
+        ``mor_stage_batch`` stages without a Spark job; otherwise
+        ``read_batch``'s DataFrame."""
+        if self.mode == "mor":
+            path = os.path.join(self.log_dir, f"schema_id={schema_id}",
+                                f"batch_id={batch_id}")
+            # the files Spark reads: it skips names that start with "_"
+            # or ".", such as _SUCCESS and checksums
+            files = sorted(os.path.join(path, f) for f in os.listdir(path)
+                           if not f.startswith(("_", "."))
+                           and os.path.isfile(os.path.join(path, f)))
+            if fits_local(files):
+                from ..sources.datasource import _read_stored_arrow
+
+                return _read_stored_arrow(
+                    files, schema=target_change_arrow_schema())
+        return read_batch(self.spark, self.log_dir, batch_id, schema_id,
+                          self.registry)
+
     def pending(self) -> list[int]:
         return pending_batches(self.spark, self.log_dir, self.table)
 
@@ -356,9 +384,7 @@ class CdcRunner:
         for batch_id in self.pending():
             if max_batches is not None and len(result.batches_applied) >= max_batches:
                 break
-            changes = read_batch(
-                self.spark, self.log_dir, batch_id, schema_of[batch_id], self.registry
-            )
+            changes = self._changes(batch_id, schema_of[batch_id])
             if self.mode == "mor" and self.audit is None:
                 # stage/commit split so a lost commit race (e.g. to an
                 # async compaction) retries the METADATA only — the staged
@@ -458,8 +484,7 @@ class CdcRunner:
             self.spark.sparkContext.setLocalProperty(
                 "spark.scheduler.pool", f"stage-{batch_id % self.pipeline_depth}"
             )
-            changes = read_batch(self.spark, self.log_dir, batch_id,
-                                 schema_of[batch_id], self.registry)
+            changes = self._changes(batch_id, schema_of[batch_id])
             return mor_stage_batch(
                 self.spark, self.table, changes, batch_id,
                 salted=self.salted, n_salts=self.n_salts, plan=self.plan,
@@ -770,8 +795,7 @@ class CdcRunner:
             return None
         batch_id = pend[0]
         schema_of = dict(planned_batches(self.log_dir))
-        changes = read_batch(self.spark, self.log_dir, batch_id,
-                             schema_of[batch_id], self.registry)
+        changes = self._changes(batch_id, schema_of[batch_id])
         apply_fn = merge_batch if self.mode == "cow" else mor_apply_batch
         return apply_fn(
             self.spark, self.table, changes, batch_id,

@@ -15,6 +15,7 @@ scale and keeps the whole read inside WholeStageCodegen.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -66,6 +67,16 @@ def change_schema_for_epoch(schema_id: int) -> T.StructType:
 def target_change_schema() -> T.StructType:
     fields = [T.StructField(n, t, n not in ("lsn", "op")) for n, t in CHANGE_ENVELOPE + PAYLOAD_FIELDS]
     return T.StructType(fields)
+
+
+def target_change_arrow_schema() -> pa.Schema:
+    """``target_change_schema`` in Arrow, for changes read on the driver.
+    ``ts`` is UTC-tagged: the log's naive timestamps hold UTC micros,
+    which is how Spark reads them too, whatever the session time zone."""
+    to_arrow = {"string": pa.string(), "bigint": pa.int64(),
+                "timestamp": pa.timestamp("us", tz="UTC")}
+    return pa.schema([(f.name, to_arrow[f.dataType.simpleString()])
+                      for f in target_change_schema().fields])
 
 
 def align_to_target(df: DataFrame) -> DataFrame:

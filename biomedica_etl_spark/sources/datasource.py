@@ -87,11 +87,20 @@ def _arrow_schema(with_sys: bool) -> pa.Schema:
     return pa.schema(fields)
 
 
+def _stored_write_schema() -> pa.Schema:
+    """The stored shape as the engine writes it: ``ts`` as tz-aware UTC
+    micros, which Spark reads as the same instant under any session
+    time zone."""
+    return pa.schema([pa.field("ts", pa.timestamp("us", tz="UTC"))
+                      if f.name == "ts" else f for f in _arrow_schema(True)])
+
+
 def _read_stored_arrow(files: list[str], filters: list | None = None,
                        schema: pa.Schema | None = None) -> pa.Table:
-    """Read stored-shape parquet files into one Arrow table, normalized to
-    ``schema`` (default: the table's stored shape, ts cast to us; old
-    INT96 files land as ns).
+    """Read parquet files into one Arrow table, normalized to ``schema``
+    (default: the table's stored shape, ts cast to us; old INT96 files
+    land as ns; the runner passes the target change schema to read a log
+    batch).
 
     ``filters`` (pyarrow DNF, e.g. ``[("conv_id", "=", c)]``) prunes row
     groups by their min/max statistics and then drops non-matching rows,
@@ -138,45 +147,71 @@ def _row_bytes(tab: pa.Table) -> np.ndarray:
 
 
 def _take_capped(tab: pa.Table, rows: np.ndarray,
-                 cap: int = _TAKE_CAP_BYTES) -> pa.Table:
-    """``tab``'s rows at the ASCENDING indices ``rows``, gathered batch by
-    batch in output chunks of at most ``cap`` bytes.
+                 cap: int = _TAKE_CAP_BYTES,
+                 row_bytes: np.ndarray | None = None) -> pa.Table:
+    """``tab``'s rows at the indices ``rows``, in that order, gathered in
+    output chunks of at most ``cap`` bytes.
 
     Arrow's own ``Table.take`` concatenates each multi-chunk column
     before taking: a full copy of the input per call, and an 'offset
-    overflow' once a string column passes 2 GiB. Gathering from each
-    input record batch separately copies only the rows kept, and a run
-    of consecutive rows is a zero-copy slice of its batch. Peak memory is
-    the input plus the rows kept."""
+    overflow' once a string column passes 2 GiB. ASCENDING indices are
+    gathered from each input record batch separately, which copies only
+    the rows kept, and a run of consecutive rows is a zero-copy slice of
+    its batch. Any other order is cut into chunks of at most ``cap``
+    bytes; each is gathered ascending and then permuted within itself.
+    Peak memory is the input plus the rows kept. ``row_bytes``
+    (``_row_bytes(tab)``) spares a caller that gathers from one table
+    many times its recomputation."""
+    if tab.nbytes <= cap:
+        # an input under the cap cannot gather a chunk over it
+        sizes = np.zeros(len(rows), np.int64)
+    else:
+        if row_bytes is None:
+            row_bytes = _row_bytes(tab)
+        sizes = row_bytes[rows]
+    out = []
+    if len(rows) > 1 and (np.diff(rows) < 0).any():
+        for j, k in _capped_runs(sizes, cap):
+            part = rows[j:k]
+            asc = np.sort(part)
+            got = _take_capped(tab, asc, cap, row_bytes)
+            out.extend(got.take(pa.array(np.searchsorted(asc, part)))
+                       .to_batches())
+        return pa.Table.from_batches(out, schema=tab.schema)
     batches = tab.to_batches()
     starts = np.cumsum([0] + [b.num_rows for b in batches])
-    # an input under the cap cannot gather a chunk over it
-    sizes = (_row_bytes(tab)[rows] if tab.nbytes > cap
-             else np.zeros(len(rows), np.int64))
-    out = []
     for i, batch in enumerate(batches):
         lo, hi = np.searchsorted(rows, starts[i:i + 2])
         local = rows[lo:hi] - starts[i]
-        cum = np.cumsum(sizes[lo:hi])
-        j = 0
-        while j < len(local):
-            k = max(j + 1, int(np.searchsorted(
-                cum, (cum[j - 1] if j else 0) + cap, side="right")))
+        for j, k in _capped_runs(sizes[lo:hi], cap):
             part = local[j:k]
             if part[-1] - part[0] == len(part) - 1:
                 out.append(batch.slice(int(part[0]), len(part)))
             else:
                 out.append(batch.take(pa.array(part)))
-            j = k
     return pa.Table.from_batches(out, schema=tab.schema)
 
 
-def _last_per_key(tab: pa.Table, keys: list[str],
-                  order: list[str]) -> np.ndarray:
-    """Ascending row indices of the row each ``keys`` value keeps: the
-    last one by ``order``. Sorts the key and order columns only, never
-    the payload. A null key compares unequal to its neighbours, so such
-    rows are each kept, never silently dropped."""
+def _capped_runs(sizes: np.ndarray, cap: int):
+    """``(start, stop)`` of consecutive runs of ``sizes`` that sum to at
+    most ``cap``; an item over the cap gets a run of its own."""
+    cum = np.cumsum(sizes)
+    j = 0
+    while j < len(sizes):
+        k = max(j + 1, int(np.searchsorted(
+            cum, (cum[j - 1] if j else 0) + cap, side="right")))
+        yield j, k
+        j = k
+
+
+def _last_per_key(tab: pa.Table, keys: list[str], order: list[str],
+                  key_order: bool = False) -> np.ndarray:
+    """Row indices of the row each ``keys`` value keeps: the last one by
+    ``order``. Ascending by default; ``key_order=True`` returns them in
+    the sort's own ``keys`` order instead, which is a write order for
+    free. Sorts the key and order columns only, never the payload. A
+    null key compares unequal to its neighbours, so such rows are each
+    kept, never silently dropped."""
     cols = keys + order
     idx = pc.sort_indices(tab.select(cols),
                           sort_keys=[(c, "ascending") for c in cols])
@@ -191,7 +226,8 @@ def _last_per_key(tab: pa.Table, keys: list[str],
                                            col.slice(1)), True)
             diff = ne if diff is None else pc.or_(diff, ne)
         last[:-1] = diff.to_numpy(zero_copy_only=False)
-    return np.sort(idx.to_numpy()[last])
+    kept = idx.to_numpy()[last]
+    return kept if key_order else np.sort(kept)
 
 
 def _lww_fold(stored: pa.Table, tombstones: bool) -> pa.Table:
@@ -381,10 +417,7 @@ def _write_change_batches(batches, root: str, n_buckets: int
     from ..cdc.xxhash import bucket_of
 
     task_dir = os.path.join(root, "data", f"snap-{uuid.uuid4().hex}")
-    target = _arrow_schema(True)
-    out_schema = pa.schema([
-        pa.field(f.name, pa.timestamp("us", tz="UTC"))
-        if f.name == "ts" else f for f in target])
+    out_schema = _stored_write_schema()
     # accumulate per bucket across Arrow batches and write ONE file per
     # bucket at task end — writing inside the batch loop would emit
     # (batches x buckets) tiny files per task (Spark hands ~10k-row

@@ -44,6 +44,7 @@ from unittest import mock
 
 import pytest
 
+from biomedica_etl_spark.cdc import table as table_mod
 from biomedica_etl_spark.cdc.generator import GeneratorConfig, generate_change_log
 from biomedica_etl_spark.cdc.oracle import replay
 from biomedica_etl_spark.cdc.runner import CdcRunner
@@ -81,6 +82,10 @@ CONFIGS = {
     # atomic writes join the sweep window; its fixed batch_id fences the
     # resumed merge exactly like an ingest batch
     "mor_merge": dict(mode="mor", merge=True),
+    # the MOR configs above stage their small batches on the driver; this
+    # one forces the Spark stage (LOCAL_MAX_BYTES at -1) so both stage
+    # routes are swept
+    "mor_spark_stage": dict(mode="mor", spark_stage=True),
 }
 
 DML_BATCH_ID = 9_700_001
@@ -244,7 +249,14 @@ def _run_to_completion(spark, log, root, kw, expected_full=None):
 @pytest.mark.parametrize("name", sorted(CONFIGS))
 def test_crash_before_every_atomic_write_resumes_exactly_once(
         spark, tmp_path, name):
-    kw = CONFIGS[name]
+    # patched once around the whole sweep: the resumes run on threads
+    limit = -1 if CONFIGS[name].get("spark_stage") else table_mod.LOCAL_MAX_BYTES
+    with mock.patch.object(table_mod, "LOCAL_MAX_BYTES", limit):
+        _sweep(spark, tmp_path, name)
+
+
+def _sweep(spark, tmp_path, name):
+    kw = {k: v for k, v in CONFIGS[name].items() if k != "spark_stage"}
     log = str(tmp_path / "log")
     generate_change_log(log, CFG)
     expected_full = replay(log)

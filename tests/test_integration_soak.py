@@ -13,8 +13,11 @@ keeps the same sequence at suite-friendly scale.)
 
 from __future__ import annotations
 
+from unittest import mock
+
 import pytest
 
+from biomedica_etl_spark.cdc import table as table_mod
 from biomedica_etl_spark.cdc.generator import GeneratorConfig, generate_change_log
 from biomedica_etl_spark.cdc.merge import compact, rebucket
 from biomedica_etl_spark.cdc.oracle import replay
@@ -35,10 +38,14 @@ def test_lifecycle_soak_every_feature_interleaved(spark, tmp_path):
         corrupt_frac=0.02, update_frac=0.3, delete_frac=0.08))
     root = str(tmp_path / "t")
 
-    # phase 1: pipelined salted MOR ingest of half the log
+    # phase 1: pipelined salted MOR ingest of half the log. Salting acts
+    # only in the Spark stage, which these small batches would skip; the
+    # limit at -1 pins it (patched around the whole run: the stages run on
+    # threads)
     r = CdcRunner(spark, log, root, n_buckets=8, mode="mor", compact_every=3,
                   pipeline_depth=2, async_lineage=True, salted=True, n_salts=4)
-    r.run(max_batches=4)
+    with mock.patch.object(table_mod, "LOCAL_MAX_BYTES", -1):
+        r.run(max_batches=4)
 
     # maintenance storm mid-stream
     compact(spark, r.table)

@@ -393,9 +393,11 @@ def test_write_routed_partitions_and_caps_files(spark, tmp_path):
 
 def test_table_write_respects_max_records_per_file(spark, tmp_path):
     import glob as _glob
+    from unittest import mock
 
     import pyarrow.parquet as pq
 
+    from biomedica_etl_spark.cdc import table as table_mod
     from biomedica_etl_spark.cdc.generator import GeneratorConfig, generate_change_log
     from biomedica_etl_spark.cdc.runner import CdcRunner
 
@@ -404,7 +406,10 @@ def test_table_write_respects_max_records_per_file(spark, tmp_path):
                                              n_convs=40))
     r = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=4, mode="mor",
                   max_records_per_file=150)
-    r.run()
+    # the limit at -1 pins the Spark stage (Spark's maxRecordsPerFile);
+    # tests/test_property_local_stage.py checks the driver-local stage's cap
+    with mock.patch.object(table_mod, "LOCAL_MAX_BYTES", -1):
+        r.run()
     files = _glob.glob(os.path.join(str(tmp_path / "t"), "data", "*",
                                     "_bucket=*", "*.parquet"))
     assert files

@@ -12,9 +12,11 @@ from __future__ import annotations
 
 import glob
 import os
+from unittest import mock
 
 from pyspark.sql import functions as F
 
+from biomedica_etl_spark.cdc import table as table_mod
 from biomedica_etl_spark.cdc.generator import SCENARIOS, generate_change_log
 from biomedica_etl_spark.cdc.merge import _with_bucket
 from biomedica_etl_spark.cdc.reduce import lww_reduce, lww_reduce_aligned
@@ -66,26 +68,42 @@ def test_cow_plans_equivalent(spark, tmp_path):
 
 
 def test_mor_aligned_matches_oracle(spark, tmp_path):
+    """The limit at -1 pins the Spark stage, where ``plan`` applies; a
+    batch this small would otherwise be staged on the driver."""
     log = _gen(tmp_path)
-    run_and_compare(
-        spark, log, str(tmp_path / "t_mor"), mode="mor", plan="aligned",
-        compact_every=3,
-    )
+    with mock.patch.object(table_mod, "LOCAL_MAX_BYTES", -1):
+        run_and_compare(
+            spark, log, str(tmp_path / "t_mor"), mode="mor", plan="aligned",
+            compact_every=3,
+        )
+
+
+def _files_per_layer(spark, tmp_path, limit):
+    log = _gen(tmp_path, "insert_only")
+    with mock.patch.object(table_mod, "LOCAL_MAX_BYTES", limit):
+        runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8,
+                           mode="mor")
+        runner.run(max_batches=1)
+    snap = runner.table.current_snapshot()
+    assert snap["delta_dirs"], "expected a delta layer"
+    return [glob.glob(os.path.join(runner.table.root, d, "*.parquet"))
+            for dirs in snap["delta_dirs"].values() for d in dirs]
 
 
 def test_aligned_write_bounded_files_per_bucket(spark, tmp_path):
     """The aligned write goes straight from the reduce — no extra
     repartition — and AQE coalesces a small batch's exchange, so every
-    touched bucket gets exactly one file, not one per salt."""
-    log = _gen(tmp_path, "insert_only")
-    runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8, mode="mor")
-    runner.run(max_batches=1)
-    snap = runner.table.current_snapshot()
-    assert snap["delta_dirs"], "expected a delta layer"
-    for dirs in snap["delta_dirs"].values():
-        for d in dirs:
-            files = glob.glob(os.path.join(runner.table.root, d, "*.parquet"))
-            assert len(files) == 1, files
+    touched bucket gets exactly one file, not one per salt. The limit at
+    -1 pins the Spark stage, which a batch this small would skip."""
+    for files in _files_per_layer(spark, tmp_path, -1):
+        assert len(files) == 1, files
+
+
+def test_local_stage_writes_one_file_per_bucket(spark, tmp_path):
+    """A batch that fits ``LOCAL_MAX_BYTES`` is staged on the driver,
+    also one file per touched bucket."""
+    for files in _files_per_layer(spark, tmp_path, table_mod.LOCAL_MAX_BYTES):
+        assert len(files) == 1, files
 
 
 def test_salted_runner_matches_oracle(spark, tmp_path):

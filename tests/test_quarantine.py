@@ -99,3 +99,42 @@ def test_clean_batch_writes_no_quarantine(spark, tmp_path):
     generate_change_log(log, SCENARIOS["update_delete_mix"])
     runner, _ = run_and_compare(spark, log, str(tmp_path / "t"))
     assert not os.path.exists(runner.quarantine_dir)
+
+
+@pytest.mark.parametrize("route", ["local", "spark"])
+def test_restaged_batch_quarantines_each_poison_row_once(spark, tmp_path, route):
+    """A crash between a batch's stage and its commit: the resumed run
+    stages the batch again, and the batch's quarantine dir is replaced,
+    not appended to, so it still holds each poison row once."""
+    from unittest import mock
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from biomedica_etl_spark.cdc import runner as runner_mod
+    from biomedica_etl_spark.cdc import table as table_mod
+    from biomedica_etl_spark.cdc.generator import GeneratorConfig
+    from biomedica_etl_spark.cdc.runner import CdcRunner
+
+    log = str(tmp_path / "log")
+    generate_change_log(log, GeneratorConfig(
+        n_events=2_000, batch_size=1_000, corrupt_frac=0.05))
+    import glob
+
+    batch0 = pq.read_table(glob.glob(os.path.join(log, "schema_id=*", "batch_id=0"))[0])
+    poison = batch0.filter(pc.or_(
+        pc.invert(pc.is_in(batch0["op"], value_set=pc.cast(["I", "U", "D"], "string"))),
+        pc.less(batch0["turn_idx"], 0)))
+    assert poison.num_rows > 0
+    root = str(tmp_path / "t")
+    limit = table_mod.LOCAL_MAX_BYTES if route == "local" else -1
+    with mock.patch.object(table_mod, "LOCAL_MAX_BYTES", limit):
+        with mock.patch.object(runner_mod, "mor_commit_staged",
+                               side_effect=RuntimeError("crash before commit")):
+            with pytest.raises(RuntimeError):
+                CdcRunner(spark, log, root, n_buckets=4, mode="mor").run()
+        runner = CdcRunner(spark, log, root, n_buckets=4, mode="mor")
+        assert runner.pending()[0] == 0
+        runner.run()
+    got = sorted(r["lsn"] for r in runner.read_quarantine(0).select("lsn").collect())
+    assert got == sorted(poison["lsn"].to_pylist())
