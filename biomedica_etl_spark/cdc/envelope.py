@@ -798,7 +798,7 @@ def write_debezium_log(log_dir: str, out_dir: str,
 
 def ingest_debezium(
     spark: SparkSession, ndjson_dir: str, table_path: str,
-    n_buckets: int = 8, salted: bool = False,
+    n_buckets: int = 8,
     quarantine_dir: str | None = None,
 ) -> CowTable:
     """Micro-batched envelope ingest with exactly-once fencing.
@@ -834,7 +834,7 @@ def ingest_debezium(
             continue
         lines = spark.read.text(os.path.join(ndjson_dir, f))
         events = parse_debezium(lines, value_col="value")
-        mor_apply_batch(spark, table, events, batch_id, salted=salted,
+        mor_apply_batch(spark, table, events, batch_id,
                         quarantine_dir=quarantine_dir)
         table.refresh()
     return table

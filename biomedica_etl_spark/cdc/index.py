@@ -118,24 +118,6 @@ def postings_of(df: DataFrame, n_shards: int) -> DataFrame:
     )
 
 
-def _dml_call(spark: SparkSession, table: CowTable, changes: DataFrame,
-              mode: str, batch_id: int | None,
-              dml_kw: dict[str, Any]) -> dict[str, Any] | None:
-    """One place that binds the index-DML keyword surface to _apply_dml's
-    positional signature (delete_matching and update_matching share it)."""
-    from .merge import _apply_dml
-
-    return _apply_dml(
-        spark, table, changes, mode, batch_id,
-        dml_kw.pop("salted", False), dml_kw.pop("n_salts", 8),
-        dml_kw.pop("lineage_dir", None),
-        dml_kw.pop("plan", "aligned"),
-        dml_kw.pop("shuffle_salts", 4),
-        dml_kw.pop("lineage_executor", None),
-        dml_kw.pop("max_records_per_file", 0),
-    )
-
-
 class TokenIndex(ShardedLayerStore):
     """Sharded merge-on-read inverted index, advanced in O(changes).
     Layer entries are ``{"p": relpath, "base": bool}`` (base =
@@ -374,7 +356,7 @@ class TokenIndex(ShardedLayerStore):
             *[F.lit(None).cast(types[c]).alias(c)
               for c in PAYLOAD_COLS if c not in KEY_COLS],
         )
-        return _dml_call(spark, table, changes, mode, batch_id, dml_kw)
+        return _apply_dml(spark, table, changes, mode, batch_id, **dml_kw)
 
     def _matched_keys(self, spark: SparkSession, table: CowTable,
                       tokens: list[str], refresh: bool) -> DataFrame:
@@ -454,8 +436,8 @@ class TokenIndex(ShardedLayerStore):
                 )
             else:  # no term matches: commit an empty (fenced) batch
                 changes = spark.createDataFrame([], target_change_schema())
-            return _dml_call(spark, table, changes, mode,
-                             batch_id, dml_kw)
+            return _apply_dml(spark, table, changes, mode, batch_id,
+                              **dml_kw)
         finally:
             keys.unpersist()
 

@@ -45,21 +45,18 @@ Physical plans (measured on local[32]; see BENCH/BASELINE.md):
   aligned reduce, because a stored row is just an event with lsn =
   ``_lsn`` (tombstones are deletes). Three shuffles (reduce + join +
   repartition-for-write) become one.
-- ``plan="classic"`` keeps the original two-shuffle reduce + full-outer
-  join formulation; tests assert both plans produce identical state.
 
 Scale notes:
 - Only buckets touched by the delta are read and rewritten (file pruning
   via the snapshot manifest). 100 TB table + 1 GB delta => the merge reads
   |affected buckets|, not the table.
-- Skew decision rule: the aligned plan's ``salt(turn_idx)`` spreads a hot
-  CONVERSATION (many distinct turns in one bucket) across k reducer/writer
-  tasks, but — because repartition-first forgoes map-side partial
-  aggregation — a hot KEY (one turn updated millions of times in a batch)
-  still lands on one reducer. For update-storm workloads set
-  ``salted=True``: the two-phase reducer pre-combines per ``(key,
-  salt(lsn))`` before the key shuffle (classic groupBy-first gets map-side
-  combine for free and is also kept). All three are proven equal in tests.
+- Skew: the aligned plan's ``salt(turn_idx)`` spreads a hot CONVERSATION
+  (many distinct turns in one bucket) across k reducer/writer tasks. A
+  hot KEY (one turn updated many times in a batch) still lands on one
+  reducer, because repartition-first forgoes map-side partial
+  aggregation; measured on an update storm, neither a two-phase salted
+  reduce nor the groupBy-first join plan beat it (``BENCH/PLANS.md``,
+  "One LWW reduce plan"), so the aligned plan is the only one.
 """
 
 from __future__ import annotations
@@ -73,14 +70,14 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .lineage import append_lineage
-from .reduce import lww_reduce, lww_reduce_aligned, lww_reduce_salted
+from .reduce import lww_reduce_aligned
 from .schema import CHANGE_COLS, KEY_COLS, PAYLOAD_COLS, SYS_DELETED, SYS_LSN
 from .table import (
     BUCKET_COL,
-    LOCAL_MAX_BYTES,
     ConcurrentCommitError,
     CowTable,
     bucket_expr,
+    fits_local,
     stored_schema,
 )
 
@@ -264,31 +261,12 @@ def _written_dirs(stage: str) -> dict[int, str]:
     }
 
 
-def _reduce(changes_bucketed: DataFrame, n_buckets: int, plan: str,
-            salted: bool, n_salts: int, shuffle_salts: int = 4) -> DataFrame:
-    if salted:
-        red = lww_reduce_salted(changes_bucketed, n_salts).withColumn(
-            BUCKET_COL, bucket_expr("conv_id", n_buckets)
-        )
-        return red.repartition(n_buckets, F.col(BUCKET_COL))
-    if plan == "aligned":
-        return lww_reduce_aligned(changes_bucketed, BUCKET_COL,
-                                  shuffle_salts=shuffle_salts)
-    red = lww_reduce(changes_bucketed).withColumn(
-        BUCKET_COL, bucket_expr("conv_id", n_buckets)
-    )
-    return red.repartition(n_buckets, F.col(BUCKET_COL))
-
-
 def merge_batch(
     spark: SparkSession,
     table: CowTable,
     changes: DataFrame,
     batch_id: int,
-    salted: bool = False,
-    n_salts: int = 8,
     lineage_dir: str | None = None,
-    plan: str = "aligned",
     shuffle_salts: int = 4,
     lineage_executor: Any = None,
     quarantine_dir: str | None = None,
@@ -340,41 +318,12 @@ def merge_batch(
 
     base = table.read_raw(spark, buckets=affected)
     stage = table.new_data_dir()
-    if plan == "aligned" and not salted:
-        # single wide shuffle: union(base-as-events, delta) -> aligned LWW
-        # reduce -> bucket-partitioned write, no join, no re-shuffle
-        everything = _base_as_changes(base, n_buckets).unionByName(bucketed)
-        merged = _to_stored(lww_reduce_aligned(everything, BUCKET_COL,
-                                               shuffle_salts=shuffle_salts))
-        _stage_writer(merged, max_records_per_file).parquet(stage)
-    else:
-        delta = _reduce(bucketed, n_buckets, plan, salted, n_salts, shuffle_salts)
-        d = delta.select(
-            *KEY_COLS,
-            *[F.col(c).alias(f"_d_{c}") for c in PAYLOAD_COLS if c not in KEY_COLS],
-            F.col("lsn").alias("_d_lsn"),
-            (F.col("op") == "D").alias("_d_del"),
-        )
-        joined = base.join(d, on=KEY_COLS, how="full_outer")
-        delta_wins = F.col("_d_lsn").isNotNull() & (
-            F.col(SYS_LSN).isNull() | (F.col("_d_lsn") > F.col(SYS_LSN))
-        )
-        merged = joined.select(
-            *KEY_COLS,
-            *[
-                F.when(delta_wins, F.col(f"_d_{c}")).otherwise(F.col(c)).alias(c)
-                for c in PAYLOAD_COLS
-                if c not in KEY_COLS
-            ],
-            F.when(delta_wins, F.col("_d_lsn")).otherwise(F.col(SYS_LSN)).alias(SYS_LSN),
-            F.when(delta_wins, F.col("_d_del"))
-            .otherwise(F.coalesce(F.col(SYS_DELETED), F.lit(False)))
-            .alias(SYS_DELETED),
-        ).withColumn(BUCKET_COL, bucket_expr("conv_id", n_buckets))
-        _stage_writer(
-            merged.repartition(max(len(affected), 1), F.col(BUCKET_COL)),
-            max_records_per_file,
-        ).parquet(stage)
+    # single wide shuffle: union(base-as-events, delta) -> aligned LWW
+    # reduce -> bucket-partitioned write, no join, no re-shuffle
+    everything = _base_as_changes(base, n_buckets).unionByName(bucketed)
+    merged = _to_stored(lww_reduce_aligned(everything, BUCKET_COL,
+                                           shuffle_salts=shuffle_salts))
+    _stage_writer(merged, max_records_per_file).parquet(stage)
 
     rewritten = _written_dirs(stage)
     # an affected bucket can produce zero live rows (all-tombstone merge
@@ -536,9 +485,6 @@ def mor_stage_batch(
     table: CowTable,
     changes: Any,
     batch_id: int,
-    salted: bool = False,
-    n_salts: int = 8,
-    plan: str = "aligned",
     shuffle_salts: int = 4,
     quarantine_dir: str | None = None,
     max_records_per_file: int = 0,
@@ -555,9 +501,8 @@ def mor_stage_batch(
     schema, staged on the driver with no Spark job (``_stage_local``).
     The runner hands a MOR log batch over as Arrow when its files fit
     ``LOCAL_MAX_BYTES``; both routes write the same rows to the same
-    buckets and return the same record. ``salted``, ``n_salts``,
-    ``plan`` and ``shuffle_salts`` shape the Spark plan only; the
-    driver-local stage ignores them.
+    buckets and return the same record. ``shuffle_salts`` shapes the
+    Spark plan only; the driver-local stage ignores it.
 
     Split from the commit so a pipelined runner can overlap batch k+1's
     stage with batch k's commit + lineage (the writes of distinct MOR
@@ -570,8 +515,7 @@ def mor_stage_batch(
     if not isinstance(changes, DataFrame):
         return _stage_local(spark, table, changes, batch_id, quarantine_dir,
                             max_records_per_file)
-    n_buckets = table.n_buckets
-    bucketed = _with_bucket(changes, n_buckets)
+    bucketed = _with_bucket(changes, table.n_buckets)
 
     obs = Observation()
     # metrics observe the RAW stream (so quarantined events are counted and
@@ -588,8 +532,8 @@ def mor_stage_batch(
             F.col(BUCKET_COL),
             F.pmod(F.xxhash64("conv_id"), F.lit(max(shuffle_salts, 1))))
     else:
-        delta = _reduce(observed.filter(_valid_pred()), n_buckets, plan,
-                        salted, n_salts, shuffle_salts)
+        delta = lww_reduce_aligned(observed.filter(_valid_pred()),
+                                   BUCKET_COL, shuffle_salts=shuffle_salts)
     stage = table.new_data_dir()
     _stage_writer(_to_stored(delta), max_records_per_file).parquet(stage)
     try:
@@ -673,10 +617,7 @@ def mor_apply_batch(
     table: CowTable,
     changes: Any,
     batch_id: int,
-    salted: bool = False,
-    n_salts: int = 8,
     lineage_dir: str | None = None,
-    plan: str = "aligned",
     shuffle_salts: int = 4,
     lineage_executor: Any = None,
     quarantine_dir: str | None = None,
@@ -693,8 +634,7 @@ def mor_apply_batch(
     resolve layers by max-_lsn (table.read_raw); ``compact`` folds
     layers back into the base.
     """
-    staged = mor_stage_batch(spark, table, changes, batch_id, salted=salted,
-                             n_salts=n_salts, plan=plan,
+    staged = mor_stage_batch(spark, table, changes, batch_id,
                              shuffle_salts=shuffle_salts,
                              quarantine_dir=quarantine_dir,
                              max_records_per_file=max_records_per_file,
@@ -862,10 +802,10 @@ def _fold_layers_local(
     buckets one at a time and yields each bucket's output before reading
     the next. That is bounded at the design point by layer-threshold ×
     per-batch bucket share, the same bound the native batch source
-    already accepts per bucket. For a pathological bucket that outgrows a
-    task, ``compact_layers``'s default ``plan="auto"`` routes that bucket
-    to the salt-spread exchange plan by its planned byte size (outputs
-    proven identical in tests)."""
+    already accepts per bucket. A pathological bucket that outgrows a task
+    (over ``LOCAL_MAX_BYTES`` on disk) is routed by ``compact_layers`` to
+    the salt-spread exchange plan instead (outputs proven identical in
+    tests)."""
     import json
 
     import pyarrow as pa
@@ -899,8 +839,7 @@ def _fold_layers_local(
 def compact_layers(
     spark: SparkSession, table: CowTable, shuffle_salts: int = 4,
     min_layers: int = 2, max_records_per_file: int = 0,
-    buckets: list[int] | None = None, plan: str = "auto",
-    local_max_bytes: int = LOCAL_MAX_BYTES,
+    buckets: list[int] | None = None,
     tier_max_bytes: int = 0, tier_collapse_at: int = 0,
 ) -> dict[str, Any] | None:
     """MINOR compaction: fold a bucket's delta layers into ONE merged
@@ -927,24 +866,21 @@ def compact_layers(
     only the layers this fold read; interleaved appends stay live; a
     lost commit race retries metadata only).
 
-    ``plan="local"`` folds shuffle-free in Arrow, bin-packing the buckets
-    by planned bytes into at most ``defaultParallelism`` tasks
-    (``_fold_layers_local``); ``plan="shuffle"`` keeps the salted exchange
-    plan for buckets whose delta outgrows a single task; ``plan="auto"``
-    (default) routes each bucket by its planned delta BYTES — at most
-    ``local_max_bytes`` (default ``LOCAL_MAX_BYTES``, the limit point
-    reads and term lookups route by too) per task goes local, anything
-    bigger takes the exchange plan — bounding what any one fold task
-    holds. Sizing uses
-    the planned snapshot's own file inventory (``os.path.getsize`` here;
-    a manifest-recorded size column on an object store), so routing costs
-    no data read. NOTE these are COMPRESSED bytes: in-memory expansion is
-    payload-dependent (the 256M soak's zipf-hot bucket expanded ~20x), so
-    size ``local_max_bytes`` as task-memory-budget / expected expansion.
-    The router is purely a memory/perf lever — correctness never depends
-    on it, because the Arrow fold kernel sorts only the keys and gathers
-    the winners batch by batch in bounded chunks, so it never hits the
-    int32 'offset overflow' a >2 GiB text column otherwise would
+    Each bucket is routed by its planned delta BYTES (``fits_local``):
+    a bucket of at most ``LOCAL_MAX_BYTES`` — the limit the stage and
+    point reads route by too, read at call time — folds shuffle-free in
+    Arrow, bin-packed by planned bytes into at most
+    ``defaultParallelism`` tasks (``_fold_layers_local``); a bigger one
+    takes the salted exchange plan, bounding what any one fold task
+    holds. Sizing uses the planned snapshot's own file inventory
+    (``os.path.getsize`` here; a manifest-recorded size column on an
+    object store), so routing costs no data read. NOTE these are
+    COMPRESSED bytes: in-memory expansion is payload-dependent (the 256M
+    soak's zipf-hot bucket expanded ~20x). The router is purely a
+    memory/perf lever — correctness never depends on it, because the
+    Arrow fold kernel sorts only the keys and gathers the winners batch
+    by batch in bounded chunks, so it never hits the int32 'offset
+    overflow' a >2 GiB text column otherwise would
     (``sources/datasource.py:_lww_fold``). The two plans' outputs
     are proven byte-identical in tests and union into one stage write
     when a fold mixes them.
@@ -980,9 +916,6 @@ def compact_layers(
     The commit summary records ``bytes_read`` (the planned files' bytes,
     both plans) and ``fold_tasks`` (Arrow tasks of the local plan), so
     read amplification is visible from the snapshot log alone."""
-    if plan not in ("auto", "local", "shuffle"):
-        raise ValueError(
-            f"plan must be 'auto', 'local' or 'shuffle', got {plan!r}")
     snap = table.current_snapshot()
     if not snap or not snap.get("delta_dirs"):
         return None
@@ -1065,17 +998,11 @@ def compact_layers(
                            for b in eligible}
         bucket_bytes = {b: sum(os.path.getsize(f) for f in files_by_bucket[b])
                         for b in eligible}
-    if plan == "local":
-        local_b, shuffle_b = eligible, []
-    elif plan == "shuffle":
-        # a tier-selected SUBSET is only expressible by the file-inventory
-        # (local) reader — the exchange plan reads whole buckets
-        local_b = sorted(subset_b)
-        shuffle_b = sorted(set(eligible) - subset_b)
-    else:
-        local_b = [b for b in eligible
-                   if b in subset_b or bucket_bytes[b] <= local_max_bytes]
-        shuffle_b = sorted(set(eligible) - set(local_b))
+    # a tier-selected SUBSET is only expressible by the file-inventory
+    # (local) reader — the exchange plan reads whole buckets
+    local_b = [b for b in eligible
+               if b in subset_b or fits_local(files_by_bucket[b])]
+    shuffle_b = sorted(set(eligible) - set(local_b))
     parts: list[DataFrame] = []
     groups: list[list[int]] = []
     if local_b:
@@ -1328,9 +1255,6 @@ def delete_where(
     batch_id: int | None = None,
     lineage_dir: str | None = None,
     lineage_executor: Any = None,
-    salted: bool = False,
-    n_salts: int = 8,
-    plan: str = "aligned",
     shuffle_salts: int = 4,
     max_records_per_file: int = 0,
 ) -> dict[str, Any] | None:
@@ -1407,9 +1331,10 @@ def delete_where(
         *[F.lit(None).cast(types[c]).alias(c)
           for c in PAYLOAD_COLS if c not in KEY_COLS],
     )
-    return _apply_dml(spark, table, changes, mode, batch_id, salted, n_salts,
-                      lineage_dir, plan, shuffle_salts, lineage_executor,
-                      max_records_per_file)
+    return _apply_dml(spark, table, changes, mode, batch_id,
+                      lineage_dir=lineage_dir, shuffle_salts=shuffle_salts,
+                      lineage_executor=lineage_executor,
+                      max_records_per_file=max_records_per_file)
 
 
 def _validate_assignments(assignments: dict[str, Any]) -> None:
@@ -1483,9 +1408,9 @@ def _native_live_read(spark, table, buckets=None, snapshot_id=None):
     return r.load()
 
 
-def _apply_dml(spark, table, changes, mode, batch_id, salted, n_salts,
-               lineage_dir, plan, shuffle_salts, lineage_executor,
-               max_records_per_file) -> dict[str, Any] | None:
+def _apply_dml(spark, table, changes, mode, batch_id, *,
+               lineage_dir=None, shuffle_salts=4, lineage_executor=None,
+               max_records_per_file=0) -> dict[str, Any] | None:
     """Route a DML change set through the ingest merge path. The MOR apply
     is a single wide action (metrics observed in-flight), so the O(live)
     LWW-resolved scan behind ``changes`` runs once; the COW path runs TWO
@@ -1506,8 +1431,7 @@ def _apply_dml(spark, table, changes, mode, batch_id, salted, n_salts,
     try:
         return apply_fn(
             spark, table, changes, batch_id,
-            salted=salted, n_salts=n_salts, lineage_dir=lineage_dir,
-            plan=plan, shuffle_salts=shuffle_salts,
+            lineage_dir=lineage_dir, shuffle_salts=shuffle_salts,
             lineage_executor=lineage_executor,
             max_records_per_file=max_records_per_file,
             **extra,
@@ -1526,9 +1450,6 @@ def update_where(
     batch_id: int | None = None,
     lineage_dir: str | None = None,
     lineage_executor: Any = None,
-    salted: bool = False,
-    n_salts: int = 8,
-    plan: str = "aligned",
     shuffle_salts: int = 4,
     max_records_per_file: int = 0,
 ) -> dict[str, Any] | None:
@@ -1566,9 +1487,10 @@ def update_where(
         *[_assignment_value(assignments, c).alias(c)
           for c in PAYLOAD_COLS if c not in KEY_COLS],
     )
-    return _apply_dml(spark, table, changes, mode, batch_id, salted, n_salts,
-                      lineage_dir, plan, shuffle_salts, lineage_executor,
-                      max_records_per_file)
+    return _apply_dml(spark, table, changes, mode, batch_id,
+                      lineage_dir=lineage_dir, shuffle_salts=shuffle_salts,
+                      lineage_executor=lineage_executor,
+                      max_records_per_file=max_records_per_file)
 
 
 def merge_into(
@@ -1584,9 +1506,6 @@ def merge_into(
     batch_id: int | None = None,
     lineage_dir: str | None = None,
     lineage_executor: Any = None,
-    salted: bool = False,
-    n_salts: int = 8,
-    plan: str = "aligned",
     shuffle_salts: int = 4,
     max_records_per_file: int = 0,
     prune_buckets: bool = True,
@@ -1740,9 +1659,11 @@ def merge_into(
                       for c in PAYLOAD_COLS if c not in KEY_COLS],
                 )
             )
-            return _apply_dml(spark, table, changes, mode, batch_id, salted,
-                              n_salts, lineage_dir, plan, shuffle_salts,
-                              lineage_executor, max_records_per_file)
+            return _apply_dml(spark, table, changes, mode, batch_id,
+                              lineage_dir=lineage_dir,
+                              shuffle_salts=shuffle_salts,
+                              lineage_executor=lineage_executor,
+                              max_records_per_file=max_records_per_file)
 
         tgt = _native_live_read(spark, table, buckets=buckets)
         joined = src.alias("s").join(
@@ -1786,8 +1707,10 @@ def merge_into(
             *[F.col(f"s.{k}").alias(k) for k in KEY_COLS],
             *[_payload(c) for c in PAYLOAD_COLS if c not in KEY_COLS],
         )
-        return _apply_dml(spark, table, changes, mode, batch_id, salted,
-                          n_salts, lineage_dir, plan, shuffle_salts,
-                          lineage_executor, max_records_per_file)
+        return _apply_dml(spark, table, changes, mode, batch_id,
+                          lineage_dir=lineage_dir,
+                          shuffle_salts=shuffle_salts,
+                          lineage_executor=lineage_executor,
+                          max_records_per_file=max_records_per_file)
     finally:
         src.unpersist()

@@ -9,18 +9,15 @@ micro-batch, reduce all change events to a single winning event per
 events share an lsn and are identical, so ties are value-irrelevant.
 
 Scale notes:
-- The default path is ``groupBy(key).agg(max_by(...))`` — a hash aggregate
-  with **map-side partial aggregation**, so a hot key (one conversation
-  turn updated millions of times) is pre-combined on every input partition
-  before the shuffle; only one partially-reduced row per key per partition
-  crosses the wire. This is the shuffle-minimal plan; a window
-  ``row_number()`` would instead shuffle-and-sort every raw event.
-- ``lww_reduce_salted`` makes the skew handling *explicit* (north-rule
-  requirement): phase 1 reduces per ``(key, salt)`` where salt is derived
-  from ``lsn`` so a hot key's events spread over ``n_salts`` reducers;
-  phase 2 reduces the ≤ n_salts survivors per key. Result is provably
-  identical to the unsalted reduce (max is associative/commutative);
-  tests assert equality.
+- ``lww_reduce_aligned`` is the engine's one LWW reduce plan: one
+  bucket-aligned, salt-spread shuffle feeding the bucket-partitioned
+  write. It forgoes map-side partial aggregation, so a hot key's events
+  all cross the shuffle; on an update storm neither a two-phase salted
+  reduce nor the groupBy-first plan below beat it (``BENCH/PLANS.md``,
+  "One LWW reduce plan").
+- ``lww_reduce`` is ``groupBy(key).agg(max_by(...))`` — a hash aggregate
+  with map-side partial aggregation and no bucket alignment. The engine
+  does not call it; the plan tests use it as the reference.
 """
 
 from __future__ import annotations
@@ -43,15 +40,6 @@ def _winner(df: DataFrame, group_cols: list[str]) -> DataFrame:
 def lww_reduce(changes: DataFrame) -> DataFrame:
     """One winning event per (conv_id, turn_idx): max lsn."""
     return _winner(changes.select(*CHANGE_COLS), KEY_COLS)
-
-
-def lww_reduce_salted(changes: DataFrame, n_salts: int = 8) -> DataFrame:
-    """Two-phase LWW reduce with an explicit salt on the hot-key shuffle."""
-    salted = changes.select(*CHANGE_COLS).withColumn(
-        "_salt", F.pmod(F.xxhash64(F.col("lsn")), F.lit(n_salts))
-    )
-    partial = _winner(salted, [*KEY_COLS, "_salt"]).drop("_salt")
-    return _winner(partial, KEY_COLS)
 
 
 def lww_reduce_aligned(

@@ -12,10 +12,20 @@ Each iteration:
    into an Arrow table on the driver;
 3. the epoch's physical schema is aligned to the target schema
    (schema evolution, metadata-only);
-4. merge_batch LWW-reduces, COW-merges the affected buckets, commits one
-   snapshot, and appends per-partition lineage (MOR: mor_stage_batch
-   writes a delta layer — with no Spark job for an Arrow batch — and
-   mor_commit_staged commits it).
+4. the batch is staged — MOR: mor_stage_batch LWW-reduces it into an
+   uncommitted delta layer, with no Spark job for an Arrow batch; COW:
+   the changes themselves — and committed in batch order: mor_commit_staged
+   or merge_batch (LWW reduce + COW rewrite of the affected buckets)
+   commits one snapshot and appends per-partition lineage;
+5. an audit, when set, publishes or aborts the staged commit
+   (write-audit-publish); then derived stores refresh and at-threshold
+   buckets fold.
+
+``run`` is the one apply loop. It stages up to ``pipeline_depth`` batches
+ahead and commits them in order, so depth 1 is sequential; at any depth it
+applies ``pending()[:max_batches]``. ``stage_next_batch`` is the same
+stage and commit for one batch, left staged for a multi-table
+transaction.
 
 Crash anywhere before the snapshot rename leaves only an unreferenced
 staging dir; restart re-derives pending work from the checkpoint and
@@ -36,7 +46,6 @@ from .merge import (
     compact,
     compact_layers,
     merge_batch,
-    mor_apply_batch,
     mor_commit_staged,
     mor_stage_batch,
 )
@@ -179,11 +188,8 @@ class CdcRunner:
         log_dir: str,
         table_root: str,
         n_buckets: int = 16,
-        salted: bool = False,
-        n_salts: int = 8,
         mode: str = "cow",
         compact_every: int = 8,
-        plan: str = "aligned",
         shuffle_salts: int = 4,
         async_lineage: bool = False,
         pipeline_depth: int = 1,
@@ -192,7 +198,6 @@ class CdcRunner:
         commit_retries: int = 3,
         async_compact: bool = False,
         compact_mode: str = "major",
-        fold_plan: str = "auto",
         fold_tier_bytes: int = 0,
         maintain: list[Any] | None = None,
         maintain_every: int = 1,
@@ -204,23 +209,22 @@ class CdcRunner:
         any bucket accumulates ``compact_every`` of them.
 
         ``pipeline_depth`` > 1 (MOR only) overlaps micro-batches the way a
-        streaming engine does: up to that many batches' wide Spark jobs are
-        in flight at once (distinct MOR layers are write-independent), while
+        streaming engine does: up to that many batches' stages are in
+        flight at once (distinct MOR layers are write-independent), while
         snapshot COMMITS stay strictly in batch order — so exactly-once
         fencing and the checkpoint contract are unchanged. This fills the
         scheduler gaps between jobs (driver-side planning, commit fsyncs)
-        with the next batch's executor work."""
+        with the next batch's executor work. At depth 1 (the default)
+        each batch is staged only after the previous one's commit, folds
+        and refreshes have returned: the loop is sequential."""
         if mode not in ("cow", "mor"):
             raise ValueError(f"mode must be 'cow' or 'mor', got {mode!r}")
         self.spark = spark
         self.log_dir = log_dir
         self.table = CowTable(table_root, n_buckets=n_buckets)
         self.table.create()
-        self.salted = salted
-        self.n_salts = n_salts
         self.mode = mode
         self.compact_every = compact_every
-        self.plan = plan
         self.shuffle_salts = shuffle_salts
         # lineage is derived data (recomputable from committed layer files),
         # so its read-back/append may overlap the next batch's wide job;
@@ -272,14 +276,6 @@ class CdcRunner:
             # get below 1 — a threshold of 1 would re-fold forever
             raise ValueError("compact_mode='minor' requires compact_every >= 2")
         self.compact_mode = compact_mode
-        # minor-fold physical plan: 'auto' (byte-routed local/shuffle),
-        # 'local', or 'shuffle' — see merge.compact_layers. Validated here
-        # so a typo fails at construction, not on the maintenance thread.
-        if fold_plan not in ("auto", "local", "shuffle"):
-            raise ValueError(
-                f"fold_plan must be 'auto', 'local' or 'shuffle', "
-                f"got {fold_plan!r}")
-        self.fold_plan = fold_plan
         # size-tiered minor folds: >0 folds only layers at most this many
         # bytes (the fresh tier) so a grown merged layer is never re-read;
         # -1 self-tunes the tier from the freshest append's size at each
@@ -364,119 +360,70 @@ class CdcRunner:
                 self.commit_races_retried += 1
                 self.table.refresh()
 
-    def run(self, max_batches: int | None = None) -> RunResult:
-        if self.async_lineage and self._lineage_pool is None:
-            from concurrent.futures import ThreadPoolExecutor
+    def _stage(self, batch_id: int, schema_id: int) -> Any:
+        """Stage one batch. A MOR batch's delta layer is written to an
+        uncommitted dir (``mor_stage_batch``; None when the batch is
+        already committed). A COW batch's stage is only its changes,
+        since its merge must read the previous batch's output."""
+        changes = self._changes(batch_id, schema_id)
+        if self.mode == "cow":
+            return changes
+        return mor_stage_batch(
+            self.spark, self.table, changes, batch_id,
+            shuffle_salts=self.shuffle_salts,
+            quarantine_dir=self.quarantine_dir,
+            max_records_per_file=self.max_records_per_file,
+        )
 
+    def _commit(self, batch_id: int, staged: Any,
+                wap: bool) -> dict[str, Any] | None:
+        """Commit a staged batch: the snapshot dict, or None when the
+        batch was already committed. A staged MOR layer is
+        parent-independent, so a retry after a lost race re-commits the
+        metadata only; a COW retry re-plans its merge against the new
+        current snapshot."""
+        if self.mode == "cow":
+            return merge_batch(
+                self.spark, self.table, staged, batch_id,
+                lineage_dir=self.lineage_dir,
+                shuffle_salts=self.shuffle_salts,
+                lineage_executor=self._lineage_pool,
+                quarantine_dir=self.quarantine_dir,
+                max_records_per_file=self.max_records_per_file,
+                wap=wap,
+            )
+        if staged is None:
+            return None
+        return mor_commit_staged(
+            self.spark, self.table, staged,
+            lineage_dir=self.lineage_dir,
+            lineage_executor=self._lineage_pool,
+            wap=wap,
+        )
+
+    def run(self, max_batches: int | None = None) -> RunResult:
+        """Apply ``pending()[:max_batches]`` in batch order.
+
+        Up to ``pipeline_depth`` batches are staged ahead on a thread pool
+        (Spark job submission is thread-safe and staged layers land in
+        distinct uncommitted dirs). This thread commits the head of the
+        window in batch order, then runs the audit hook, derived
+        maintenance and threshold folds, and only then stages the next
+        batch. So at depth 1 the loop is sequential: batch k+1 is not
+        staged until batch k's commit, fold and refresh have returned.
+        A batch the audit rejects counts against ``max_batches`` and
+        stays pending."""
+        from collections import deque
+        from concurrent.futures import ThreadPoolExecutor
+
+        if self.async_lineage and self._lineage_pool is None:
             self._lineage_pool = _TrackedPool(ThreadPoolExecutor(
                 max_workers=1, thread_name_prefix="lineage"
             ))
         schema_of = dict(planned_batches(self.log_dir))
         result = RunResult()
-        if self.pipeline_depth > 1 and self.mode == "mor":
-            self._run_pipelined(schema_of, result, max_batches)
-            self.drain_maintenance()
-            self.drain_derived()
-            if self._lineage_pool is not None:
-                self._lineage_pool.drain()
-                self._lineage_pool = None
-            return result
-        for batch_id in self.pending():
-            if max_batches is not None and len(result.batches_applied) >= max_batches:
-                break
-            changes = self._changes(batch_id, schema_of[batch_id])
-            if self.mode == "mor" and self.audit is None:
-                # stage/commit split so a lost commit race (e.g. to an
-                # async compaction) retries the METADATA only — the staged
-                # delta layer is parent-independent, no wide-job re-run
-                staged = mor_stage_batch(
-                    self.spark, self.table, changes, batch_id,
-                    salted=self.salted, n_salts=self.n_salts, plan=self.plan,
-                    shuffle_salts=self.shuffle_salts,
-                    quarantine_dir=self.quarantine_dir,
-                    max_records_per_file=self.max_records_per_file,
-                )
-                snap = None if staged is None else self._retry_commit(
-                    lambda: mor_commit_staged(
-                        self.spark, self.table, staged,
-                        lineage_dir=self.lineage_dir,
-                        lineage_executor=self._lineage_pool,
-                    ))
-            else:
-                apply_fn = merge_batch if self.mode == "cow" else mor_apply_batch
-                snap = self._retry_commit(lambda: apply_fn(
-                    self.spark,
-                    self.table,
-                    changes,
-                    batch_id,
-                    salted=self.salted,
-                    n_salts=self.n_salts,
-                    lineage_dir=self.lineage_dir,
-                    plan=self.plan,
-                    shuffle_salts=self.shuffle_salts,
-                    lineage_executor=self._lineage_pool,
-                    quarantine_dir=self.quarantine_dir,
-                    max_records_per_file=self.max_records_per_file,
-                    wap=self.audit is not None,
-                ))
-            if self.audit is not None and snap is not None:
-                verdict = self.audit(self.spark, self.table)
-                ok, reason = (verdict if isinstance(verdict, tuple)
-                              else (bool(verdict), ""))
-                if not ok:
-                    self.table.abort_staged()
-                    result.batches_rejected.append(batch_id)
-                    result.reject_reasons.append(reason)
-                    continue
-                # NOT retried on ConcurrentCommitError: a staged snapshot
-                # froze its parent + carried-forward dirs at stage time, so
-                # re-publishing after another writer's commit would drop
-                # that writer's buckets (lost update). Audit-gated ingest is
-                # single-writer by contract — surface the race instead.
-                pub = self.table.publish_staged()
-                rows = snap.get("_lineage_rows")
-                if rows:
-                    if self._lineage_pool is not None:
-                        self._lineage_pool.submit(
-                            append_lineage, self.lineage_dir, rows,
-                            snapshot_id=pub["snapshot_id"])
-                    else:
-                        append_lineage(self.lineage_dir, rows,
-                                       snapshot_id=pub["snapshot_id"])
-                snap = pub
-            if self.mode == "mor":
-                self._maybe_compact()
-            if snap is None:
-                result.batches_skipped.append(batch_id)
-            else:
-                result.batches_applied.append(batch_id)
-                result.rows_upserted += snap["summary"].get("rows_upserted", 0)
-                result.rows_deleted += snap["summary"].get("rows_deleted", 0)
-                self._maybe_maintain()
-        self.drain_maintenance()
-        self.drain_derived()
-        if self._lineage_pool is not None:
-            self._lineage_pool.drain()
-            self._lineage_pool = None
-        return result
 
-    def _run_pipelined(
-        self, schema_of: dict[int, int], result: RunResult,
-        max_batches: int | None,
-    ) -> None:
-        """MOR apply with up to ``pipeline_depth`` batches' Spark jobs in
-        flight. Staging (read -> align -> reduce -> layer write) fans out on
-        a thread pool — Spark job submission is thread-safe and the staged
-        layers land in distinct uncommitted dirs — while the main thread
-        commits strictly in batch order, preserving the snapshot chain."""
-        from collections import deque
-        from concurrent.futures import ThreadPoolExecutor
-
-        pending = self.pending()
-        if max_batches is not None:
-            pending = pending[:max_batches]
-
-        def _stage(batch_id: int) -> dict[str, Any] | None:
+        def stage(batch_id: int) -> Any:
             # one scheduler pool per pipeline slot: with FAIR mode (set in
             # session.py) the in-flight batches' jobs share executor slots
             # instead of queueing FIFO — batch k+1's map stage runs inside
@@ -484,46 +431,74 @@ class CdcRunner:
             self.spark.sparkContext.setLocalProperty(
                 "spark.scheduler.pool", f"stage-{batch_id % self.pipeline_depth}"
             )
-            changes = self._changes(batch_id, schema_of[batch_id])
-            return mor_stage_batch(
-                self.spark, self.table, changes, batch_id,
-                salted=self.salted, n_salts=self.n_salts, plan=self.plan,
-                shuffle_salts=self.shuffle_salts,
-                quarantine_dir=self.quarantine_dir,
-                max_records_per_file=self.max_records_per_file,
-            )
-
-        def _commit_head(window: Any) -> None:
-            batch_id, fut = window.popleft()
-            staged = fut.result()  # re-raises staging failures in order
-            # commit-only retry: a staged MOR layer is parent-independent,
-            # so the loser's retry is metadata-only (commit_delta re-reads
-            # the refreshed current snapshot and merges delta_dirs into it)
-            snap = None if staged is None else self._retry_commit(
-                lambda: mor_commit_staged(
-                    self.spark, self.table, staged,
-                    lineage_dir=self.lineage_dir,
-                    lineage_executor=self._lineage_pool,
-                ))
-            if snap is None:
-                result.batches_skipped.append(batch_id)
-            else:
-                result.batches_applied.append(batch_id)
-                result.rows_upserted += snap["summary"].get("rows_upserted", 0)
-                result.rows_deleted += snap["summary"].get("rows_deleted", 0)
-                self._maybe_maintain()
-            self._maybe_compact()
+            return self._stage(batch_id, schema_of[batch_id])
 
         with ThreadPoolExecutor(
-            max_workers=self.pipeline_depth, thread_name_prefix="mor-stage"
+            max_workers=self.pipeline_depth, thread_name_prefix="stage"
         ) as pool:
             window: deque = deque()
-            for batch_id in pending:
-                window.append((batch_id, pool.submit(_stage, batch_id)))
+            for batch_id in self.pending()[:max_batches]:
+                window.append((batch_id, pool.submit(stage, batch_id)))
                 if len(window) >= self.pipeline_depth:
-                    _commit_head(window)
+                    self._commit_head(*window.popleft(), result)
             while window:
-                _commit_head(window)
+                self._commit_head(*window.popleft(), result)
+        self.drain_maintenance()
+        self.drain_derived()
+        if self._lineage_pool is not None:
+            self._lineage_pool.drain()
+            self._lineage_pool = None
+        return result
+
+    def _commit_head(self, batch_id: int, future: Any,
+                     result: RunResult) -> None:
+        """Commit the window's head on the caller's thread, then the
+        audit hook, derived maintenance and threshold folds."""
+        staged = future.result()  # re-raises staging failures in order
+        wap = self.audit is not None
+        snap = self._retry_commit(lambda: self._commit(batch_id, staged, wap))
+        if wap and snap is not None:
+            snap = self._publish_audited(batch_id, snap, result)
+            if snap is None:
+                return
+        if snap is None:
+            result.batches_skipped.append(batch_id)
+        else:
+            result.batches_applied.append(batch_id)
+            result.rows_upserted += snap["summary"].get("rows_upserted", 0)
+            result.rows_deleted += snap["summary"].get("rows_deleted", 0)
+            self._maybe_maintain()
+        self._maybe_compact()
+
+    def _publish_audited(self, batch_id: int, snap: dict[str, Any],
+                         result: RunResult) -> dict[str, Any] | None:
+        """The write-audit-publish hook: publish a staged commit the audit
+        passes (its lineage deferred until now) and return the published
+        snapshot; abort one it rejects and record why (None)."""
+        verdict = self.audit(self.spark, self.table)
+        ok, reason = (verdict if isinstance(verdict, tuple)
+                      else (bool(verdict), ""))
+        if not ok:
+            self.table.abort_staged()
+            result.batches_rejected.append(batch_id)
+            result.reject_reasons.append(reason)
+            return None
+        # NOT retried on ConcurrentCommitError: a staged snapshot froze its
+        # parent + carried-forward dirs at stage time, so re-publishing
+        # after another writer's commit would drop that writer's buckets
+        # (lost update). Audit-gated ingest is single-writer by contract —
+        # surface the race instead.
+        pub = self.table.publish_staged()
+        rows = snap.get("_lineage_rows")
+        if rows:
+            if self._lineage_pool is not None:
+                self._lineage_pool.submit(
+                    append_lineage, self.lineage_dir, rows,
+                    snapshot_id=pub["snapshot_id"])
+            else:
+                append_lineage(self.lineage_dir, rows,
+                               snapshot_id=pub["snapshot_id"])
+        return pub
 
     def _run_fold(self, table: CowTable, buckets: list[int]) -> None:
         """One threshold fold under the configured strategy. ``compact``
@@ -534,7 +509,7 @@ class CdcRunner:
                 self.spark, table,
                 shuffle_salts=self.shuffle_salts,
                 max_records_per_file=self.max_records_per_file,
-                buckets=buckets, plan=self.fold_plan,
+                buckets=buckets,
                 tier_max_bytes=self.fold_tier_bytes,
                 tier_collapse_at=(self.fold_tier_collapse_at
                                   if self.fold_tier_bytes else 0))
@@ -732,7 +707,6 @@ class CdcRunner:
         return self._retry_commit(lambda: delete_where(
             self.spark, self.table, predicate, mode=self.mode,
             batch_id=batch_id, lineage_dir=self.lineage_dir,
-            salted=self.salted, n_salts=self.n_salts, plan=self.plan,
             shuffle_salts=self.shuffle_salts,
             max_records_per_file=self.max_records_per_file,
         ))
@@ -746,7 +720,6 @@ class CdcRunner:
         return self._retry_commit(lambda: update_where(
             self.spark, self.table, predicate, assignments, mode=self.mode,
             batch_id=batch_id, lineage_dir=self.lineage_dir,
-            salted=self.salted, n_salts=self.n_salts, plan=self.plan,
             shuffle_salts=self.shuffle_salts,
             max_records_per_file=self.max_records_per_file,
         ))
@@ -774,7 +747,6 @@ class CdcRunner:
             insert_condition=insert_condition,
             mode=self.mode, batch_id=batch_id,
             lineage_dir=self.lineage_dir,
-            salted=self.salted, n_salts=self.n_salts, plan=self.plan,
             shuffle_salts=self.shuffle_salts,
             max_records_per_file=self.max_records_per_file,
             prune_buckets=prune_buckets,
@@ -789,22 +761,15 @@ class CdcRunner:
         fencing, and the snapshot chain see nothing until publication.
         Returns the staged snapshot dict, or None when nothing is pending.
         Lineage is deferred by the WAP contract — after the transaction
-        commits, ``reconcile_lineage()`` backfills it exactly."""
+        commits, ``reconcile_lineage()`` backfills it exactly. The stage
+        and commit are ``run``'s, with no audit."""
         pend = self.pending()
         if not pend:
             return None
         batch_id = pend[0]
-        schema_of = dict(planned_batches(self.log_dir))
-        changes = self._changes(batch_id, schema_of[batch_id])
-        apply_fn = merge_batch if self.mode == "cow" else mor_apply_batch
-        return apply_fn(
-            self.spark, self.table, changes, batch_id,
-            salted=self.salted, n_salts=self.n_salts,
-            plan=self.plan, shuffle_salts=self.shuffle_salts,
-            quarantine_dir=self.quarantine_dir,
-            max_records_per_file=self.max_records_per_file,
-            wap=True,
-        )
+        staged = self._stage(batch_id,
+                             dict(planned_batches(self.log_dir))[batch_id])
+        return self._commit(batch_id, staged, wap=True)
 
     def final_state(self) -> DataFrame:
         """Live table ordered by the pass-gate stable ordering."""

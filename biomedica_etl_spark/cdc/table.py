@@ -53,9 +53,9 @@ BUCKET_COL = "_bucket"
 
 # On-disk bytes up to which one process folds a read set in Arrow: a
 # point read or term lookup is then answered on the driver (no Spark
-# job), and a minor fold's bucket takes the packed local plan
-# (``compact_layers(local_max_bytes=...)`` defaults to this). Larger
-# read sets keep their Spark plan.
+# job), a MOR log batch is staged on the driver, and a minor fold's
+# bucket takes the packed local plan. Larger read sets keep their Spark
+# plan. Every router reads it at call time (``fits_local``).
 LOCAL_MAX_BYTES = 256 << 20
 
 

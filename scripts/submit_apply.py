@@ -52,10 +52,6 @@ def main() -> None:
                         "most this many bytes so a grown merged layer "
                         "is never re-read (0 = leveled folding, "
                         "-1 = self-tuned tier)")
-    p.add_argument("--fold-plan", choices=["auto", "local", "shuffle"],
-                   default="auto",
-                   help="minor-fold physical plan: byte-routed auto "
-                        "(default), shuffle-free local, or salted exchange")
     p.add_argument("--shuffle-salts", type=int, default=4)
     p.add_argument("--max-batches", type=int, default=None)
     p.add_argument("--delete-where", default=None, metavar="PREDICATE",
@@ -153,7 +149,6 @@ def main() -> None:
         mode=args.mode,
         compact_every=args.compact_every,
         compact_mode=args.compact_mode,
-        fold_plan=args.fold_plan,
         fold_tier_bytes=args.fold_tier_bytes,
         async_compact=args.async_compact,
         pipeline_depth=args.pipeline_depth,

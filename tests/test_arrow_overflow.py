@@ -4,7 +4,7 @@ Found by the 256M-event soak: zipf(1.1) over 2.56M conversations puts
 ~9.5% of all events in ONE conversation, so one bucket's delta layers
 carried >2 GiB of text into a single local-fold task. `sort_by`/`take`
 on int32-offset string columns then died with Arrow's 'offset overflow
-while concatenating arrays' — and the `local_max_bytes` byte router
+while concatenating arrays' — and the `LOCAL_MAX_BYTES` byte router
 could not have caught it, because it sees compressed on-disk bytes
 (the ' lorem' filler compresses ~20x). The kernel now sorts only the key
 columns and gathers the winners from each input record batch in bounded

@@ -61,7 +61,7 @@ CONFIGS = {
     "cow": dict(mode="cow"),
     "mor_minor_tiered": dict(
         mode="mor", compact_mode="minor", compact_every=2,
-        fold_plan="auto", fold_tier_bytes=-1,
+        fold_tier_bytes=-1,
     ),
     # write-audit-publish: the staged-marker write and the publish commit
     # are separate atomic writes, so the sweep enumerates crashes between

@@ -2,7 +2,7 @@
 adversarial log, with an oracle checkpoint after each phase.
 
 The individual features are covered by their own tests; this pins their
-INTERACTIONS — pipelined salted MOR ingest, then compaction + snapshot
+INTERACTIONS — pipelined MOR ingest on the Spark stage, then compaction + snapshot
 expiration + a partition-spec rebucket mid-stream, then a cold-restart
 resume onto the evolved table, then the quarantine repair loop
 (read-back -> fix -> reinject), then a rollback of the repair — the
@@ -38,12 +38,11 @@ def test_lifecycle_soak_every_feature_interleaved(spark, tmp_path):
         corrupt_frac=0.02, update_frac=0.3, delete_frac=0.08))
     root = str(tmp_path / "t")
 
-    # phase 1: pipelined salted MOR ingest of half the log. Salting acts
-    # only in the Spark stage, which these small batches would skip; the
-    # limit at -1 pins it (patched around the whole run: the stages run on
-    # threads)
+    # phase 1: pipelined MOR ingest of half the log on the Spark stage,
+    # which these small batches would skip; the limit at -1 pins it
+    # (patched around the whole run: the stages run on threads)
     r = CdcRunner(spark, log, root, n_buckets=8, mode="mor", compact_every=3,
-                  pipeline_depth=2, async_lineage=True, salted=True, n_salts=4)
+                  pipeline_depth=2, async_lineage=True)
     with mock.patch.object(table_mod, "LOCAL_MAX_BYTES", -1):
         r.run(max_batches=4)
 

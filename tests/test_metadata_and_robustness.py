@@ -15,6 +15,7 @@ from __future__ import annotations
 import datetime
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from biomedica_etl_spark.cdc.merge import merge_batch, mor_apply_batch
@@ -324,7 +325,9 @@ def test_point_lookup_prunes_without_spark_job(spark, tmp_path):
 
 
 # ----------------------------------------------------- pipelined ingest
-def test_pipelined_mor_matches_oracle_and_is_exactly_once(spark, tmp_path):
+@pytest.mark.parametrize("depth", [1, 3])
+def test_pipelined_mor_matches_oracle_and_is_exactly_once(
+        spark, tmp_path, depth):
     from biomedica_etl_spark.cdc.generator import SCENARIOS, generate_change_log
     from biomedica_etl_spark.cdc.oracle import replay
     from biomedica_etl_spark.cdc.runner import CdcRunner
@@ -332,7 +335,7 @@ def test_pipelined_mor_matches_oracle_and_is_exactly_once(spark, tmp_path):
     log = str(tmp_path / "log")
     generate_change_log(log, SCENARIOS["everything"])
     r = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8, mode="mor",
-                  compact_every=4, async_lineage=True, pipeline_depth=3)
+                  compact_every=4, async_lineage=True, pipeline_depth=depth)
     res = r.run()
     assert res.batches_skipped == []
     actual = [x.asDict() for x in r.final_state().collect()]
@@ -342,9 +345,9 @@ def test_pipelined_mor_matches_oracle_and_is_exactly_once(spark, tmp_path):
     batch_ids = [s["batch_id"] for s in r.table.snapshots()
                  if s["batch_id"] is not None]
     assert batch_ids == sorted(batch_ids) == res.batches_applied
-    # exactly-once: a second pipelined run applies nothing
+    # exactly-once: a second run applies nothing
     r2 = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8, mode="mor",
-                   pipeline_depth=3)
+                   pipeline_depth=depth)
     assert r2.run().batches_applied == []
 
 

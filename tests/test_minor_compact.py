@@ -16,7 +16,9 @@ here the same never-touch-cold-bytes rule applied to table maintenance.
 from __future__ import annotations
 
 import datetime as dt
+from unittest import mock
 
+from biomedica_etl_spark.cdc import table as table_mod
 from biomedica_etl_spark.cdc.generator import GeneratorConfig, generate_change_log
 from biomedica_etl_spark.cdc.merge import compact, compact_layers, mor_apply_batch
 from biomedica_etl_spark.cdc.runner import CdcRunner, read_batch
@@ -353,15 +355,15 @@ def test_minor_fold_losing_to_major_compact_skips_cleanly(spark, tmp_path):
 
 def test_minor_fold_local_plan_shuffle_free_and_matches_shuffle_plan(
         spark, tmp_path):
-    """The default ``plan='local'`` fold runs ZERO exchanges — layers are
-    already laid out per bucket on disk, so re-shuffling rows that are
-    already bucket-partitioned is pure waste. With more eligible buckets
-    than cores it packs them into exactly ``min(len(eligible),
-    defaultParallelism)`` Arrow tasks (recorded, with the planned read
-    bytes, in the commit summary) and still writes one file under each
-    bucket's own dir. Its committed state is row-identical (payload +
-    ``_lsn`` + tombstones) to the salted ``plan='shuffle'`` exchange
-    plan's on the same starting table."""
+    """The local fold (every bucket under ``LOCAL_MAX_BYTES``) runs ZERO
+    exchanges — layers are already laid out per bucket on disk, so
+    re-shuffling rows that are already bucket-partitioned is pure waste.
+    With more eligible buckets than cores it packs them into exactly
+    ``min(len(eligible), defaultParallelism)`` Arrow tasks (recorded, with
+    the planned read bytes, in the commit summary) and still writes one
+    file under each bucket's own dir. Its committed state is
+    row-identical (payload + ``_lsn`` + tombstones) to the salted
+    exchange plan's (the limit at -1) on the same starting table."""
     import glob
     import os
     import shutil
@@ -398,8 +400,9 @@ def test_minor_fold_local_plan_shuffle_free_and_matches_shuffle_plan(
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan
 
-    sa = compact_layers(spark, table_a, plan="local")
-    sb = compact_layers(spark, table_b, plan="shuffle")
+    sa = compact_layers(spark, table_a)
+    with mock.patch.object(table_mod, "LOCAL_MAX_BYTES", -1):
+        sb = compact_layers(spark, table_b)
     assert sa is not None and sb is not None
     assert sa["summary"]["fold_tasks"] == len(groups)
     assert sb["summary"]["fold_tasks"] == 0
@@ -447,20 +450,11 @@ def test_pack_buckets_largest_first_to_least_loaded():
     assert _pack_buckets({}, 4) == []
 
 
-def test_compact_layers_rejects_unknown_plan(spark, tmp_path):
-    root = str(tmp_path / "t")
-    table = CowTable(root, n_buckets=4)
-    table.create()
-    import pytest
-    with pytest.raises(ValueError, match="plan"):
-        compact_layers(spark, table, plan="bogus")
-
-
 def test_minor_fold_auto_plan_routes_by_bytes_and_matches_local(
         spark, tmp_path):
-    """``plan='auto'`` with a threshold between the smallest and largest
-    bucket's planned delta bytes folds SOME buckets locally and the rest
-    through the exchange plan in one commit — and the committed state is
+    """A ``LOCAL_MAX_BYTES`` between the smallest and largest bucket's
+    planned delta bytes folds SOME buckets locally and the rest through
+    the exchange plan in one commit — and the committed state is
     identical to an all-local fold of the same starting table."""
     import os
     import shutil
@@ -483,9 +477,9 @@ def test_minor_fold_auto_plan_routes_by_bytes_and_matches_local(
     assert sizes[0] < sizes[-1], "precondition: buckets differ in size"
     threshold = (sizes[0] + sizes[-1]) // 2  # mixed routing guaranteed
 
-    sa = compact_layers(spark, table_a, plan="auto",
-                        local_max_bytes=threshold)
-    sb = compact_layers(spark, table_b, plan="local")
+    with mock.patch.object(table_mod, "LOCAL_MAX_BYTES", threshold):
+        sa = compact_layers(spark, table_a)
+    sb = compact_layers(spark, table_b)
     assert sa is not None and sb is not None
     for b, ds in sa["delta_dirs"].items():
         assert len(ds) == 1, (b, ds)

@@ -2,9 +2,8 @@
 
 The 100 TB design hinges on specific plan shapes (SURVEY.md §7.3, merge.py
 module docstring): the aligned LWW reduce must cost exactly ONE exchange
-with its output pre-partitioned by bucket, both merge plans must produce
-identical table state, and the bucket-partitioned write must emit one file
-per bucket. These tests pin those properties so a refactor can't silently
+with its output pre-partitioned by bucket, the Spark stage must match the
+oracle, and the bucket-partitioned write must emit one file per bucket. These tests pin those properties so a refactor can't silently
 reintroduce a shuffle.
 """
 
@@ -52,29 +51,13 @@ def test_aligned_reduce_is_single_exchange(spark, tmp_path):
     assert _physical(classic).count("Exchange") == 2
 
 
-def test_cow_plans_equivalent(spark, tmp_path):
-    """aligned union-reduce COW merge == classic full-outer-join merge ==
-    oracle, on the adversarial 'everything' log."""
-    log = _gen(tmp_path)
-    r_aligned, _ = run_and_compare(
-        spark, log, str(tmp_path / "t_aligned"), mode="cow", plan="aligned"
-    )
-    r_classic, _ = run_and_compare(
-        spark, log, str(tmp_path / "t_classic"), mode="cow", plan="classic"
-    )
-    a = [r.asDict() for r in r_aligned.final_state().collect()]
-    c = [r.asDict() for r in r_classic.final_state().collect()]
-    assert a == c
-
-
 def test_mor_aligned_matches_oracle(spark, tmp_path):
-    """The limit at -1 pins the Spark stage, where ``plan`` applies; a
+    """The limit at -1 pins the Spark stage and its aligned reduce; a
     batch this small would otherwise be staged on the driver."""
     log = _gen(tmp_path)
     with mock.patch.object(table_mod, "LOCAL_MAX_BYTES", -1):
         run_and_compare(
-            spark, log, str(tmp_path / "t_mor"), mode="mor", plan="aligned",
-            compact_every=3,
+            spark, log, str(tmp_path / "t_mor"), mode="mor", compact_every=3,
         )
 
 
@@ -104,11 +87,6 @@ def test_local_stage_writes_one_file_per_bucket(spark, tmp_path):
     also one file per touched bucket."""
     for files in _files_per_layer(spark, tmp_path, table_mod.LOCAL_MAX_BYTES):
         assert len(files) == 1, files
-
-
-def test_salted_runner_matches_oracle(spark, tmp_path):
-    log = _gen(tmp_path, "skew_hot")
-    run_and_compare(spark, log, str(tmp_path / "t_salt"), salted=True, n_salts=4)
 
 
 def test_nested_assemble_plan_shape(spark):

@@ -12,9 +12,12 @@ capped small; each spins real Spark jobs.
 
 from __future__ import annotations
 
+from unittest import mock
+
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+from biomedica_etl_spark.cdc import table as table_mod
 from biomedica_etl_spark.cdc.generator import GeneratorConfig, generate_change_log
 from biomedica_etl_spark.cdc.merge import compact, compact_layers, rewrite_small_files
 from biomedica_etl_spark.cdc.oracle import replay
@@ -65,8 +68,9 @@ def test_any_maintenance_interleaving_preserves_state(
         if op == "minor":
             compact_layers(spark, runner.table, min_layers=1)
         elif op == "minor-shuffle":
-            compact_layers(spark, runner.table, min_layers=1,
-                           plan="shuffle")
+            # the limit at -1 routes every bucket to the exchange plan
+            with mock.patch.object(table_mod, "LOCAL_MAX_BYTES", -1):
+                compact_layers(spark, runner.table, min_layers=1)
         elif op == "tiered":
             # tier cut INSIDE the live layer-size range so some folds
             # select true subsets; collapse bound occasionally triggers

@@ -9,7 +9,6 @@ both reads and the minor folds' local plan.
 
 from __future__ import annotations
 
-import inspect
 import os
 
 import pytest
@@ -86,9 +85,30 @@ def test_local_reads_touch_only_the_pruned_files(spark, built, monkeypatch):
     assert seen and all(f"shard={shard}/" in f for f in seen), seen
 
 
-def test_one_limit_for_reads_and_folds():
-    default = inspect.signature(compact_layers).parameters["local_max_bytes"]
-    assert default.default is table_mod.LOCAL_MAX_BYTES
+def test_one_limit_for_reads_and_folds(spark, tmp_path, monkeypatch):
+    """The fold routes by the same constant, read at call time: at -1
+    every bucket takes the exchange plan (no Arrow fold task); at the
+    default the same layers fold in packed Arrow tasks."""
+    import shutil
+
+    from biomedica_etl_spark.cdc.generator import (
+        GeneratorConfig,
+        generate_change_log,
+    )
+    from biomedica_etl_spark.cdc.runner import CdcRunner
+    from biomedica_etl_spark.cdc.table import CowTable
+
+    log = str(tmp_path / "log")
+    generate_change_log(log, GeneratorConfig(
+        n_events=1_200, batch_size=400, n_convs=20))
+    CdcRunner(spark, log, str(tmp_path / "a"), n_buckets=4, mode="mor",
+              compact_every=10**9).run()
+    shutil.copytree(tmp_path / "a", tmp_path / "b")
+    folded = compact_layers(spark, CowTable(str(tmp_path / "a")))
+    assert folded["summary"]["fold_tasks"] >= 1
+    monkeypatch.setattr(table_mod, "LOCAL_MAX_BYTES", -1)
+    folded = compact_layers(spark, CowTable(str(tmp_path / "b")))
+    assert folded["summary"]["fold_tasks"] == 0
 
 
 def test_local_lookup_feeds_a_spark_plan(spark, built):

@@ -6,7 +6,7 @@ import datetime as dt
 
 from pyspark.sql import functions as F
 
-from biomedica_etl_spark.cdc.reduce import lww_reduce, lww_reduce_salted
+from biomedica_etl_spark.cdc.reduce import lww_reduce
 from biomedica_etl_spark.cdc.schema import target_change_schema
 from biomedica_etl_spark.cdc.table import CowTable, bucket_expr
 
@@ -37,13 +37,6 @@ def test_lww_delete_wins_when_latest(spark):
     ]
     out = lww_reduce(_changes(spark, rows)).collect()
     assert len(out) == 1 and out[0]["op"] == "D"
-
-
-def test_salted_equals_unsalted_on_duplicates(spark):
-    rows = [(i % 7, "I", f"c{i % 3}", i % 2, "user", f"t{i % 7}", None, TS) for i in range(200)]
-    a = sorted(map(tuple, lww_reduce(_changes(spark, rows)).collect()))
-    b = sorted(map(tuple, lww_reduce_salted(_changes(spark, rows), n_salts=5).collect()))
-    assert a == b
 
 
 def test_bucket_expr_is_stable_and_bounded(spark):

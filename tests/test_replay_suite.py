@@ -40,13 +40,6 @@ def test_scenario_matches_oracle(spark, tmp_path, name):
     run_and_compare(spark, log, str(tmp_path / "table"))
 
 
-def test_skew_hot_salted_matches_oracle(spark, tmp_path):
-    """Explicit hot-key salting path produces the same converged state."""
-    log = str(tmp_path / "log")
-    generate_change_log(log, CASES["skew_hot"])
-    run_and_compare(spark, log, str(tmp_path / "table"), salted=True, n_salts=4)
-
-
 def test_partitioning_invariance(spark, tmp_path):
     """Final state must be independent of micro-batch partitioning
     (1 big batch vs many small batches) — SURVEY.md §5.3."""

@@ -25,7 +25,7 @@ def test_auto_tier_fold_reads_stay_amortized(spark, tmp_path):
         zipf_a=1.1, update_frac=0.05, delete_frac=0.02))
     r = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=16,
                   mode="mor", compact_every=2, compact_mode="minor",
-                  fold_tier_bytes=-1, fold_plan="local")
+                  fold_tier_bytes=-1)
     r.run()
     r.drain_maintenance()
     r.table.refresh()

@@ -138,6 +138,36 @@ def test_audit_reject_aborts_and_batch_replays(spark, tmp_path, mode):
     assert _state(spark, runner2.table) == _replay_excluding(log)
 
 
+def test_max_batches_counts_a_rejected_batch(spark, tmp_path):
+    """``run(max_batches=k)`` takes the first k pending batches, so a batch
+    the audit rejects uses up its slot: the loop does not move on to the
+    next batch in its place. The rejected batch stays pending, and a
+    follow-up run applies the rest."""
+    from biomedica_etl_spark.cdc.generator import GeneratorConfig
+    from biomedica_etl_spark.cdc.oracle import replay
+
+    log = str(tmp_path / "log")
+    generate_change_log(log, GeneratorConfig(
+        n_events=1_500, batch_size=500, n_convs=30))
+
+    def reject_batch_1(s, table):
+        return table.staged_snapshot()["batch_id"] != 1
+
+    runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=4,
+                       mode="mor", audit=reject_batch_1)
+    res = runner.run(max_batches=2)
+    assert res.batches_rejected == [1]
+    assert res.batches_applied == [0]
+    assert runner.pending() == [1, 2]
+    assert runner.table.staged_snapshot() is None
+
+    again = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=4,
+                      mode="mor", audit=lambda s, t: True)
+    res = again.run()
+    assert res.batches_applied == [1, 2] and res.batches_rejected == []
+    assert _state(spark, again.table) == replay(log)
+
+
 def test_staged_crash_is_replayable_and_stale_staged_ignored(spark, tmp_path):
     log = str(tmp_path / "log")
     generate_change_log(log, SCENARIOS["update_delete_mix"])
