@@ -48,7 +48,12 @@ O(changes) image-feed read (payload pruned to ``text``), one
 generated-column explode + hash aggregate, one partitioned append —
 no read of existing postings at all; maintenance cost is amortized and
 per-shard; term lookups prune to their shards driver-side and
-row-group-prune on token-sorted files.
+row-group-prune on token-sorted files. A refresh, shard fold or lookup
+whose read set fits ``LOCAL_MAX_BYTES`` on disk (the window's feed files
+plus the touched buckets' files for an incremental refresh) runs the
+same steps on the driver in Arrow and starts no Spark job, since at that
+size a Spark job's fixed cost dwarfs the work; a larger one keeps the
+Spark plan above.
 
 Reference analogue: the reference rebuilds derived search structure by
 re-running the whole extract chain (``scripts/02_extract_media.py``
@@ -66,11 +71,14 @@ import glob
 import os
 from typing import Any
 
+import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .schema import SYS_DELETED, SYS_LSN
 from .shardstore import ShardedLayerStore
 from .table import CowTable, fits_local
 from .xxhash import xxh64_signed
@@ -116,6 +124,95 @@ def postings_of(df: DataFrame, n_shards: int) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("long").alias("tf"))
         .withColumn("shard", F.pmod(F.xxhash64("token"), F.lit(n_shards)))
     )
+
+
+# the stored columns a refresh reads from the table on the driver
+_IMAGE_ARROW = pa.schema([
+    ("conv_id", pa.string()), ("turn_idx", pa.int64()), ("text", pa.string()),
+    (SYS_LSN, pa.int64()), (SYS_DELETED, pa.bool_())])
+_KEYS = ["conv_id", "turn_idx"]
+
+
+def _winners(files: list[str]) -> pa.Table:
+    """Per-key max-``_lsn`` rows of ``files`` (``_IMAGE_ARROW`` columns)."""
+    from ..sources.datasource import (
+        _last_per_key,
+        _read_stored_arrow,
+        _take_capped,
+    )
+
+    tab = _read_stored_arrow(files, schema=_IMAGE_ARROW)
+    return _take_capped(tab, _last_per_key(tab, _KEYS, [SYS_LSN]))
+
+
+def postings_arrow(tab: pa.Table, n_shards: int, seq: int) -> pa.Table:
+    """``postings_of`` on the driver: ``(token, conv_id, turn_idx, tf,
+    seq, shard)`` of an Arrow table with ``conv_id, turn_idx, text`` and
+    optionally a bool ``is_add``. With ``is_add`` the rows are grouped on
+    it too and a retraction (``is_add`` false) gets ``tf = 0``, as
+    ``_refresh_incremental``'s Spark plan does.
+
+    Tokens match Spark's ``split(lower(text), TOKEN_SPLIT)``. Over every
+    Unicode scalar value, Arrow's ``utf8_lower`` then RE2 split and
+    Spark's ``lower`` then Java split differ at exactly one: U+0130
+    lowers to a bare ``i`` in Arrow but to ``i`` plus U+0307 in Spark,
+    which then splits the token. Spelling U+0130 out as that pair first
+    closes the gap (``tests/test_index_local_refresh.py``)."""
+    cols = [c for c in tab.column_names if c != "text"]
+    parts = []
+    for batch in tab.to_batches():
+        # per record batch: list_parent_indices counts from each chunk
+        text = pc.replace_substring(batch.column("text"), "\u0130", "i\u0307")
+        split = pc.split_pattern_regex(pc.utf8_lower(text), TOKEN_SPLIT)
+        token = pc.list_flatten(split)
+        keep = pc.not_equal(token, "")
+        rows = pc.filter(pc.list_parent_indices(split), keep)
+        parts.append(pa.table(
+            [batch.column(c).take(rows) for c in cols]
+            + [pc.filter(token, keep)], names=cols + ["token"]))
+    toks = (pa.concat_tables(parts) if parts
+            else pa.table({c: tab[c].slice(0, 0) for c in cols}
+                          | {"token": pa.array([], pa.string())}))
+    counted = toks.group_by(["token"] + cols).aggregate([([], "count_all")])
+    tf = counted["count_all"]
+    if "is_add" in cols:
+        tf = pc.if_else(counted["is_add"], tf, pa.scalar(0, pa.int64()))
+    token = counted["token"]
+    distinct = pc.unique(token)
+    of_token = np.array([shard_of(t, n_shards) for t in distinct.to_pylist()],
+                        np.int32)
+    shard = of_token[pc.index_in(token, value_set=distinct).to_numpy()]
+    return pa.table({
+        "token": token, "conv_id": counted["conv_id"],
+        "turn_idx": counted["turn_idx"], "tf": tf,
+        "seq": pa.array(np.full(counted.num_rows, seq, np.int64)),
+        "shard": shard})
+
+
+def _images(feed: list[str], pre: list[str]) -> pa.Table:
+    """The text images an incremental refresh tokenizes, on the driver:
+    ``conv_id, turn_idx, text, is_add``. The net winner per key of the
+    feed files is left-joined to the pre-image winner per key of the
+    touched buckets, and emitted by ``read_changes_with_images``'s rule:
+    a change is effective when it beats the pre-image's ``_lsn`` (or
+    there is none); an effective change adds its post-image if the new
+    row is live and retracts its pre-image if the old row was."""
+    net = _winners(feed)
+    # a winner with a null tombstone flag emits nothing under that rule
+    net = net.filter(pc.is_valid(net[SYS_DELETED]))
+    old = _winners(pre).rename_columns(
+        _KEYS + ["p_text", "p_lsn", "p_deleted"])
+    j = net.join(old, keys=_KEYS, join_type="left outer")
+    effective = pc.or_(pc.is_null(j["p_lsn"]),
+                       pc.fill_null(pc.greater(j[SYS_LSN], j["p_lsn"]), False))
+    add = pc.and_(effective, pc.invert(j[SYS_DELETED]))
+    drop = pc.and_(effective,
+                   pc.invert(pc.fill_null(j["p_deleted"], True)))
+    keys = j.select(_KEYS)
+    adds = keys.append_column("text", j["text"]).filter(add)
+    drops = keys.append_column("text", j["p_text"]).filter(drop)
+    return pa.concat_tables([adds, drops]).append_column("is_add", pa.array(
+        np.arange(adds.num_rows + drops.num_rows) < adds.num_rows))
 
 
 class TokenIndex(ShardedLayerStore):
@@ -200,18 +297,11 @@ class TokenIndex(ShardedLayerStore):
         tokens = list(tokens)
         shards = sorted({shard_of(t, self.n_shards) for t in tokens})
         lays = {k: v for k, v in self.shard_layers().items() if k in shards}
-        files = {k: [f for lay in v for f in sorted(glob.glob(
-            os.path.join(self.root, lay["p"], "*.parquet")))]
-            for k, v in lays.items()}
+        files = self._shard_files(lays)
         if not fits_local([f for fs in files.values() for f in fs]):
             return self.read(spark, shards=shards).filter(
                 F.col("token").isin(tokens))
-        from ..sources.datasource import (
-            _last_per_key,
-            _read_stored_arrow,
-            _take_capped,
-            _to_dataframe,
-        )
+        from ..sources.datasource import _read_stored_arrow, _to_dataframe
 
         names = POSTING_SCHEMA.names
         parts = []
@@ -219,14 +309,25 @@ class TokenIndex(ShardedLayerStore):
             tab = _read_stored_arrow(files[k], schema=_STORED_ARROW,
                                      filters=[("token", "in", tokens)])
             if not (len(v) == 1 and v[0]["base"]):
-                rows = _last_per_key(tab, ["token", "conv_id", "turn_idx"],
-                                     ["seq", "tf"])
-                rows = rows[tab["tf"].take(rows).to_numpy() > 0]
-                tab = _take_capped(tab, rows)
+                tab = self._resolve_arrow(tab)
             parts.append(tab.select(names))
         return _to_dataframe(
             spark, pa.concat_tables(parts) if parts
             else _STORED_ARROW.empty_table().select(names), POSTING_SCHEMA)
+
+    def _shard_files(self, lays: dict[int, list[dict]]) -> dict[int, list[str]]:
+        return {k: [f for lay in v for f in sorted(glob.glob(
+            os.path.join(self.root, lay["p"], "*.parquet")))]
+            for k, v in lays.items()}
+
+    @staticmethod
+    def _resolve_arrow(tab: pa.Table) -> pa.Table:
+        """``_resolve`` on the driver, over ``_STORED_ARROW`` rows."""
+        from ..sources.datasource import _last_per_key, _take_capped
+
+        rows = _last_per_key(tab, ["token", "conv_id", "turn_idx"],
+                             ["seq", "tf"])
+        return _take_capped(tab, rows[tab["tf"].take(rows).to_numpy() > 0])
 
     # --- refresh --------------------------------------------------------
 
@@ -237,7 +338,13 @@ class TokenIndex(ShardedLayerStore):
         from one pruned full scan; the steady state appends one O(changes)
         delta layer across the touched shards — existing postings are
         never read, let alone rewritten — then folds any shard whose
-        layer count exceeds ``compact_at``."""
+        layer count exceeds ``compact_at``.
+
+        Each route first sizes its read set from the file inventory
+        (``fits_local``). One of at most ``LOCAL_MAX_BYTES`` is read and
+        tokenized on the driver in Arrow (``postings_arrow``) and written
+        with no Spark job; a larger one keeps its Spark plan. Both write
+        the same postings."""
         snap = table.current_snapshot()
         if snap is None:
             raise ValueError("table has no snapshots; create() it first")
@@ -248,19 +355,26 @@ class TokenIndex(ShardedLayerStore):
 
         if cur is not None:
             try:
-                imgs = table.read_changes_with_images(
-                    spark, cur, to_snapshot=target, columns=["text"])
+                feed = table.changed_files(cur, to_snapshot=target)
             except ValueError:
-                imgs = None  # not feed-serveable -> rebuild below
-            if imgs is not None:
-                return self._refresh_incremental(spark, imgs, target)
+                feed = None  # not feed-serveable -> rebuild below
+            if feed is not None:
+                return self._refresh_incremental(spark, table, cur, target,
+                                                 feed)
 
         # bootstrap / rebuild: postings of the full live state, pinned to
         # the target snapshot so concurrent ingest cannot leak rows past
         # the cursor being recorded
-        posts = postings_of(
-            table.read(spark, snapshot_id=target, columns=["text"]),
-            self.n_shards).withColumn("seq", F.lit(0).cast("long"))
+        files = table._files_for(snap, None) + table._delta_files_for(snap, None)
+        if fits_local(files):
+            live = _winners(files)
+            live = live.filter(pc.invert(pc.fill_null(live[SYS_DELETED], True)))
+            posts = postings_arrow(live.select(["conv_id", "turn_idx", "text"]),
+                                   self.n_shards, seq=0)
+        else:
+            posts = postings_of(
+                table.read(spark, snapshot_id=target, columns=["text"]),
+                self.n_shards).withColumn("seq", F.lit(0).cast("long"))
         written = self._write_layer(posts)
         self._flip(target, {k: [{"p": p, "base": True}]
                             for k, p in written.items()}, seq=0)
@@ -268,10 +382,33 @@ class TokenIndex(ShardedLayerStore):
                 "mode": "bootstrap" if cur is None else "rebuild",
                 "shards_written": len(written)}
 
-    def _refresh_incremental(self, spark: SparkSession, imgs: DataFrame,
-                             target: int) -> dict[str, Any]:
+    def _refresh_incremental(self, spark: SparkSession, table: CowTable,
+                             cur: int, target: int,
+                             feed: list[str]) -> dict[str, Any]:
         ptr = self._pointer()
         seq = ptr["seq"] + 1
+        before = table.snapshot_by_id(cur)
+        touched = table.touched_buckets(before,
+                                        table.snapshot_by_id(target))
+        pre = (table._files_for(before, touched)
+               + table._delta_files_for(before, touched))
+        if fits_local(feed + pre):
+            delta = postings_arrow(_images(feed, pre), self.n_shards, seq)
+        else:
+            delta = self._delta_of(table.read_changes_with_images(
+                spark, cur, to_snapshot=target, columns=["text"]), seq)
+        written = self._write_layer(delta)
+        shards = self.shard_layers()
+        for s, p in written.items():
+            shards.setdefault(s, []).append({"p": p, "base": False})
+        self._flip(target, shards, seq=seq)
+        over = [s for s, lays in shards.items()
+                if len(lays) > self.compact_at]
+        folded = self.compact_shards(spark, over) if over else 0
+        return {"refreshed": True, "cursor": target, "mode": "incremental",
+                "shards_delta": len(written), "shards_folded": folded}
+
+    def _delta_of(self, imgs: DataFrame, seq: int) -> DataFrame:
         # ONE pass over the feed: additions from the post-images,
         # tombstones (tf=0) for every pre-image/delete token of a changed
         # key — the exact (token, key) pairs whose postings must retract,
@@ -286,7 +423,7 @@ class TokenIndex(ShardedLayerStore):
                 F.explode(F.split(F.lower(F.col("text")), TOKEN_SPLIT))
                 .alias("token"))
             .filter(F.col("token") != ""))
-        delta = (
+        return (
             tokens.groupBy("token", "conv_id", "turn_idx", "is_add")
             .agg(F.count(F.lit(1)).cast("long").alias("_n"))
             .select(
@@ -297,16 +434,6 @@ class TokenIndex(ShardedLayerStore):
                 .alias("shard"),
                 F.lit(seq).cast("long").alias("seq"))
         )
-        written = self._write_layer(delta)
-        shards = self.shard_layers()
-        for s, p in written.items():
-            shards.setdefault(s, []).append({"p": p, "base": False})
-        self._flip(target, shards, seq=seq)
-        over = [s for s, lays in shards.items()
-                if len(lays) > self.compact_at]
-        folded = self.compact_shards(spark, over) if over else 0
-        return {"refreshed": True, "cursor": target, "mode": "incremental",
-                "shards_delta": len(written), "shards_folded": folded}
 
     # --- index-accelerated DML -------------------------------------------
 
@@ -457,13 +584,28 @@ class TokenIndex(ShardedLayerStore):
         targets = [s for s in shards if s in lays]
         if not targets:
             return 0
-        paths = [lay["p"] for s in targets for lay in lays[s]]
-        resolved = (
-            self._resolve(self._read_layers(spark, paths))
-            .withColumn("shard",
-                        F.pmod(F.xxhash64("token"), F.lit(self.n_shards)))
-            .withColumn("seq", F.lit(ptr["seq"]).cast("long"))
-        )
+        files = self._shard_files({s: lays[s] for s in targets})
+        if fits_local([f for fs in files.values() for f in fs]):
+            from ..sources.datasource import _read_stored_arrow
+
+            parts = []
+            for s in targets:
+                tab = self._resolve_arrow(
+                    _read_stored_arrow(files[s], schema=_STORED_ARROW))
+                parts.append(tab.set_column(
+                    tab.schema.get_field_index("seq"), "seq",
+                    pa.array(np.full(tab.num_rows, ptr["seq"], np.int64)))
+                    .append_column("shard", pa.array(
+                        np.full(tab.num_rows, s, np.int32))))
+            resolved = pa.concat_tables(parts)
+        else:
+            paths = [lay["p"] for s in targets for lay in lays[s]]
+            resolved = (
+                self._resolve(self._read_layers(spark, paths))
+                .withColumn("shard",
+                            F.pmod(F.xxhash64("token"), F.lit(self.n_shards)))
+                .withColumn("seq", F.lit(ptr["seq"]).cast("long"))
+            )
         written = self._write_layer(resolved)
         for s in targets:
             if s in written:

@@ -8,7 +8,8 @@ watermark (max event ts) — appended to a parquet metrics table so any
 failure can be diagnosed and reconciled (sum(rows) vs table delta).
 
 Per-bucket rows are produced by merge.py (``_plan_cow`` for the COW
-planning pass, ``_layer_bucket_metrics`` for the MOR read-back); only the
+planning pass, ``_bucket_lineage`` as the driver stage writes,
+``_layer_bucket_metrics`` for the read-back of a Spark stage); only the
 tiny per-bucket summary ever reaches the driver (bounded by bucket count,
 not data size). This module owns the append-only parquet sink.
 """

@@ -34,9 +34,10 @@ Physical plans (measured on local[32]; see BENCH/BASELINE.md):
   (the runner does so for a log batch whose files fit
   ``LOCAL_MAX_BYTES``) is staged on the driver with no Spark job: one
   pass for the metrics and quarantine, then one key sort per bucket on a
-  thread pool (``_stage_local``). Either way a second, O(delta)
-  column-pruned job over the just-written layer produces the per-bucket
-  lineage rows, off the critical path.
+  thread pool (``_stage_local``), which also counts each bucket's
+  lineage row from the winners it writes. After a Spark stage, a second,
+  O(delta) column-pruned job over the just-written layer produces the
+  per-bucket lineage rows, off the critical path.
 - **COW merge** runs Iceberg-MERGE-style: a *planning* job scans only
   ``(conv_id, op, lsn, ts)`` (never the text payload) to find affected
   buckets + per-bucket raw metrics, then ONE wide job does
@@ -62,7 +63,6 @@ Scale notes:
 from __future__ import annotations
 
 import glob
-import heapq
 import os
 from typing import Any
 
@@ -193,7 +193,8 @@ def _layer_bucket_metrics(
 ) -> list[dict[str, Any]]:
     """Per-bucket lineage from the just-written delta layer: an O(delta),
     column-pruned read-back (``_lsn``, ``_deleted``, ``ts`` + the bucket
-    partition dir) — never touches the raw batch again."""
+    partition dir) — never touches the raw batch again. A driver stage
+    counts the same rows as it writes (``_bucket_lineage``)."""
     from pyspark.sql import types as T
 
     from .table import stored_schema
@@ -366,12 +367,10 @@ def _raw_metrics_local(changes: Any, valid: Any) -> dict[str, Any]:
     and the watermark is the naive local ``datetime`` PySpark collects."""
     import numpy as np
     import pyarrow.compute as pc
-    from pyspark.sql import types as T
 
     n = changes.num_rows
     is_del = pc.fill_null(pc.equal(changes["op"], "D"), False).to_numpy(
         zero_copy_only=False)
-    ts_hi = pc.max(changes["ts"])
 
     def count(mask: Any) -> int | None:
         return int(np.count_nonzero(mask)) if n else None
@@ -383,9 +382,33 @@ def _raw_metrics_local(changes: Any, valid: Any) -> dict[str, Any]:
         "rows_quarantined": count(~valid),
         "lsn_lo": pc.min(changes["lsn"]).as_py(),
         "lsn_hi": pc.max(changes["lsn"]).as_py(),
-        "watermark": (T.TimestampType().fromInternal(ts_hi.value)
-                      if ts_hi.is_valid else None),
+        "watermark": _watermark(changes["ts"]),
     }
+
+
+def _watermark(ts: Any) -> Any:
+    """``max(ts)`` of an Arrow column as PySpark collects it: a naive
+    local ``datetime``, or None when every value is null."""
+    import pyarrow.compute as pc
+    from pyspark.sql import types as T
+
+    hi = pc.max(ts)
+    return T.TimestampType().fromInternal(hi.value) if hi.is_valid else None
+
+
+def _bucket_lineage(stored: Any, batch_id: int, bucket: int) -> dict[str, Any]:
+    """``_layer_bucket_metrics``'s row for one bucket, from the stored
+    rows the driver stage writes there: no read-back, no Spark job."""
+    import pyarrow.compute as pc
+
+    n = stored.num_rows
+    dead = int(pc.sum(stored[SYS_DELETED]).as_py() or 0)
+    return {"batch_id": batch_id, "partition_id": bucket, "bucket": bucket,
+            "offsets_applied": n, "rows_upserted": n - dead,
+            "rows_deleted": dead,
+            "lsn_lo": pc.min(stored[SYS_LSN]).as_py(),
+            "lsn_hi": pc.max(stored[SYS_LSN]).as_py(),
+            "watermark": _watermark(stored["ts"])}
 
 
 def _write_parquet_parts(tab: Any, out_dir: str,
@@ -418,7 +441,9 @@ def _stage_local(
     bucket then runs on a thread pool of ``defaultParallelism``: ONE sort
     of its ``(conv_id, turn_idx, lsn)`` keys yields both the LWW winners
     and their write order, and the winners are written in stored shape
-    under ``stage/_bucket=b/``."""
+    under ``stage/_bucket=b/``. Each bucket's lineage row is counted from
+    those winners as they are written (``lineage`` in the record), so
+    the commit needs no read-back of the layer."""
     import shutil
     from concurrent.futures import ThreadPoolExecutor
 
@@ -460,7 +485,7 @@ def _stage_local(
     stage = table.new_data_dir()
     schema = _stored_write_schema()
 
-    def write_bucket(part: Any) -> None:
+    def write_bucket(part: Any) -> dict[str, Any]:
         mine = rows[part]  # ascending: the sort above is stable
         winners = mine[_last_per_key(_take_capped(keys, mine),
                                      ["conv_id", "turn_idx"], ["lsn"],
@@ -469,15 +494,18 @@ def _stage_local(
         stored = pa.table(
             [won[c] for c in PAYLOAD_COLS]
             + [won["lsn"], pc.equal(won["op"], "D")], schema=schema)
+        b = int(bucket[part[0]])
         _write_parquet_parts(
-            stored, os.path.join(stage, f"{BUCKET_COL}={bucket[part[0]]}"),
+            stored, os.path.join(stage, f"{BUCKET_COL}={b}"),
             max_records_per_file)
+        return _bucket_lineage(stored, batch_id, b)
 
+    lineage: list[dict[str, Any]] = []
     if len(rows):
         with ThreadPoolExecutor(spark.sparkContext.defaultParallelism) as pool:
-            list(pool.map(write_bucket, np.split(order, cuts)))
+            lineage = list(pool.map(write_bucket, np.split(order, cuts)))
     return {"batch_id": batch_id, "stage": stage, "raw": raw,
-            "written": _written_dirs(stage)}
+            "written": _written_dirs(stage), "lineage": lineage}
 
 
 def mor_stage_batch(
@@ -565,6 +593,14 @@ def mor_commit_staged(
     the returned dict for the runner to emit at publish."""
     batch_id, stage, raw = staged["batch_id"], staged["stage"], staged["raw"]
     written = staged["written"]
+
+    def lineage_rows() -> list[dict[str, Any]]:
+        # the driver stage counted its rows as it wrote them; a Spark
+        # stage's rows come from an O(delta) read-back of its layer
+        rows = staged.get("lineage")
+        return (rows if rows is not None
+                else _layer_bucket_metrics(spark, stage, batch_id))
+
     if raw["offsets_applied"] == 0:
         return table.commit_delta(batch_id, {}, None, None,
                                   {"rows_upserted": 0, "rows_deleted": 0},
@@ -587,19 +623,17 @@ def mor_commit_staged(
     )
     if wap:
         if snap is not None and written:
-            # lineage deferred to publish: compute the O(delta) read-back
-            # now (the layer files exist), emit only if the audit passes
-            snap = {**snap,
-                    "_lineage_rows": _layer_bucket_metrics(spark, stage,
-                                                           batch_id)}
+            # lineage deferred to publish: compute the rows now (the
+            # layer files exist), emit only if the audit passes
+            snap = {**snap, "_lineage_rows": lineage_rows()}
         return snap
     # written == {} means every offset was consumed but zero valid rows
     # survived (all quarantined): the commit above records the offset range,
     # and there is no layer to derive lineage from
     if snap is not None and lineage_dir is not None and written:
         def _emit(snapshot_id: int = snap["snapshot_id"]) -> None:
-            stats_rows = _layer_bucket_metrics(spark, stage, batch_id)
-            append_lineage(lineage_dir, stats_rows, snapshot_id=snapshot_id)
+            append_lineage(lineage_dir, lineage_rows(),
+                           snapshot_id=snapshot_id)
 
         if lineage_executor is not None:
             # lineage is DERIVED data (recomputable from the committed layer
@@ -629,10 +663,10 @@ def mor_apply_batch(
 
     Iceberg-v2-MOR-style ingest: cost is O(delta) and the base table is
     never read or rewritten. ``changes`` is a ``DataFrame`` or an Arrow
-    table, staged as ``mor_stage_batch`` describes, plus one tiny
-    read-back job on the written layer for per-bucket lineage. Readers
-    resolve layers by max-_lsn (table.read_raw); ``compact`` folds
-    layers back into the base.
+    table, staged as ``mor_stage_batch`` describes; a Spark stage adds
+    one tiny read-back job on the written layer for per-bucket lineage.
+    Readers resolve layers by max-_lsn (table.read_raw); ``compact``
+    folds layers back into the base.
     """
     staged = mor_stage_batch(spark, table, changes, batch_id,
                              shuffle_salts=shuffle_salts,
@@ -757,83 +791,26 @@ def compact(
     return None  # unreachable
 
 
-def _pack_buckets(bucket_bytes: dict[int, int],
-                  n_tasks: int) -> list[list[int]]:
-    """Bin-pack buckets into at most ``n_tasks`` groups by planned bytes:
-    largest bucket first, each to the least-loaded group (the LPT rule —
-    within 4/3 of the optimal makespan). Ties break on bucket id, so the
-    plan is deterministic for a given inventory."""
-    groups: list[list[int]] = [[] for _ in
-                               range(min(n_tasks, len(bucket_bytes)))]
-    loads = [(0, i) for i in range(len(groups))]  # already a valid heap
-    for b in sorted(bucket_bytes, key=lambda b: (-bucket_bytes[b], b)):
-        load, i = heapq.heappop(loads)
-        groups[i].append(b)
-        heapq.heappush(loads, (load + bucket_bytes[b], i))
-    return groups
-
-
-def _fold_layers_local(
-    spark: SparkSession, groups: list[list[int]],
-    files_by_bucket: dict[int, list[str]],
-) -> DataFrame:
-    """Shuffle-free minor-fold read+reduce: ONE Arrow task per group of
-    buckets (``_pack_buckets``). The task reads each bucket's layer files
-    and LWW-folds them in Arrow (tombstones and ``_lsn`` retained),
-    emitting stored rows + bucket.
-
-    Layers are already laid out per bucket on disk, so folding them needs
-    NO exchange at all — the same zero-shuffle payoff the native batch
-    source gets from bucketing on ``xxhash64(conv_id)`` (it shares the
-    Arrow fold kernel with ``sources/datasource.py``). The salted-shuffle
-    plan the folds previously rode re-partitioned rows that were already
-    bucket-partitioned; dropping it roughly halves the fold's CPU, which
-    is what lets async maintenance hide under a core-saturated ingest.
-
-    Packing: a Python task has a fixed cost (worker hand-off, Arrow
-    framing) of ~0.3 s on a 4-vCPU host, while the kernel folds a
-    typical bucket in a few ms — one task per bucket spent most of a
-    16-bucket fold on that overhead. Groups come from the planned
-    inventory with no data read, and the inventory is a driver-local
-    Arrow table (a ``LocalRelation``: one group per partition, no
-    exchange, no Python pass before the fold itself).
-
-    Per-task memory is O(one bucket's delta rows): a task folds its
-    buckets one at a time and yields each bucket's output before reading
-    the next. That is bounded at the design point by layer-threshold ×
-    per-batch bucket share, the same bound the native batch source
-    already accepts per bucket. A pathological bucket that outgrows a task
-    (over ``LOCAL_MAX_BYTES`` on disk) is routed by ``compact_layers`` to
-    the salt-spread exchange plan instead (outputs proven identical in
-    tests)."""
-    import json
-
-    import pyarrow as pa
-    from pyspark.sql import types as T
-
-    from ..sources.datasource import _lww_fold, _read_stored_arrow
-
-    inventory = pa.table({"group": [
-        json.dumps([[b, files_by_bucket[b]] for b in g]) for g in groups]})
-    out_schema = T.StructType(
-        list(stored_schema().fields)
-        + [T.StructField(BUCKET_COL, T.IntegerType(), True)]
+def _fold_bucket_local(files: list[str], out_dir: str,
+                       max_records_per_file: int) -> None:
+    """Minor-fold one bucket on the driver: its layer files' per-key
+    max-``_lsn`` winners (tombstones and ``_lsn`` retained), written in
+    ``(conv_id, turn_idx)`` order and stored shape to ``out_dir`` — the
+    shape ``_stage_local`` writes. Only the key columns are sorted; the
+    winners are gathered in bounded chunks (``_take_capped``), so a
+    bucket holding over 2 GiB of text folds too."""
+    from ..sources.datasource import (
+        _last_per_key,
+        _read_stored_arrow,
+        _stored_write_schema,
+        _take_capped,
     )
 
-    def fold(batches):
-        import numpy as np
-
-        for batch in batches:
-            for group in batch.column("group").to_pylist():
-                for bucket, files in json.loads(group):
-                    out = _lww_fold(_read_stored_arrow(files), tombstones=True)
-                    out = out.append_column(
-                        BUCKET_COL,
-                        pa.array(np.full(out.num_rows, bucket, np.int32)))
-                    yield from out.to_batches()
-
-    inv = spark.createDataFrame(inventory, "group string")
-    return inv.mapInArrow(fold, schema=out_schema)
+    stored = _read_stored_arrow(files)
+    rows = _last_per_key(stored, ["conv_id", "turn_idx"], [SYS_LSN],
+                         key_order=True)
+    _write_parquet_parts(_take_capped(stored, rows).cast(
+        _stored_write_schema()), out_dir, max_records_per_file)
 
 
 def compact_layers(
@@ -859,8 +836,9 @@ def compact_layers(
     winner is exactly the row that would have beaten the base (or lost
     to a newer layer). Tombstones are RETAINED in the merged layer: the
     base still holds the pre-image, and an out-of-order lower-lsn event
-    must still lose to the folded delete. Same single-shuffle aligned
-    salted LWW plan as ingest and major compaction.
+    must still lose to the folded delete. A bucket too big for the
+    driver takes the same single-shuffle aligned salted LWW plan as
+    ingest and major compaction.
 
     Safe to run CONCURRENT with ingest (``commit_layer_rewrite`` pops
     only the layers this fold read; interleaved appends stay live; a
@@ -868,22 +846,24 @@ def compact_layers(
 
     Each bucket is routed by its planned delta BYTES (``fits_local``):
     a bucket of at most ``LOCAL_MAX_BYTES`` — the limit the stage and
-    point reads route by too, read at call time — folds shuffle-free in
-    Arrow, bin-packed by planned bytes into at most
-    ``defaultParallelism`` tasks (``_fold_layers_local``); a bigger one
-    takes the salted exchange plan, bounding what any one fold task
-    holds. Sizing uses the planned snapshot's own file inventory
-    (``os.path.getsize`` here; a manifest-recorded size column on an
-    object store), so routing costs no data read. NOTE these are
-    COMPRESSED bytes: in-memory expansion is payload-dependent (the 256M
-    soak's zipf-hot bucket expanded ~20x). The router is purely a
-    memory/perf lever — correctness never depends on it, because the
-    Arrow fold kernel sorts only the keys and gathers the winners batch
-    by batch in bounded chunks, so it never hits the int32 'offset
-    overflow' a >2 GiB text column otherwise would
-    (``sources/datasource.py:_lww_fold``). The two plans' outputs
-    are proven byte-identical in tests and union into one stage write
-    when a fold mixes them.
+    point reads route by too, read at call time — is folded on the
+    driver in Arrow (``_fold_bucket_local``, one bucket per thread of a
+    ``defaultParallelism`` pool) and starts no Spark job; a bigger one
+    takes the salted exchange plan, whose tasks bound what any one
+    process holds. Layers are laid out per bucket on disk already, so
+    the driver fold needs no exchange, and it skips the fixed cost of a
+    Python task (~0.3 s on a 4-vCPU host) that a few-millisecond bucket
+    fold would otherwise pay. Sizing uses the planned snapshot's own
+    file inventory (``os.path.getsize`` here; a manifest-recorded size
+    column on an object store), so routing costs no data read. NOTE
+    these are COMPRESSED bytes: in-memory expansion is payload-dependent
+    (the 256M soak's zipf-hot bucket expanded ~20x). The router is
+    purely a memory/perf lever — correctness never depends on it,
+    because the Arrow fold kernel sorts only the keys and gathers the
+    winners in bounded chunks, so it never hits the int32 'offset
+    overflow' a >2 GiB text column otherwise would. The two routes
+    write the same rows (pinned in tests); when a fold mixes them, the
+    exchange plan writes the stage first and the driver buckets follow.
 
     ``tier_max_bytes`` > 0 turns folds TIERED (size-tiered LSM / RocksDB
     universal-compaction discipline): within each bucket, only layers of
@@ -914,7 +894,7 @@ def compact_layers(
     payload's layer sizes.
 
     The commit summary records ``bytes_read`` (the planned files' bytes,
-    both plans) and ``fold_tasks`` (Arrow tasks of the local plan), so
+    both routes) and ``fold_tasks`` (buckets folded on the driver), so
     read amplification is visible from the snapshot log alone."""
     snap = table.current_snapshot()
     if not snap or not snap.get("delta_dirs"):
@@ -1003,24 +983,25 @@ def compact_layers(
     local_b = [b for b in eligible
                if b in subset_b or fits_local(files_by_bucket[b])]
     shuffle_b = sorted(set(eligible) - set(local_b))
-    parts: list[DataFrame] = []
-    groups: list[list[int]] = []
-    if local_b:
-        groups = _pack_buckets({b: bucket_bytes[b] for b in local_b},
-                               spark.sparkContext.defaultParallelism)
-        parts.append(_fold_layers_local(spark, groups, files_by_bucket))
+    stage = table.new_data_dir()
     if shuffle_b:
+        # first: its overwrite-mode writer replaces the stage dir
         layers = table.read_delta_layer_files(spark, buckets=shuffle_b,
                                               snapshot_id=snap["snapshot_id"])
         as_events = _base_as_changes(layers, table.n_buckets)
-        parts.append(_to_stored(
+        _stage_writer(_to_stored(
             lww_reduce_aligned(as_events, BUCKET_COL,
                                shuffle_salts=shuffle_salts)
-        ))
-    resolved = parts[0] if len(parts) == 1 else \
-        parts[0].unionByName(parts[1])
-    stage = table.new_data_dir()
-    _stage_writer(resolved, max_records_per_file).parquet(stage)
+        ), max_records_per_file).parquet(stage)
+    if local_b:
+        from concurrent.futures import ThreadPoolExecutor
+
+        def fold(b: int) -> None:
+            _fold_bucket_local(files_by_bucket[b], os.path.join(
+                stage, f"{BUCKET_COL}={b}"), max_records_per_file)
+
+        with ThreadPoolExecutor(spark.sparkContext.defaultParallelism) as pool:
+            list(pool.map(fold, local_b))
     rewritten = _written_dirs(stage)
     for b in eligible:
         if b not in rewritten:
@@ -1034,7 +1015,7 @@ def compact_layers(
                 {"commit_type": "compact-layers",
                  "buckets_rewritten": len(rewritten),
                  "bytes_read": sum(bucket_bytes.values()),
-                 "fold_tasks": len(groups)},
+                 "fold_tasks": len(local_b)},
             )
         except ConcurrentCommitError:
             if attempt == 3:

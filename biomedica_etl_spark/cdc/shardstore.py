@@ -17,9 +17,11 @@ mixin is that machinery, written once:
 - ``_read_layers``: schema'd parquet read of layer paths
   (``_stored_schema()`` supplies the schema — partition columns are not
   stored in the files and read back as typed nulls),
-- ``_write_layer``: one uncounted ``repartition(shard)`` exchange (AQE
-  sizes it by bytes) into a fresh immutable container, one file per
-  shard sorted by ``_sort_cols()``; returns shard -> written relpath.
+- ``_write_layer``: a fresh immutable container holding one file per
+  shard sorted by ``_sort_cols()``, written from a ``DataFrame`` through
+  one uncounted ``repartition(shard)`` exchange (AQE sizes it by bytes)
+  or from a ``pyarrow.Table`` on the driver with no Spark job; returns
+  shard -> written relpath.
 
 Subclasses keep their public API and semantics; only the storage
 mechanics live here, so a fix to the crash/GC behavior applies to every
@@ -142,19 +144,39 @@ class ShardedLayerStore:
         return spark.read.schema(self._stored_schema()).parquet(
             *[os.path.join(self.root, p) for p in sorted(paths)])
 
-    def _write_layer(self, stored: DataFrame) -> dict[int, str]:
+    def _write_layer(self, stored: Any) -> dict[int, str]:
         """Write stored rows (with a ``shard`` column) into a fresh
-        immutable container dir, one file per shard (AQE sizes the
-        uncounted exchange) sorted by ``_sort_cols()`` so reads
-        row-group-prune. Returns shard -> relpath for shards with rows."""
+        immutable container dir, one file per shard sorted by
+        ``_sort_cols()`` so reads row-group-prune. Returns shard ->
+        relpath for shards with rows.
+
+        ``stored`` is a ``DataFrame`` (one uncounted exchange, which AQE
+        sizes, then a partitioned Spark write) or a ``pyarrow.Table``,
+        written on the driver with no Spark job: one sort, then one zstd
+        file per shard, with no ``shard`` column in the file as a
+        partitioned write leaves none."""
         cont = f"d-{uuid.uuid4().hex}"
         out = os.path.join(self.root, cont)
-        (stored
-         .repartition("shard")
-         .sortWithinPartitions(*self._sort_cols())
-         .write.partitionBy("shard").parquet(out))
+        if isinstance(stored, DataFrame):
+            (stored
+             .repartition("shard")
+             .sortWithinPartitions(*self._sort_cols())
+             .write.partitionBy("shard").parquet(out))
+            return {int(sub.split("=", 1)[1]): f"{cont}/{sub}"
+                    for sub in os.listdir(out) if sub.startswith("shard=")}
+        import numpy as np
+        import pyarrow.parquet as pq
+
+        tab = stored.sort_by([(c, "ascending") for c in self._sort_cols()])
+        shard = tab["shard"].to_numpy()
+        tab = tab.drop_columns(["shard"])
+        starts = np.flatnonzero(np.diff(shard, prepend=-1))  # shard runs
         written: dict[int, str] = {}
-        for sub in os.listdir(out):
-            if sub.startswith("shard="):
-                written[int(sub.split("=", 1)[1])] = f"{cont}/{sub}"
+        for lo, hi in zip(starts, [*starts[1:], len(shard)]):
+            rel = f"{cont}/shard={int(shard[lo])}"
+            os.makedirs(os.path.join(self.root, rel))
+            pq.write_table(tab.slice(lo, hi - lo), os.path.join(
+                self.root, rel, f"part-00000-{uuid.uuid4().hex}.parquet"),
+                compression="zstd")
+            written[int(shard[lo])] = rel
         return written

@@ -52,10 +52,11 @@ from .schema import PAYLOAD_FIELDS, SYS_DELETED, SYS_LSN
 BUCKET_COL = "_bucket"
 
 # On-disk bytes up to which one process folds a read set in Arrow: a
-# point read or term lookup is then answered on the driver (no Spark
-# job), a MOR log batch is staged on the driver, and a minor fold's
-# bucket takes the packed local plan. Larger read sets keep their Spark
-# plan. Every router reads it at call time (``fits_local``).
+# point read or term lookup is then answered on the driver, a MOR log
+# batch is staged there, a minor fold's bucket is folded there, and a
+# token-index refresh or shard fold runs there, none of them starting a
+# Spark job. Larger read sets keep their Spark plan. Every router reads
+# it at call time (``fits_local``).
 LOCAL_MAX_BYTES = 256 << 20
 
 
@@ -815,6 +816,17 @@ class CowTable:
         that needs EVERY intermediate version (audit log) must not run
         minor folds upstream of its checkpoint.
         """
+        files = self.changed_files(snapshot_id, to_snapshot)
+        if not files:
+            return spark.createDataFrame([], stored_schema())
+        return spark.read.schema(stored_schema()).parquet(*files)
+
+    def changed_files(self, snapshot_id: int,
+                      to_snapshot: int | None = None) -> list[str]:
+        """The delta-layer files ``read_changes_since`` reads, listed
+        from the manifests alone: no data is read and no Spark plan is
+        built. Raises ``ValueError`` where that feed does (an unknown
+        snapshot, or a commit in the window that rewrote history)."""
         self._load_all()
         if self.snapshot_by_id(snapshot_id) is None:
             raise ValueError(f"unknown snapshot_id {snapshot_id}")
@@ -858,9 +870,20 @@ class CowTable:
                     if d not in parent_dirs:
                         files.extend(sorted(glob.glob(
                             os.path.join(self.root, d, "*.parquet"))))
-        if not files:
-            return spark.createDataFrame([], stored_schema())
-        return spark.read.schema(stored_schema()).parquet(*files)
+        return files
+
+    @staticmethod
+    def touched_buckets(from_snap: dict[str, Any],
+                        to_snap: dict[str, Any]) -> list[int]:
+        """Buckets whose delta-dir sets differ between two manifests: the
+        only buckets a change window can have changed (an over-
+        approximation under folds, whose extra buckets only add
+        pre-image rows that find no feed match)."""
+        f_dirs = from_snap.get("delta_dirs", {})
+        t_dirs = to_snap.get("delta_dirs", {})
+        return sorted(
+            int(b) for b in set(f_dirs) | set(t_dirs)
+            if f_dirs.get(b, []) != t_dirs.get(b, []))
 
     def read_changes_with_images(
         self, spark: SparkSession, from_snapshot: int,
@@ -909,14 +932,7 @@ class CowTable:
         to_snap = self._resolve_snapshot(to_snapshot)
         feed = self.read_changes_since(spark, from_snapshot,
                                        to_snapshot=to_snap["snapshot_id"])
-        # touched buckets, driver-side from the two manifests (an over-
-        # approximation under folds — extra buckets only add pre-image
-        # rows that find no feed match)
-        f_dirs = from_snap.get("delta_dirs", {})
-        t_dirs = to_snap.get("delta_dirs", {})
-        touched = sorted(
-            int(b) for b in set(f_dirs) | set(t_dirs)
-            if f_dirs.get(b, []) != t_dirs.get(b, []))
+        touched = self.touched_buckets(from_snap, to_snap)
         payload = [c for c, _ in PAYLOAD_FIELDS
                    if c not in ("conv_id", "turn_idx")
                    and (columns is None or c in columns)]

@@ -18,6 +18,7 @@ import pytest
 
 from biomedica_etl_spark.sources.datasource import (
     _arrow_schema,
+    _last_per_key,
     _lww_fold,
     _take_capped,
 )
@@ -42,7 +43,7 @@ def _row(conv, turn, text, lsn, deleted=False):
 
 def _stored(rows):
     # one table per row, concatenated — the same multi-chunk int32 shape
-    # _read_stored_arrow produces from per-file reads (a single >2 GiB
+    # _read_stored_arrow produces from its scan batches (a single >2 GiB
     # int32 chunk cannot even be constructed)
     return pa.concat_tables(
         [pa.Table.from_pydict(r, schema=TARGET) for r in rows]
@@ -130,6 +131,20 @@ def test_take_capped_keeps_runs_zero_copy():
     out = _take_capped(tab, np.array([1, 2, 3]))
     assert out.num_rows == 3
     assert pa.total_allocated_bytes() - before < 10_000
+
+
+def test_take_capped_in_key_order_across_batches():
+    # key-order winners of a two-batch table run backwards across the
+    # batch boundary; an unsigned index array once hid that descent (its
+    # differences wrapped) and the ascending gather ran out of bounds
+    tab = pa.concat_tables([
+        _stored([_row("b", 0, "b", 1), _row("d", 0, "d", 1)]),
+        _stored([_row("a", 0, "a", 1), _row("c", 0, "c", 1)])])
+    rows = _last_per_key(tab, ["conv_id", "turn_idx"], ["_lsn"],
+                         key_order=True)
+    assert rows.dtype == np.int64
+    out = _take_capped(tab, rows)
+    assert out["conv_id"].to_pylist() == ["a", "b", "c", "d"]
 
 
 @pytest.mark.parametrize("tombstones", [True, False])

@@ -355,20 +355,17 @@ def test_minor_fold_losing_to_major_compact_skips_cleanly(spark, tmp_path):
 
 def test_minor_fold_local_plan_shuffle_free_and_matches_shuffle_plan(
         spark, tmp_path):
-    """The local fold (every bucket under ``LOCAL_MAX_BYTES``) runs ZERO
-    exchanges — layers are already laid out per bucket on disk, so
-    re-shuffling rows that are already bucket-partitioned is pure waste.
-    With more eligible buckets than cores it packs them into exactly
-    ``min(len(eligible), defaultParallelism)`` Arrow tasks (recorded, with
-    the planned read bytes, in the commit summary) and still writes one
-    file under each bucket's own dir. Its committed state is
-    row-identical (payload + ``_lsn`` + tombstones) to the salted
-    exchange plan's (the limit at -1) on the same starting table."""
+    """The local fold (every bucket under ``LOCAL_MAX_BYTES``) runs on
+    the driver and starts NO Spark job — layers are already laid out per
+    bucket on disk, so neither an exchange nor a Python task is needed.
+    It folds every eligible bucket there (``fold_tasks``, recorded with
+    the planned read bytes in the commit summary) and writes one file
+    under each bucket's own dir. Its committed state is row-identical
+    (payload + ``_lsn`` + tombstones) to the salted exchange plan's (the
+    limit at -1) on the same starting table."""
     import glob
     import os
     import shutil
-
-    from biomedica_etl_spark.cdc.merge import _fold_layers_local, _pack_buckets
 
     log = str(tmp_path / "log")
     generate_change_log(log, GeneratorConfig(
@@ -384,30 +381,27 @@ def test_minor_fold_local_plan_shuffle_free_and_matches_shuffle_plan(
     shutil.copytree(root_a, root_b)
     table_a, table_b = runner.table, CowTable(root_b)
 
-    # plan pin: packed groups, one partition each, no Exchange at all
     snap = table_a.current_snapshot()
     eligible = sorted(
         int(b) for b, ds in snap["delta_dirs"].items() if len(ds) >= 2)
-    cores = spark.sparkContext.defaultParallelism
-    assert len(eligible) > cores, "precondition: more buckets than cores"
-    files = {b: table_a._delta_files_for(snap, [b]) for b in eligible}
-    nbytes = {b: sum(os.path.getsize(f) for f in files[b]) for b in eligible}
-    groups = _pack_buckets(nbytes, cores)
-    assert len(groups) == min(len(eligible), cores)
-    assert sorted(b for g in groups for b in g) == eligible
-    df = _fold_layers_local(spark, groups, files)
-    assert df.rdd.getNumPartitions() == len(groups)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan, plan
+    assert len(eligible) > spark.sparkContext.defaultParallelism, \
+        "precondition: more buckets than cores"
+    nbytes = sum(os.path.getsize(f)
+                 for f in table_a._delta_files_for(snap, eligible))
 
+    # plan pin: the driver fold starts no Spark job
+    tracker = spark.sparkContext.statusTracker()
+    spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+    jobs0 = max(tracker.getJobIdsForGroup(), default=-1)
     sa = compact_layers(spark, table_a)
+    assert max(tracker.getJobIdsForGroup(), default=-1) == jobs0
     with mock.patch.object(table_mod, "LOCAL_MAX_BYTES", -1):
         sb = compact_layers(spark, table_b)
     assert sa is not None and sb is not None
-    assert sa["summary"]["fold_tasks"] == len(groups)
+    assert sa["summary"]["fold_tasks"] == len(eligible)
     assert sb["summary"]["fold_tasks"] == 0
     assert sa["summary"]["bytes_read"] == sb["summary"]["bytes_read"] \
-        == sum(nbytes.values())
+        == nbytes
     for b in eligible:
         (merged,) = sa["delta_dirs"][str(b)]
         assert merged.endswith(f"bucket={b}"), merged
@@ -429,25 +423,6 @@ def test_minor_fold_local_plan_shuffle_free_and_matches_shuffle_plan(
         for r in t.read(spark).collect()
     )
     assert live(table_a) == live(table_b)
-
-
-def test_pack_buckets_largest_first_to_least_loaded():
-    """LPT bin-packing: every bucket in exactly one group, never more
-    groups than tasks or buckets, and the largest buckets spread out."""
-    from biomedica_etl_spark.cdc.merge import _pack_buckets
-
-    sizes = {b: (b * 37) % 101 + 1 for b in range(23)}
-    groups = _pack_buckets(sizes, 4)
-    assert len(groups) == 4
-    assert sorted(b for g in groups for b in g) == sorted(sizes)
-    loads = [sum(sizes[b] for b in g) for g in groups]
-    # LPT bound: no group exceeds the mean load by more than the largest item
-    assert max(loads) <= sum(loads) / 4 + max(sizes.values()), loads
-    big = sorted(sizes, key=lambda b: -sizes[b])[:4]
-    assert sorted(next(i for i, g in enumerate(groups) if b in g)
-                  for b in big) == [0, 1, 2, 3]
-    assert _pack_buckets({7: 5, 3: 9}, 8) == [[3], [7]]
-    assert _pack_buckets({}, 4) == []
 
 
 def test_minor_fold_auto_plan_routes_by_bytes_and_matches_local(

@@ -6,7 +6,9 @@ the driver; otherwise it hands over a DataFrame and one Spark job stages
 it. Setting the limit to -1 forces the Spark route on the same files, so
 both routes can be compared file for file: the stored rows (``_lsn`` and
 ``_deleted`` included) in each bucket, the ``raw`` metrics dict and the
-quarantined rows.
+quarantined rows. The driver stage also counts each bucket's lineage row
+as it writes; those rows must equal the Spark read-back
+(``_layer_bucket_metrics``) of the same stage dir.
 
 Batches are written here as the generator writes a log: one parquet file
 per batch dir at a schema epoch (epoch 0 has no ``tool`` and an int32
@@ -33,7 +35,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from biomedica_etl_spark.cdc import table as table_mod
-from biomedica_etl_spark.cdc.merge import mor_stage_batch
+from biomedica_etl_spark.cdc.merge import _layer_bucket_metrics, mor_stage_batch
 from biomedica_etl_spark.cdc.runner import CdcRunner
 
 TZ = "America/Los_Angeles"
@@ -131,8 +133,17 @@ def _stage_both(spark, runner, batch_id, schema_id, max_records_per_file=0):
     return staged["local"], staged["spark"]
 
 
+def _assert_lineage_is_the_read_back(spark, staged):
+    def by_bucket(rows):
+        return sorted(rows, key=lambda r: r["partition_id"])
+
+    assert by_bucket(staged["lineage"]) == by_bucket(_layer_bucket_metrics(
+        spark, staged["stage"], staged["batch_id"]))
+
+
 def _assert_routes_agree(runner, local, remote, batch_id,
                          max_records_per_file=0):
+    _assert_lineage_is_the_read_back(runner.spark, local)
     assert local["batch_id"] == remote["batch_id"] == batch_id
     assert local["raw"] == remote["raw"]
     assert sorted(local["written"]) == sorted(remote["written"])

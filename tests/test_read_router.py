@@ -87,8 +87,8 @@ def test_local_reads_touch_only_the_pruned_files(spark, built, monkeypatch):
 
 def test_one_limit_for_reads_and_folds(spark, tmp_path, monkeypatch):
     """The fold routes by the same constant, read at call time: at -1
-    every bucket takes the exchange plan (no Arrow fold task); at the
-    default the same layers fold in packed Arrow tasks."""
+    every bucket takes the exchange plan (no bucket folded on the
+    driver); at the default the same layers fold on the driver."""
     import shutil
 
     from biomedica_etl_spark.cdc.generator import (
