@@ -121,8 +121,7 @@ def _cdc_delete_where(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     log = _ensure_entry_log()
     work = tempfile.mkdtemp(prefix="cdc-delete-")
-    runner = CdcRunner(spark, log, os.path.join(work, "table"), n_buckets=8,
-                       mode="mor")
+    runner = CdcRunner(spark, log, os.path.join(work, "table"), n_buckets=8)
     runner.run()
     runner.delete_where(_DELETE_PRED_SPARK)
     return runner.final_state()
@@ -163,8 +162,7 @@ def _cdc_update_where(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     log = _ensure_entry_log()
     work = tempfile.mkdtemp(prefix="cdc-update-")
-    runner = CdcRunner(spark, log, os.path.join(work, "table"), n_buckets=8,
-                       mode="mor")
+    runner = CdcRunner(spark, log, os.path.join(work, "table"), n_buckets=8)
     runner.run()
     runner.update_where("role = 'tool'",
                         {"tool": "coalesce(tool, 'none')",
@@ -213,8 +211,7 @@ def _cdc_merge_into(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     log = _ensure_entry_log()
     work = tempfile.mkdtemp(prefix="cdc-merge-")
-    runner = CdcRunner(spark, log, os.path.join(work, "table"), n_buckets=8,
-                       mode="mor")
+    runner = CdcRunner(spark, log, os.path.join(work, "table"), n_buckets=8)
     runner.run()
     live = runner.table.read(spark)
     upd = live.filter(F.col("turn_idx") % 5 == 1).select(
@@ -290,8 +287,7 @@ def _cdc_change_images(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     log = _ensure_entry_log()
     work = tempfile.mkdtemp(prefix="cdc-images-")
-    runner = CdcRunner(spark, log, os.path.join(work, "table"), n_buckets=8,
-                       mode="mor")
+    runner = CdcRunner(spark, log, os.path.join(work, "table"), n_buckets=8)
     runner.run(max_batches=2)
     snap_a = runner.table.current_snapshot()["snapshot_id"]
     runner.run()
@@ -373,8 +369,7 @@ def _cdc_token_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     log = _ensure_entry_log()
     work = tempfile.mkdtemp(prefix="cdc-index-")
-    runner = CdcRunner(spark, log, os.path.join(work, "table"), n_buckets=8,
-                       mode="mor")
+    runner = CdcRunner(spark, log, os.path.join(work, "table"), n_buckets=8)
     runner.run(max_batches=2)
     idx = TokenIndex(os.path.join(work, "idx"), n_shards=16)
     idx.refresh(spark, runner.table)        # bootstrap at batch 2
@@ -440,7 +435,7 @@ def _cdc_maintained_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     work = tempfile.mkdtemp(prefix="cdc-maint-")
     idx = TokenIndex(os.path.join(work, "idx"), n_shards=16)
     runner = CdcRunner(spark, log, os.path.join(work, "table"), n_buckets=8,
-                       mode="mor", maintain=[idx], maintain_every=2,
+                       maintain=[idx], maintain_every=2,
                        async_maintain=True)
     runner.run()
     runner.delete_where(_DELETE_PRED_SPARK)
@@ -465,8 +460,7 @@ def _cdc_feed_replica(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     log = _ensure_entry_log()
     work = tempfile.mkdtemp(prefix="cdc-replica-")
-    src = CdcRunner(spark, log, os.path.join(work, "src"), n_buckets=8,
-                    mode="mor")
+    src = CdcRunner(spark, log, os.path.join(work, "src"), n_buckets=8)
     src.table.create()
     cur = ImageFeedCursor(os.path.join(work, "cursor"))
     cur.initialize(src.table)  # cursor at the empty snapshot 0
@@ -494,8 +488,7 @@ def _cdc_delete_by_token(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     log = _ensure_entry_log()
     work = tempfile.mkdtemp(prefix="cdc-idxdel-")
-    runner = CdcRunner(spark, log, os.path.join(work, "table"), n_buckets=8,
-                       mode="mor")
+    runner = CdcRunner(spark, log, os.path.join(work, "table"), n_buckets=8)
     runner.run(max_batches=2)
     idx = TokenIndex(os.path.join(work, "idx"), n_shards=16)
     idx.refresh(spark, runner.table)     # bootstrap mid-stream
@@ -538,8 +531,7 @@ def _cdc_update_by_token(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     log = _ensure_entry_log()
     work = tempfile.mkdtemp(prefix="cdc-idxupd-")
-    runner = CdcRunner(spark, log, os.path.join(work, "table"), n_buckets=8,
-                       mode="mor")
+    runner = CdcRunner(spark, log, os.path.join(work, "table"), n_buckets=8)
     runner.run(max_batches=2)
     idx = TokenIndex(os.path.join(work, "idx"), n_shards=16)
     idx.refresh(spark, runner.table)     # bootstrap mid-stream
@@ -585,8 +577,7 @@ def _cdc_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     log = _ensure_entry_log()
     work = tempfile.mkdtemp(prefix="cdc-travel-")
-    runner = CdcRunner(spark, log, os.path.join(work, "table"), n_buckets=8,
-                       mode="mor")
+    runner = CdcRunner(spark, log, os.path.join(work, "table"), n_buckets=8)
     runner.run(max_batches=2)
     runner.table.set_tag("audit")
     runner.run()
@@ -633,8 +624,7 @@ def _cdc_key_history(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     log = _ensure_entry_log()
     work = tempfile.mkdtemp(prefix="cdc-history-")
-    runner = CdcRunner(spark, log, os.path.join(work, "table"), n_buckets=8,
-                       mode="mor")
+    runner = CdcRunner(spark, log, os.path.join(work, "table"), n_buckets=8)
     hist = HistoryTable(os.path.join(work, "hist"), n_shards=8)
     hist.refresh(spark, runner.table)   # attach at the empty table
     runner.run(max_batches=2)
@@ -703,8 +693,7 @@ def _cdc_as_of_lsn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     log = _ensure_entry_log()
     work = tempfile.mkdtemp(prefix="cdc-asof-")
-    runner = CdcRunner(spark, log, os.path.join(work, "table"), n_buckets=8,
-                       mode="mor")
+    runner = CdcRunner(spark, log, os.path.join(work, "table"), n_buckets=8)
     hist = HistoryTable(os.path.join(work, "hist"), n_shards=8)
     hist.refresh(spark, runner.table)
     runner.run()
@@ -737,8 +726,9 @@ ORDER BY conv_id, turn_idx
 
 
 def _cdc_txn_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-table atomic commit as a query: two tables (one MOR, one
-    COW) each stage their final log batch (WAP — written, invisible),
+    """Multi-table atomic commit as a query: two tables (one with layers
+    piling up, one read-optimized by a major fold after every commit)
+    each stage their final log batch (WAP — written, invisible),
     then TransactionCoordinator.commit_all publishes BOTH through one
     commit point (an atomic txn-record rename; crash anywhere after it
     rolls forward, before it aborts). Returns both end states side by
@@ -752,10 +742,9 @@ def _cdc_txn_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
     log_a = _ensure_entry_log()
     log_b = _ensure_entry_log_b()
     work = tempfile.mkdtemp(prefix="cdc-txn-")
-    ra = CdcRunner(spark, log_a, os.path.join(work, "ta"), n_buckets=8,
-                   mode="mor")
+    ra = CdcRunner(spark, log_a, os.path.join(work, "ta"), n_buckets=8)
     rb = CdcRunner(spark, log_b, os.path.join(work, "tb"), n_buckets=8,
-                   mode="cow")
+                   compact_every=1)
     ra.run(max_batches=4)
     rb.run(max_batches=4)
     assert ra.stage_next_batch() is not None
@@ -803,10 +792,8 @@ def _cdc_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     log_a = _ensure_entry_log()
     log_b = _ensure_entry_log_b()
     work = tempfile.mkdtemp(prefix="cdc-joinview-")
-    ra = CdcRunner(spark, log_a, os.path.join(work, "ta"), n_buckets=8,
-                   mode="mor")
-    rb = CdcRunner(spark, log_b, os.path.join(work, "tb"), n_buckets=8,
-                   mode="mor")
+    ra = CdcRunner(spark, log_a, os.path.join(work, "ta"), n_buckets=8)
+    rb = CdcRunner(spark, log_b, os.path.join(work, "tb"), n_buckets=8)
     ra.run(max_batches=3)
     rb.run(max_batches=2)
     view = JoinView(os.path.join(work, "view"), n_shards=8)
@@ -874,8 +861,7 @@ def _cdc_rollup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     log = _ensure_entry_log()
     work = tempfile.mkdtemp(prefix="cdc-rollup-")
-    runner = CdcRunner(spark, log, os.path.join(work, "table"), n_buckets=8,
-                       mode="mor")
+    runner = CdcRunner(spark, log, os.path.join(work, "table"), n_buckets=8)
     roll = RollupTable(os.path.join(work, "rollup"), track_max_ts=True)
     runner.run(max_batches=2)
     roll.refresh(spark, runner.table)   # bootstrap at batch 2
@@ -1146,10 +1132,10 @@ def _cdc_branch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     log = _ensure_entry_log()
     work = tempfile.mkdtemp(prefix="cdc-branch-")
     main = CdcRunner(spark, log, os.path.join(work, "main"), n_buckets=8,
-                     mode="mor", compact_every=1000)
+                     compact_every=1000)
     main.run(max_batches=3)
     branch = fork_table(main.table, os.path.join(work, "br"))
-    CdcRunner(spark, log, branch.root, n_buckets=8, mode="mor",
+    CdcRunner(spark, log, branch.root, n_buckets=8,
               compact_every=1000).run()
     merge_branch(spark, branch, main.table, batch_id=900_001)
     return main.table.read(spark).orderBy("conv_id", "turn_idx")
@@ -1170,7 +1156,7 @@ def _cdc_debezium_relay(spark: SparkSession, sf_dir: str) -> DataFrame:
     log = _ensure_entry_log()
     work = tempfile.mkdtemp(prefix="cdc-relay-")
     src = CdcRunner(spark, log, os.path.join(work, "src"), n_buckets=8,
-                    mode="mor", compact_every=1000)
+                    compact_every=1000)
     src.run(max_batches=2)
     out_dir = os.path.join(work, "relay")
     os.makedirs(out_dir)
@@ -1206,7 +1192,7 @@ def _cdc_debezium_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     log = _ensure_entry_log()
     work = tempfile.mkdtemp(prefix="cdc-dbz-rt-")
     runner = CdcRunner(spark, log, os.path.join(work, "src"), n_buckets=8,
-                       mode="mor", compact_every=1000)
+                       compact_every=1000)
     runner.run()
     envelopes = to_debezium(spark, runner.table, 0)
     events = parse_debezium(envelopes, value_col="value")

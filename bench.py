@@ -42,7 +42,6 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 CDC_EVENTS = int(os.environ.get("SPARK_GRAFT_BENCH_EVENTS", "8000000"))
 CDC_BATCHES = int(os.environ.get("SPARK_GRAFT_BENCH_BATCHES", "4"))
-CDC_MODE = os.environ.get("SPARK_GRAFT_BENCH_MODE", "mor")  # ingest-optimized path
 COMPACT_EVERY = int(os.environ.get("SPARK_GRAFT_BENCH_COMPACT_EVERY", "4"))
 N_BUCKETS = int(os.environ.get("SPARK_GRAFT_BENCH_BUCKETS", "128"))
 SHUFFLE_SALTS = int(os.environ.get("SPARK_GRAFT_BENCH_SALTS", "8"))
@@ -150,9 +149,9 @@ def run_cdc_apply(
     shutil.rmtree(table_root, ignore_errors=True)
     depth = CDC_PIPELINE if pipeline_depth is None else pipeline_depth
     runner = CdcRunner(spark, log, table_root, n_buckets=N_BUCKETS,
-                       mode=CDC_MODE, compact_every=compact_every,
+                       compact_every=compact_every,
                        shuffle_salts=SHUFFLE_SALTS, async_lineage=True,
-                       pipeline_depth=depth if CDC_MODE == "mor" else 1,
+                       pipeline_depth=depth,
                        async_compact=async_compact, compact_mode=compact_mode,
                        fold_tier_bytes=fold_tier_bytes, maintain=maintain,
                        maintain_every=maintain_every,
@@ -176,8 +175,7 @@ def run_cdc_section(spark, workdir: str) -> dict:
             spark, os.path.join(workdir, f"a{i}"), compact_every=1_000_000_000
         )
         t1 = time.time()
-        if CDC_MODE == "mor":
-            compact_table(spark, runner.table)
+        compact_table(spark, runner.table)
         compact_sec = time.time() - t1
         steal_pct = (_steal_ticks() - s0) / max(
             (time.time() - t0) * 100 * HOST_CPUS, 1) * 100
@@ -306,7 +304,7 @@ def run_cdc_section(spark, workdir: str) -> dict:
             t11 = time.time()
             br = fork_table(runner.table, os.path.join(workdir, "bench-br"))
             fork_sec = time.time() - t11
-            _br_delete(spark, br, "turn_idx % 17 = 3", mode="mor")
+            _br_delete(spark, br, "turn_idx % 17 = 3")
             br.refresh()
             t12 = time.time()
             merge_branch(spark, br, runner.table, batch_id=9_900_001)
@@ -650,7 +648,7 @@ def scaling_main() -> None:
     md = f"""# BENCH baseline — CDC apply throughput + scaling
 
 Job: full micro-batch apply loop (read batch -> schema align -> single-shuffle
-bucket-aligned salted LWW reduce -> merge ({CDC_MODE}) -> exactly-once commit)
+bucket-aligned salted LWW reduce -> merge-on-read layer -> exactly-once commit)
 of a deterministic synthetic change log.
 Input: {SCALING_EVENTS:,} change events ({SCALING_BATCHES} micro-batches, zipf-skewed
 conversations, 25% updates / 5% deletes, {N_BUCKETS} table buckets,

@@ -4,7 +4,7 @@ A from-scratch re-expression of the semantics of ``minwoosun/biomedica-etl``
 (staged, checkpointed, idempotent batch ETL) as an idiomatic Spark CDC apply
 loop: change events (insert/update/delete on conversation turns) are read as
 micro-batches, deduplicated by (conv_id, turn_idx, lsn) with a max-LSN
-last-writer-wins reducer, and applied via a key-partitioned copy-on-write
+last-writer-wins reducer, and applied via a key-partitioned merge-on-read
 MERGE into a snapshot-versioned ``transcripts`` table with hidden
 bucket(conv_id) partitioning, exactly-once commits (checkpointed offset
 ranges + snapshot-id fencing), per-batch schema evolution, and per-partition

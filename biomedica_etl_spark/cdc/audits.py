@@ -57,11 +57,7 @@ def max_quarantine_rate(threshold: float) -> Audit:
     def gate(spark: SparkSession, table: Any) -> tuple[bool, str]:
         s = (table.staged_snapshot() or {}).get("summary", {})
         quarantined = s.get("rows_quarantined") or 0
-        # MOR summaries carry the raw consumed-offset count; COW summaries
-        # carry post-reduce mutation counts — use whichever is present
-        denom = s.get("offsets_applied") or (
-            (s.get("rows_upserted") or 0) + (s.get("rows_deleted") or 0)
-            + quarantined)
+        denom = s.get("offsets_applied") or 0
         if denom == 0:
             return True, ""
         rate = quarantined / denom

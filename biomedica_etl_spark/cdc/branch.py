@@ -34,7 +34,7 @@ branch design is instead the Delta-shallow-clone / Neon shape:
 Change extraction is feed-first: the O(changes) raw feed when the
 branch's commit chain is feed-serveable, falling back to the semantic
 ``diff`` + a bucket-pruned payload read when branch-side maintenance
-(major compaction / COW rewrites) broke the feed window — the same
+(major compaction / base rewrites) broke the feed window — the same
 two-tier discipline the derived-table maintainers use.
 
 Reference analogue: the reference's stage-directory convention — run a
@@ -148,7 +148,7 @@ def branch_changes(spark: SparkSession, branch: CowTable) -> DataFrame:
 
     Feed-first: the O(changes) raw feed over ``(fork, head]`` when the
     branch chain is feed-serveable; otherwise (branch-side major
-    compaction / COW rewrites) the semantic ``diff`` + a payload read
+    compaction / base rewrites) the semantic ``diff`` + a payload read
     bucket-pruned to the changed keys' buckets (bounded driver-side
     bucket list, never a full scan of the untouched buckets).
     """

@@ -55,7 +55,7 @@ class ImageFeedCursor:
       idempotent by construction).
     - ``commit`` with a stale token (not the last polled window) raises —
       the consumer must not skip a window.
-    - a window that is not feed-serveable (COW rewrite, major compaction,
+    - a window that is not feed-serveable (base rewrite, major compaction,
       rollback inside it) raises the feed's resync ``ValueError``; the
       consumer rebuilds its derived state from a full read and calls
       ``reset(snapshot_id)`` to jump the cursor to the snapshot it rebuilt
@@ -134,7 +134,7 @@ class ImageFeedCursor:
 
     def reset(self, snapshot_id: int) -> None:
         """Jump the cursor after an out-of-band rebuild (the resync path:
-        a COW rewrite / compaction / rollback made the window unservable,
+        a base rewrite / compaction / rollback made the window unservable,
         the consumer re-derived its state from a full read pinned at
         ``snapshot_id``)."""
         self._write(snapshot_id)

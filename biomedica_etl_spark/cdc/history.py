@@ -25,7 +25,7 @@ superseded event was never observable in the table and is not a
 version. Likewise a minor fold compresses any *unconsumed* window to
 per-key winners (the feed's documented contract); refreshing at least
 once per ingest commit preserves full stored-version granularity.
-Windows the feed cannot serve at all (COW rewrite, major compaction,
+Windows the feed cannot serve at all (base rewrite, major compaction,
 rollback) degrade gracefully: the refresh splices the semantic
 ``diff`` of the window — net winner-granularity versions with correct
 endpoint state — and reports ``source='diff'``.

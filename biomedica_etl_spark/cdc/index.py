@@ -37,10 +37,9 @@ read-amplification argument applies:
 - state versions are immutable layer directories + an atomic pointer
   file; a crash mid-refresh leaves the previous version intact and a
   replayed refresh converges to the identical state;
-- when the commit chain since the cursor is not feed-serveable (COW
-  rewrite, major compaction, rollback — the feed's documented resync
-  contract), ``refresh`` falls back to a full rebuild at the target
-  snapshot. Minor folds of the SOURCE table serve transparently and
+- when the commit chain since the cursor is not feed-serveable (major
+  compaction, rollback — the feed's documented resync contract),
+  ``refresh`` falls back to a full rebuild at the target snapshot. Minor folds of the SOURCE table serve transparently and
   never force a rebuild.
 
 Scale story at the 10^10-row design point: steady-state refresh = one
@@ -438,7 +437,7 @@ class TokenIndex(ShardedLayerStore):
     # --- index-accelerated DML -------------------------------------------
 
     def delete_matching(self, spark: SparkSession, table: CowTable,
-                        tokens: list[str], mode: str = "mor",
+                        tokens: list[str],
                         batch_id: int | None = None,
                         refresh: bool = True,
                         **dml_kw: Any) -> dict[str, Any] | None:
@@ -455,9 +454,8 @@ class TokenIndex(ShardedLayerStore):
         on token-sorted files), and the matched keys go straight into
         op='D' tombstones at a fresh LSN through the SAME merge path as
         every other DML — exactly-once under ``batch_id``, change-feed
-        visible, O(matched) MOR layer or COW bucket rewrite. The index
-        is exact at the head after the refresh (it IS the live state's
-        tokenization), so the key set equals the predicate's matches; a
+        visible, an O(matched) delta layer. The index is exact at the
+        head after the refresh (it IS the live state's tokenization), so the key set equals the predicate's matches; a
         stale cursor with ``refresh=False`` raises rather than deleting
         against an old view of the table. No table read happens at all
         (pinned by test): tombstones need keys only, payloads are typed
@@ -468,7 +466,7 @@ class TokenIndex(ShardedLayerStore):
         (``scripts/02_extract_media.py``); here it is index lookup +
         O(matched) commit.
         """
-        from .merge import _apply_dml, _fresh_lsn
+        from .merge import _fresh_lsn, mor_apply_batch
         from .schema import KEY_COLS, PAYLOAD_COLS, PAYLOAD_FIELDS
 
         if batch_id is not None and table.is_committed(batch_id):
@@ -483,7 +481,8 @@ class TokenIndex(ShardedLayerStore):
             *[F.lit(None).cast(types[c]).alias(c)
               for c in PAYLOAD_COLS if c not in KEY_COLS],
         )
-        return _apply_dml(spark, table, changes, mode, batch_id, **dml_kw)
+        return mor_apply_batch(spark, table, changes, batch_id,
+                               pre_reduced=True, **dml_kw)
 
     def _matched_keys(self, spark: SparkSession, table: CowTable,
                       tokens: list[str], refresh: bool) -> DataFrame:
@@ -504,7 +503,6 @@ class TokenIndex(ShardedLayerStore):
 
     def update_matching(self, spark: SparkSession, table: CowTable,
                         tokens: list[str], assignments: dict[str, Any],
-                        mode: str = "mor",
                         batch_id: int | None = None,
                         refresh: bool = True,
                         **dml_kw: Any) -> dict[str, Any] | None:
@@ -525,15 +523,16 @@ class TokenIndex(ShardedLayerStore):
         10^10-row table reads ~100 point rows, not the table. Full-row
         op='U' events commit at a fresh LSN through the ordinary DML
         merge path — exactly-once under ``batch_id``, change-feed
-        visible, O(matched) MOR layer or COW bucket rewrite.
+        visible, an O(matched) delta layer.
 
         Reference analogue: the reference's record fix-ups re-run the
         whole annotate stage over every record
         (``scripts/05_json_to_entrez.py:324-330``); here a targeted
         fix-up is index lookup + O(matched) read + O(matched) commit.
         """
-        from .merge import (_apply_dml, _assignment_value, _fresh_lsn,
-                            _native_live_read, _validate_assignments)
+        from .merge import (_assignment_value, _fresh_lsn,
+                            _native_live_read, _validate_assignments,
+                            mor_apply_batch)
         from .schema import KEY_COLS, PAYLOAD_COLS, target_change_schema
         from .table import bucket_expr
 
@@ -563,8 +562,8 @@ class TokenIndex(ShardedLayerStore):
                 )
             else:  # no term matches: commit an empty (fenced) batch
                 changes = spark.createDataFrame([], target_change_schema())
-            return _apply_dml(spark, table, changes, mode, batch_id,
-                              **dml_kw)
+            return mor_apply_batch(spark, table, changes, batch_id,
+                                   pre_reduced=True, **dml_kw)
         finally:
             keys.unpersist()
 

@@ -7,9 +7,9 @@ reduced delta per micro-batch — offsets applied, rows upserted/deleted,
 watermark (max event ts) — appended to a parquet metrics table so any
 failure can be diagnosed and reconciled (sum(rows) vs table delta).
 
-Per-bucket rows are produced by merge.py (``_plan_cow`` for the COW
-planning pass, ``_bucket_lineage`` as the driver stage writes,
-``_layer_bucket_metrics`` for the read-back of a Spark stage); only the
+Per-bucket rows are produced by merge.py (``_bucket_lineage`` as the
+driver stage writes, ``_layer_bucket_metrics`` for the read-back of a
+Spark stage); only the
 tiny per-bucket summary ever reaches the driver (bounded by bucket count,
 not data size). This module owns the append-only parquet sink.
 """
@@ -113,8 +113,10 @@ def reconcile_lineage(spark, table, lineage_dir: str) -> dict[str, Any]:
     - MOR commits whose appended layer dirs still exist are recomputed
       EXACTLY (the same O(delta) column-pruned read-back ingest uses —
       ``merge._layer_bucket_metrics``), per bucket, original snapshot id.
-    - COW commits (per-partition counts existed only inside the planning
-      pass) and folded/GC'd MOR layers get a SUMMARY-level row
+    - base-rewrite commits that carry a batch id (tables written before
+      merge-on-read became the only write mode; their per-partition
+      counts existed only inside the planning pass) and folded/GC'd MOR
+      layers get a SUMMARY-level row
       (partition_id = bucket = -1) carrying the snapshot summary counts,
       so sum-vs-commit reconciliation still closes.
     - Batches that legitimately emitted nothing (zero surviving rows —

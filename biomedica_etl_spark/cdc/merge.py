@@ -1,14 +1,15 @@
-"""Key-partitioned MERGE of one micro-batch into the table.
+"""Key-partitioned merge-on-read apply of one micro-batch into the table.
 
 Equivalent of ``MERGE INTO transcripts USING delta ON (conv_id, turn_idx)
 WHEN MATCHED AND delta.lsn > base._lsn ...`` expressed as a DataFrame plan
-(no lakehouse jars in this sandbox; the plan is what Iceberg's COW MERGE
-generates anyway).
+(no lakehouse jars in this sandbox): each batch lands as an LWW-reduced
+delta layer (Iceberg-v2 merge-on-read), and reads and folds resolve the
+layers against the base by max-lsn.
 
 Reference analogues: enrichment left-join with pass-through of unmatched
 rows (``scripts/05_json_to_entrez.py:303-330``), LWW build-probe dict
-(``scripts/06_serilaize_to_webdataset_parallel.py:141-143``), COW output
-dir (``:332-334``).
+(``scripts/06_serilaize_to_webdataset_parallel.py:141-143``), rewritten
+output dir (``:332-334``).
 
 Cross-batch out-of-order correctness: the stored table keeps ``_lsn`` and a
 ``_deleted`` tombstone per key. A delta row wins only if its lsn exceeds
@@ -19,7 +20,7 @@ structural no-op.
 
 Physical plans (measured on local[32]; see BENCH/BASELINE.md):
 
-- **MOR apply (default ingest path)** stages a batch by one of two
+- **MOR apply (the ingest path)** stages a batch by one of two
   routes that write the same layer. A batch handed over as a
   ``DataFrame`` is ONE wide Spark job: the raw batch is shuffled once on
   ``(bucket(conv_id), salt(turn_idx))``; because the aggregation keys
@@ -38,19 +39,19 @@ Physical plans (measured on local[32]; see BENCH/BASELINE.md):
   lineage row from the winners it writes. After a Spark stage, a second,
   O(delta) column-pruned job over the just-written layer produces the
   per-bucket lineage rows, off the critical path.
-- **COW merge** runs Iceberg-MERGE-style: a *planning* job scans only
-  ``(conv_id, op, lsn, ts)`` (never the text payload) to find affected
-  buckets + per-bucket raw metrics, then ONE wide job does
-  ``union(base-as-events, changes) -> LWW reduce -> write`` — the
-  max-lsn-wins full-outer merge collapses into the same single-shuffle
-  aligned reduce, because a stored row is just an event with lsn =
-  ``_lsn`` (tombstones are deletes). Three shuffles (reduce + join +
-  repartition-for-write) become one.
+- **Major fold** (``compact``) rewrites the buckets that carry layers
+  in ONE wide job: ``union(base, layers) as events -> LWW reduce ->
+  write``. A stored row is just an event with lsn = ``_lsn``
+  (tombstones are deletes), so the max-lsn-wins full-outer merge
+  collapses into the same single-shuffle aligned reduce as the stage.
+  ``compact_every=1`` folds every touched bucket after each commit,
+  which leaves the base-only, read-optimized layout.
 
 Scale notes:
-- Only buckets touched by the delta are read and rewritten (file pruning
-  via the snapshot manifest). 100 TB table + 1 GB delta => the merge reads
-  |affected buckets|, not the table.
+- A stage never reads the base; a fold reads and rewrites only the
+  buckets that carry layers (file pruning via the snapshot manifest).
+  100 TB table + 1 GB delta => a fold reads |touched buckets|, not the
+  table.
 - Skew: the aligned plan's ``salt(turn_idx)`` spreads a hot CONVERSATION
   (many distinct turns in one bucket) across k reducer/writer tasks. A
   hot KEY (one turn updated many times in a batch) still lands on one
@@ -172,22 +173,6 @@ def _base_as_changes(base: DataFrame, n_buckets: int) -> DataFrame:
     ).withColumn(BUCKET_COL, bucket_expr("conv_id", n_buckets))
 
 
-def _plan_cow(changes_bucketed: DataFrame, batch_id: int) -> list[dict[str, Any]]:
-    """COW planning job (Iceberg-MERGE find-touched-files analogue): one
-    column-pruned pass over ``(op, lsn, ts, conv_id)`` -> per-bucket raw
-    metrics + the affected-bucket set. The text payload never leaves the
-    scan."""
-    rows = (
-        changes_bucketed.groupBy(F.col(BUCKET_COL).alias("bucket"))
-        .agg(*_raw_metric_aggs())
-        .collect()
-    )
-    return [
-        {"batch_id": batch_id, "partition_id": r["bucket"], **r.asDict()}
-        for r in rows
-    ]
-
-
 def _layer_bucket_metrics(
     spark: SparkSession, stage: str, batch_id: int
 ) -> list[dict[str, Any]]:
@@ -260,105 +245,6 @@ def _written_dirs(stage: str) -> dict[int, str]:
         int(os.path.basename(p).split("=")[1]): p
         for p in glob.glob(os.path.join(stage, f"{BUCKET_COL}=*"))
     }
-
-
-def merge_batch(
-    spark: SparkSession,
-    table: CowTable,
-    changes: DataFrame,
-    batch_id: int,
-    lineage_dir: str | None = None,
-    shuffle_salts: int = 4,
-    lineage_executor: Any = None,
-    quarantine_dir: str | None = None,
-    max_records_per_file: int = 0,
-    wap: bool = False,
-) -> dict[str, Any] | None:
-    """COW MERGE of one micro-batch as one commit.
-
-    Returns the committed snapshot dict, or None when batch_id was already
-    applied (exactly-once no-op).
-
-    ``wap=True`` (write-audit-publish): the commit is STAGED — invisible
-    to readers and fencing until ``table.publish_staged()``; lineage
-    emission is deferred to publish (the per-bucket rows ride back on the
-    returned dict under ``_lineage_rows``), so an aborted batch leaves no
-    lineage.
-    """
-    if table.is_committed(batch_id):
-        return None
-    n_buckets = table.n_buckets
-    bucketed = _with_bucket(changes, n_buckets)
-
-    stats_rows = _plan_cow(bucketed, batch_id)
-    quarantined = sum(r["rows_quarantined"] for r in stats_rows)
-    if quarantined and quarantine_dir is not None:
-        _write_quarantine(bucketed, quarantine_dir, batch_id)
-    # a bucket is affected only if it has VALID mutations; quarantined-only
-    # buckets are never read or rewritten
-    affected = sorted({
-        r["bucket"] for r in stats_rows
-        if r["bucket"] is not None and (r["rows_upserted"] + r["rows_deleted"]) > 0
-    })
-    if not affected:
-        # still commit: the checkpoint must record the consumed offset range
-        # (possibly all-quarantined) so the batch never replays
-        lo = min((r["lsn_lo"] for r in stats_rows if r["lsn_lo"] is not None),
-                 default=None)
-        hi = max((r["lsn_hi"] for r in stats_rows if r["lsn_hi"] is not None),
-                 default=None)
-        snap = table.commit(batch_id, {}, lo, hi,
-                            {"rows_upserted": 0, "rows_deleted": 0,
-                             "rows_quarantined": quarantined}, staged=wap)
-        return snap if wap else table.current_snapshot()
-    # a bucket whose events all carry null lsn aggregates F.min to None —
-    # keep the bounds computable when such buckets mix with valid ones
-    lsn_lo = min(r["lsn_lo"] for r in stats_rows if r["lsn_lo"] is not None)
-    lsn_hi = max(r["lsn_hi"] for r in stats_rows if r["lsn_hi"] is not None)
-    bucketed = bucketed.filter(_valid_pred())
-
-    base = table.read_raw(spark, buckets=affected)
-    stage = table.new_data_dir()
-    # single wide shuffle: union(base-as-events, delta) -> aligned LWW
-    # reduce -> bucket-partitioned write, no join, no re-shuffle
-    everything = _base_as_changes(base, n_buckets).unionByName(bucketed)
-    merged = _to_stored(lww_reduce_aligned(everything, BUCKET_COL,
-                                           shuffle_salts=shuffle_salts))
-    _stage_writer(merged, max_records_per_file).parquet(stage)
-
-    rewritten = _written_dirs(stage)
-    # an affected bucket can produce zero live rows (all-tombstone merge
-    # output is still written); carry any silent bucket as an empty dir
-    for b in affected:
-        if b not in rewritten:
-            empty = os.path.join(stage, f"{BUCKET_COL}={b}")
-            os.makedirs(empty, exist_ok=True)
-            rewritten[b] = empty
-    snap = table.commit(
-        batch_id,
-        rewritten,
-        lsn_lo,
-        lsn_hi,
-        {
-            "rows_upserted": sum(r["rows_upserted"] for r in stats_rows),
-            "rows_deleted": sum(r["rows_deleted"] for r in stats_rows),
-            "rows_quarantined": quarantined,
-            "buckets_rewritten": len(rewritten),
-        },
-        staged=wap,
-    )
-    if wap and snap is not None:
-        # lineage deferred to publish: rows ride back in-memory only
-        snap = {**snap, "_lineage_rows": stats_rows}
-        return snap
-    if snap is not None and lineage_dir is not None:
-        if lineage_executor is not None:
-            lineage_executor.submit(
-                append_lineage, lineage_dir, stats_rows,
-                snapshot_id=snap["snapshot_id"])
-        else:
-            append_lineage(lineage_dir, stats_rows, snapshot_id=snap["snapshot_id"])
-    return snap
 
 
 def _raw_metrics_local(changes: Any, valid: Any) -> dict[str, Any]:
@@ -588,9 +474,13 @@ def mor_commit_staged(
     wap: bool = False,
 ) -> dict[str, Any] | None:
     """Publish a staged MOR layer: snapshot commit + lineage emit.
-    ``wap=True``: the snapshot commit itself is STAGED for audit (see
-    ``merge_batch``); lineage rows are computed eagerly and ride back on
-    the returned dict for the runner to emit at publish."""
+
+    Returns the committed snapshot dict. ``wap=True``
+    (write-audit-publish): the snapshot commit itself is STAGED —
+    invisible to readers and fencing until ``table.publish_staged()`` —
+    and lineage rows are computed eagerly and ride back on the returned
+    dict under ``_lineage_rows`` for the runner to emit at publish, so an
+    aborted batch leaves no lineage."""
     batch_id, stage, raw = staged["batch_id"], staged["stage"], staged["raw"]
     written = staged["written"]
 
@@ -684,15 +574,16 @@ def compact(
     max_records_per_file: int = 0, buckets: list[int] | None = None,
     purge_tombstones_below: int | None = None,
 ) -> dict[str, Any] | None:
-    """Fold merge-on-read delta layers into the base (COW rewrite of the
-    buckets that have layers). Tombstones are retained — an out-of-order
+    """Fold merge-on-read delta layers into the base (a major fold: the
+    buckets that have layers are rewritten base-only). Tombstones are retained — an out-of-order
     batch with a lower lsn must still lose to a compacted delete.
 
     ``purge_tombstones_below=W`` additionally DROPS tombstone rows with
     ``_lsn < W`` from the rewritten base — the Cassandra ``gc_grace`` /
     Iceberg equality-delete-compaction discipline, and the final step of a
-    physical erase (after a COW ``delete_where`` the keys themselves
-    linger as payload-null tombstones; a purging compact removes them).
+    physical erase (after ``delete_where`` and a fold the keys themselves
+    linger in the base as payload-null tombstones; a purging compact
+    removes them).
     ``W`` is the caller's guarantee that every FUTURE event carries
     ``lsn >= W`` (the source's replication low-water mark): any such event
     would beat a ``< W`` tombstone under LWW anyway, so dropping it cannot
@@ -730,10 +621,11 @@ def compact(
             return None
         candidates = sorted(int(b) for b in snap["delta_dirs"])
     else:
-        # a purging compact must also rewrite LAYER-LESS buckets: after a
-        # COW delete_where the tombstones live in the base with zero delta
-        # layers, and the layers-only candidate set would silently no-op
-        # the advertised erase chain
+        # a purging compact must also rewrite LAYER-LESS buckets: a major
+        # fold keeps tombstones (a lower-lsn straggler must still lose), so
+        # after delete_where + compact they live in the base with zero
+        # delta layers, and the layers-only candidate set would silently
+        # no-op the advertised erase chain
         candidates = sorted({int(b) for b in snap.get("bucket_dirs", {})}
                             | {int(b) for b in snap.get("delta_dirs", {})})
         if not candidates:
@@ -1232,7 +1124,6 @@ def delete_where(
     spark: SparkSession,
     table: CowTable,
     predicate: Any,
-    mode: str = "mor",
     batch_id: int | None = None,
     lineage_dir: str | None = None,
     lineage_executor: Any = None,
@@ -1257,17 +1148,15 @@ def delete_where(
     machinery as ingest — so the WRITE is O(matched), not O(table).
     Everything is inherited, not re-implemented:
 
-    - ``mode='mor'``: the tombstones land as an O(matched) delta layer —
-      the base is never read or rewritten, and ``read_changes_since``
-      serves the deletes to downstream CDC subscribers like any other
-      change set.
-    - ``mode='cow'``: the affected buckets are rewritten without the
-      matched rows' payloads (the tombstone keeps keys + ``_lsn`` only —
-      payload columns null). Combined with ``expire_snapshots`` +
-      ``remove_orphaned_files`` this is a PHYSICAL erase (GDPR/takedown):
-      after GC no live or historical file holds the deleted text. Keys
-      remain as tombstones so a straggling out-of-order upsert with a
-      lower LSN still loses.
+    - the tombstones land as an O(matched) delta layer — the base is
+      never read or rewritten, and ``read_changes_since`` serves the
+      deletes to downstream CDC subscribers like any other change set.
+      A tombstone keeps keys + ``_lsn`` only (payload columns null).
+    - physical erase (GDPR/takedown): ``compact`` folds the tombstones
+      into the base, then ``expire_snapshots`` + ``remove_orphaned_files``
+      drop every file that still holds the deleted text. Keys remain as
+      tombstones so a straggling out-of-order upsert with a lower LSN
+      still loses.
     - exactly-once: pass a stable ``batch_id`` and retries fence exactly
       like ingest batches — the fencing NAMESPACE IS SHARED with ingest
       batch ids, so pick DML ids well outside the log's range (e.g.
@@ -1312,10 +1201,12 @@ def delete_where(
         *[F.lit(None).cast(types[c]).alias(c)
           for c in PAYLOAD_COLS if c not in KEY_COLS],
     )
-    return _apply_dml(spark, table, changes, mode, batch_id,
-                      lineage_dir=lineage_dir, shuffle_salts=shuffle_salts,
-                      lineage_executor=lineage_executor,
-                      max_records_per_file=max_records_per_file)
+    return mor_apply_batch(spark, table, changes, batch_id,
+                           lineage_dir=lineage_dir,
+                           shuffle_salts=shuffle_salts,
+                           lineage_executor=lineage_executor,
+                           max_records_per_file=max_records_per_file,
+                           pre_reduced=True)
 
 
 def _validate_assignments(assignments: dict[str, Any]) -> None:
@@ -1389,45 +1280,11 @@ def _native_live_read(spark, table, buckets=None, snapshot_id=None):
     return r.load()
 
 
-def _apply_dml(spark, table, changes, mode, batch_id, *,
-               lineage_dir=None, shuffle_salts=4, lineage_executor=None,
-               max_records_per_file=0) -> dict[str, Any] | None:
-    """Route a DML change set through the ingest merge path. The MOR apply
-    is a single wide action (metrics observed in-flight), so the O(live)
-    LWW-resolved scan behind ``changes`` runs once; the COW path runs TWO
-    actions (the _plan_cow stats pass, then the merge) — persist the
-    O(matched) change set so the expensive scan is not recomputed."""
-    persisted = None
-    extra: dict[str, Any] = {}
-    if mode == "cow":
-        apply_fn = merge_batch
-        persisted = changes.persist()
-    else:
-        apply_fn = mor_apply_batch
-        # DML change sets have one row per key by construction (derived
-        # from the resolved live view), so the MOR apply can skip the
-        # identity LWW sort-aggregate and go straight to the bucket
-        # exchange the partitioned write needs
-        extra["pre_reduced"] = True
-    try:
-        return apply_fn(
-            spark, table, changes, batch_id,
-            lineage_dir=lineage_dir, shuffle_salts=shuffle_salts,
-            lineage_executor=lineage_executor,
-            max_records_per_file=max_records_per_file,
-            **extra,
-        )
-    finally:
-        if persisted is not None:
-            persisted.unpersist()
-
-
 def update_where(
     spark: SparkSession,
     table: CowTable,
     predicate: Any,
     assignments: dict[str, Any],
-    mode: str = "mor",
     batch_id: int | None = None,
     lineage_dir: str | None = None,
     lineage_executor: Any = None,
@@ -1449,11 +1306,11 @@ def update_where(
     (Column or SQL-string exprs over the row's current values), all other
     payload columns carried through unchanged (the engine's upserts are
     full-row, so the merged row stays complete) — and route them through
-    the SAME merge machinery as ingest. MOR appends an O(matched) layer
-    (change-feed visible); COW rewrites only the affected buckets; a
-    stable ``batch_id`` fences retries exactly-once. Keys are immutable:
-    assigning ``conv_id``/``turn_idx`` raises (a key change is a
-    delete+insert, two intents this op refuses to guess).
+    the SAME merge machinery as ingest: an O(matched) delta layer
+    (change-feed visible); a stable ``batch_id`` fences retries
+    exactly-once. Keys are immutable: assigning ``conv_id``/``turn_idx``
+    raises (a key change is a delete+insert, two intents this op refuses
+    to guess).
     """
     _validate_assignments(assignments)
     if batch_id is not None and table.is_committed(batch_id):
@@ -1468,10 +1325,12 @@ def update_where(
         *[_assignment_value(assignments, c).alias(c)
           for c in PAYLOAD_COLS if c not in KEY_COLS],
     )
-    return _apply_dml(spark, table, changes, mode, batch_id,
-                      lineage_dir=lineage_dir, shuffle_salts=shuffle_salts,
-                      lineage_executor=lineage_executor,
-                      max_records_per_file=max_records_per_file)
+    return mor_apply_batch(spark, table, changes, batch_id,
+                           lineage_dir=lineage_dir,
+                           shuffle_salts=shuffle_salts,
+                           lineage_executor=lineage_executor,
+                           max_records_per_file=max_records_per_file,
+                           pre_reduced=True)
 
 
 def merge_into(
@@ -1483,7 +1342,6 @@ def merge_into(
     matched_delete_condition: Any | None = None,
     insert_unmatched: bool = True,
     insert_condition: Any | None = None,
-    mode: str = "mor",
     batch_id: int | None = None,
     lineage_dir: str | None = None,
     lineage_executor: Any = None,
@@ -1547,10 +1405,10 @@ def merge_into(
       against every existing version and straggling lower-LSN upserts
       still lose afterward; one row per key means the MOR apply skips the
       identity LWW reduce (``pre_reduced``) exactly like the other DML.
-    - MOR appends an O(changed) delta layer (change-feed visible: deletes
-      as tombstones, updates/inserts as upserts); COW rewrites only the
-      affected buckets; a stable ``batch_id`` fences retries exactly-once
-      in the shared ingest namespace.
+    - the commit appends an O(changed) delta layer (change-feed visible:
+      deletes as tombstones, updates/inserts as upserts); a stable
+      ``batch_id`` fences retries exactly-once in the shared ingest
+      namespace.
 
     Returns the committed snapshot dict, ``None`` on a fenced
     ``batch_id``, and raises ``ValueError`` on duplicate source keys, key
@@ -1640,11 +1498,12 @@ def merge_into(
                       for c in PAYLOAD_COLS if c not in KEY_COLS],
                 )
             )
-            return _apply_dml(spark, table, changes, mode, batch_id,
-                              lineage_dir=lineage_dir,
-                              shuffle_salts=shuffle_salts,
-                              lineage_executor=lineage_executor,
-                              max_records_per_file=max_records_per_file)
+            return mor_apply_batch(spark, table, changes, batch_id,
+                                   lineage_dir=lineage_dir,
+                                   shuffle_salts=shuffle_salts,
+                                   lineage_executor=lineage_executor,
+                                   max_records_per_file=max_records_per_file,
+                                   pre_reduced=True)
 
         tgt = _native_live_read(spark, table, buckets=buckets)
         joined = src.alias("s").join(
@@ -1688,10 +1547,11 @@ def merge_into(
             *[F.col(f"s.{k}").alias(k) for k in KEY_COLS],
             *[_payload(c) for c in PAYLOAD_COLS if c not in KEY_COLS],
         )
-        return _apply_dml(spark, table, changes, mode, batch_id,
-                          lineage_dir=lineage_dir,
-                          shuffle_salts=shuffle_salts,
-                          lineage_executor=lineage_executor,
-                          max_records_per_file=max_records_per_file)
+        return mor_apply_batch(spark, table, changes, batch_id,
+                               lineage_dir=lineage_dir,
+                               shuffle_salts=shuffle_salts,
+                               lineage_executor=lineage_executor,
+                               max_records_per_file=max_records_per_file,
+                               pre_reduced=True)
     finally:
         src.unpersist()

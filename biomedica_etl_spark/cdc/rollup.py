@@ -5,7 +5,7 @@ transcripts table INCREMENTALLY: each refresh consumes only the net
 changes since the last-applied snapshot — the O(changes) image feed
 (``read_changes_with_images(columns=[])``) when the commit chain is
 feed-serveable, falling back to the semantic ``CowTable.diff`` (two
-keys+system version scans) across COW rewrites / major compactions —
+keys+system version scans) across base rewrites / major compactions —
 folds the per-key deltas into the previous rollup state, and advances a
 cursor. Never a full re-aggregation. This is the
 TimescaleDB continuous-aggregate / Materialize-maintained-view discipline
@@ -132,7 +132,7 @@ class RollupTable:
         (``read_changes_with_images(columns=[])`` — never reads a payload
         byte, and its before-side touches only the changed buckets), or
         the semantic ``diff`` (two keys+system version scans) when the
-        commit chain since the cursor is not feed-serveable (COW rewrite,
+        commit chain since the cursor is not feed-serveable (base rewrite,
         major compaction, rollback — the feed's resync contract). Both
         sources emit identical net per-key change types, so the fold is
         source-agnostic."""
@@ -221,7 +221,7 @@ class RollupTable:
             # sum(length(text)) is RETRACTABLE, but only with row images:
             # the delete/preimage rows carry the OLD text the fold must
             # subtract. With the feed serveable the whole refresh is
-            # O(changes); otherwise (COW rewrite / major compaction in the
+            # O(changes); otherwise (base rewrite / major compaction in the
             # window) fall back to affected-group recompute — diff alone
             # cannot retract a payload it never reads.
             try:

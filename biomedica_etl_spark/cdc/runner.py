@@ -8,15 +8,14 @@ Each iteration:
    micro-batch;
 2. the batch is read with **partition pruning** — only its
    ``schema_id=K/batch_id=N`` directory is listed/scanned — as a Spark
-   DataFrame, or, for a MOR batch whose files fit ``LOCAL_MAX_BYTES``,
-   into an Arrow table on the driver;
+   DataFrame, or, for a batch whose files fit ``LOCAL_MAX_BYTES``, into
+   an Arrow table on the driver;
 3. the epoch's physical schema is aligned to the target schema
    (schema evolution, metadata-only);
-4. the batch is staged — MOR: mor_stage_batch LWW-reduces it into an
-   uncommitted delta layer, with no Spark job for an Arrow batch; COW:
-   the changes themselves — and committed in batch order: mor_commit_staged
-   or merge_batch (LWW reduce + COW rewrite of the affected buckets)
-   commits one snapshot and appends per-partition lineage;
+4. the batch is staged — mor_stage_batch LWW-reduces it into an
+   uncommitted merge-on-read delta layer, with no Spark job for an Arrow
+   batch — and committed in batch order: mor_commit_staged commits one
+   snapshot and appends per-partition lineage;
 5. an audit, when set, publishes or aborts the staged commit
    (write-audit-publish); then derived stores refresh and at-threshold
    buckets fold.
@@ -45,7 +44,6 @@ from .lineage import append_lineage
 from .merge import (
     compact,
     compact_layers,
-    merge_batch,
     mor_commit_staged,
     mor_stage_batch,
 )
@@ -188,7 +186,7 @@ class CdcRunner:
         log_dir: str,
         table_root: str,
         n_buckets: int = 16,
-        mode: str = "cow",
+        mode: str = "mor",
         compact_every: int = 8,
         shuffle_salts: int = 4,
         async_lineage: bool = False,
@@ -203,12 +201,14 @@ class CdcRunner:
         maintain_every: int = 1,
         async_maintain: bool = False,
     ) -> None:
-        """mode='cow': read-optimized, each batch rewrites affected buckets.
-        mode='mor': write-optimized (Iceberg-v2-style merge-on-read), each
-        batch appends an O(delta) layer; layers fold into the base whenever
-        any bucket accumulates ``compact_every`` of them.
+        """Iceberg-v2-style merge-on-read: each batch appends an O(delta)
+        layer; a bucket's layers fold whenever it accumulates
+        ``compact_every`` of them. ``compact_every=1`` with the default
+        major folds leaves every touched bucket base-only after each
+        commit — the read-optimized layout. ``mode`` accepts only
+        ``"mor"``, the one write mode.
 
-        ``pipeline_depth`` > 1 (MOR only) overlaps micro-batches the way a
+        ``pipeline_depth`` > 1 overlaps micro-batches the way a
         streaming engine does: up to that many batches' stages are in
         flight at once (distinct MOR layers are write-independent), while
         snapshot COMMITS stay strictly in batch order — so exactly-once
@@ -217,13 +217,13 @@ class CdcRunner:
         with the next batch's executor work. At depth 1 (the default)
         each batch is staged only after the previous one's commit, folds
         and refreshes have returned: the loop is sequential."""
-        if mode not in ("cow", "mor"):
-            raise ValueError(f"mode must be 'cow' or 'mor', got {mode!r}")
+        if mode != "mor":
+            raise ValueError(f"mode must be 'mor' (merge-on-read is the "
+                             f"only write mode), got {mode!r}")
         self.spark = spark
         self.log_dir = log_dir
         self.table = CowTable(table_root, n_buckets=n_buckets)
         self.table.create()
-        self.mode = mode
         self.compact_every = compact_every
         self.shuffle_salts = shuffle_salts
         # lineage is derived data (recomputable from committed layer files),
@@ -231,9 +231,6 @@ class CdcRunner:
         # run() drains the executor before returning
         self.async_lineage = async_lineage
         self._lineage_pool = None
-        if pipeline_depth > 1 and mode != "mor":
-            raise ValueError("pipeline_depth > 1 requires mode='mor' "
-                             "(COW batches read the previous batch's output)")
         # write-audit-publish: audit(spark, table) -> bool | (bool, reason)
         # runs against table.read(spark, snapshot_id="staged") after each
         # batch's STAGED commit; True publishes (fencing engages then),
@@ -317,25 +314,24 @@ class CdcRunner:
         self.quarantine_dir = os.path.join(table_root, "_quarantine")
 
     def _changes(self, batch_id: int, schema_id: int) -> Any:
-        """One log batch's changes. A MOR batch whose files fit
+        """One log batch's changes. A batch whose files fit
         ``LOCAL_MAX_BYTES`` is read on the driver into an Arrow table in
         the target change schema (missing ``tool`` padded with nulls,
         ``turn_idx`` widened, ``ts`` tagged UTC), which
         ``mor_stage_batch`` stages without a Spark job; otherwise
         ``read_batch``'s DataFrame."""
-        if self.mode == "mor":
-            path = os.path.join(self.log_dir, f"schema_id={schema_id}",
-                                f"batch_id={batch_id}")
-            # the files Spark reads: it skips names that start with "_"
-            # or ".", such as _SUCCESS and checksums
-            files = sorted(os.path.join(path, f) for f in os.listdir(path)
-                           if not f.startswith(("_", "."))
-                           and os.path.isfile(os.path.join(path, f)))
-            if fits_local(files):
-                from ..sources.datasource import _read_stored_arrow
+        path = os.path.join(self.log_dir, f"schema_id={schema_id}",
+                            f"batch_id={batch_id}")
+        # the files Spark reads: it skips names that start with "_" or ".",
+        # such as _SUCCESS and checksums
+        files = sorted(os.path.join(path, f) for f in os.listdir(path)
+                       if not f.startswith(("_", "."))
+                       and os.path.isfile(os.path.join(path, f)))
+        if fits_local(files):
+            from ..sources.datasource import _read_stored_arrow
 
-                return _read_stored_arrow(
-                    files, schema=target_change_arrow_schema())
+            return _read_stored_arrow(
+                files, schema=target_change_arrow_schema())
         return read_batch(self.spark, self.log_dir, batch_id, schema_id,
                           self.registry)
 
@@ -345,12 +341,11 @@ class CdcRunner:
     def _retry_commit(self, fn: Any) -> Any:
         """Run ``fn`` (a closure ending in a snapshot commit); on
         ``ConcurrentCommitError`` refresh the table handle and re-run,
-        bounded by ``commit_retries``. COW retries re-PLAN against the new
-        current snapshot (the old plan's bucket reads are stale); MOR
-        commit-only retries are metadata-only since a staged delta layer is
-        parent-independent. Both apply paths begin with an is_committed
-        fence, so a batch the winning writer already applied replays as a
-        no-op rather than double-committing."""
+        bounded by ``commit_retries``. A commit retry is metadata-only,
+        since a staged delta layer is parent-independent; DML re-plans
+        against the new current snapshot. Every apply path begins with an
+        is_committed fence, so a batch the winning writer already applied
+        replays as a no-op rather than double-committing."""
         for attempt in range(self.commit_retries + 1):
             try:
                 return fn()
@@ -361,37 +356,21 @@ class CdcRunner:
                 self.table.refresh()
 
     def _stage(self, batch_id: int, schema_id: int) -> Any:
-        """Stage one batch. A MOR batch's delta layer is written to an
-        uncommitted dir (``mor_stage_batch``; None when the batch is
-        already committed). A COW batch's stage is only its changes,
-        since its merge must read the previous batch's output."""
-        changes = self._changes(batch_id, schema_id)
-        if self.mode == "cow":
-            return changes
+        """Stage one batch: its delta layer is written to an uncommitted
+        dir (``mor_stage_batch``; None when the batch is already
+        committed)."""
         return mor_stage_batch(
-            self.spark, self.table, changes, batch_id,
+            self.spark, self.table, self._changes(batch_id, schema_id),
+            batch_id,
             shuffle_salts=self.shuffle_salts,
             quarantine_dir=self.quarantine_dir,
             max_records_per_file=self.max_records_per_file,
         )
 
-    def _commit(self, batch_id: int, staged: Any,
-                wap: bool) -> dict[str, Any] | None:
+    def _commit(self, staged: Any, wap: bool) -> dict[str, Any] | None:
         """Commit a staged batch: the snapshot dict, or None when the
-        batch was already committed. A staged MOR layer is
-        parent-independent, so a retry after a lost race re-commits the
-        metadata only; a COW retry re-plans its merge against the new
-        current snapshot."""
-        if self.mode == "cow":
-            return merge_batch(
-                self.spark, self.table, staged, batch_id,
-                lineage_dir=self.lineage_dir,
-                shuffle_salts=self.shuffle_salts,
-                lineage_executor=self._lineage_pool,
-                quarantine_dir=self.quarantine_dir,
-                max_records_per_file=self.max_records_per_file,
-                wap=wap,
-            )
+        batch was already committed. A staged layer is parent-independent,
+        so a retry after a lost race re-commits the metadata only."""
         if staged is None:
             return None
         return mor_commit_staged(
@@ -456,7 +435,7 @@ class CdcRunner:
         audit hook, derived maintenance and threshold folds."""
         staged = future.result()  # re-raises staging failures in order
         wap = self.audit is not None
-        snap = self._retry_commit(lambda: self._commit(batch_id, staged, wap))
+        snap = self._retry_commit(lambda: self._commit(staged, wap))
         if wap and snap is not None:
             snap = self._publish_audited(batch_id, snap, result)
             if snap is None:
@@ -698,14 +677,13 @@ class CdcRunner:
     def delete_where(self, predicate: Any,
                      batch_id: int | None = None) -> dict[str, Any] | None:
         """Predicate delete against this runner's table, riding the runner's
-        configured merge plan and lineage — see ``merge.delete_where``.
-        MOR runners append an O(matched) tombstone layer (change-feed
-        visible); COW runners rewrite the affected buckets (the physical-
-        erase half, completed by ``expire_snapshots`` + orphan GC)."""
+        configured merge plan and lineage — see ``merge.delete_where``: an
+        O(matched) tombstone layer (change-feed visible). A physical erase
+        follows with ``compact`` + ``expire_snapshots`` + orphan GC."""
         from .merge import delete_where
 
         return self._retry_commit(lambda: delete_where(
-            self.spark, self.table, predicate, mode=self.mode,
+            self.spark, self.table, predicate,
             batch_id=batch_id, lineage_dir=self.lineage_dir,
             shuffle_salts=self.shuffle_salts,
             max_records_per_file=self.max_records_per_file,
@@ -718,7 +696,7 @@ class CdcRunner:
         from .merge import update_where
 
         return self._retry_commit(lambda: update_where(
-            self.spark, self.table, predicate, assignments, mode=self.mode,
+            self.spark, self.table, predicate, assignments,
             batch_id=batch_id, lineage_dir=self.lineage_dir,
             shuffle_salts=self.shuffle_salts,
             max_records_per_file=self.max_records_per_file,
@@ -745,7 +723,7 @@ class CdcRunner:
             matched_delete_condition=matched_delete_condition,
             insert_unmatched=insert_unmatched,
             insert_condition=insert_condition,
-            mode=self.mode, batch_id=batch_id,
+            batch_id=batch_id,
             lineage_dir=self.lineage_dir,
             shuffle_salts=self.shuffle_salts,
             max_records_per_file=self.max_records_per_file,
@@ -769,7 +747,7 @@ class CdcRunner:
         batch_id = pend[0]
         staged = self._stage(batch_id,
                              dict(planned_batches(self.log_dir))[batch_id])
-        return self._commit(batch_id, staged, wap=True)
+        return self._commit(staged, wap=True)
 
     def final_state(self) -> DataFrame:
         """Live table ordered by the pass-gate stable ordering."""

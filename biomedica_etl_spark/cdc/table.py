@@ -1,4 +1,4 @@
-"""Snapshot-versioned copy-on-write table with hidden bucket partitioning.
+"""Snapshot-versioned merge-on-read table with hidden bucket partitioning.
 
 A minimal Iceberg-semantics table for environments without lakehouse jars
 (this sandbox has none — SURVEY.md §7.0): immutable parquet data files,
@@ -9,7 +9,8 @@ Reference analogue: the JSON-batch sink's read-modify-write + file-roll +
 ``get_next_index`` versioning (``src/pmc_oa/build_json.py:84-157``) — the
 roll-to-a-new-file-never-overwrite discipline is exactly a snapshot commit,
 and the separate output dir of the enrich stage
-(``scripts/05_json_to_entrez.py:332-334``) is its copy-on-write.
+(``scripts/05_json_to_entrez.py:332-334``) is its base rewrite: a fold
+writes new bucket dirs and never edits a committed file.
 
 Exactly-once fencing: every snapshot records the ``batch_id`` it applied.
 ``committed_batch_ids()`` is the checkpoint; committing an already-applied
@@ -18,7 +19,7 @@ batch_id is a structural no-op (merge.py checks before doing any work, and
 driver can never double-apply).
 
 Scale notes: data files for UNAFFECTED buckets are carried forward by
-manifest reference only — a merge that touches 3 of 1024 buckets rewrites
+manifest reference only — a fold that touches 3 of 1024 buckets rewrites
 3 buckets' files and zero bytes elsewhere. Readers prune to requested
 buckets from the manifest (file-level pruning, the moral equivalent of
 Iceberg hidden-partition pruning). Manifests hold one entry per bucket dir,
@@ -369,8 +370,8 @@ class CowTable:
                  columns: list[str] | None = None) -> DataFrame:
         """Resolved stored rows (incl. tombstones + system cols).
 
-        COW-only snapshots read the base files directly. When merge-on-read
-        delta layers exist, the view is resolved on the fly: base UNION
+        Layer-free snapshots read the base files directly. When
+        merge-on-read delta layers exist, the view is resolved on the fly: base UNION
         deltas, max-_lsn winner per key (groupBy + max_by — partial-agg
         shuffle, same reducer as ingest). Iceberg-v2-MOR semantics without
         the jar. ``snapshot_id`` time-travels to any retained commit.
@@ -425,18 +426,10 @@ class CowTable:
         lsn_lo: int | None,
         lsn_hi: int | None,
         summary: dict[str, Any] | None = None,
-        staged: bool = False,
     ) -> dict[str, Any] | None:
         """Publish a snapshot: rewritten buckets point at new dirs, all other
         buckets carry forward the parent's dirs. Returns the new snapshot, or
-        None if the batch_id was already committed (fencing no-op).
-
-        ``staged=True`` is the write half of write-audit-publish (Iceberg
-        WAP): the snapshot is written to a side manifest that readers,
-        fencing, and the snapshot chain never see — ``publish_staged``
-        promotes it (fencing engages THEN), ``abort_staged`` discards it
-        and its data dirs. The staged batch stays replayable until
-        published."""
+        None if the batch_id was already committed (fencing no-op)."""
         parent = self.current_snapshot()
         assert parent is not None, "create() first"
         if batch_id is not None and self.is_committed(batch_id):
@@ -458,8 +451,6 @@ class CowTable:
             "delta_dirs": delta_dirs,
             "summary": summary or {},
         }
-        if staged:
-            return self._write_staged(snap)
         self._write_snapshot(snap)
         return snap
 
@@ -589,8 +580,14 @@ class CowTable:
         staged: bool = False,
     ) -> dict[str, Any] | None:
         """Merge-on-read commit: append a delta layer per bucket; base files
-        untouched. O(delta) write cost — the ingest-optimized path.
-        ``staged=True``: write-audit-publish, see ``commit``."""
+        untouched. O(delta) write cost — the ingest path.
+
+        ``staged=True`` is the write half of write-audit-publish (Iceberg
+        WAP): the snapshot is written to a side manifest that readers,
+        fencing, and the snapshot chain never see — ``publish_staged``
+        promotes it (fencing engages THEN), ``abort_staged`` discards it
+        and its data dirs. The staged batch stays replayable until
+        published."""
         parent = self.current_snapshot()
         assert parent is not None, "create() first"
         if batch_id is not None and self.is_committed(batch_id):
@@ -798,8 +795,8 @@ class CowTable:
         the feed to commits at or before it (default: head).
 
         Works across MOR commits (append-delta) and quarantine-only/empty
-        commits (no dirs → no rows). A COW rewrite or MAJOR compaction
-        between ``snapshot_id`` and now rewrites history in place; those
+        commits (no dirs → no rows). A base rewrite (MAJOR compaction,
+        rebucket, small-file or z-order rewrite) between ``snapshot_id`` and now rewrites history in place; those
         commits cannot be served incrementally and raise — the consumer
         resyncs from a full scan (the same contract real lakehouses
         document).
@@ -840,11 +837,11 @@ class CowTable:
                 continue
             parent = self.snapshot_by_id(s["parent_id"]) or {}
             if s["bucket_dirs"] != parent.get("bucket_dirs", {}):
-                # base files changed: COW merge or compaction rewrote
-                # history in place — this commit has no separable change set
+                # base files changed: a fold or rewrite rewrote history
+                # in place — this commit has no separable change set
                 raise ValueError(
                     f"snapshot {s['snapshot_id']} rewrote base files "
-                    f"({s.get('summary', {}).get('commit_type', 'cow')}): "
+                    f"({s.get('summary', {}).get('commit_type', 'base-rewrite')}): "
                     "incremental read across it is impossible — resync "
                     "from a full scan"
                 )
@@ -990,9 +987,9 @@ class CowTable:
     ) -> DataFrame:
         """Time-travel diff: per-key net change between two snapshots.
 
-        Unlike ``read_changes_since`` (the raw change FEED, MOR-only and
-        O(changes)), this is the semantic table comparison — it works
-        across ANY pair of retained snapshots including COW rewrites and
+        Unlike ``read_changes_since`` (the raw change FEED, layer-only
+        and O(changes)), this is the semantic table comparison — it works
+        across ANY pair of retained snapshots including base rewrites and
         compactions, at the cost of scanning both versions. Output:
         ``(conv_id, turn_idx, change_type in insert|update|delete,
         old_lsn, new_lsn)``; keys whose winning version is unchanged are

@@ -37,7 +37,7 @@ shape: side B annotates side A's turns). Maintenance, per refresh:
 State versions are immutable layer directories plus an atomic pointer
 (crash mid-refresh leaves the previous version intact; a replayed
 refresh recomputes the identical layer and converges). Windows that are
-not feed-serveable on either side (COW rewrite, major compaction,
+not feed-serveable on either side (base rewrite, major compaction,
 rollback — the feed's resync contract) fall back to a full rebuild at
 the pinned heads; source-table minor folds serve transparently.
 

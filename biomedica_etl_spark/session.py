@@ -48,6 +48,19 @@ _STAGE_POOLS = "".join(
     for k in range(8))
 
 
+def _default_driver_mem() -> str:
+    """The driver heap when ``SPARK_GRAFT_DRIVER_MEM`` is unset: 48 GiB,
+    capped at 3/8 of physical RAM. In local mode the driver heap is the
+    executors' heap, and the JVM grows toward its ceiling lazily, so a
+    ceiling above physical RAM lets it crowd out the Python driver's
+    Arrow work until the kernel OOM killer ends one of them. On a
+    15.7 GiB host a 48 GiB ceiling let tier-1's JVM reach 12.7 GiB RSS
+    and be killed; under the 5.9 GiB that 3/8 gives, its heap peaked at
+    2.9 GiB used. A 128 GiB host keeps 48 GiB."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(48 << 10, phys * 3 // 8 >> 20)}m"
+
+
 def _fair_pools_file() -> str:
     f = tempfile.NamedTemporaryFile(
         "w", suffix="-fairscheduler.xml", delete=False)
@@ -135,7 +148,8 @@ def get_spark(
         .config("spark.ui.showConsoleProgress", "false")
         # local mode: driver heap IS the executor heap; size it so
         # cores × per-task agg/sort buffers never spill (128 GiB box)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem())
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

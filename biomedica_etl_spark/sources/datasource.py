@@ -19,7 +19,7 @@ including one that knows nothing about this package — reads it with plain
   tails the commit chain exactly like the engine tails a WAL: each
   micro-batch serves the delta files the snapshots in ``(start, end]``
   appended, one partition per (snapshot, bucket-layer dir). A commit
-  that rewrites history in place (COW merge, compaction, rollback)
+  that rewrites history in place (major compaction, rollback)
   cannot be served incrementally; the source then fails the batch with
   the same resync contract ``CowTable.read_changes_since`` documents.
   Options: ``root`` (required), ``start_snapshot_id`` (default: the
@@ -805,7 +805,7 @@ class ChangesStreamReader(DataSourceStreamReader):
             if s["bucket_dirs"] != parent.get("bucket_dirs", {}):
                 raise ValueError(
                     f"snapshot {sid} rewrote base files "
-                    f"({s.get('summary', {}).get('commit_type', 'cow')}): "
+                    f"({s.get('summary', {}).get('commit_type', 'base-rewrite')}): "
                     "the change feed cannot cross it — resync from a full "
                     "cowtable scan and restart the stream from here")
             parent_dirs = {

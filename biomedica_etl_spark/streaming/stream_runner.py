@@ -27,7 +27,7 @@ from functools import reduce as _reduce
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..cdc.merge import compact, merge_batch, mor_apply_batch
+from ..cdc.merge import compact, mor_apply_batch
 from ..cdc.schema import SchemaRegistry, align_to_target
 from ..cdc.table import CowTable
 
@@ -56,7 +56,6 @@ def stream_apply(
     table_root: str,
     checkpoint_dir: str,
     n_buckets: int = 16,
-    mode: str = "mor",
     compact_every: int = 8,
     max_files_per_trigger: int | None = None,
     available_now: bool = True,
@@ -85,26 +84,24 @@ def stream_apply(
     if not streams:
         raise ValueError(f"no schema_id=* dirs under {log_dir}")
     unioned = _reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), streams)
-    return _start_apply_stream(spark, unioned, table, table_root, mode,
+    return _start_apply_stream(spark, unioned, table, table_root,
                                compact_every, maintain, maintain_every,
                                checkpoint_dir, available_now)
 
 
 def _start_apply_stream(
     spark: SparkSession, events: DataFrame, table: CowTable,
-    table_root: str, mode: str, compact_every: int,
+    table_root: str, compact_every: int,
     maintain: list | None, maintain_every: int,
     checkpoint_dir: str, available_now: bool,
 ):
     """Shared tail of every apply-shaped stream: foreachBatch funnels each
     epoch through the batch merge with a fenced id, inline compaction at
     the layer threshold, and optional in-loop derived maintenance."""
-    apply_fn = merge_batch if mode == "cow" else mor_apply_batch
-
     epochs_seen = {"n": 0}
 
     def _apply(batch_df: DataFrame, epoch_id: int) -> None:
-        apply_fn(
+        mor_apply_batch(
             spark,
             table,
             batch_df,
@@ -112,7 +109,7 @@ def _start_apply_stream(
             lineage_dir=os.path.join(table_root, "_lineage"),
             quarantine_dir=os.path.join(table_root, "_quarantine"),
         )
-        if mode == "mor" and table.max_delta_layers() >= compact_every:
+        if table.max_delta_layers() >= compact_every:
             compact(spark, table)
         if maintain:
             epochs_seen["n"] += 1
@@ -137,7 +134,6 @@ def stream_apply_debezium(
     table_root: str,
     checkpoint_dir: str,
     n_buckets: int = 16,
-    mode: str = "mor",
     compact_every: int = 8,
     max_files_per_trigger: int | None = None,
     available_now: bool = True,
@@ -181,16 +177,11 @@ def stream_apply_debezium(
     events = parse_debezium(lines, value_col="value",
                             with_transaction=txn_aware)
     if not txn_aware:
-        return _start_apply_stream(spark, events, table, table_root, mode,
+        return _start_apply_stream(spark, events, table, table_root,
                                    compact_every, maintain, maintain_every,
                                    checkpoint_dir, available_now)
 
-    if mode != "mor":
-        raise ValueError("txn_aware streaming apply requires mode='mor'")
-
     from ..cdc.envelope import pending_txn_schema, txn_split
-    from ..cdc.merge import compact as _compact
-    from ..cdc.merge import mor_apply_batch
 
     state_dir = os.path.join(table_root, "_txn_pending")
     os.makedirs(state_dir, exist_ok=True)
@@ -221,7 +212,7 @@ def stream_apply_debezium(
             lineage_dir=os.path.join(table_root, "_lineage"),
             quarantine_dir=os.path.join(table_root, "_quarantine"))
         if table.max_delta_layers() >= compact_every:
-            _compact(spark, table)
+            compact(spark, table)
         # same in-loop derived maintenance as _start_apply_stream — the
         # txn branch must not silently skip maintainers the caller passed
         if maintain:
@@ -262,7 +253,6 @@ def stream_merge(
     table_root: str,
     checkpoint_dir: str,
     n_buckets: int = 16,
-    mode: str = "mor",
     matched_update="source",
     matched_update_condition=None,
     matched_delete_condition=None,
@@ -323,7 +313,7 @@ def stream_merge(
             matched_delete_condition=matched_delete_condition,
             insert_unmatched=insert_unmatched,
             insert_condition=insert_condition,
-            mode=mode, batch_id=batch_id_base + epoch_id,
+            batch_id=batch_id_base + epoch_id,
         )
 
     writer = (

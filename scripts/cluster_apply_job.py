@@ -78,7 +78,7 @@ def main() -> None:
     def apply_log(log_dir: str, table_root: str) -> float:
         runner = CdcRunner(
             spark, log_dir, table_root, n_buckets=args.n_buckets,
-            mode="mor", compact_every=1_000_000_000,
+            compact_every=1_000_000_000,
             shuffle_salts=args.shuffle_salts, async_lineage=True,
             pipeline_depth=args.pipeline_depth,
         )

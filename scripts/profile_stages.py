@@ -24,11 +24,11 @@ log = _bench_log_dir(16_000_000, 2)
 work = tempfile.mkdtemp(prefix="prof-", dir="/dev/shm")
 # warm-up
 wlog = _bench_log_dir(200_000, 2)
-CdcRunner(spark, wlog, os.path.join(work, "w"), n_buckets=N_BUCKETS, mode="mor",
+CdcRunner(spark, wlog, os.path.join(work, "w"), n_buckets=N_BUCKETS,
           shuffle_salts=SHUFFLE_SALTS).run()
 PIPELINE = int(os.environ.get("PIPELINE", "1"))
 t0 = time.time()
-r = CdcRunner(spark, log, os.path.join(work, "t"), n_buckets=N_BUCKETS, mode="mor",
+r = CdcRunner(spark, log, os.path.join(work, "t"), n_buckets=N_BUCKETS,
               compact_every=1_000_000, shuffle_salts=SHUFFLE_SALTS,
               async_lineage=PIPELINE > 1, pipeline_depth=PIPELINE)
 r.run()

@@ -56,7 +56,7 @@ def main() -> None:
     table_root = os.path.join(workdir, "table")
 
     runner = CdcRunner(
-        spark, log, table_root, n_buckets=bench.N_BUCKETS, mode="mor",
+        spark, log, table_root, n_buckets=bench.N_BUCKETS,
         compact_every=2, shuffle_salts=bench.SHUFFLE_SALTS,
         async_lineage=True, pipeline_depth=2, async_compact=True,
         compact_mode="minor", fold_tier_bytes=-1,

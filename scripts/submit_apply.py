@@ -8,7 +8,7 @@ ship it to every executor with ``--py-files``::
         --py-files dist/biomedica_etl_spark.zip \\
         scripts/submit_apply.py \\
         --log-dir /path/to/change_log --table-root /path/to/table \\
-        --n-buckets 1024 --mode mor --compact-every 8
+        --n-buckets 1024 --compact-every 8
 
 On a real cluster ``--master yarn|k8s://...`` and executor sizing flags
 replace the local master; the job code is identical. The script creates no
@@ -35,7 +35,6 @@ def main() -> None:
                         "the checkpoint under <table-root>/_stream_ckpt")
     p.add_argument("--table-root", required=True)
     p.add_argument("--n-buckets", type=int, default=64)
-    p.add_argument("--mode", choices=["cow", "mor"], default="mor")
     p.add_argument("--compact-every", type=int, default=8)
     p.add_argument("--compact-mode", choices=["major", "minor"],
                    default="major",
@@ -45,8 +44,8 @@ def main() -> None:
                    help="run threshold folds on a maintenance thread "
                         "concurrent with ingest")
     p.add_argument("--pipeline-depth", type=int, default=1,
-                   help="MOR only: overlap up to this many batches' wide "
-                        "jobs; commits stay in batch order")
+                   help="overlap up to this many batches' wide jobs; "
+                        "commits stay in batch order")
     p.add_argument("--fold-tier-bytes", type=int, default=0,
                    help="size-tiered minor folds: fold only layers at "
                         "most this many bytes so a grown merged layer "
@@ -124,8 +123,7 @@ def main() -> None:
         q = stream_apply_debezium(
             spark, args.debezium_dir, args.table_root,
             os.path.join(args.table_root, "_stream_ckpt"),
-            n_buckets=args.n_buckets, mode=args.mode,
-            compact_every=args.compact_every,
+            n_buckets=args.n_buckets, compact_every=args.compact_every,
             maintain=maintain, maintain_every=args.maintain_every,
         )
         q.awaitTermination()
@@ -146,7 +144,6 @@ def main() -> None:
         args.log_dir,
         args.table_root,
         n_buckets=args.n_buckets,
-        mode=args.mode,
         compact_every=args.compact_every,
         compact_mode=args.compact_mode,
         fold_tier_bytes=args.fold_tier_bytes,

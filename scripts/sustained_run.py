@@ -45,7 +45,7 @@ def flat_overhead_main() -> None:
                         events=bench.WARMUP_EVENTS, batches=2)
     log = bench._bench_log_dir(FLAT_EVENTS, FLAT_BATCHES)
     runner = CdcRunner(spark, log, os.path.join(workdir, "table"),
-                       n_buckets=bench.N_BUCKETS, mode="mor",
+                       n_buckets=bench.N_BUCKETS,
                        compact_every=1_000_000_000,
                        shuffle_salts=bench.SHUFFLE_SALTS, async_lineage=True)
     per_batch: list[float] = []

@@ -34,11 +34,18 @@ def ingested_mor(spark, tmp_path_factory):
         n_events=1_500, batch_size=300, n_convs=30, duplicate_frac=0.05,
         out_of_order=True))
     idx = TokenIndex(str(d / "idx"), n_shards=4, compact_at=3)
-    r = CdcRunner(spark, log, str(d / "t"), n_buckets=4, mode="mor",
+    r = CdcRunner(spark, log, str(d / "t"), n_buckets=4,
                   compact_every=3, maintain=[idx])
     r.run()
     return r, idx
 
+
+# runner options for the two table layouts a test can sweep: "mor" keeps
+# each batch's delta layer (the short test logs stay under the default
+# compact_every), "base_only" folds every touched bucket into the base
+# after each commit (compact_every=1, major folds: the read-optimized
+# layout)
+LAYOUTS = {"base_only": {"compact_every": 1}, "mor": {}}
 
 _INGESTED: dict[tuple, str] = {}
 

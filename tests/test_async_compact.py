@@ -36,7 +36,7 @@ def test_async_compact_matches_oracle(spark, tmp_path):
     log = str(tmp_path / "log")
     generate_change_log(log, CFG)
     runner, _ = run_and_compare(
-        spark, log, str(tmp_path / "t"), mode="mor", compact_every=3,
+        spark, log, str(tmp_path / "t"), compact_every=3,
         async_compact=True,
     )
     assert runner.compactions_run >= 1
@@ -55,7 +55,7 @@ def test_async_compact_pipelined_matches_oracle(spark, tmp_path):
     log = str(tmp_path / "log")
     generate_change_log(log, CFG)
     runner, _ = run_and_compare(
-        spark, log, str(tmp_path / "t"), mode="mor", compact_every=3,
+        spark, log, str(tmp_path / "t"), compact_every=3,
         async_compact=True, pipeline_depth=2,
     )
     assert runner.compactions_run >= 1
@@ -68,7 +68,7 @@ def test_compaction_losing_race_preserves_interleaved_layer(spark, tmp_path):
     log = str(tmp_path / "log")
     generate_change_log(log, CFG)
     root = str(tmp_path / "t")
-    runner = CdcRunner(spark, log, root, n_buckets=8, mode="mor",
+    runner = CdcRunner(spark, log, root, n_buckets=8,
                        compact_every=99)
     runner.run(max_batches=3)
     table = runner.table  # stale handle: will plan the fold against N

@@ -35,7 +35,7 @@ def test_quarantine_gate_rejects_dirty_batches(spark, tmp_path):
     assert dirty, "scenario should corrupt at least one batch"
 
     runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8,
-                       mode="mor", audit=max_quarantine_rate(0.0))
+                       audit=max_quarantine_rate(0.0))
     res = runner.run()
     assert res.batches_rejected == dirty
     assert all("quarantine rate" in r for r in res.reject_reasons)
@@ -44,7 +44,7 @@ def test_quarantine_gate_rejects_dirty_batches(spark, tmp_path):
 
     # a permissive threshold publishes everything on replay
     runner2 = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8,
-                        mode="mor", audit=max_quarantine_rate(1.0))
+                        audit=max_quarantine_rate(1.0))
     res2 = runner2.run()
     assert res2.batches_rejected == []
     assert sorted(res2.batches_applied) == dirty
@@ -69,18 +69,17 @@ def test_composition_and_floor_gates(spark, tmp_path):
         spy("floor", min_live_rows(10**9)),
     )
     res = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8,
-                    mode="cow", audit=audit).run()
+                    audit=audit).run()
     assert res.batches_applied == []
     assert len(res.batches_rejected) > 0
     assert all("live rows" in r for r in res.reject_reasons)
     assert calls[:2] == ["meta", "floor"]
     assert _state(spark, CdcRunner(
-        spark, log, str(tmp_path / "t"), n_buckets=8, mode="cow",
-    ).table) == []
+        spark, log, str(tmp_path / "t"), n_buckets=8).table) == []
 
     # delete-storm guard: a zero-tolerance delete gate names the fraction
     res2 = CdcRunner(spark, log, str(tmp_path / "t2"), n_buckets=8,
-                     mode="cow", audit=max_delete_fraction(0.0)).run()
+                     audit=max_delete_fraction(0.0)).run()
     assert res2.batches_rejected, "mix scenario has deletes in every batch"
     assert all("delete fraction" in r for r in res2.reject_reasons)
 
@@ -89,6 +88,6 @@ def test_composition_and_floor_gates(spark, tmp_path):
     audit3 = all_of(spy("meta", max_delete_fraction(0.0)),
                     spy("floor", min_live_rows(0)))
     res3 = CdcRunner(spark, log, str(tmp_path / "t3"), n_buckets=8,
-                     mode="cow", audit=audit3).run()
+                     audit=audit3).run()
     if res3.batches_rejected:
         assert calls == ["meta"] * len(calls)

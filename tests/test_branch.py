@@ -36,7 +36,7 @@ def half_built(spark, tmp_path):
     log = str(tmp_path / "log")
     generate_change_log(log, CFG)
     main = CdcRunner(spark, log, str(tmp_path / "main"), n_buckets=4,
-                     mode="mor", compact_every=1000)
+                     compact_every=1000)
     main.run(max_batches=3)
     return log, main
 
@@ -74,7 +74,7 @@ def test_branch_diverges_in_isolation_with_fencing(spark, half_built, tmp_path):
 
     branch = fork_table(main.table, str(tmp_path / "br"))
     br_runner = CdcRunner(spark, log, branch.root, n_buckets=4,
-                          mode="mor", compact_every=1000)
+                          compact_every=1000)
     assert br_runner.pending() == [3, 4]  # batches 0-2 fence via the fork
     br_runner.run()
     assert _live(spark, br_runner.table) == replay(log)
@@ -87,7 +87,7 @@ def test_branch_diverges_in_isolation_with_fencing(spark, half_built, tmp_path):
 def test_merge_back_feed_path_and_exactly_once(spark, half_built, tmp_path):
     log, main = half_built
     branch = fork_table(main.table, str(tmp_path / "br"))
-    CdcRunner(spark, log, branch.root, n_buckets=4, mode="mor",
+    CdcRunner(spark, log, branch.root, n_buckets=4,
               compact_every=1000).run()
 
     res = merge_branch(spark, branch, main.table, batch_id=900_001)
@@ -106,7 +106,7 @@ def test_merge_back_diff_fallback_after_branch_compaction(
     produces the same destination state."""
     log, main = half_built
     branch = fork_table(main.table, str(tmp_path / "br"))
-    CdcRunner(spark, log, branch.root, n_buckets=4, mode="mor",
+    CdcRunner(spark, log, branch.root, n_buckets=4,
               compact_every=1000).run()
     compact(spark, branch)  # major: folds layers into new base dirs
     branch.refresh()
@@ -124,7 +124,7 @@ def test_concurrent_main_advance_resolves_by_lww(spark, half_built, tmp_path):
     log, main = half_built
     branch = fork_table(main.table, str(tmp_path / "br"))
     br_runner = CdcRunner(spark, log, branch.root, n_buckets=4,
-                          mode="mor", compact_every=1000)
+                          compact_every=1000)
     br_runner.run(max_batches=1)  # branch applies batch 3
     main.run()                    # main applies batches 3 AND 4 meanwhile
     merge_branch(spark, branch, main.table, batch_id=900_003)
@@ -173,7 +173,7 @@ def test_branch_changes_are_net_and_lsn_faithful(spark, half_built, tmp_path):
     net per-key semantics on both extraction paths (feed and diff)."""
     log, main = half_built
     branch = fork_table(main.table, str(tmp_path / "br"))
-    CdcRunner(spark, log, branch.root, n_buckets=4, mode="mor",
+    CdcRunner(spark, log, branch.root, n_buckets=4,
               compact_every=1000).run()
     feed_ev = {(r.conv_id, r.turn_idx): (r.lsn, r.op)
                for r in branch_changes(spark, branch)

@@ -70,8 +70,7 @@ def _actual_images(rows):
 
 
 def test_images_match_bruteforce_twin(spark, log_dir, tmp_path):
-    runner = CdcRunner(spark, log_dir, str(tmp_path / "t"), n_buckets=8,
-                       mode="mor")
+    runner = CdcRunner(spark, log_dir, str(tmp_path / "t"), n_buckets=8)
     runner.run(max_batches=2)
     snap_a = runner.table.current_snapshot()["snapshot_id"]
     state_a = _raw_state(spark, runner.table, snap_a)
@@ -90,10 +89,9 @@ def test_images_survive_minor_folds(spark, log_dir, tmp_path):
     """The raw feed serves minor folds as LWW-equivalent change sets; the
     image feed must therefore be identical with folds landing inside the
     window (intermediate versions compress away — net winners unchanged)."""
-    plain = CdcRunner(spark, log_dir, str(tmp_path / "p"), n_buckets=8,
-                      mode="mor")
+    plain = CdcRunner(spark, log_dir, str(tmp_path / "p"), n_buckets=8)
     folded = CdcRunner(spark, log_dir, str(tmp_path / "f"), n_buckets=8,
-                       mode="mor", compact_mode="minor", compact_every=2)
+                       compact_mode="minor", compact_every=2)
     for r in (plain, folded):
         r.run(max_batches=2)
     a_p = plain.table.current_snapshot()["snapshot_id"]
@@ -112,8 +110,7 @@ def test_images_consumer_reproduces_state(spark, log_dir, tmp_path):
     """The consumer contract: applying the images to the FROM state
     (upsert postimage/insert payloads, drop delete keys, ignore preimages)
     reproduces the TO state exactly."""
-    runner = CdcRunner(spark, log_dir, str(tmp_path / "t"), n_buckets=8,
-                       mode="mor")
+    runner = CdcRunner(spark, log_dir, str(tmp_path / "t"), n_buckets=8)
     runner.run(max_batches=2)
     snap_a = runner.table.current_snapshot()["snapshot_id"]
     state = {(r["conv_id"], r["turn_idx"]): tuple(r[c] for c in PAYLOAD)
@@ -140,8 +137,7 @@ def _one_row_batch(spark, lsn, op, conv, turn, text):
 def test_images_lww_edges(spark, log_dir, tmp_path):
     """Straggler-loses, insert-then-delete-elides, and tombstone-
     resurrection-is-insert — the net-semantics corners."""
-    runner = CdcRunner(spark, log_dir, str(tmp_path / "t"), n_buckets=8,
-                       mode="mor")
+    runner = CdcRunner(spark, log_dir, str(tmp_path / "t"), n_buckets=8)
     runner.run()
     table = runner.table
     live = table.read(spark).orderBy("conv_id", "turn_idx").limit(1).collect()
@@ -180,8 +176,7 @@ def test_images_lww_edges(spark, log_dir, tmp_path):
 def test_images_bounded_window_and_rewrite_contract(spark, log_dir, tmp_path):
     """to_snapshot bounds the window (later commits invisible); a major
     compaction inside the window raises the feed's resync contract."""
-    runner = CdcRunner(spark, log_dir, str(tmp_path / "t"), n_buckets=8,
-                       mode="mor")
+    runner = CdcRunner(spark, log_dir, str(tmp_path / "t"), n_buckets=8)
     runner.run(max_batches=1)
     snap_a = runner.table.current_snapshot()["snapshot_id"]
     runner.run(max_batches=1)
@@ -207,8 +202,7 @@ def test_images_prune_to_touched_buckets(spark, log_dir, tmp_path):
     from biomedica_etl_spark.cdc.table import CowTable
     from biomedica_etl_spark.cdc.xxhash import bucket_of
 
-    runner = CdcRunner(spark, log_dir, str(tmp_path / "t"), n_buckets=8,
-                       mode="mor")
+    runner = CdcRunner(spark, log_dir, str(tmp_path / "t"), n_buckets=8)
     runner.run()
     table = runner.table
     live = table.read(spark).orderBy("conv_id", "turn_idx").limit(1).collect()

@@ -52,40 +52,40 @@ from biomedica_etl_spark.cdc.table import ConcurrentCommitError, CowTable
 
 CFG = GeneratorConfig(n_events=1_500, batch_size=500, n_convs=30)
 
-# sweep configs: the COW commit chain, and the MOR chain with synchronous
-# tiered minor folds (compact_every=2 forces folds mid-run so fold-commit
-# crash points are inside the sweep window). Async variants are covered
-# by test_async_compact; the sweep stays synchronous so the k-th atomic
-# write is a deterministic program point.
+# sweep configs: the commit chain with synchronous major folds, and with
+# synchronous tiered minor folds (compact_every=2 forces folds mid-run so
+# base-rewrite and fold-commit crash points are inside the sweep window).
+# Async variants are covered by test_async_compact; the sweep stays
+# synchronous so the k-th atomic write is a deterministic program point.
 CONFIGS = {
-    "cow": dict(mode="cow"),
+    "mor_major": dict(compact_every=2),
     "mor_minor_tiered": dict(
-        mode="mor", compact_mode="minor", compact_every=2,
+        compact_mode="minor", compact_every=2,
         fold_tier_bytes=-1,
     ),
     # write-audit-publish: the staged-marker write and the publish commit
     # are separate atomic writes, so the sweep enumerates crashes between
     # stage, audit, and publish too (scenario versions in test_wap)
-    "cow_wap": dict(mode="cow", audit=lambda spark, table: True),
+    "mor_wap": dict(audit=lambda spark, table: True),
     # pipelined staging: wide jobs overlap on pool threads but COMMITS are
     # strictly ordered on the driver thread, so the k-th atomic write is
     # still a deterministic program point; a crash mid-pipeline leaves
     # in-flight staged layers that resume must ignore (no fold commits:
     # default compact_every is above the batch count)
-    "mor_pipelined": dict(mode="mor", pipeline_depth=2),
+    "mor_pipelined": dict(pipeline_depth=2),
     # predicate DML after the apply loop: the delete's commit_delta atomic
     # writes join the sweep window, so crashes straddling the DML commit
     # are enumerated too; the fixed batch_id fences the resumed delete
     # exactly like an ingest batch
-    "mor_dml": dict(mode="mor", dml=True),
+    "mor_dml": dict(dml=True),
     # MERGE INTO after the apply loop: the merge's stage + commit_delta
     # atomic writes join the sweep window; its fixed batch_id fences the
     # resumed merge exactly like an ingest batch
-    "mor_merge": dict(mode="mor", merge=True),
+    "mor_merge": dict(merge=True),
     # the MOR configs above stage their small batches on the driver; this
     # one forces the Spark stage (LOCAL_MAX_BYTES at -1) so both stage
     # routes are swept
-    "mor_spark_stage": dict(mode="mor", spark_stage=True),
+    "mor_spark_stage": dict(spark_stage=True),
 }
 
 DML_BATCH_ID = 9_700_001

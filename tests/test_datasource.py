@@ -26,7 +26,7 @@ def test_batch_cowtable_source_matches_oracle(spark, tmp_path):
     # MOR with mid-stream compaction: the snapshot holds base files AND
     # live delta layers, so the per-bucket fold exercises both kinds
     runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8,
-                       mode="mor", compact_every=3)
+                       compact_every=3)
     runner.run()
     table = runner.table
     register_data_sources(spark)
@@ -208,7 +208,7 @@ def test_cdc_replication_chain_source_to_sink(spark, tmp_path):
     log = str(tmp_path / "log")
     generate_change_log(log, SCENARIOS["update_delete_mix"])
     runner = CdcRunner(spark, log, str(tmp_path / "up"), n_buckets=8,
-                       mode="mor", compact_every=10**9)
+                       compact_every=10**9)
     runner.run()
     up = runner.table
     register_data_sources(spark)
@@ -254,7 +254,7 @@ def test_stream_changes_source_tails_commit_chain(spark, tmp_path):
     log = str(tmp_path / "log")
     generate_change_log(log, SCENARIOS["update_delete_mix"])
     runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8,
-                       mode="mor", compact_every=10**9)
+                       compact_every=10**9)
     runner.run()
     table = runner.table
     register_data_sources(spark)
@@ -303,7 +303,7 @@ def test_native_reader_buckets_option_prunes_partitions(spark, tmp_path):
     log = str(tmp_path / "log")
     generate_change_log(log, SCENARIOS["update_delete_mix"])
     runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8,
-                       mode="mor", compact_every=3)
+                       compact_every=3)
     runner.run()
     table = runner.table
     register_data_sources(spark)

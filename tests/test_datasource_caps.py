@@ -29,7 +29,7 @@ def _mk_table(spark, tmp_path, name="t"):
     log = str(tmp_path / f"log-{name}")
     generate_change_log(log, SCENARIOS["update_delete_mix"])
     runner = CdcRunner(spark, log, str(tmp_path / name), n_buckets=8,
-                       mode="mor", compact_every=10**9)
+                       compact_every=10**9)
     runner.run()
     return runner.table
 
@@ -188,8 +188,7 @@ def test_reader_pushdown_prunes_buckets(spark, tmp_path):
     log = str(tmp_path / "log")
     generate_change_log(log, GeneratorConfig(
         n_events=2_000, batch_size=500, n_convs=40))
-    runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8,
-                       mode="mor")
+    runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8)
     runner.run()
     some = [r["conv_id"] for r in
             runner.table.read(spark).select("conv_id").distinct()

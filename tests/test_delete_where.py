@@ -5,7 +5,7 @@ revoked, takedown list) from an already-built corpus — the reference
 rebuilds from scratch (scripts/02_extract_media.py re-runs the filter
 chain); here it is an O(matched) engine commit that rides the ingest
 merge machinery, so everything ingest guarantees (exactly-once fencing,
-LWW ordering, lineage, change-feed visibility, physical-erase via COW +
+LWW ordering, lineage, change-feed visibility, physical erase via a fold +
 snapshot expiry) is inherited and pinned here.
 """
 
@@ -20,10 +20,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from biomedica_etl_spark.cdc.generator import GeneratorConfig, generate_change_log
-from biomedica_etl_spark.cdc.merge import delete_where, mor_apply_batch
+from biomedica_etl_spark.cdc.merge import compact, delete_where, mor_apply_batch
 from biomedica_etl_spark.cdc.oracle import replay
 
-from tests.conftest import ingested_copy
+from tests.conftest import LAYOUTS, ingested_copy
 
 PRED = "turn_idx % 7 = 3 OR role = 'system'"
 
@@ -43,14 +43,15 @@ def log_dir(tmp_path_factory):
     return d
 
 
-def _build(spark, log_dir, root, mode):
-    """The fully ingested table in ``mode``, a private copy per test."""
-    return ingested_copy(spark, log_dir, root, n_buckets=8, mode=mode)
+def _build(spark, log_dir, root, layout):
+    """The fully ingested table in ``layout`` (``conftest.LAYOUTS``), a
+    private copy per test."""
+    return ingested_copy(spark, log_dir, root, n_buckets=8, **LAYOUTS[layout])
 
 
-@pytest.mark.parametrize("mode", ["cow", "mor"])
-def test_delete_where_matches_oracle(spark, log_dir, tmp_path, mode):
-    runner = _build(spark, log_dir, str(tmp_path / f"t-{mode}"), mode)
+@pytest.mark.parametrize("layout", sorted(LAYOUTS))
+def test_delete_where_matches_oracle(spark, log_dir, tmp_path, layout):
+    runner = _build(spark, log_dir, str(tmp_path / f"t-{layout}"), layout)
     expected_full = replay(log_dir)
     expected = [r for r in expected_full if not _matches(r)]
     n_matched = len(expected_full) - len(expected)
@@ -139,14 +140,16 @@ def test_delete_where_tombstone_beats_lower_lsn_straggler(spark, log_dir, tmp_pa
 
 
 def test_delete_where_cow_physical_erase(spark, log_dir, tmp_path):
-    """COW delete + expire + orphan GC = no surviving file holds the
-    deleted rows' payloads — the GDPR/takedown story, pinned on bytes."""
+    """Delete + a major fold + expire + orphan GC = no surviving file
+    holds the deleted rows' payloads — the GDPR/takedown story, pinned on
+    bytes."""
     root = str(tmp_path / "t")
-    runner = _build(spark, log_dir, root, "cow")
+    runner = _build(spark, log_dir, root, "mor")
     matched_keys = {(r["conv_id"], r["turn_idx"])
                     for r in replay(log_dir) if _matches(r)}
 
     runner.delete_where(PRED)
+    compact(spark, runner.table)
     runner.table.expire_snapshots(keep_last=1)
     runner.table.remove_orphaned_files(grace_seconds=0.0)
 
@@ -194,9 +197,9 @@ UPD_PRED = "role = 'tool'"
 UPD_SET = {"tool": "coalesce(tool, 'none')", "text": "concat(text, '!')"}
 
 
-@pytest.mark.parametrize("mode", ["cow", "mor"])
-def test_update_where_matches_oracle(spark, log_dir, tmp_path, mode):
-    runner = _build(spark, log_dir, str(tmp_path / f"t-{mode}"), mode)
+@pytest.mark.parametrize("layout", sorted(LAYOUTS))
+def test_update_where_matches_oracle(spark, log_dir, tmp_path, layout):
+    runner = _build(spark, log_dir, str(tmp_path / f"t-{layout}"), layout)
     snap = runner.update_where(UPD_PRED, UPD_SET)
     expected = [_apply_update(r) if r["role"] == "tool" else r
                 for r in replay(log_dir)]

@@ -66,9 +66,9 @@ def tables(spark, tmp_path_factory):
     # compaction disabled-in-effect: a major fold would LWW-collapse the
     # raw rows the history's bootstrap replays, making the
     # incremental-vs-bootstrap-twin comparison vacuous
-    ra = CdcRunner(spark, log_a, str(tmp / "ta"), n_buckets=8, mode="mor",
+    ra = CdcRunner(spark, log_a, str(tmp / "ta"), n_buckets=8,
                    compact_every=1000)
-    rb = CdcRunner(spark, log_b, str(tmp / "tb"), n_buckets=8, mode="mor",
+    rb = CdcRunner(spark, log_b, str(tmp / "tb"), n_buckets=8,
                    compact_every=1000)
     ra.run()
     rb.run()

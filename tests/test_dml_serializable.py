@@ -39,7 +39,7 @@ def built(spark, tmp_path):
     generate_change_log(log, GeneratorConfig(
         n_events=2_000, batch_size=500, n_convs=30, zipf_a=1.0))
     runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=4,
-                       mode="mor", compact_every=1000, commit_retries=3)
+                       compact_every=1000, commit_retries=3)
     runner.run()
     return runner
 

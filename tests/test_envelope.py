@@ -76,7 +76,7 @@ def test_roundtrip_emit_parse_apply(spark, dbz_env):
     after."""
     runner = CdcRunner(spark, dbz_env["log"],
                        os.path.join(dbz_env["work"], "src"),
-                       n_buckets=4, mode="mor", compact_every=1000)
+                       n_buckets=4, compact_every=1000)
     runner.run()
     env_df = E.to_debezium(spark, runner.table, 0)
     lines = [r.value for r in env_df.collect()]
@@ -111,7 +111,7 @@ def test_subwindow_updates_carry_both_images(spark, dbz_env):
     a replica of the window start reproduces the window end."""
     runner = CdcRunner(spark, dbz_env["log"],
                        os.path.join(dbz_env["work"], "src2"),
-                       n_buckets=4, mode="mor", compact_every=1000)
+                       n_buckets=4, compact_every=1000)
     runner.run()
     snaps = [s["snapshot_id"] for s in runner.table.snapshots()]
     mid = snaps[len(snaps) // 2]
@@ -271,7 +271,7 @@ def test_relay_debezium_crash_safe_fan_out(spark, dbz_env, tmp_path):
     from biomedica_etl_spark.cdc.feed import ImageFeedCursor
 
     runner = CdcRunner(spark, dbz_env["log"], str(tmp_path / "src"),
-                       n_buckets=4, mode="mor", compact_every=1000)
+                       n_buckets=4, compact_every=1000)
     runner.run(max_batches=2)
     out_dir = str(tmp_path / "relay")
     os.makedirs(out_dir)
@@ -500,7 +500,7 @@ def test_stream_apply_debezium_matches_oracle_and_restart_is_noop(
     table_root = str(tmp_path / "t")
     ckpt = str(tmp_path / "ckpt")
     q = stream_apply_debezium(spark, dbz_env["ndjson"], table_root, ckpt,
-                              n_buckets=4, mode="mor", compact_every=3,
+                              n_buckets=4, compact_every=3,
                               max_files_per_trigger=2)
     assert q.awaitTermination(300), "stream did not drain in time"
 
@@ -509,7 +509,7 @@ def test_stream_apply_debezium_matches_oracle_and_restart_is_noop(
     n_snaps = len(table.snapshots())
 
     q2 = stream_apply_debezium(spark, dbz_env["ndjson"], table_root, ckpt,
-                               n_buckets=4, mode="mor")
+                               n_buckets=4)
     assert q2.awaitTermination(120)
     table.refresh()
     assert len(table.snapshots()) == n_snaps
@@ -664,7 +664,7 @@ def test_relay_coalesces_small_windows_bounded_files_identical_replica(
 
     def build_relay(tag, min_bytes):
         runner = CdcRunner(spark, dbz_env["log"], str(tmp_path / f"s{tag}"),
-                           n_buckets=4, mode="mor", compact_every=1000)
+                           n_buckets=4, compact_every=1000)
         runner.run(max_batches=1)
         out = str(tmp_path / f"relay{tag}")
         os.makedirs(out)

@@ -7,7 +7,7 @@ diff resume (``src/pmc_oa/download_batch.py:246-316``)."""
 from __future__ import annotations
 
 from biomedica_etl_spark.cdc.generator import GeneratorConfig, generate_change_log
-from biomedica_etl_spark.cdc.merge import merge_batch
+from biomedica_etl_spark.cdc.merge import mor_apply_batch
 from biomedica_etl_spark.cdc.oracle import replay
 from biomedica_etl_spark.cdc.runner import CdcRunner, read_batch
 from biomedica_etl_spark.cdc.schema import SchemaRegistry
@@ -36,9 +36,9 @@ def test_double_apply_single_batch_is_fenced(spark, tmp_path):
     runner = CdcRunner(spark, log, str(tmp_path / "table"), n_buckets=8)
     reg = SchemaRegistry()
     changes = read_batch(spark, log, 0, 0, reg)
-    snap1 = merge_batch(spark, runner.table, changes, batch_id=0)
+    snap1 = mor_apply_batch(spark, runner.table, changes, batch_id=0)
     assert snap1 is not None
-    snap2 = merge_batch(spark, runner.table, changes, batch_id=0)
+    snap2 = mor_apply_batch(spark, runner.table, changes, batch_id=0)
     assert snap2 is None, "second apply of same batch_id must be a no-op"
 
 
@@ -57,7 +57,7 @@ def test_crash_and_resume(spark, tmp_path):
 
 def test_uncommitted_staging_dir_is_invisible(spark, tmp_path):
     """A crash between data write and snapshot publish leaves garbage that
-    readers never see (COW discipline)."""
+    readers never see (snapshot-commit discipline)."""
     log = str(tmp_path / "log")
     generate_change_log(log, CFG)
     runner = CdcRunner(spark, log, str(tmp_path / "table"), n_buckets=8)
@@ -70,8 +70,12 @@ def test_uncommitted_staging_dir_is_invisible(spark, tmp_path):
 
 
 def test_lineage_reconciles_with_table(spark, tmp_path):
-    """sum(lineage upserts/deletes) per batch reconciles with commit summaries,
-    and the live row count equals upserted keys minus deleted keys."""
+    """sum(lineage upserts/deletes) per batch reconciles with the log: a
+    commit's summary counts the batch's raw events, its lineage rows count
+    the layer it wrote — one max-lsn winner per key of the batch, split by
+    whether the winner is a delete."""
+    from biomedica_etl_spark.cdc.oracle import _read_all_events
+
     log = str(tmp_path / "log")
     generate_change_log(log, CFG)
     runner, _ = run_and_compare(spark, log, str(tmp_path / "table"))
@@ -84,10 +88,25 @@ def test_lineage_reconciles_with_table(spark, tmp_path):
         .withColumnRenamed("sum(rows_deleted)", "dels")
         .collect()
     }
+    events = _read_all_events(log)
+    winners: dict = {}
+    for e in events:
+        k = (e["batch_id"], e["conv_id"], e["turn_idx"])
+        if k not in winners or e["lsn"] > winners[k]["lsn"]:
+            winners[k] = e
+
+    def split(evs):
+        dels = sum(1 for e in evs if e["op"] == "D")
+        return (len(evs) - dels, dels)
+
     for snap in runner.table.snapshots():
-        if snap["batch_id"] is None:
+        b = snap["batch_id"]
+        if b is None:
             continue
         s = snap["summary"]
-        assert per_batch[snap["batch_id"]] == (s["rows_upserted"], s["rows_deleted"])
+        assert (s["rows_upserted"], s["rows_deleted"]) == split(
+            [e for e in events if e["batch_id"] == b])
+        assert per_batch[b] == split(
+            [e for (eb, _, _), e in winners.items() if eb == b])
     watermarks = [r[0] for r in lineage.groupBy("batch_id").agg({"watermark": "max"}).collect()]
     assert all(w is not None for w in watermarks)

@@ -15,7 +15,10 @@ from biomedica_etl_spark.cdc.runner import CdcRunner
 def test_expire_keeps_live_state_and_retained_history(spark, tmp_path):
     log = str(tmp_path / "log")
     generate_change_log(log, SCENARIOS["update_delete_mix"])
-    runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8, mode="cow")
+    # a major fold after every commit rewrites the touched buckets, so
+    # expired snapshots leave unreferenced data dirs behind
+    runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8,
+                       compact_every=1)
     runner.run()
     table = runner.table
     n_snaps = len(table.snapshots())
@@ -62,7 +65,7 @@ def test_fencing_survives_expiration_cold_restart(spark, tmp_path):
 
     log = str(tmp_path / "log")
     generate_change_log(log, SCENARIOS["update_delete_mix"])
-    runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8, mode="cow")
+    runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8)
     runner.run()
     all_batches = sorted(runner.table.committed_batch_ids())
     assert len(all_batches) >= 4
@@ -72,8 +75,7 @@ def test_fencing_survives_expiration_cold_restart(spark, tmp_path):
     cold_table = CowTable(str(tmp_path / "t"), n_buckets=8)
     assert cold_table.committed_batch_ids() == set(all_batches)
     assert pending_batches(spark, log, cold_table) == []
-    cold_runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8,
-                            mode="cow")
+    cold_runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8)
     n_snaps = len(cold_runner.table.snapshots())
     res = cold_runner.run()
     assert res.batches_applied == []

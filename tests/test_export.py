@@ -11,6 +11,8 @@ import glob
 import hashlib
 import os
 
+from pyspark.sql import functions as F
+
 from biomedica_etl_spark.cdc.export import publish_snapshot, read_manifest
 from biomedica_etl_spark.cdc.generator import GeneratorConfig, generate_change_log
 from biomedica_etl_spark.cdc.runner import CdcRunner
@@ -74,10 +76,13 @@ def test_publish_pins_snapshot_and_reads_back(spark, tmp_path):
     files = [p for p in glob.glob(os.path.join(dest, "**", "*.parquet"),
                                   recursive=True)]
     got = {}
-    # the publish is a byte-exact snapshot clone, tombstones included —
-    # readers apply the same _deleted filter the table reader does
-    df = spark.read.parquet(*files).filter("NOT _deleted")
-    for r in df.select("conv_id", "turn_idx", "text").collect():
+    # the publish is a byte-exact snapshot clone, delta layers and
+    # tombstones included — readers resolve each key to its max-_lsn row
+    # and drop deletes, as the table reader does
+    df = (spark.read.parquet(*files).groupBy("conv_id", "turn_idx")
+          .agg(F.max_by(F.struct("text", "_deleted"), "_lsn").alias("w"))
+          .filter("NOT w._deleted"))
+    for r in df.select("conv_id", "turn_idx", "w.text").collect():
         got[(r["conv_id"], r["turn_idx"])] = r["text"]
     assert got == expect
 
@@ -94,7 +99,7 @@ def test_incremental_publish_mor_only_new_deltas(spark, tmp_path):
     generate_change_log(log, GeneratorConfig(
         n_events=4_000, batch_size=1_000, n_convs=40, zipf_a=1.2))
     runner = CdcRunner(spark, log, str(tmp_path / "table"), n_buckets=4,
-                       mode="mor", compact_every=1_000_000)
+                       compact_every=1_000_000)
     runner.run(max_batches=2)
     dest = str(tmp_path / "pub")
     first = {r["path"] for r in

@@ -32,8 +32,7 @@ def _live(spark, table):
 def test_cursor_drains_to_live_state_across_ingest_and_dml(spark, tmp_path):
     log = str(tmp_path / "log")
     generate_change_log(log, CFG)
-    runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8,
-                       mode="mor")
+    runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8)
     runner.run(max_batches=1)
     cur = ImageFeedCursor(str(tmp_path / "cursor"))
     boot = cur.initialize(runner.table)
@@ -73,8 +72,7 @@ def test_cursor_drains_to_live_state_across_ingest_and_dml(spark, tmp_path):
 def test_cursor_crash_before_commit_reserves_same_window(spark, tmp_path):
     log = str(tmp_path / "log")
     generate_change_log(log, CFG)
-    runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8,
-                       mode="mor")
+    runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8)
     runner.run(max_batches=1)
     cur = ImageFeedCursor(str(tmp_path / "cursor"))
     cur.initialize(runner.table)
@@ -102,8 +100,7 @@ def test_cursor_window_pins_against_concurrent_commits(spark, tmp_path):
     the batch is bounded by the token, and the next poll serves the rest."""
     log = str(tmp_path / "log")
     generate_change_log(log, CFG)
-    runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8,
-                       mode="mor")
+    runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8)
     runner.run(max_batches=1)
     cur = ImageFeedCursor(str(tmp_path / "cursor"))
     cur.initialize(runner.table)
@@ -132,8 +129,7 @@ def test_cursor_window_pins_against_concurrent_commits(spark, tmp_path):
 def test_cursor_resync_contract_and_reset(spark, tmp_path):
     log = str(tmp_path / "log")
     generate_change_log(log, CFG)
-    runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8,
-                       mode="mor")
+    runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8)
     runner.run(max_batches=1)
     cur = ImageFeedCursor(str(tmp_path / "cursor"))
     cur.initialize(runner.table)
@@ -156,8 +152,7 @@ def test_cursor_resync_contract_and_reset(spark, tmp_path):
 def test_cursor_uninitialized_poll_raises(spark, tmp_path):
     log = str(tmp_path / "log")
     generate_change_log(log, CFG)
-    runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8,
-                       mode="mor")
+    runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8)
     runner.run(max_batches=1)
     cur = ImageFeedCursor(str(tmp_path / "cursor"))
     with pytest.raises(ValueError, match="initialize"):
@@ -176,8 +171,7 @@ def test_replicate_window_is_exactly_once_across_consumer_crash(
 
     log = str(tmp_path / "log")
     generate_change_log(log, CFG)
-    src = CdcRunner(spark, log, str(tmp_path / "src"), n_buckets=8,
-                    mode="mor")
+    src = CdcRunner(spark, log, str(tmp_path / "src"), n_buckets=8)
     src.table.create()
     cur = ImageFeedCursor(str(tmp_path / "cursor"))
     cur.initialize(src.table)

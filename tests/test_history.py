@@ -111,7 +111,7 @@ def log(tmp_path_factory):
 
 def _build(spark, log, root, **kw):
     runner = CdcRunner(spark, log, os.path.join(root, "table"),
-                       n_buckets=8, mode="mor", **kw)
+                       n_buckets=8, **kw)
     hist = HistoryTable(os.path.join(root, "hist"), n_shards=8)
     return runner, hist
 
@@ -253,7 +253,7 @@ def test_splice_survives_purged_tombstone_and_clamps_lsn(spark, log, tmp_path):
 
 def test_fold_byte_identical_and_bounded(spark, log, tmp_path):
     runner = CdcRunner(spark, log, os.path.join(str(tmp_path), "table"),
-                       n_buckets=8, mode="mor")
+                       n_buckets=8)
     hist = HistoryTable(os.path.join(str(tmp_path), "hist"), n_shards=4,
                         compact_at=2)
     hist.refresh(spark, runner.table)

@@ -17,6 +17,8 @@ from biomedica_etl_spark.cdc.index import TOKEN_SPLIT, TokenIndex
 from biomedica_etl_spark.cdc.runner import CdcRunner
 from biomedica_etl_spark.cdc.table import CowTable
 
+from tests.conftest import LAYOUTS
+
 CFG = GeneratorConfig(n_events=3_000, batch_size=750, n_convs=40,
                       zipf_a=1.2, duplicate_frac=0.02, out_of_order=True)
 
@@ -35,24 +37,24 @@ def _state(spark, table):
     return sorted(map(tuple, table.read(spark).collect()))
 
 
-@pytest.mark.parametrize("mode", ["mor", "cow"])
-def test_delete_matching_equals_predicate_oracle(spark, tmp_path, mode):
+@pytest.mark.parametrize("layout", sorted(LAYOUTS))
+def test_delete_matching_equals_predicate_oracle(spark, tmp_path, layout):
     log = str(tmp_path / "log")
     generate_change_log(log, CFG)
     runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8,
-                       mode=mode)
+                       **LAYOUTS[layout])
     runner.run(max_batches=2)
     idx = TokenIndex(str(tmp_path / "idx"), n_shards=16)
     idx.refresh(spark, runner.table)
     runner.run()
-    if mode == "mor":
+    if layout == "mor":
         runner.update_where("role = 'system'",
                             {"text": "concat(text, ' zapme')"})
         tokens = ["zapme", "t3"]
     else:
         tokens = ["t3", "t7"]
     want = _live_minus_tokens(spark, runner.table, tokens)
-    res = idx.delete_matching(spark, runner.table, tokens, mode=mode)
+    res = idx.delete_matching(spark, runner.table, tokens)
     assert res is not None
     assert _state(spark, runner.table) == want
     # the index retracts the deleted rows' postings on its next refresh
@@ -63,8 +65,7 @@ def test_delete_matching_equals_predicate_oracle(spark, tmp_path, mode):
 def test_delete_never_scans_the_table(spark, tmp_path, monkeypatch):
     log = str(tmp_path / "log")
     generate_change_log(log, CFG)
-    runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8,
-                       mode="mor")
+    runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8)
     runner.run()
     idx = TokenIndex(str(tmp_path / "idx"), n_shards=16)
     idx.refresh(spark, runner.table)
@@ -84,8 +85,7 @@ def test_delete_never_scans_the_table(spark, tmp_path, monkeypatch):
 def test_exactly_once_and_stale_refusal(spark, tmp_path):
     log = str(tmp_path / "log")
     generate_change_log(log, CFG)
-    runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8,
-                       mode="mor")
+    runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8)
     runner.run(max_batches=3)
     idx = TokenIndex(str(tmp_path / "idx"), n_shards=16)
     idx.refresh(spark, runner.table)
@@ -117,12 +117,12 @@ def _live_with_update(spark, table, tokens, mark):
     return sorted(map(tuple, out.collect()))
 
 
-@pytest.mark.parametrize("mode", ["mor", "cow"])
-def test_update_matching_equals_predicate_oracle(spark, tmp_path, mode):
+@pytest.mark.parametrize("layout", sorted(LAYOUTS))
+def test_update_matching_equals_predicate_oracle(spark, tmp_path, layout):
     log = str(tmp_path / "log")
     generate_change_log(log, CFG)
     runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8,
-                       mode=mode)
+                       **LAYOUTS[layout])
     runner.run(max_batches=2)
     idx = TokenIndex(str(tmp_path / "idx"), n_shards=16)
     idx.refresh(spark, runner.table)
@@ -130,8 +130,7 @@ def test_update_matching_equals_predicate_oracle(spark, tmp_path, mode):
     tokens = ["t3", "t7"]
     want = _live_with_update(spark, runner.table, tokens, " [redacted]")
     res = idx.update_matching(spark, runner.table, tokens,
-                              {"text": "concat(text, ' [redacted]')"},
-                              mode=mode)
+                              {"text": "concat(text, ' [redacted]')"})
     assert res is not None
     assert _state(spark, runner.table) == want
     # the index follows the rewrite: next refresh indexes the new token
@@ -149,8 +148,7 @@ def test_update_matching_reads_only_matched_buckets(spark, tmp_path,
 
     log = str(tmp_path / "log")
     generate_change_log(log, CFG)
-    runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8,
-                       mode="mor")
+    runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8)
     runner.run()
     idx = TokenIndex(str(tmp_path / "idx"), n_shards=16)
     idx.refresh(spark, runner.table)
@@ -187,8 +185,7 @@ def test_update_matching_reads_only_matched_buckets(spark, tmp_path,
 def test_update_matching_refusals_and_fence(spark, tmp_path):
     log = str(tmp_path / "log")
     generate_change_log(log, CFG)
-    runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8,
-                       mode="mor")
+    runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8)
     runner.run(max_batches=3)
     idx = TokenIndex(str(tmp_path / "idx"), n_shards=16)
     idx.refresh(spark, runner.table)

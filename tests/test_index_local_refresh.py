@@ -125,7 +125,7 @@ def test_driver_refresh_matches_spark_refresh(zoned, tmp_path_factory, seed,
         seed=seed, n_events=1_800, batch_size=300, n_convs=n_convs,
         update_frac=0.3, delete_frac=delete_frac, duplicate_frac=0.05,
         out_of_order=True))
-    runner = CdcRunner(spark, log, str(d / "t"), n_buckets=4, mode="mor",
+    runner = CdcRunner(spark, log, str(d / "t"), n_buckets=4,
                        compact_every=10**9)
     twins = _Twins(spark, str(d), n_shards=4)
 

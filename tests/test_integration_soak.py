@@ -41,7 +41,7 @@ def test_lifecycle_soak_every_feature_interleaved(spark, tmp_path):
     # phase 1: pipelined MOR ingest of half the log on the Spark stage,
     # which these small batches would skip; the limit at -1 pins it
     # (patched around the whole run: the stages run on threads)
-    r = CdcRunner(spark, log, root, n_buckets=8, mode="mor", compact_every=3,
+    r = CdcRunner(spark, log, root, n_buckets=8, compact_every=3,
                   pipeline_depth=2, async_lineage=True)
     with mock.patch.object(table_mod, "LOCAL_MAX_BYTES", -1):
         r.run(max_batches=4)
@@ -52,7 +52,7 @@ def test_lifecycle_soak_every_feature_interleaved(spark, tmp_path):
     assert rebucket(spark, r.table, 16)["n_buckets"] == 16
 
     # cold restart resumes onto the evolved table and finishes the log
-    r2 = CdcRunner(spark, log, root, n_buckets=16, mode="mor",
+    r2 = CdcRunner(spark, log, root, n_buckets=16,
                    compact_every=3, pipeline_depth=2, async_lineage=True)
     r2.run()
     live0 = [x.asDict() for x in r2.final_state().collect()]

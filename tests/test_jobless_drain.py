@@ -25,7 +25,7 @@ def test_indexed_backlog_drain_starts_no_spark_job(spark, tmp_path):
         duplicate_frac=0.03, out_of_order=True))
     idx = TokenIndex(str(tmp_path / "idx"), n_shards=16)
     runner = CdcRunner(
-        spark, log, str(tmp_path / "t"), n_buckets=16, mode="mor",
+        spark, log, str(tmp_path / "t"), n_buckets=16,
         pipeline_depth=2, async_lineage=True, compact_mode="minor",
         compact_every=3, async_compact=True, fold_tier_bytes=-1,
         shuffle_salts=4, maintain=[idx], maintain_every=1,

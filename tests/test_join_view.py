@@ -54,8 +54,8 @@ def built(spark, tmp_path_factory):
     log_a, log_b = str(tmp / "la"), str(tmp / "lb")
     generate_change_log(log_a, CFG_A)
     generate_change_log(log_b, CFG_B)
-    ra = CdcRunner(spark, log_a, str(tmp / "ta"), n_buckets=8, mode="mor")
-    rb = CdcRunner(spark, log_b, str(tmp / "tb"), n_buckets=8, mode="mor")
+    ra = CdcRunner(spark, log_a, str(tmp / "ta"), n_buckets=8)
+    rb = CdcRunner(spark, log_b, str(tmp / "tb"), n_buckets=8)
     ra.run(max_batches=3)
     rb.run(max_batches=2)
     v = JoinView(str(tmp / "v"), n_shards=8)
@@ -118,8 +118,8 @@ def test_refresh_appends_deltas_never_touches_existing_layers(spark, tmp_path):
     log_a, log_b = str(tmp_path / "la"), str(tmp_path / "lb")
     generate_change_log(log_a, CFG_A)
     generate_change_log(log_b, CFG_B)
-    ra = CdcRunner(spark, log_a, str(tmp_path / "ta"), n_buckets=8, mode="mor")
-    rb = CdcRunner(spark, log_b, str(tmp_path / "tb"), n_buckets=8, mode="mor")
+    ra = CdcRunner(spark, log_a, str(tmp_path / "ta"), n_buckets=8)
+    rb = CdcRunner(spark, log_b, str(tmp_path / "tb"), n_buckets=8)
     ra.run(max_batches=2)
     rb.run(max_batches=2)
     v = JoinView(str(tmp_path / "v"), n_shards=8)
@@ -150,8 +150,8 @@ def test_fold_bounds_layer_counts(spark, tmp_path):
     log_a, log_b = str(tmp_path / "la"), str(tmp_path / "lb")
     generate_change_log(log_a, CFG_A)
     generate_change_log(log_b, CFG_B)
-    ra = CdcRunner(spark, log_a, str(tmp_path / "ta"), n_buckets=8, mode="mor")
-    rb = CdcRunner(spark, log_b, str(tmp_path / "tb"), n_buckets=8, mode="mor")
+    ra = CdcRunner(spark, log_a, str(tmp_path / "ta"), n_buckets=8)
+    rb = CdcRunner(spark, log_b, str(tmp_path / "tb"), n_buckets=8)
     ra.run(max_batches=1)
     rb.run()
     v = JoinView(str(tmp_path / "v"), n_shards=4, compact_at=2)
@@ -167,8 +167,8 @@ def test_crash_before_flip_replay_converges(spark, tmp_path, monkeypatch):
     log_a, log_b = str(tmp_path / "la"), str(tmp_path / "lb")
     generate_change_log(log_a, CFG_A)
     generate_change_log(log_b, CFG_B)
-    ra = CdcRunner(spark, log_a, str(tmp_path / "ta"), n_buckets=8, mode="mor")
-    rb = CdcRunner(spark, log_b, str(tmp_path / "tb"), n_buckets=8, mode="mor")
+    ra = CdcRunner(spark, log_a, str(tmp_path / "ta"), n_buckets=8)
+    rb = CdcRunner(spark, log_b, str(tmp_path / "tb"), n_buckets=8)
     ra.run(max_batches=2)
     rb.run(max_batches=2)
     v = JoinView(str(tmp_path / "v"), n_shards=8)
@@ -207,13 +207,14 @@ def test_rebuild_fallback_on_unservable_window(spark, tmp_path):
     log_a, log_b = str(tmp_path / "la"), str(tmp_path / "lb")
     generate_change_log(log_a, CFG_A)
     generate_change_log(log_b, CFG_B)
-    ra = CdcRunner(spark, log_a, str(tmp_path / "ta"), n_buckets=8, mode="cow")
-    rb = CdcRunner(spark, log_b, str(tmp_path / "tb"), n_buckets=8, mode="mor")
+    ra = CdcRunner(spark, log_a, str(tmp_path / "ta"), n_buckets=8,
+                   compact_every=1)
+    rb = CdcRunner(spark, log_b, str(tmp_path / "tb"), n_buckets=8)
     ra.run(max_batches=2)
     rb.run(max_batches=2)
     v = JoinView(str(tmp_path / "v"), n_shards=8)
     v.refresh(spark, ra.table, rb.table)
-    # a COW rewrite window on A is not feed-serveable -> rebuild
+    # a major-fold window on A is not feed-serveable -> rebuild
     ra.run(max_batches=3)
     res = v.refresh(spark, ra.table, rb.table)
     assert res["mode"] == "rebuild"

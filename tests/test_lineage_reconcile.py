@@ -2,8 +2,8 @@
 leaves a committed batch with no metrics rows (the one gap the atomic-write
 crash sweep cannot reach — the lineage append is a data write). The
 reconcile API must detect it and backfill: exactly from the batch's own
-delta layer when it still exists (MOR), summary-level otherwise (COW,
-folded layers). Reference analogue: rebuilding the completed-log from
+delta layer when it still exists, summary-level otherwise (legacy
+base-rewrite commits, lost layers). Reference analogue: rebuilding the completed-log from
 outputs on disk (``src/pmc_oa/download_batch.py:246-276``)."""
 
 from __future__ import annotations
@@ -48,27 +48,11 @@ def _rows(runner, batch_id):
         key=lambda r: (r["bucket"], r["partition_id"]))
 
 
-def _assert_cow_reconciles(runner):
-    """COW summaries carry post-reduce mutation counts, so lineage sums
-    must close against them batch by batch. (MOR summaries hold the RAW
-    in-flight change counts while lineage holds post-reduce counts — the
-    two views are intentionally different there.)"""
-    per_batch = _sums(runner)
-    for snap in runner.table.snapshots():
-        if snap["batch_id"] is None:
-            continue
-        s = snap["summary"]
-        ups, dels = s.get("rows_upserted", 0), s.get("rows_deleted", 0)
-        if (ups or 0) + (dels or 0) == 0:
-            continue
-        assert per_batch.get(snap["batch_id"]) == (ups, dels), snap["batch_id"]
-
-
 def test_mor_exact_backfill_from_surviving_layer(spark, tmp_path):
     log = str(tmp_path / "log")
     generate_change_log(log, CFG)
     runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=4,
-                       mode="mor", compact_every=100)  # layers survive
+                       compact_every=100)  # layers survive
     runner.run()
     before = _rows(runner, 1)
     assert before, "batch 1 emitted lineage"
@@ -86,15 +70,27 @@ def test_mor_exact_backfill_from_surviving_layer(spark, tmp_path):
 
 
 def test_cow_summary_backfill(spark, tmp_path):
+    """Tables written before merge-on-read became the only write mode keep
+    their copy-on-write commits: a base rewrite carrying a batch id, whose
+    per-bucket counts existed only inside the planning pass. Lost lineage
+    for such a commit is backfilled as ONE summary row that closes against
+    the commit's own summary."""
     log = str(tmp_path / "log")
     generate_change_log(log, CFG)
-    runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=4, mode="cow")
+    root = str(tmp_path / "t")
+    runner = CdcRunner(spark, log, root, n_buckets=4, compact_every=1)
     runner.run()
-    _drop_batch_lineage(runner.lineage_dir, 2)
+    # the record such a commit left: a bucket re-pointed at a base dir,
+    # post-reduce mutation counts, no commit_type and no lineage rows
+    bucket, base = sorted(runner.table.current_snapshot()["bucket_dirs"]
+                          .items())[0]
+    runner.table.commit(7_000_001, {int(bucket): os.path.join(root, base)},
+                        9_000, 9_010, {"rows_upserted": 7, "rows_deleted": 2})
 
     report = runner.reconcile_lineage()
-    assert report["repaired_summary"] == [2]
-    _assert_cow_reconciles(runner)
+    assert report["repaired_summary"] == [7_000_001]
+    assert report["repaired_exact"] == []
+    assert _sums(runner)[7_000_001] == (7, 2)
     assert runner.reconcile_lineage()["missing"] == []
 
 
@@ -110,7 +106,7 @@ def test_lost_layer_falls_back_to_summary(spark, tmp_path):
     log = str(tmp_path / "log")
     generate_change_log(log, CFG)
     runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=4,
-                       mode="mor", compact_every=100)
+                       compact_every=100)
     runner.run()
     snaps = {s["batch_id"]: s for s in runner.table.snapshots()}
     parent = runner.table.snapshot_by_id(snaps[1]["parent_id"])
@@ -138,7 +134,7 @@ def test_any_lost_subset_is_restored(spark, tmp_path):
     log = str(tmp_path / "log")
     generate_change_log(log, CFG)
     runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=4,
-                       mode="mor", compact_every=100)
+                       compact_every=100)
     runner.run()
     baseline = _sums(runner)
     files = sorted(glob.glob(os.path.join(runner.lineage_dir, "*.parquet")))
@@ -166,7 +162,7 @@ def test_any_lost_subset_is_restored(spark, tmp_path):
 def test_intact_table_reports_nothing(spark, tmp_path):
     log = str(tmp_path / "log")
     generate_change_log(log, CFG)
-    runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=4, mode="mor")
+    runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=4)
     runner.run()
     report = runner.reconcile_lineage()
     assert report == {"missing": [], "repaired_exact": [],

@@ -31,7 +31,7 @@ def _state(spark, table, snapshot_id=None):
 def test_tag_pins_snapshot_through_expiration(spark, tmp_path):
     log = str(tmp_path / "log")
     generate_change_log(log, SCENARIOS["update_delete_mix"])
-    runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8, mode="cow")
+    runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8)
     runner.run()
     table = runner.table
     snaps = table.snapshots()
@@ -76,7 +76,7 @@ def test_tag_pins_snapshot_through_expiration(spark, tmp_path):
 def test_orphan_gc_respects_grace_and_live_refs(spark, tmp_path):
     log = str(tmp_path / "log")
     generate_change_log(log, SCENARIOS["update_delete_mix"])
-    runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8, mode="cow")
+    runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8)
     runner.run()
     table = runner.table
 
@@ -106,7 +106,7 @@ def test_files_metadata_table_matches_stored_rows(spark, tmp_path):
     # the buckets: 0-3 gain base files, 4-7 keep only delta layers, so the
     # listing exercises both kinds in one snapshot
     runner = CdcRunner(
-        spark, log, str(tmp_path / "t"), n_buckets=8, mode="mor",
+        spark, log, str(tmp_path / "t"), n_buckets=8,
         compact_every=10**9,
     )
     runner.run()
@@ -157,14 +157,18 @@ def test_write_sort_order_yields_ordered_row_group_stats(spark, tmp_path):
     from different salt tasks interleave conv_ids by design)."""
     import pyarrow.parquet as pq
 
+    from biomedica_etl_spark.cdc.merge import compact
+
     log = str(tmp_path / "log")
     generate_change_log(log, SCENARIOS["update_delete_mix"])
     runner = CdcRunner(
-        spark, log, str(tmp_path / "t"), n_buckets=4, mode="cow",
+        spark, log, str(tmp_path / "t"), n_buckets=4,
         max_records_per_file=40,
     )
     runner.run()
     table = runner.table
+    # base files come from a major fold
+    compact(spark, table, max_records_per_file=40)
 
     files = [r.path for r in table.files(spark).collect() if r.kind == "base"]
     assert files
@@ -224,7 +228,7 @@ def test_rewrite_zorder_tightens_ts_stats(spark, tmp_path):
     log = str(tmp_path / "log")
     generate_change_log(log, SCENARIOS["update_delete_mix"])
     runner = CdcRunner(
-        spark, log, str(tmp_path / "t"), n_buckets=4, mode="cow",
+        spark, log, str(tmp_path / "t"), n_buckets=4, compact_every=1,
         max_records_per_file=200,
     )
     runner.run()
@@ -276,9 +280,10 @@ def test_rewrite_small_files_binpack(spark, tmp_path):
 
     log = str(tmp_path / "log")
     generate_change_log(log, SCENARIOS["update_delete_mix"])
-    # fragment hard: salted writer + tiny per-file row cap
+    # fragment hard: salted writer + tiny per-file row cap on the major
+    # fold after every commit
     runner = CdcRunner(
-        spark, log, str(tmp_path / "t"), n_buckets=4, mode="cow",
+        spark, log, str(tmp_path / "t"), n_buckets=4, compact_every=1,
         max_records_per_file=25, shuffle_salts=4,
     )
     runner.run()

@@ -18,7 +18,7 @@ from biomedica_etl_spark.cdc.merge import merge_into
 from biomedica_etl_spark.cdc.oracle import replay
 from biomedica_etl_spark.cdc.table import bucket_expr
 
-from tests.conftest import ingested_copy
+from tests.conftest import LAYOUTS, ingested_copy
 
 
 @pytest.fixture(scope="module")
@@ -32,9 +32,10 @@ def log_dir(tmp_path_factory):
     return d
 
 
-def _build(spark, log_dir, root, mode):
-    """The fully ingested table in ``mode``, a private copy per test."""
-    return ingested_copy(spark, log_dir, root, n_buckets=8, mode=mode)
+def _build(spark, log_dir, root, layout):
+    """The fully ingested table in ``layout`` (``conftest.LAYOUTS``), a
+    private copy per test."""
+    return ingested_copy(spark, log_dir, root, n_buckets=8, **LAYOUTS[layout])
 
 
 def _three_clause_source(spark, runner):
@@ -78,9 +79,10 @@ def _three_clause_expected(log_dir):
     return out
 
 
-@pytest.mark.parametrize("mode", ["cow", "mor"])
-def test_merge_into_three_clauses_matches_oracle(spark, log_dir, tmp_path, mode):
-    runner = _build(spark, log_dir, str(tmp_path / f"t-{mode}"), mode)
+@pytest.mark.parametrize("layout", sorted(LAYOUTS))
+def test_merge_into_three_clauses_matches_oracle(spark, log_dir, tmp_path,
+                                                 layout):
+    runner = _build(spark, log_dir, str(tmp_path / f"t-{layout}"), layout)
     src = _three_clause_source(spark, runner)
     snap = runner.merge_into(src, matched_update="source",
                              matched_delete_condition="s.op = 'D'")

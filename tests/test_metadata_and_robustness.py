@@ -18,7 +18,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from biomedica_etl_spark.cdc.merge import merge_batch, mor_apply_batch
+from biomedica_etl_spark.cdc.merge import mor_apply_batch
 from biomedica_etl_spark.cdc.schema import target_change_schema
 from biomedica_etl_spark.cdc.table import CowTable, bucket_expr
 from biomedica_etl_spark.cdc.xxhash import bucket_of, xxh64_signed
@@ -119,7 +119,7 @@ def test_history_and_lineage_read_apis(spark, tmp_path):
     log = str(tmp_path / "log")
     generate_change_log(log, SCENARIOS["update_delete_mix"])
     runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8,
-                       mode="mor", compact_every=1_000_000)
+                       compact_every=1_000_000)
     runner.run()
     hist = {r["snapshot_id"]: r for r in runner.table.history(spark).collect()}
     snaps = runner.table.snapshots()
@@ -204,9 +204,9 @@ def test_two_runners_disjoint_ranges_both_progress_without_manual_retry(
     _write_log_batch(spark, log_a, 1, [(3, "U", "conv-a", 0), (4, "I", "conv-b", 0)])
     _write_log_batch(spark, log_b, 10, [(101, "I", "conv-c", 0)])
     _write_log_batch(spark, log_b, 11, [(102, "I", "conv-c", 1), (103, "D", "conv-a", 1)])
-    ra = CdcRunner(spark, log_a, troot, n_buckets=4, mode="mor",
+    ra = CdcRunner(spark, log_a, troot, n_buckets=4,
                    compact_every=1_000_000)
-    rb = CdcRunner(spark, log_b, troot, n_buckets=4, mode="mor",
+    rb = CdcRunner(spark, log_b, troot, n_buckets=4,
                    compact_every=1_000_000)
     # prime both metadata caches NOW: later runs plan against these cached
     # parents, so every post-first commit genuinely races
@@ -225,13 +225,15 @@ def test_two_runners_disjoint_ranges_both_progress_without_manual_retry(
              for r in t.read(spark).orderBy("conv_id", "turn_idx").collect()]
     assert state == [("conv-a", 0, "text-3"), ("conv-b", 0, "text-4"),
                      ("conv-c", 0, "text-101"), ("conv-c", 1, "text-102")]
-    # COW mode retry re-PLANS against the refreshed snapshot (stale bucket
-    # carry-forwards would otherwise drop the other writer's commits)
+    # read-optimized runners (a major fold after every commit): the
+    # loser's fold plans against the snapshot its retried commit refreshed
+    # to (stale bucket carry-forwards would otherwise drop the other
+    # writer's commits)
     log_c, log_d = str(tmp_path / "logC"), str(tmp_path / "logD")
     _write_log_batch(spark, log_c, 20, [(201, "I", "conv-d", 0)])
     _write_log_batch(spark, log_d, 30, [(301, "I", "conv-e", 0)])
-    rc = CdcRunner(spark, log_c, troot, n_buckets=4, mode="cow")
-    rd = CdcRunner(spark, log_d, troot, n_buckets=4, mode="cow")
+    rc = CdcRunner(spark, log_c, troot, n_buckets=4, compact_every=1)
+    rd = CdcRunner(spark, log_d, troot, n_buckets=4, compact_every=1)
     # prime both at the SAME parent; rd commits second and must auto-retry
     rc.pending(), rd.pending()
     rc.run()
@@ -247,8 +249,7 @@ def test_two_runners_disjoint_ranges_both_progress_without_manual_retry(
 
     log_e = str(tmp_path / "logE")
     _write_log_batch(spark, log_e, 40, [(401, "I", "conv-f", 0)])
-    re_ = CdcRunner(spark, log_e, troot, n_buckets=4, mode="cow",
-                    commit_retries=0)
+    re_ = CdcRunner(spark, log_e, troot, n_buckets=4, commit_retries=0)
     re_.pending()  # prime the cache, THEN an external writer wins the race
     CowTable(troot).commit(41, {}, 410, 410, {})
     with _pytest.raises(ConcurrentCommitError):
@@ -264,8 +265,8 @@ def test_null_op_and_null_turn_rows_are_quarantined_not_lost(spark, tmp_path):
             (2, None, "conv-a", 2),      # null op
             (3, "I", "conv-b", None),    # null turn_idx
             (4, "I", None, 0)]           # null conv_id
-    snap = merge_batch(spark, t, _chg(spark, rows), batch_id=0,
-                       quarantine_dir=qdir)
+    snap = mor_apply_batch(spark, t, _chg(spark, rows), batch_id=0,
+                           quarantine_dir=qdir)
     assert snap["summary"]["rows_quarantined"] == 3
     assert snap["summary"]["rows_upserted"] == 2
     q = spark.read.parquet(qdir)
@@ -303,8 +304,8 @@ def test_mixed_null_lsn_buckets_no_typeerror(spark, tmp_path):
     # than the valid group with high probability across 4 buckets
     rows = [(0, "I", "conv-valid", 0), (1, "I", "conv-valid", 1),
             (None, "I", "conv-nulls", 0), (None, "U", "conv-nulls", 1)]
-    snap = merge_batch(spark, t, _chg(spark, rows), batch_id=0,
-                       quarantine_dir=str(tmp_path / "q"))
+    snap = mor_apply_batch(spark, t, _chg(spark, rows), batch_id=0,
+                           quarantine_dir=str(tmp_path / "q"))
     assert snap["summary"]["rows_upserted"] == 2
     assert snap["summary"]["rows_quarantined"] == 2
     assert snap["lsn_lo"] == 0 and snap["lsn_hi"] == 1
@@ -314,7 +315,7 @@ def test_point_lookup_prunes_without_spark_job(spark, tmp_path):
     t = CowTable(str(tmp_path / "t"), n_buckets=8)
     t.create()
     rows = [(i, "I", f"conv-{i % 5:06d}", i // 5) for i in range(50)]
-    merge_batch(spark, t, _chg(spark, rows), batch_id=0)
+    mor_apply_batch(spark, t, _chg(spark, rows), batch_id=0)
     before = spark.sparkContext.statusTracker().getJobIdsForGroup(None)
     df = t.read_conversation(spark, "conv-000003")
     # building the pruned plan must not have launched any job
@@ -334,7 +335,7 @@ def test_pipelined_mor_matches_oracle_and_is_exactly_once(
 
     log = str(tmp_path / "log")
     generate_change_log(log, SCENARIOS["everything"])
-    r = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8, mode="mor",
+    r = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8,
                   compact_every=4, async_lineage=True, pipeline_depth=depth)
     res = r.run()
     assert res.batches_skipped == []
@@ -346,19 +347,21 @@ def test_pipelined_mor_matches_oracle_and_is_exactly_once(
                  if s["batch_id"] is not None]
     assert batch_ids == sorted(batch_ids) == res.batches_applied
     # exactly-once: a second run applies nothing
-    r2 = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8, mode="mor",
+    r2 = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8,
                    pipeline_depth=depth)
     assert r2.run().batches_applied == []
 
 
-def test_pipeline_depth_rejected_for_cow(spark, tmp_path):
-    import pytest
-
+def test_runner_refuses_any_mode_but_mor(spark, tmp_path):
+    """Merge-on-read is the only write mode: the copy-on-write mode is
+    gone, and asking for it fails up front instead of silently writing
+    layers."""
     from biomedica_etl_spark.cdc.runner import CdcRunner
 
     with pytest.raises(ValueError, match="mor"):
         CdcRunner(spark, str(tmp_path / "log"), str(tmp_path / "t"),
-                  mode="cow", pipeline_depth=2)
+                  mode="cow")
+    assert not os.path.exists(str(tmp_path / "t"))
 
 
 # -------------------------------------------- routed sink + file sizing
@@ -407,7 +410,7 @@ def test_table_write_respects_max_records_per_file(spark, tmp_path):
     log = str(tmp_path / "log")
     generate_change_log(log, GeneratorConfig(n_events=8_000, batch_size=4_000,
                                              n_convs=40))
-    r = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=4, mode="mor",
+    r = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=4,
                   max_records_per_file=150)
     # the limit at -1 pins the Spark stage (Spark's maxRecordsPerFile);
     # tests/test_property_local_stage.py checks the driver-local stage's cap
@@ -462,7 +465,7 @@ def test_pipelined_crash_leaves_only_unreferenced_staging(spark, tmp_path):
 
     log = str(tmp_path / "log")
     generate_change_log(log, SCENARIOS["update_delete_mix"])
-    r = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8, mode="mor",
+    r = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8,
                   pipeline_depth=2)
     r.run(max_batches=1)
     # simulate the crash: batch 1's stage write completed, commit never ran
@@ -475,7 +478,7 @@ def test_pipelined_crash_leaves_only_unreferenced_staging(spark, tmp_path):
 
     # a fresh runner (new process) still sees batch 1 pending and applies
     # EVERYTHING exactly once; the orphaned staging dir is never referenced
-    r2 = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8, mode="mor",
+    r2 = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8,
                    pipeline_depth=2)
     assert r2.pending()[0] == 1
     r2.run()

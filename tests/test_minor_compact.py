@@ -45,7 +45,7 @@ def test_minor_compact_matches_oracle(spark, tmp_path):
     log = str(tmp_path / "log")
     generate_change_log(log, CFG)
     runner, _ = run_and_compare(
-        spark, log, str(tmp_path / "t"), mode="mor", compact_every=3,
+        spark, log, str(tmp_path / "t"), compact_every=3,
         compact_mode="minor",
     )
     assert runner.compactions_run >= 1
@@ -62,7 +62,7 @@ def test_minor_compact_async_matches_oracle(spark, tmp_path):
     log = str(tmp_path / "log")
     generate_change_log(log, CFG)
     runner, _ = run_and_compare(
-        spark, log, str(tmp_path / "t"), mode="mor", compact_every=3,
+        spark, log, str(tmp_path / "t"), compact_every=3,
         compact_mode="minor", async_compact=True, pipeline_depth=2,
     )
     assert runner.compactions_run >= 1
@@ -76,7 +76,7 @@ def test_minor_compact_never_touches_base(spark, tmp_path):
     log = str(tmp_path / "log")
     generate_change_log(log, CFG)
     root = str(tmp_path / "t")
-    runner = CdcRunner(spark, log, root, n_buckets=8, mode="mor",
+    runner = CdcRunner(spark, log, root, n_buckets=8,
                        compact_every=10**9)
     runner.run(max_batches=4)
     compact(spark, runner.table)  # establish a base
@@ -141,7 +141,7 @@ def test_minor_compact_preserves_interleaved_layer(spark, tmp_path):
     log = str(tmp_path / "log")
     generate_change_log(log, CFG)
     root = str(tmp_path / "t")
-    runner = CdcRunner(spark, log, root, n_buckets=8, mode="mor",
+    runner = CdcRunner(spark, log, root, n_buckets=8,
                        compact_every=10**9)
     runner.run(max_batches=3)
     table = runner.table  # this handle plans the fold against snapshot N
@@ -168,7 +168,7 @@ def test_minor_compact_preserves_interleaved_layer(spark, tmp_path):
         assert not (old & after.get(b, set())), f"folded layer kept in {b}"
     # the merged end state still equals applying batches 0..3 directly
     expect = CdcRunner(spark, log, str(tmp_path / "ref"), n_buckets=8,
-                       mode="mor", compact_every=10**9)
+                       compact_every=10**9)
     expect.run(max_batches=4)
     got = sorted((r["conv_id"], r["turn_idx"], r["text"])
                  for r in table.read(spark).collect())
@@ -184,7 +184,7 @@ def test_minor_mode_rejects_threshold_one(spark, tmp_path):
 
     with pytest.raises(ValueError, match="minor"):
         CdcRunner(spark, str(tmp_path / "log"), str(tmp_path / "t"),
-                  mode="mor", compact_every=1, compact_mode="minor")
+                  compact_every=1, compact_mode="minor")
 
 
 def test_change_feed_survives_minor_fold(spark, tmp_path):
@@ -202,7 +202,7 @@ def test_change_feed_survives_minor_fold(spark, tmp_path):
 
     log = str(tmp_path / "log")
     generate_change_log(log, SCENARIOS["update_delete_mix"])
-    up = CdcRunner(spark, log, str(tmp_path / "up"), n_buckets=8, mode="mor",
+    up = CdcRunner(spark, log, str(tmp_path / "up"), n_buckets=8,
                    compact_every=10**9)
     up.run(max_batches=2)
     mid = up.table.current_snapshot()["snapshot_id"]
@@ -246,7 +246,7 @@ def test_feed_still_refuses_rollback_shaped_commit(spark, tmp_path):
     log = str(tmp_path / "log")
     generate_change_log(log, CFG)
     runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8,
-                       mode="mor", compact_every=10**9)
+                       compact_every=10**9)
     runner.run(max_batches=3)
     table = runner.table
     genesis = table.snapshots()[0]["snapshot_id"]
@@ -281,7 +281,7 @@ def test_stream_replication_across_minor_folds(spark, tmp_path):
     log = str(tmp_path / "log")
     generate_change_log(log, SCENARIOS["update_delete_mix"])
     runner = CdcRunner(spark, log, str(tmp_path / "up"), n_buckets=8,
-                       mode="mor", compact_every=3, compact_mode="minor")
+                       compact_every=3, compact_mode="minor")
     runner.run()
     assert runner.compactions_run >= 1, "precondition: folds happened"
     up = runner.table
@@ -326,7 +326,7 @@ def test_minor_fold_losing_to_major_compact_skips_cleanly(spark, tmp_path):
     log = str(tmp_path / "log")
     generate_change_log(log, CFG)
     root = str(tmp_path / "t")
-    runner = CdcRunner(spark, log, root, n_buckets=8, mode="mor",
+    runner = CdcRunner(spark, log, root, n_buckets=8,
                        compact_every=10**9)
     runner.run(max_batches=3)
     table = runner.table  # stale handle: plans the fold against snapshot N
@@ -372,7 +372,7 @@ def test_minor_fold_local_plan_shuffle_free_and_matches_shuffle_plan(
         n_events=6_000, batch_size=1_000, n_convs=400,
         delete_frac=0.1, out_of_order=True))
     root_a = str(tmp_path / "a")
-    runner = CdcRunner(spark, log, root_a, n_buckets=32, mode="mor",
+    runner = CdcRunner(spark, log, root_a, n_buckets=32,
                        compact_every=10**9)
     runner.run(max_batches=2)
     compact(spark, runner.table)  # establish a base under the layers
@@ -437,7 +437,7 @@ def test_minor_fold_auto_plan_routes_by_bytes_and_matches_local(
     log = str(tmp_path / "log")
     generate_change_log(log, CFG)
     root_a = str(tmp_path / "a")
-    runner = CdcRunner(spark, log, root_a, n_buckets=8, mode="mor",
+    runner = CdcRunner(spark, log, root_a, n_buckets=8,
                        compact_every=10**9)
     runner.run()
     root_b = str(tmp_path / "b")
@@ -560,14 +560,14 @@ def test_tiered_runner_matches_oracle_and_feed_survives_subset_fold(
     for i, kw in enumerate((
             {}, {"async_compact": True, "pipeline_depth": 2})):
         runner, _ = run_and_compare(
-            spark, log, str(tmp_path / f"t{i}"), mode="mor",
+            spark, log, str(tmp_path / f"t{i}"),
             compact_every=3, compact_mode="minor",
             fold_tier_bytes=1 << 20, **kw)
         assert runner.compactions_run >= 1
 
     # feed across a subset fold
     up = CdcRunner(spark, log, str(tmp_path / "up"), n_buckets=8,
-                   mode="mor", compact_every=10**9)
+                   compact_every=10**9)
     up.run(max_batches=2)
     mid = up.table.current_snapshot()["snapshot_id"]
     up.run()

@@ -1,4 +1,4 @@
-"""Merge-on-read mode: layer appends, compaction, mixed-mode resume."""
+"""Merge-on-read: layer appends, compaction, resume across fold modes."""
 
 from __future__ import annotations
 
@@ -21,7 +21,7 @@ def test_mor_matches_oracle_with_compaction(spark, tmp_path):
     log = str(tmp_path / "log")
     generate_change_log(log, CFG)
     runner, _ = run_and_compare(
-        spark, log, str(tmp_path / "t"), mode="mor", compact_every=3
+        spark, log, str(tmp_path / "t"), compact_every=3
     )
     snaps = runner.table.snapshots()
     assert any(s["summary"].get("commit_type") == "compact" for s in snaps)
@@ -32,7 +32,7 @@ def test_mor_layers_capped_by_compaction(spark, tmp_path):
     log = str(tmp_path / "log")
     generate_change_log(log, CFG)
     runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8,
-                       mode="mor", compact_every=3)
+                       compact_every=3)
     runner.run()
     assert runner.table.max_delta_layers() < 3
 
@@ -40,22 +40,30 @@ def test_mor_layers_capped_by_compaction(spark, tmp_path):
 def test_mor_batch_fencing(spark, tmp_path):
     log = str(tmp_path / "log")
     generate_change_log(log, CFG)
-    runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8, mode="mor")
+    runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8)
     runner.run(max_batches=1)
     ch = read_batch(spark, log, 0, 0, SchemaRegistry())
     assert mor_apply_batch(spark, runner.table, ch, 0) is None
 
 
 def test_mixed_mode_resume(spark, tmp_path):
-    """Snapshot format is mode-agnostic: MOR writer crashes, COW writer
-    resumes the same table, state still equals the oracle."""
+    """Snapshot format is fold-mode-agnostic: a writer with minor folds
+    crashes, a major compaction rewrites the base under its layers, and a
+    read-optimized writer (a major fold after every commit) resumes the
+    same table; state still equals the oracle."""
+    from biomedica_etl_spark.cdc.merge import compact
+
     log = str(tmp_path / "log")
     generate_change_log(log, CFG)
     root = str(tmp_path / "t")
-    first = CdcRunner(spark, log, root, n_buckets=8, mode="mor", compact_every=99)
+    first = CdcRunner(spark, log, root, n_buckets=8, compact_every=2,
+                      compact_mode="minor")
     first.run(max_batches=4)
-    second = CdcRunner(spark, log, root, n_buckets=8, mode="cow")
+    assert compact(spark, first.table) is not None
+    second = CdcRunner(spark, log, root, n_buckets=8, compact_every=1)
+    assert second.pending() == list(range(4, 10))
     second.run()
+    assert second.table.max_delta_layers() == 0
     actual = [r.asDict() for r in second.final_state().collect()]
     assert actual == replay(log)
 
@@ -127,7 +135,7 @@ def test_read_changes_since_chains_downstream(spark, tmp_path):
 
     log = str(tmp_path / "log")
     generate_change_log(log, SCENARIOS["update_delete_mix"])
-    up = CdcRunner(spark, log, str(tmp_path / "up"), n_buckets=8, mode="mor",
+    up = CdcRunner(spark, log, str(tmp_path / "up"), n_buckets=8,
                    compact_every=10_000)
     up.run(max_batches=2)
     mid = up.table.current_snapshot()["snapshot_id"]
@@ -178,7 +186,7 @@ def test_rollup_incremental_matches_full_recompute(spark, tmp_path):
 
     log = str(tmp_path / "log")
     generate_change_log(log, SCENARIOS["update_delete_mix"])
-    r = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8, mode="mor",
+    r = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8,
                   compact_every=10_000)
     roll = RollupTable(str(tmp_path / "rollup"))
 

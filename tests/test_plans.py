@@ -57,15 +57,14 @@ def test_mor_aligned_matches_oracle(spark, tmp_path):
     log = _gen(tmp_path)
     with mock.patch.object(table_mod, "LOCAL_MAX_BYTES", -1):
         run_and_compare(
-            spark, log, str(tmp_path / "t_mor"), mode="mor", compact_every=3,
+            spark, log, str(tmp_path / "t_mor"), compact_every=3,
         )
 
 
 def _files_per_layer(spark, tmp_path, limit):
     log = _gen(tmp_path, "insert_only")
     with mock.patch.object(table_mod, "LOCAL_MAX_BYTES", limit):
-        runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8,
-                           mode="mor")
+        runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8)
         runner.run(max_batches=1)
     snap = runner.table.current_snapshot()
     assert snap["delta_dirs"], "expected a delta layer"

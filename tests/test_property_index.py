@@ -64,7 +64,7 @@ def test_index_tracks_any_interleaving(spark, tmp_path_factory, cfg, actions):
     d = tmp_path_factory.mktemp("propidx")
     log = str(d / "log")
     generate_change_log(log, GeneratorConfig(**cfg))
-    runner = CdcRunner(spark, log, str(d / "t"), n_buckets=8, mode="mor",
+    runner = CdcRunner(spark, log, str(d / "t"), n_buckets=8,
                        compact_every=10**9)
     idx = TokenIndex(str(d / "idx"), n_shards=16)
     modes: list[str] = []

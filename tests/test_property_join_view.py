@@ -68,9 +68,9 @@ def test_view_tracks_any_interleaving(spark, tmp_path_factory, cfg_a, cfg_b,
     la, lb = str(d / "la"), str(d / "lb")
     generate_change_log(la, GeneratorConfig(n_convs=30, **cfg_a))
     generate_change_log(lb, GeneratorConfig(n_convs=30, **cfg_b))
-    ra = CdcRunner(spark, la, str(d / "ta"), n_buckets=8, mode="mor",
+    ra = CdcRunner(spark, la, str(d / "ta"), n_buckets=8,
                    compact_every=10**9)
-    rb = CdcRunner(spark, lb, str(d / "tb"), n_buckets=8, mode="mor",
+    rb = CdcRunner(spark, lb, str(d / "tb"), n_buckets=8,
                    compact_every=10**9)
     ra.run(max_batches=1)
     rb.run(max_batches=1)

@@ -191,8 +191,7 @@ def test_routes_stage_the_same_batch(la_spark, workdir, keys, redeliver,
     rows += [_poison(k, i) for i, k in enumerate(poisons)]
     random.Random(seed + 1).shuffle(rows)
     _write_batch(log, epoch, 0, rows)
-    runner = CdcRunner(la_spark, log, os.path.join(d, "t"), n_buckets=4,
-                       mode="mor")
+    runner = CdcRunner(la_spark, log, os.path.join(d, "t"), n_buckets=4)
     local, remote = _stage_both(la_spark, runner, 0, epoch,
                                 max_records_per_file)
     assert local["raw"]["rows_quarantined"] == len(poisons)
@@ -207,8 +206,7 @@ def test_routes_agree_on_degenerate_batches(la_spark, tmp_path, kind):
     rows = ([_poison(k, i) for i, k in enumerate(POISONS * 2)]
             if kind == "all_quarantined" else [])
     _write_batch(log, 1, 0, rows)
-    runner = CdcRunner(la_spark, log, str(tmp_path / "t"), n_buckets=4,
-                       mode="mor")
+    runner = CdcRunner(la_spark, log, str(tmp_path / "t"), n_buckets=4)
     local, remote = _stage_both(la_spark, runner, 0, 1)
     assert local["written"] == {} == remote["written"]
     assert local["raw"]["offsets_applied"] == len(rows)
@@ -221,8 +219,7 @@ def test_routes_agree_on_a_reinjected_batch(la_spark, tmp_path):
     log = str(tmp_path / "log")
     _write_batch(log, 2, 0, _events(
         [(c, t, "I", False) for c in CONVS[:3] for t in range(3)], [], 1))
-    runner = CdcRunner(la_spark, log, str(tmp_path / "t"), n_buckets=4,
-                       mode="mor")
+    runner = CdcRunner(la_spark, log, str(tmp_path / "t"), n_buckets=4)
     fixed = la_spark.createDataFrame(
         [(900 + i, "U", CONVS[i % 3], i % 3, "user", f"fixed {i}", None,
           dt.datetime(2024, 3, 10, 9, 30, i)) for i in range(6)],

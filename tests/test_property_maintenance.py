@@ -56,7 +56,7 @@ def test_any_maintenance_interleaving_preserves_state(
     d = tmp_path_factory.mktemp("propm")
     log = str(d / "log")
     generate_change_log(log, GeneratorConfig(**cfg))
-    runner = CdcRunner(spark, log, str(d / "t"), n_buckets=8, mode="mor",
+    runner = CdcRunner(spark, log, str(d / "t"), n_buckets=8,
                        compact_every=10**9)
     i = 0
     while True:
@@ -208,7 +208,7 @@ def test_any_dml_interleaving_matches_lww_simulator(
     events = _read_all_events(log)
     batch_ids = sorted({e["batch_id"] for e in events})
 
-    runner = CdcRunner(spark, log, str(d / "t"), n_buckets=8, mode="mor",
+    runner = CdcRunner(spark, log, str(d / "t"), n_buckets=8,
                        compact_every=10**9)
     i = 0
     applied = []

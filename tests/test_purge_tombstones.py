@@ -4,8 +4,8 @@ The gc_grace discipline: W is the caller's guarantee that every future
 event carries lsn >= W, so a tombstone with _lsn < W can never win or
 lose a future LWW merge differently whether present or not — dropping it
 from the major-fold output is a pure space reclaim, and the final step of
-a physical erase (a COW/MOR delete leaves payload-null tombstones; the
-purging compact removes the keys too).
+a physical erase (a delete leaves payload-null tombstones; the purging
+compact removes the keys too).
 """
 
 from __future__ import annotations
@@ -64,7 +64,7 @@ def _all_stored_rows(root):
 
 def test_purging_compact_removes_keys_and_preserves_state(spark, log_dir, tmp_path):
     root = str(tmp_path / "t")
-    runner = CdcRunner(spark, log_dir, root, n_buckets=8, mode="mor",
+    runner = CdcRunner(spark, log_dir, root, n_buckets=8,
                        compact_every=10_000)  # no auto folds
     runner.run()
     snap = runner.delete_where(PRED)
@@ -93,7 +93,7 @@ def test_purging_compact_removes_keys_and_preserves_state(spark, log_dir, tmp_pa
 def test_purge_bound_is_strict(spark, log_dir, tmp_path):
     """W is exclusive: a tombstone AT the watermark is retained."""
     root = str(tmp_path / "t")
-    runner = CdcRunner(spark, log_dir, root, n_buckets=8, mode="mor",
+    runner = CdcRunner(spark, log_dir, root, n_buckets=8,
                        compact_every=10_000)
     runner.run()
     snap = runner.delete_where(PRED)
@@ -117,7 +117,7 @@ def test_post_purge_merges_unchanged_for_in_contract_events(spark, log_dir, tmp_
     root_b = str(tmp_path / "b")  # tombstones retained
     runners = {}
     for root, purge in ((root_a, True), (root_b, False)):
-        r = CdcRunner(spark, log_dir, root, n_buckets=8, mode="mor",
+        r = CdcRunner(spark, log_dir, root, n_buckets=8,
                       compact_every=10_000)
         r.run()
         snap = r.delete_where(PRED)
@@ -140,20 +140,21 @@ def test_post_purge_merges_unchanged_for_in_contract_events(spark, log_dir, tmp_
 
 
 def test_purging_compact_works_on_layerless_cow_table(spark, log_dir, tmp_path):
-    """The advertised COW erase chain: a COW delete_where leaves
-    payload-null tombstones in the base with ZERO delta layers; the
-    purging compact must still rewrite those buckets (a layers-only
-    candidate set would silently no-op)."""
+    """The advertised erase chain: delete_where then a major fold leaves
+    payload-null tombstones in the base with ZERO delta layers (a fold
+    keeps tombstones); the purging compact must still rewrite those
+    buckets (a layers-only candidate set would silently no-op)."""
     root = str(tmp_path / "t")
-    runner = CdcRunner(spark, log_dir, root, n_buckets=8, mode="cow")
+    runner = CdcRunner(spark, log_dir, root, n_buckets=8)
     runner.run()
     snap = runner.delete_where(PRED)
+    compact(spark, runner.table)
     assert not runner.table.current_snapshot().get("delta_dirs")  # layer-less
 
     before = [r.asDict() for r in runner.final_state().collect()]
     csnap = compact(spark, runner.table,
                     purge_tombstones_below=snap["lsn_hi"] + 1)
-    assert csnap is not None, "purging compact no-opped on a COW table"
+    assert csnap is not None, "purging compact no-opped on a layer-less table"
     assert csnap["summary"]["tombstones_purged"] >= len(_deleted_keys(log_dir))
     assert [r.asDict() for r in runner.final_state().collect()] == before
 

@@ -12,14 +12,16 @@ import pytest
 
 from biomedica_etl_spark.cdc.generator import SCENARIOS, generate_change_log
 
-from tests.conftest import run_and_compare
+from tests.conftest import LAYOUTS, run_and_compare
 
 
-@pytest.mark.parametrize("mode", ["cow", "mor"])
-def test_corrupt_events_quarantined_and_state_matches_oracle(spark, tmp_path, mode):
+@pytest.mark.parametrize("layout", sorted(LAYOUTS))
+def test_corrupt_events_quarantined_and_state_matches_oracle(spark, tmp_path,
+                                                             layout):
     log = str(tmp_path / "log")
     meta = generate_change_log(log, SCENARIOS["corrupt"])
-    runner, _ = run_and_compare(spark, log, str(tmp_path / "t"), mode=mode)
+    runner, _ = run_and_compare(spark, log, str(tmp_path / "t"),
+                                **LAYOUTS[layout])
 
     q = spark.read.parquet(runner.quarantine_dir)
     n_q = q.count()
@@ -54,7 +56,7 @@ def test_quarantine_read_back_and_reinject(spark, tmp_path):
 
     log = str(tmp_path / "log")
     generate_change_log(log, SCENARIOS["corrupt"])
-    runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8, mode="mor")
+    runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8)
     runner.run()
     q = runner.read_quarantine()
     n_q = q.count()
@@ -132,8 +134,8 @@ def test_restaged_batch_quarantines_each_poison_row_once(spark, tmp_path, route)
         with mock.patch.object(runner_mod, "mor_commit_staged",
                                side_effect=RuntimeError("crash before commit")):
             with pytest.raises(RuntimeError):
-                CdcRunner(spark, log, root, n_buckets=4, mode="mor").run()
-        runner = CdcRunner(spark, log, root, n_buckets=4, mode="mor")
+                CdcRunner(spark, log, root, n_buckets=4).run()
+        runner = CdcRunner(spark, log, root, n_buckets=4)
         assert runner.pending()[0] == 0
         runner.run()
     got = sorted(r["lsn"] for r in runner.read_quarantine(0).select("lsn").collect())

@@ -101,7 +101,7 @@ def test_one_limit_for_reads_and_folds(spark, tmp_path, monkeypatch):
     log = str(tmp_path / "log")
     generate_change_log(log, GeneratorConfig(
         n_events=1_200, batch_size=400, n_convs=20))
-    CdcRunner(spark, log, str(tmp_path / "a"), n_buckets=4, mode="mor",
+    CdcRunner(spark, log, str(tmp_path / "a"), n_buckets=4,
               compact_every=10**9).run()
     shutil.copytree(tmp_path / "a", tmp_path / "b")
     folded = compact_layers(spark, CowTable(str(tmp_path / "a")))

@@ -1,4 +1,4 @@
-"""Unit-level checks for the LWW reducer and the COW table."""
+"""Unit-level checks for the LWW reducer and the snapshot table."""
 
 from __future__ import annotations
 
@@ -50,21 +50,23 @@ def test_bucket_expr_is_stable_and_bounded(spark):
 
 
 def test_cow_table_carries_unaffected_buckets(spark, tmp_path):
-    """A commit that rewrites one bucket must reference, not rewrite, others."""
+    """A fold that rewrites one bucket must reference, not rewrite, others."""
     import os
 
-    from biomedica_etl_spark.cdc.merge import merge_batch
+    from biomedica_etl_spark.cdc.merge import compact, mor_apply_batch
 
     table = CowTable(str(tmp_path / "t"), n_buckets=4)
     table.create()
     rows = [(i, "I", f"conv-{i}", 0, "user", f"t{i}", None, TS) for i in range(40)]
-    merge_batch(spark, table, _changes(spark, rows), batch_id=0)
+    mor_apply_batch(spark, table, _changes(spark, rows), batch_id=0)
+    compact(spark, table)
     snap1 = table.current_snapshot()
     # second batch touches exactly one conversation -> one bucket
-    merge_batch(
+    mor_apply_batch(
         spark, table, _changes(spark, [(100, "U", "conv-1", 0, "user", "new", None, TS)]),
         batch_id=1,
     )
+    compact(spark, table)
     snap2 = table.current_snapshot()
     assert snap2["summary"]["buckets_rewritten"] == 1
     changed = [b for b in snap1["bucket_dirs"]
@@ -79,21 +81,27 @@ def test_cow_table_carries_unaffected_buckets(spark, tmp_path):
 
 def test_cross_batch_out_of_order_convergence(spark, tmp_path):
     """Applying a LOWER-lsn batch after a higher-lsn one must not regress
-    state (tombstone + _lsn comparison)."""
-    from biomedica_etl_spark.cdc.merge import merge_batch
+    state (tombstone + _lsn comparison), whether the newer version sits
+    in the base or in a layer."""
+    from biomedica_etl_spark.cdc.merge import compact, mor_apply_batch
 
     table = CowTable(str(tmp_path / "t"), n_buckets=2)
     table.create()
-    # batch 0 carries the NEWER events (lsn 10: delete of k1, lsn 11: update k2)
-    merge_batch(spark, table, _changes(spark, [
+    # batch 0 carries the NEWER events (lsn 10: delete of k1, lsn 11:
+    # update k2), folded into the base: the tombstone is a base row
+    mor_apply_batch(spark, table, _changes(spark, [
         (10, "D", "k1", 0, None, None, None, TS),
         (11, "U", "k2", 0, "user", "newer", None, TS),
     ]), batch_id=0)
+    compact(spark, table)
     # batch 1 carries OLDER events for the same keys
-    merge_batch(spark, table, _changes(spark, [
+    mor_apply_batch(spark, table, _changes(spark, [
         (3, "I", "k1", 0, "user", "stale-insert", None, TS),
         (4, "I", "k2", 0, "user", "stale", None, TS),
         (5, "I", "k3", 0, "user", "fresh", None, TS),
     ]), batch_id=1)
+    state = {r["conv_id"]: r["text"] for r in table.read(spark).collect()}
+    assert state == {"k2": "newer", "k3": "fresh"}, state
+    compact(spark, table)  # and once the stale layer folds into the base
     state = {r["conv_id"]: r["text"] for r in table.read(spark).collect()}
     assert state == {"k2": "newer", "k3": "fresh"}, state

@@ -29,7 +29,7 @@ def _expected(spark, table):
 def test_rollup_max_ts_matches_full_recompute(spark, tmp_path):
     log = str(tmp_path / "log")
     generate_change_log(log, SCENARIOS["update_delete_mix"])
-    r = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8, mode="mor",
+    r = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8,
                   compact_every=10_000)
     roll = RollupTable(str(tmp_path / "rollup"), track_max_ts=True)
 
@@ -46,7 +46,7 @@ def test_rollup_max_ts_matches_full_recompute(spark, tmp_path):
 def test_rollup_max_ts_lowers_on_newest_turn_delete(spark, tmp_path):
     log = str(tmp_path / "log")
     generate_change_log(log, SCENARIOS["update_delete_mix"])
-    r = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8, mode="mor",
+    r = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8,
                   compact_every=10_000)
     r.run()
     roll = RollupTable(str(tmp_path / "rollup"), track_max_ts=True)
@@ -80,7 +80,7 @@ def test_rollup_max_ts_lowers_on_newest_turn_delete(spark, tmp_path):
 def test_rollup_group_vanishes_when_fully_deleted(spark, tmp_path):
     log = str(tmp_path / "log")
     generate_change_log(log, SCENARIOS["update_delete_mix"])
-    r = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8, mode="mor",
+    r = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8,
                   compact_every=10_000)
     r.run()
     roll = RollupTable(str(tmp_path / "rollup"), track_max_ts=True)
@@ -102,7 +102,7 @@ def test_rollup_rides_feed_and_falls_back_across_compaction(spark, tmp_path):
 
     log = str(tmp_path / "log")
     generate_change_log(log, SCENARIOS["update_delete_mix"])
-    r = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8, mode="mor",
+    r = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8,
                   compact_every=10_000)
     def canon(df):
         return sorted((x["conv_id"], x["n_turns"]) for x in df.collect())
@@ -138,7 +138,7 @@ def test_rollup_retractable_sum_len_rides_images(spark, tmp_path):
 
     log = str(tmp_path / "log")
     generate_change_log(log, SCENARIOS["update_delete_mix"])
-    r = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8, mode="mor",
+    r = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8,
                   compact_every=10_000)
     r.run(max_batches=2)
     roll = RollupTable(str(tmp_path / "rollup"), track_sum_len=True)
@@ -185,7 +185,7 @@ def test_rollup_sum_len_with_max_ts_uses_recompute_for_both(spark, tmp_path):
     which must recompute sum_len for the affected groups too."""
     log = str(tmp_path / "log")
     generate_change_log(log, SCENARIOS["update_delete_mix"])
-    r = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8, mode="mor",
+    r = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8,
                   compact_every=10_000)
     r.run(max_batches=2)
     roll = RollupTable(str(tmp_path / "rollup"), track_max_ts=True,

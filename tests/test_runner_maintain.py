@@ -80,7 +80,7 @@ def test_maintainers_fresh_after_run(spark, log, tmp_path, kw):
     idx = TokenIndex(str(tmp_path / "idx"), n_shards=8)
     hist = HistoryTable(str(tmp_path / "hist"), n_shards=8)
     runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8,
-                       mode="mor", compact_every=1000,
+                       compact_every=1000,
                        maintain=[idx, hist], **kw)
     res = runner.run()
     assert len(res.batches_applied) == 8
@@ -98,7 +98,7 @@ def test_maintain_survives_source_compaction(spark, log, tmp_path):
     fallback keeps maintenance green without caller involvement."""
     idx = TokenIndex(str(tmp_path / "idx"), n_shards=8)
     runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8,
-                       mode="mor", compact_every=3, compact_mode="major",
+                       compact_every=3, compact_mode="major",
                        maintain=[idx])
     runner.run()
     assert _postings(spark, idx) == _scratch_postings(spark, runner.table)
@@ -114,7 +114,7 @@ def test_async_maintain_plus_async_compact(spark, log, tmp_path):
     idx = TokenIndex(str(tmp_path / "idx"), n_shards=8)
     hist = HistoryTable(str(tmp_path / "hist"), n_shards=8)
     runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8,
-                       mode="mor", compact_every=2, compact_mode="minor",
+                       compact_every=2, compact_mode="minor",
                        fold_tier_bytes=-1, async_compact=True,
                        pipeline_depth=2,
                        maintain=[idx, hist], async_maintain=True)
@@ -126,11 +126,11 @@ def test_async_maintain_plus_async_compact(spark, log, tmp_path):
 def test_callable_maintainer_joinview(spark, log, tmp_path):
     """A two-table maintainer registers as a closure over its other side."""
     # side B: a small static annotation table built from the same log
-    rb = CdcRunner(spark, log, str(tmp_path / "tb"), n_buckets=8, mode="mor")
+    rb = CdcRunner(spark, log, str(tmp_path / "tb"), n_buckets=8)
     rb.run(max_batches=2)
     view = JoinView(str(tmp_path / "v"), n_shards=8)
     ra = CdcRunner(spark, log, str(tmp_path / "ta"), n_buckets=8,
-                   mode="mor", compact_every=1000,
+                   compact_every=1000,
                    maintain=[lambda s, t: view.refresh(s, t, rb.table)])
     ra.run()
     left = ra.table.read(spark)
@@ -153,14 +153,14 @@ def _failing(spark, table):
 
 def test_inline_failure_surfaces(spark, log, tmp_path):
     runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8,
-                       mode="mor", maintain=[_failing])
+                       maintain=[_failing])
     with pytest.raises(_Boom):
         runner.run()
 
 
 def test_async_failure_surfaces(spark, log, tmp_path):
     runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8,
-                       mode="mor", maintain=[_failing], async_maintain=True)
+                       maintain=[_failing], async_maintain=True)
     with pytest.raises(_Boom):
         runner.run()  # surfaced at a later commit's check or the drain
 
@@ -179,7 +179,7 @@ def test_async_failure_then_recovery(spark, log, tmp_path):
         idx.refresh(s, t)
 
     runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8,
-                       mode="mor", maintain=[flaky], async_maintain=True)
+                       maintain=[flaky], async_maintain=True)
     with pytest.raises(_Boom):
         runner.run()
     runner.run()  # must NOT re-raise the old failure

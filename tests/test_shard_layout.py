@@ -30,7 +30,7 @@ def table(spark, tmp_path_factory):
     generate_change_log(log, GeneratorConfig(
         seed=23, n_events=2_000, batch_size=500, n_convs=30,
         out_of_order=True))
-    runner = CdcRunner(spark, log, str(tmp / "t"), n_buckets=8, mode="mor")
+    runner = CdcRunner(spark, log, str(tmp / "t"), n_buckets=8)
     runner.run()
     return runner
 

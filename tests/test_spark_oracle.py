@@ -39,6 +39,6 @@ def test_spark_replay_matches_dict_replay_and_engine(spark, tmp_path):
 
     # and the engine's incremental path lands on the same final state
     r = CdcRunner(spark, log, os.path.join(tmp_path, "t"), n_buckets=8,
-                  mode="mor", compact_every=3)
+                  compact_every=3)
     r.run()
     assert _rows(r.final_state()) == expected

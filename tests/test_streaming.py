@@ -20,7 +20,7 @@ def test_stream_apply_matches_oracle_and_restart_is_noop(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
 
     q = stream_apply(spark, log, table_root, ckpt, n_buckets=8,
-                     mode="mor", compact_every=3, max_files_per_trigger=4)
+                     compact_every=3, max_files_per_trigger=4)
     assert q.awaitTermination(300), "stream did not drain in time"
 
     table = CowTable(table_root)
@@ -32,7 +32,7 @@ def test_stream_apply_matches_oracle_and_restart_is_noop(spark, tmp_path):
     n_snaps = len(table.snapshots())
 
     # restart on the same checkpoint: no new input -> no new commits
-    q2 = stream_apply(spark, log, table_root, ckpt, n_buckets=8, mode="mor")
+    q2 = stream_apply(spark, log, table_root, ckpt, n_buckets=8)
     assert q2.awaitTermination(120)
     assert len(table.snapshots()) == n_snaps
 
@@ -271,7 +271,7 @@ def test_stream_merge_matches_oracle_and_replayed_epochs_fence(spark, tmp_path):
             lambda a, b: a.unionByName(b, allowMissingColumns=True), streams)
 
     q = stream_merge(spark, _source(), table_root, str(tmp_path / "ckpt"),
-                     n_buckets=8, mode="mor",
+                     n_buckets=8,
                      matched_update="source",
                      matched_delete_condition="s.op = 'D'",
                      insert_condition="s.op <> 'D'")
@@ -286,7 +286,7 @@ def test_stream_merge_matches_oracle_and_replayed_epochs_fence(spark, tmp_path):
     # fresh checkpoint: every epoch replays under the same batch ids ->
     # every merge fences into a no-op, no new snapshots, state unchanged
     q2 = stream_merge(spark, _source(), table_root, str(tmp_path / "ckpt2"),
-                      n_buckets=8, mode="mor",
+                      n_buckets=8,
                       matched_update="source",
                       matched_delete_condition="s.op = 'D'",
                       insert_condition="s.op <> 'D'")
@@ -312,7 +312,7 @@ def test_stream_apply_with_maintained_index(spark, tmp_path):
     idx = TokenIndex(str(tmp_path / "idx"), n_shards=8)
 
     q = stream_apply(spark, log, table_root, str(tmp_path / "ckpt"),
-                     n_buckets=8, mode="mor", compact_every=1000,
+                     n_buckets=8, compact_every=1000,
                      max_files_per_trigger=4, maintain=[idx])
     assert q.awaitTermination(300), "stream did not drain in time"
 

@@ -9,12 +9,15 @@ import pytest
 from biomedica_etl_spark.cdc.generator import SCENARIOS, generate_change_log
 from biomedica_etl_spark.cdc.runner import CdcRunner
 
+from tests.conftest import LAYOUTS
 
-@pytest.mark.parametrize("mode", ["cow", "mor"])
-def test_read_at_snapshot_reproduces_history(spark, tmp_path, mode):
+
+@pytest.mark.parametrize("layout", sorted(LAYOUTS))
+def test_read_at_snapshot_reproduces_history(spark, tmp_path, layout):
     log = str(tmp_path / "log")
     generate_change_log(log, SCENARIOS["update_delete_mix"])
-    runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8, mode=mode)
+    runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8,
+                       **LAYOUTS[layout])
 
     runner.run(max_batches=1)
     snap1 = runner.table.current_snapshot()["snapshot_id"]
@@ -81,7 +84,7 @@ def test_rebucket_spec_evolution(spark, tmp_path):
 
     log = str(tmp_path / "log")
     generate_change_log(log, SCENARIOS["update_delete_mix"])
-    runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8, mode="mor")
+    runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8)
     runner.run(max_batches=3)
     old_snap = runner.table.current_snapshot()["snapshot_id"]
     state_before = [r.asDict() for r in runner.final_state().collect()]
@@ -119,7 +122,7 @@ def test_rollback_reverts_state_keeps_fencing(spark, tmp_path):
 
     log = str(tmp_path / "log")
     generate_change_log(log, SCENARIOS["update_delete_mix"])
-    runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8, mode="mor")
+    runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8)
     runner.run(max_batches=2)
     target = runner.table.current_snapshot()["snapshot_id"]
     state_at_target = [r.asDict() for r in runner.final_state().collect()]
@@ -164,13 +167,13 @@ def test_rollback_reverts_state_keeps_fencing(spark, tmp_path):
 
 def test_snapshot_diff_classifies_changes(spark, tmp_path):
     """table.diff(a, b): net insert/update/delete per key between any two
-    retained snapshots — works across COW rewrites (unlike the MOR-only
-    change feed), unchanged keys absent."""
+    retained snapshots — works across base rewrites (unlike the change
+    feed), unchanged keys absent."""
     import datetime
 
     from pyspark.sql import types as T
 
-    from biomedica_etl_spark.cdc.merge import compact, merge_batch, mor_apply_batch
+    from biomedica_etl_spark.cdc.merge import compact, mor_apply_batch
     from biomedica_etl_spark.cdc.schema import target_change_schema
     from biomedica_etl_spark.cdc.table import CowTable
 
@@ -186,10 +189,11 @@ def test_snapshot_diff_classifies_changes(spark, tmp_path):
             [(l, o, c, tt, "user", f"x{l}", None, TS) for (l, o, c, tt) in rows],
             schema)
 
-    merge_batch(spark, t, chg([(0, "I", "A", 0), (1, "I", "B", 0),
-                               (2, "I", "K", 0)]), batch_id=0)
+    mor_apply_batch(spark, t, chg([(0, "I", "A", 0), (1, "I", "B", 0),
+                                   (2, "I", "K", 0)]), batch_id=0)
+    compact(spark, t)
     base_snap = t.current_snapshot()["snapshot_id"]
-    # update A, delete B, insert C via a MOR layer, then COMPACT (a COW
+    # update A, delete B, insert C via a MOR layer, then COMPACT (a base
     # rewrite) — the diff must still work across it
     mor_apply_batch(spark, t, chg([(10, "U", "A", 0), (11, "D", "B", 0),
                                    (12, "I", "C", 0)]), batch_id=1)

@@ -74,7 +74,7 @@ def test_stable_after_cdc_work_in_same_session(spark, tmp_path, oracle_hash):
         n_events=4_000, batch_size=1_000, duplicate_frac=0.05,
         out_of_order=True, zipf_a=1.2, n_convs=50))
     r = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=4,
-                  mode="mor", compact_every=2)
+                  compact_every=2)
     r.run()
     r.final_state().collect()  # actually execute the CDC read
     assert _result_hash(token_budget_shards(spark, SF_DIR)) == oracle_hash

@@ -48,7 +48,7 @@ def built(spark, tmp_path_factory):
     tmp = tmp_path_factory.mktemp("tokidx")
     log = str(tmp / "log")
     generate_change_log(log, CFG)
-    runner = CdcRunner(spark, log, str(tmp / "t"), n_buckets=8, mode="mor")
+    runner = CdcRunner(spark, log, str(tmp / "t"), n_buckets=8)
     runner.run(max_batches=2)
     idx = TokenIndex(str(tmp / "idx"), n_shards=16)
     res = idx.refresh(spark, runner.table)
@@ -81,8 +81,7 @@ def test_refresh_appends_deltas_and_never_touches_existing_layers(
         spark, tmp_path):
     log = str(tmp_path / "log")
     generate_change_log(log, CFG)
-    runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8,
-                       mode="mor")
+    runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8)
     runner.run()
     idx = TokenIndex(str(tmp_path / "idx"), n_shards=16)
     idx.refresh(spark, runner.table)
@@ -123,8 +122,7 @@ def test_refresh_appends_deltas_and_never_touches_existing_layers(
 def test_layer_counts_bounded_by_targeted_folds(spark, tmp_path):
     log = str(tmp_path / "log")
     generate_change_log(log, CFG)
-    runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8,
-                       mode="mor")
+    runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8)
     runner.run(max_batches=1)
     idx = TokenIndex(str(tmp_path / "idx"), n_shards=8, compact_at=2)
     idx.refresh(spark, runner.table)
@@ -152,8 +150,7 @@ def test_refresh_writes_one_file_per_shard_per_layer(spark, tmp_path):
     is sized by AQE, and each shard lands in exactly one file."""
     log = str(tmp_path / "log")
     generate_change_log(log, CFG)
-    runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8,
-                       mode="mor")
+    runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8)
     runner.run(max_batches=1)
     idx = TokenIndex(str(tmp_path / "idx"), n_shards=8, compact_at=2)
     modes, folds = [], 0
@@ -195,8 +192,7 @@ def test_lookup_prunes_to_term_shards(spark, built, monkeypatch):
 def test_unservable_window_falls_back_to_rebuild(spark, tmp_path):
     log = str(tmp_path / "log")
     generate_change_log(log, CFG)
-    runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8,
-                       mode="mor")
+    runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8)
     runner.run(max_batches=2)
     idx = TokenIndex(str(tmp_path / "idx"), n_shards=16)
     idx.refresh(spark, runner.table)
@@ -213,8 +209,7 @@ def test_unservable_window_falls_back_to_rebuild(spark, tmp_path):
 def test_crash_replay_converges_and_orphans_collected(spark, tmp_path):
     log = str(tmp_path / "log")
     generate_change_log(log, CFG)
-    runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8,
-                       mode="mor")
+    runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8)
     runner.run(max_batches=2)
     idx = TokenIndex(str(tmp_path / "idx"), n_shards=16)
     idx.refresh(spark, runner.table)

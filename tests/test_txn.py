@@ -29,8 +29,11 @@ def pair(spark, tmp_path):
     la, lb = str(tmp_path / "la"), str(tmp_path / "lb")
     generate_change_log(la, CFG_A)
     generate_change_log(lb, CFG_B)
-    ra = CdcRunner(spark, la, str(tmp_path / "ta"), n_buckets=8, mode="mor")
-    rb = CdcRunner(spark, lb, str(tmp_path / "tb"), n_buckets=8, mode="cow")
+    # two layouts: A keeps its layers, B folds into the base after every
+    # commit (read-optimized)
+    ra = CdcRunner(spark, la, str(tmp_path / "ta"), n_buckets=8)
+    rb = CdcRunner(spark, lb, str(tmp_path / "tb"), n_buckets=8,
+                   compact_every=1)
     ra.run(max_batches=3)
     rb.run(max_batches=3)
     co = TransactionCoordinator(str(tmp_path / "txns"))

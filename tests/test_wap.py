@@ -21,6 +21,8 @@ from biomedica_etl_spark.cdc.oracle import FINAL_COLS, _read_all_events
 from biomedica_etl_spark.cdc.runner import CdcRunner
 from biomedica_etl_spark.cdc.table import CowTable
 
+from tests.conftest import LAYOUTS
+
 
 def _state(spark, table, snapshot_id=None):
     return [
@@ -49,8 +51,8 @@ def _replay_excluding(log_dir, skip_batches=()):
     return [state[k] for k in sorted(state)]
 
 
-@pytest.mark.parametrize("mode", ["cow", "mor"])
-def test_audit_pass_publishes_and_matches_oracle(spark, tmp_path, mode):
+@pytest.mark.parametrize("layout", sorted(LAYOUTS))
+def test_audit_pass_publishes_and_matches_oracle(spark, tmp_path, layout):
     log = str(tmp_path / "log")
     generate_change_log(log, SCENARIOS["update_delete_mix"])
     seen = []
@@ -62,7 +64,7 @@ def test_audit_pass_publishes_and_matches_oracle(spark, tmp_path, mode):
         return table.read(s, snapshot_id="staged").count() >= 0
 
     runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8,
-                       mode=mode, audit=audit)
+                       audit=audit, **LAYOUTS[layout])
     res = runner.run()
     assert res.batches_rejected == []
     assert seen == res.batches_applied
@@ -90,7 +92,7 @@ def test_staged_invisible_until_publish(spark, tmp_path):
         return True
 
     runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8,
-                       mode="cow", audit=audit)
+                       audit=audit)
     runner.run()
     pre_rows = None
     for bid in sorted(observed):
@@ -104,8 +106,8 @@ def test_staged_invisible_until_publish(spark, tmp_path):
     assert [s["snapshot_id"] for s in snaps] == list(range(len(snaps)))
 
 
-@pytest.mark.parametrize("mode", ["cow", "mor"])
-def test_audit_reject_aborts_and_batch_replays(spark, tmp_path, mode):
+@pytest.mark.parametrize("layout", sorted(LAYOUTS))
+def test_audit_reject_aborts_and_batch_replays(spark, tmp_path, layout):
     log = str(tmp_path / "log")
     generate_change_log(log, SCENARIOS["update_delete_mix"])
 
@@ -116,7 +118,7 @@ def test_audit_reject_aborts_and_batch_replays(spark, tmp_path, mode):
         return True
 
     runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8,
-                       mode=mode, audit=reject_batch_2)
+                       audit=reject_batch_2, **LAYOUTS[layout])
     res = runner.run()
     assert res.batches_rejected == [2]
     assert res.reject_reasons == ["poisoned upstream extract"]
@@ -132,7 +134,7 @@ def test_audit_reject_aborts_and_batch_replays(spark, tmp_path, mode):
     # remediation: rerun with an accepting audit — ONLY batch 2 is pending,
     # and late application under max-LSN LWW converges to the full oracle
     runner2 = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8,
-                        mode=mode, audit=lambda s, t: True)
+                        audit=lambda s, t: True, **LAYOUTS[layout])
     res2 = runner2.run()
     assert res2.batches_applied == [2]
     assert _state(spark, runner2.table) == _replay_excluding(log)
@@ -154,7 +156,7 @@ def test_max_batches_counts_a_rejected_batch(spark, tmp_path):
         return table.staged_snapshot()["batch_id"] != 1
 
     runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=4,
-                       mode="mor", audit=reject_batch_1)
+                       audit=reject_batch_1)
     res = runner.run(max_batches=2)
     assert res.batches_rejected == [1]
     assert res.batches_applied == [0]
@@ -162,7 +164,7 @@ def test_max_batches_counts_a_rejected_batch(spark, tmp_path):
     assert runner.table.staged_snapshot() is None
 
     again = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=4,
-                      mode="mor", audit=lambda s, t: True)
+                      audit=lambda s, t: True)
     res = again.run()
     assert res.batches_applied == [1, 2] and res.batches_rejected == []
     assert _state(spark, again.table) == replay(log)
@@ -182,7 +184,7 @@ def test_staged_crash_is_replayable_and_stale_staged_ignored(spark, tmp_path):
         raise Boom()  # process dies between stage and publish
 
     runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8,
-                       mode="cow", audit=crash_on_first)
+                       audit=crash_on_first)
     with pytest.raises(Boom):
         runner.run()
     # the staged-but-never-published batch is still pending in a COLD
@@ -193,7 +195,7 @@ def test_staged_crash_is_replayable_and_stale_staged_ignored(spark, tmp_path):
 
     # replaying overwrites the stale stage (same batch) and proceeds
     runner2 = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8,
-                        mode="cow", audit=lambda s, t: True)
+                        audit=lambda s, t: True)
     res2 = runner2.run()
     assert calls[0] in res2.batches_applied
     assert _state(spark, runner2.table) == _replay_excluding(log)
@@ -206,8 +208,7 @@ def test_staged_crash_is_replayable_and_stale_staged_ignored(spark, tmp_path):
 def test_table_level_wap_guards(spark, tmp_path):
     log = str(tmp_path / "log")
     generate_change_log(log, SCENARIOS["update_delete_mix"])
-    runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8,
-                       mode="cow")
+    runner = CdcRunner(spark, log, str(tmp_path / "t"), n_buckets=8)
     runner.run()
     table = runner.table
 
@@ -218,12 +219,12 @@ def test_table_level_wap_guards(spark, tmp_path):
         table.read(spark, snapshot_id="staged")
 
     # two concurrent staged batches are refused
-    table.commit(101, {}, None, None, {}, staged=True)
+    table.commit_delta(101, {}, None, None, {}, staged=True)
     with pytest.raises(RuntimeError):
-        table.commit(102, {}, None, None, {}, staged=True)
+        table.commit_delta(102, {}, None, None, {}, staged=True)
     table.abort_staged()
 
     # audit + pipelining is refused up front
     with pytest.raises(ValueError):
-        CdcRunner(spark, log, str(tmp_path / "t2"), mode="mor",
+        CdcRunner(spark, log, str(tmp_path / "t2"),
                   pipeline_depth=2, audit=lambda s, t: True)
