@@ -28,11 +28,17 @@ engine's columnar change events:
 - :func:`write_debezium_log` — deterministic NDJSON materialization of a
   generated change log (pure pyarrow + ``json.dumps``; no Spark, no wall
   clock) so a DuckDB oracle can parse the identical bytes.
-- :func:`ingest_debezium` — micro-batched envelope ingest: one NDJSON
-  file per batch, parsed and applied through the ordinary MOR merge with
-  the file's index as the fenced ``batch_id`` — replaying a file a
-  second time is a committed-batch no-op (exactly-once), same as the
-  parquet runner.
+- :func:`ingest_debezium` / :func:`ingest_debezium_txn` — micro-batched
+  envelope ingest over one NDJSON file loop: one file per batch, parsed
+  and applied through the ordinary MOR merge with the file's trailing
+  digits (else its sorted position) as the fenced ``batch_id`` —
+  replaying a file a second time is a committed-batch no-op
+  (exactly-once), same as the parquet runner.
+- :func:`apply_txn_batch` — the transactional per-batch step (carried-
+  over pending read, :func:`txn_split`, fenced apply, ``pending-<id>``
+  publish) that ``ingest_debezium_txn`` runs per file and
+  ``stream_apply_debezium(txn_aware=True)`` runs per epoch; pending ids
+  are the fenced batch ids on both, ordered as integers.
 
 Scale: parsing is one ``from_json`` per line inside WholeStageCodegen —
 no shuffle of its own; the apply inherits the merge path's single
@@ -360,7 +366,10 @@ def txn_split(ev: DataFrame, prev: DataFrame | None
     position once no matter how often it is redelivered. Envelopes whose
     transaction block lacks ``total_order`` (all-null orders for a txn)
     fall back to the raw count — the best decidable criterion for that
-    wire dialect, correct under exactly-once transports.
+    wire dialect, correct under exactly-once transports. A transaction
+    whose total is unknown (no ``event_count`` on any of its events:
+    Debezium's own data-event shape) is undecidable here and stays
+    incomplete: every input row lands on exactly one side.
 
     The carried-over pending side is deduplicated on
     ``(_txn_id, _txn_order)`` so redelivery cannot grow the pending
@@ -391,9 +400,10 @@ def txn_split(ev: DataFrame, prev: DataFrame | None
         F.collect_list("_txn_order").over(w)))
     n_all = F.count(F.lit(1)).over(w)
     tot = F.max("_txn_total").over(w)
+    # NULL (unknown total) is pending: both filters must see every row
     done = (F.col("_txn_id").isNull()
             | F.when(n_pos > 0, n_pos >= tot).otherwise(n_all >= tot))
-    tagged = ev.withColumn("_done", done)
+    tagged = ev.withColumn("_done", F.coalesce(done, F.lit(False)))
     complete = tagged.filter("_done").drop("_done")
     # dedup only rows that HAVE a position: null orders (the count-based
     # dialect) must not collapse a whole transaction into one row
@@ -418,6 +428,128 @@ def pending_txn_schema() -> T.StructType:
            T.StructField("_txn_total", T.LongType(), True)])
 
 
+def _pending_ids(state_dir: str) -> list[int]:
+    """Ids of the published pending states (``_DONE`` present), ordered
+    as integers: a zero-padded name sorts wrong once an id outgrows its
+    padding."""
+    return sorted(
+        int(d.split("-", 1)[1]) for d in os.listdir(state_dir)
+        if d.startswith("pending-") and "." not in d
+        and os.path.exists(os.path.join(state_dir, d, "_DONE")))
+
+
+def _pending_path(state_dir: str, batch_id: int) -> str:
+    return os.path.join(state_dir, f"pending-{batch_id:09d}")
+
+
+def _read_pending_before(spark: SparkSession, state_dir: str,
+                         batch_id: int) -> DataFrame | None:
+    """The newest published pending state with an id below ``batch_id``:
+    the carry-over a batch (or its replay) starts from."""
+    prior = [i for i in _pending_ids(state_dir) if i < batch_id]
+    if not prior:
+        return None
+    return spark.read.schema(pending_txn_schema()).parquet(
+        _pending_path(state_dir, prior[-1]))
+
+
+def _publish_pending(state_dir: str, batch_id: int, incomplete: DataFrame,
+                     keep: int | None) -> None:
+    """Write ``pending-<batch_id>`` (stage, ``_DONE``, rename), then drop
+    all but the ``keep`` newest published states (``None`` keeps all)."""
+    import shutil
+
+    final = _pending_path(state_dir, batch_id)
+    stage = final + f".stage-{os.getpid()}"
+    incomplete.write.mode("overwrite").parquet(stage)
+    with open(os.path.join(stage, "_DONE"), "w") as fh:
+        fh.write("ok")
+    if os.path.isdir(final):
+        shutil.rmtree(final, ignore_errors=True)
+    os.rename(stage, final)
+    if keep is not None:
+        for old in _pending_ids(state_dir)[:-keep]:
+            shutil.rmtree(_pending_path(state_dir, old), ignore_errors=True)
+
+
+def apply_txn_batch(
+    spark: SparkSession, table: CowTable, events: DataFrame, batch_id: int,
+    state_dir: str, quarantine_dir: str | None = None,
+    lineage_dir: str | None = None, keep_pending: int | None = None,
+) -> None:
+    """One transactional batch: split ``events`` (parsed with
+    ``with_transaction=True``) plus the newest pending state published
+    below ``batch_id`` by transaction completeness, apply the complete
+    side as the fenced batch ``batch_id``, then publish the incomplete
+    side as ``pending-<batch_id>``.
+
+    Crash-safe by determinism: the split is a pure function of its two
+    immutable inputs, so a crash anywhere replays into the identical
+    complete set (the apply fences on the batch id) and the identical
+    pending state. ``keep_pending`` bounds the published states kept; a
+    replay reads the newest one strictly below its own id, so two
+    suffice when only the last batch can replay."""
+    from .merge import mor_apply_batch
+
+    prev = _read_pending_before(spark, state_dir, batch_id)
+    # persist: the split's two outputs are filters over one window-tagged
+    # frame, consumed by separate actions (the apply, the pending write);
+    # without it each re-runs the parse over the whole batch
+    ev = events.persist()
+    try:
+        complete, incomplete = txn_split(ev, prev)
+        mor_apply_batch(spark, table,
+                        complete.drop("_txn_id", "_txn_order", "_txn_total"),
+                        batch_id, lineage_dir=lineage_dir,
+                        quarantine_dir=quarantine_dir)
+        table.refresh()
+        # publish pending AFTER the fenced apply: a crash in between
+        # replays the identical deterministic split into a fenced no-op
+        _publish_pending(state_dir, batch_id, incomplete, keep_pending)
+    finally:
+        ev.unpersist()
+
+
+def _ingest_files(
+    spark: SparkSession, ndjson_dir: str, table_path: str, n_buckets: int,
+    quarantine_dir: str | None, state_dir: str | None,
+) -> CowTable:
+    """The NDJSON file loop of both ingest front-ends: one file = one
+    fenced batch, transactional when ``state_dir`` is given. The batch id
+    is the file name's trailing digits (``batch-00003.ndjson``), else the
+    file's sorted position; both are stable across re-runs, which is all
+    fencing needs. Resume skips a batch whose apply is committed and,
+    when transactional, whose pending state is published."""
+    from .merge import mor_apply_batch
+
+    table = CowTable(table_path, n_buckets=n_buckets)
+    table.create()
+    if quarantine_dir is None:
+        quarantine_dir = os.path.join(table_path, "_quarantine")
+    if state_dir is not None:
+        os.makedirs(state_dir, exist_ok=True)
+    files = sorted(f for f in os.listdir(ndjson_dir)
+                   if not f.startswith((".", "_"))
+                   and not f.endswith((".crc", ".tmp")))
+    for pos, f in enumerate(files):
+        digits = f.rsplit(".", 1)[0].rsplit("-", 1)[-1]
+        batch_id = int(digits) if digits.isdigit() else pos
+        if table.is_committed(batch_id) and (
+                state_dir is None or os.path.exists(os.path.join(
+                    _pending_path(state_dir, batch_id), "_DONE"))):
+            continue
+        lines = spark.read.text(os.path.join(ndjson_dir, f))
+        if state_dir is None:
+            mor_apply_batch(spark, table, parse_debezium(lines), batch_id,
+                            quarantine_dir=quarantine_dir)
+            table.refresh()
+        else:
+            apply_txn_batch(spark, table,
+                            parse_debezium(lines, with_transaction=True),
+                            batch_id, state_dir, quarantine_dir=quarantine_dir)
+    return table
+
+
 def ingest_debezium_txn(
     spark: SparkSession, ndjson_dir: str, table_path: str,
     n_buckets: int = 8, state_dir: str | None = None,
@@ -430,104 +562,38 @@ def ingest_debezium_txn(
     Debezium's transaction metadata (``transaction.id`` +
     ``event_count`` on every data event) makes completeness decidable:
     a transaction is complete in the accumulated stream once all
-    ``event_count`` of its events have arrived. Per NDJSON file (= one
-    fenced micro-batch): union the file's events with the carried-over
-    incomplete-transaction events, split complete (all counted, plus
-    events outside any transaction) from incomplete, apply the complete
-    set through the ordinary fenced merge, then atomically publish the
-    new pending state as ``pending-<pos>``. Readers at ANY snapshot see
-    only whole transactions — the guarantee a downstream consumer needs
-    to join tables consistently off a one-topic stream.
+    ``event_count`` of its events have arrived. Each NDJSON file is one
+    fenced micro-batch through :func:`apply_txn_batch`: the file's events
+    plus the carried-over incomplete-transaction events split into
+    complete (all counted, plus events outside any transaction) and
+    incomplete; the complete set applies, the incomplete set is published
+    as ``pending-<batch_id>``. Readers at ANY snapshot see only whole
+    transactions — the guarantee a downstream consumer needs to join
+    tables consistently off a one-topic stream.
 
-    Crash-safe by determinism: the split is a pure function of
-    ``(newest published pending with id < batch_id, file)``, both
-    immutable, so a crash anywhere replays into the identical
-    complete-set (the apply fences on the batch id) and the identical
-    pending state. Pending state is keyed by ``batch_id`` — the SAME
-    derivation as the commit fence — not by the file's sorted position:
-    if processed files are archived/removed between runs, positions
-    shift but batch ids do not, so the first remaining file still finds
-    the carried-over incomplete-transaction events published by its
-    predecessor (the streaming variant's epoch discipline).
-    ``pending-<batch_id>``'s ``_DONE`` marker is the batch's completion
-    record; resume skips batches whose apply is committed AND whose
-    pending state is published. Deferral is safe under LWW: a deferred
-    event applies later at its original LSN, and max-LSN resolution is
-    order-independent.
+    Pending state is keyed by ``batch_id`` — the SAME derivation as the
+    commit fence — not by the file's sorted position: if processed files
+    are archived/removed between runs, positions shift but batch ids do
+    not, so the first remaining file still finds the carried-over events
+    published by its predecessor. Every published state is kept.
+    Deferral is safe under LWW: a deferred event applies later at its
+    original LSN, and max-LSN resolution is order-independent. A
+    transaction without ``event_count`` never completes and stays
+    pending (see :func:`txn_split`).
 
     Quarantine: defaults to ``<table_path>/_quarantine`` (matching
     ``stream_apply``) so a poisoned envelope always leaves a row-level
-    record; pass ``quarantine_dir=False``-y via an explicit empty string
-    only if you genuinely want counter-only accounting.
+    record; pass an explicit empty string only if you genuinely want
+    counter-only accounting.
 
     Scale: the pending set is bounded by in-flight transactions (the
     tail of the current batch), not history; the completeness check is
     one window over ``_txn_id`` (``txn_split``) on ``O(batch + pending)``
     rows.
     """
-    from .merge import mor_apply_batch
-
-    table = CowTable(table_path, n_buckets=n_buckets)
-    table.create()
-    if quarantine_dir is None:
-        quarantine_dir = os.path.join(table_path, "_quarantine")
-    state_dir = state_dir or os.path.join(table_path, "_txn_pending")
-    os.makedirs(state_dir, exist_ok=True)
-    txn_cols = ["_txn_id", "_txn_order", "_txn_total"]
-    pending_schema = pending_txn_schema()
-    files = sorted(f for f in os.listdir(ndjson_dir)
-                   if not f.startswith((".", "_"))
-                   and not f.endswith((".crc", ".tmp")))
-
-    def _pending_path(bid: int) -> str:
-        return os.path.join(state_dir, f"pending-{bid:09d}")
-
-    def _done_pending_ids() -> list[int]:
-        return sorted(
-            int(d.split("-")[1]) for d in os.listdir(state_dir)
-            if d.startswith("pending-") and "." not in d
-            and os.path.exists(os.path.join(state_dir, d, "_DONE")))
-
-    def _read_pending_before(bid: int) -> DataFrame | None:
-        prior = [i for i in _done_pending_ids() if i < bid]
-        if not prior:
-            return None
-        return spark.read.schema(pending_schema).parquet(
-            _pending_path(prior[-1]))
-
-    for pos, f in enumerate(files):
-        stem = f.rsplit(".", 1)[0]
-        digits = stem.rsplit("-", 1)[-1]
-        batch_id = int(digits) if digits.isdigit() else pos
-        if table.is_committed(batch_id) and os.path.exists(
-                os.path.join(_pending_path(batch_id), "_DONE")):
-            continue
-        # persist the parsed batch: the split's two outputs are filters
-        # over one window-tagged frame, consumed by separate actions (the
-        # apply, the pending write) — without the persist each re-runs
-        # the Jackson parse over the whole file. O(batch) rows, freed
-        # below.
-        ev = parse_debezium(spark.read.text(os.path.join(ndjson_dir, f)),
-                            with_transaction=True).persist()
-        try:
-            complete, incomplete = txn_split(ev, _read_pending_before(batch_id))
-            mor_apply_batch(spark, table, complete.drop(*txn_cols), batch_id,
-                            quarantine_dir=quarantine_dir)
-            table.refresh()
-            # publish pending AFTER the fenced apply: a crash in between
-            # replays the identical deterministic split into a fenced no-op
-            stage = _pending_path(batch_id) + f".stage-{os.getpid()}"
-            incomplete.write.mode("overwrite").parquet(stage)
-        finally:
-            ev.unpersist()
-        with open(os.path.join(stage, "_DONE"), "w") as fh:
-            fh.write("ok")
-        final = _pending_path(batch_id)
-        if os.path.isdir(final):
-            import shutil as _sh
-            _sh.rmtree(final, ignore_errors=True)
-        os.rename(stage, final)
-    return table
+    return _ingest_files(
+        spark, ndjson_dir, table_path, n_buckets, quarantine_dir,
+        state_dir or os.path.join(table_path, "_txn_pending"))
 
 
 def relay_debezium(
@@ -803,9 +869,10 @@ def ingest_debezium(
 ) -> CowTable:
     """Micro-batched envelope ingest with exactly-once fencing.
 
-    One NDJSON file = one micro-batch; the file's index is the fenced
-    ``batch_id``, so re-running over the same directory (resume after a
-    crash, an operator double-invoke) re-applies nothing — the same
+    One NDJSON file = one micro-batch; the file name's trailing digits
+    (else its sorted position) are the fenced ``batch_id``, so re-running
+    over the same directory (resume after a crash, an operator
+    double-invoke) re-applies nothing — the same
     idempotence contract as the parquet runner, reached through the same
     ``mor_apply_batch`` path (LWW reduce -> bucket-partitioned delta
     layer -> CAS commit).
@@ -814,27 +881,5 @@ def ingest_debezium(
     envelope always leaves a row-level record (the module's
     never-silently-dropped contract), not just a metrics counter.
     """
-    from .merge import mor_apply_batch
-
-    table = CowTable(table_path, n_buckets=n_buckets)
-    table.create()
-    if quarantine_dir is None:
-        quarantine_dir = os.path.join(table_path, "_quarantine")
-    files = sorted(f for f in os.listdir(ndjson_dir)
-                   if not f.startswith((".", "_"))
-                   and not f.endswith((".crc", ".tmp")))
-    for pos, f in enumerate(files):
-        # batch id from the filename's trailing digits when present
-        # (batch-00003.ndjson), else the file's sorted position — both
-        # stable across re-runs, which is all fencing needs
-        stem = f.rsplit(".", 1)[0]
-        digits = stem.rsplit("-", 1)[-1]
-        batch_id = int(digits) if digits.isdigit() else pos
-        if table.is_committed(batch_id):
-            continue
-        lines = spark.read.text(os.path.join(ndjson_dir, f))
-        events = parse_debezium(lines, value_col="value")
-        mor_apply_batch(spark, table, events, batch_id,
-                        quarantine_dir=quarantine_dir)
-        table.refresh()
-    return table
+    return _ingest_files(spark, ndjson_dir, table_path, n_buckets,
+                         quarantine_dir, None)

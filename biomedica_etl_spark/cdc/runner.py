@@ -507,9 +507,7 @@ class CdcRunner:
             # (otherwise every subsequent commit re-submits redundant
             # folds for buckets that are already clean)
             self.table.refresh()
-        if self.table.max_delta_layers() < self.compact_every:
-            return
-        buckets = self._buckets_at_threshold()
+        buckets = self.table.buckets_at_threshold(self.compact_every)
         if not buckets:
             return
         if not self.async_compact:
@@ -543,9 +541,7 @@ class CdcRunner:
             return
         self._maint_slot.drain()
         self.table.refresh()
-        buckets = (self._buckets_at_threshold()
-                   if self.table.max_delta_layers() >= self.compact_every
-                   else [])
+        buckets = self.table.buckets_at_threshold(self.compact_every)
         if buckets:
             if self._retry_commit(
                     lambda: self._run_fold(self.table, buckets)) is not None:
@@ -602,16 +598,6 @@ class CdcRunner:
         if self.maintainers:
             self._refresh_maintainers(self.table)
             self._applies_since_maintain = 0
-
-    def _buckets_at_threshold(self) -> list[int]:
-        """Partial-compaction target set: only buckets whose layer count
-        reached compact_every are rewritten; cold buckets keep their (few)
-        layers and pay nothing — the bin-pack maintenance discipline."""
-        snap = self.table.current_snapshot() or {}
-        return sorted(
-            int(b) for b, ds in snap.get("delta_dirs", {}).items()
-            if len(ds) >= self.compact_every
-        )
 
     def read_quarantine(self, batch_id: int | None = None) -> DataFrame:
         """Quarantined (invalid) raw events, with the ``batch_id`` they

@@ -1317,3 +1317,12 @@ class CowTable:
         if not snap:
             return 0
         return max((len(v) for v in snap.get("delta_dirs", {}).values()), default=0)
+
+    def buckets_at_threshold(self, min_layers: int) -> list[int]:
+        """Buckets holding at least ``min_layers`` delta layers: the
+        partial-compaction target set every fold trigger uses. Cold
+        buckets keep their (few) layers and pay nothing — the bin-pack
+        maintenance discipline."""
+        snap = self.current_snapshot() or {}
+        return sorted(int(b) for b, ds in snap.get("delta_dirs", {}).items()
+                      if len(ds) >= min_layers)

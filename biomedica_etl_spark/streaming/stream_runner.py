@@ -5,7 +5,12 @@ reference's SLURM chain maps to; this module is the continuous variant: a
 ``readStream`` file source tails the change-log directory (one stream per
 schema epoch, unioned after alignment) and ``foreachBatch`` funnels every
 micro-batch through the exact same LWW-reduce -> merge -> snapshot-commit
-machinery, so both entry points share one correctness story.
+machinery, so both entry points share one correctness story. Every
+apply-shaped stream (``stream_apply``, ``stream_apply_debezium`` plain or
+``txn_aware``) runs one foreachBatch body, ``_start_apply_stream``, with
+its per-epoch apply passed in; after the apply it folds only the buckets
+at the layer threshold (``CowTable.buckets_at_threshold``, the runner's
+rule) and runs the in-loop maintainers.
 
 Exactly-once: Structured Streaming's own checkpoint guarantees each file is
 delivered in exactly one micro-batch with a stable ``batch_id`` (epoch id);
@@ -23,6 +28,7 @@ from __future__ import annotations
 
 import glob
 import os
+from functools import partial
 from functools import reduce as _reduce
 
 from pyspark.sql import DataFrame, SparkSession
@@ -93,24 +99,24 @@ def _start_apply_stream(
     spark: SparkSession, events: DataFrame, table: CowTable,
     table_root: str, compact_every: int,
     maintain: list | None, maintain_every: int,
-    checkpoint_dir: str, available_now: bool,
+    checkpoint_dir: str, available_now: bool, apply=None,
 ):
-    """Shared tail of every apply-shaped stream: foreachBatch funnels each
-    epoch through the batch merge with a fenced id, inline compaction at
-    the layer threshold, and optional in-loop derived maintenance."""
+    """Shared tail of every apply-shaped stream: foreachBatch hands each
+    epoch to ``apply(batch_df, batch_id)`` under the fenced id
+    ``STREAM_BATCH_BASE + epoch_id`` (default: the plain MOR apply),
+    folds the buckets at the layer threshold, and runs the optional
+    in-loop derived maintenance."""
+    if apply is None:
+        apply = partial(mor_apply_batch, spark, table,
+                        lineage_dir=os.path.join(table_root, "_lineage"),
+                        quarantine_dir=os.path.join(table_root, "_quarantine"))
     epochs_seen = {"n": 0}
 
     def _apply(batch_df: DataFrame, epoch_id: int) -> None:
-        mor_apply_batch(
-            spark,
-            table,
-            batch_df,
-            batch_id=STREAM_BATCH_BASE + epoch_id,
-            lineage_dir=os.path.join(table_root, "_lineage"),
-            quarantine_dir=os.path.join(table_root, "_quarantine"),
-        )
-        if table.max_delta_layers() >= compact_every:
-            compact(spark, table)
+        apply(batch_df, STREAM_BATCH_BASE + epoch_id)
+        buckets = table.buckets_at_threshold(compact_every)
+        if buckets:
+            compact(spark, table, buckets=buckets)
         if maintain:
             epochs_seen["n"] += 1
             if epochs_seen["n"] % max(maintain_every, 1) == 0:
@@ -156,17 +162,17 @@ def stream_apply_debezium(
     commit and stream checkpoint replays an epoch into a structural
     no-op.
 
-    ``txn_aware=True`` adds atomic transaction visibility (the batch
-    appliers' ``ingest_debezium_txn`` semantics on the stream): each
-    epoch splits (its events + carried-over pending) by Debezium
-    transaction completeness, applies only complete transactions, and
-    publishes the new pending state as ``pending-<epoch>`` AFTER the
-    fenced apply. The carry-over for epoch e reads the newest pending
-    with id < e, so a replayed epoch (crash after pending publish but
-    before the stream checkpoint advanced) re-reads its ORIGINAL input
-    state and replays into a fenced no-op — determinism again, across
-    epochs this time."""
-    from ..cdc.envelope import parse_debezium
+    ``txn_aware=True`` adds atomic transaction visibility: each epoch
+    runs ``envelope.apply_txn_batch``, the same step
+    ``ingest_debezium_txn`` runs per file. The epoch's events plus the
+    carried-over pending split by transaction completeness, only
+    complete transactions apply, and the new pending state is published
+    as ``pending-<batch id>`` AFTER the fenced apply. A replayed epoch
+    (crash after the apply, before the stream checkpoint advanced)
+    re-reads the newest pending below its own id — its ORIGINAL input
+    state — and replays into a fenced no-op. Only the two newest pending
+    states are kept: only the last uncheckpointed epoch can replay."""
+    from ..cdc.envelope import apply_txn_batch, parse_debezium
 
     table = CowTable(table_root, n_buckets=n_buckets)
     table.create()
@@ -176,75 +182,17 @@ def stream_apply_debezium(
     lines = reader.text(os.path.join(ndjson_dir, "*.ndjson"))
     events = parse_debezium(lines, value_col="value",
                             with_transaction=txn_aware)
-    if not txn_aware:
-        return _start_apply_stream(spark, events, table, table_root,
-                                   compact_every, maintain, maintain_every,
-                                   checkpoint_dir, available_now)
-
-    from ..cdc.envelope import pending_txn_schema, txn_split
-
-    state_dir = os.path.join(table_root, "_txn_pending")
-    os.makedirs(state_dir, exist_ok=True)
-    schema = pending_txn_schema()
-    epochs_seen = {"n": 0}
-
-    def _pending_before(epoch: int):
-        done = sorted(
-            int(d.split("-")[1]) for d in os.listdir(state_dir)
-            if d.startswith("pending-") and "." not in d
-            and os.path.exists(os.path.join(state_dir, d, "_DONE")))
-        prior = [e for e in done if e < epoch]
-        if not prior:
-            return None
-        return spark.read.schema(schema).parquet(
-            os.path.join(state_dir, f"pending-{prior[-1]:05d}"))
-
-    def _apply(batch_df, epoch_id: int) -> None:
-        # persist: the split fans the epoch into four actions (see the
-        # batch applier) — without it each re-parses the stream batch
-        batch_df = batch_df.persist()
-        complete, incomplete = txn_split(batch_df,
-                                         _pending_before(epoch_id))
-        mor_apply_batch(
-            spark, table,
-            complete.drop("_txn_id", "_txn_order", "_txn_total"),
-            batch_id=STREAM_BATCH_BASE + epoch_id,
-            lineage_dir=os.path.join(table_root, "_lineage"),
-            quarantine_dir=os.path.join(table_root, "_quarantine"))
-        if table.max_delta_layers() >= compact_every:
-            compact(spark, table)
-        # same in-loop derived maintenance as _start_apply_stream — the
-        # txn branch must not silently skip maintainers the caller passed
-        if maintain:
-            epochs_seen["n"] += 1
-            if epochs_seen["n"] % max(maintain_every, 1) == 0:
-                for m in maintain:
-                    fn = m.refresh if hasattr(m, "refresh") else m
-                    fn(spark, table)
-        stage = os.path.join(state_dir, f"pending-{epoch_id:05d}.stage")
-        incomplete.write.mode("overwrite").parquet(stage)
-        with open(os.path.join(stage, "_DONE"), "w") as fh:
-            fh.write("ok")
-        final = os.path.join(state_dir, f"pending-{epoch_id:05d}")
-        import shutil as _sh
-        if os.path.isdir(final):
-            _sh.rmtree(final, ignore_errors=True)
-        os.rename(stage, final)
-        # prune beyond the two newest: only the LAST uncheckpointed epoch
-        # can replay, and it reads the newest pending strictly below it
-        done = sorted(
-            d for d in os.listdir(state_dir)
-            if d.startswith("pending-") and "." not in d)
-        for d in done[:-2]:
-            _sh.rmtree(os.path.join(state_dir, d), ignore_errors=True)
-        batch_df.unpersist()
-
-    writer = (events.writeStream.foreachBatch(_apply)
-              .option("checkpointLocation", checkpoint_dir)
-              .outputMode("append"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    apply = None
+    if txn_aware:
+        state_dir = os.path.join(table_root, "_txn_pending")
+        os.makedirs(state_dir, exist_ok=True)
+        apply = partial(apply_txn_batch, spark, table, state_dir=state_dir,
+                        quarantine_dir=os.path.join(table_root, "_quarantine"),
+                        lineage_dir=os.path.join(table_root, "_lineage"),
+                        keep_pending=2)
+    return _start_apply_stream(spark, events, table, table_root,
+                               compact_every, maintain, maintain_every,
+                               checkpoint_dir, available_now, apply)
 
 
 def stream_merge(
